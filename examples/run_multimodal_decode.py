@@ -17,8 +17,7 @@ operators/codecs.py):
                      way a downstream trainer would read them.
 
 On a real corpus the synthesized-payload encode stage disappears (the
-bytes already exist) and library-bound formats plug into
-decode_media_stub; everything else in this file is the production
+bytes already exist); everything else in this file is the production
 shape.
 
 Usage:

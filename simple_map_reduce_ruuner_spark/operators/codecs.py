@@ -35,11 +35,10 @@ media synthesized deterministically from each doc's UTF-8 bytes, codecs
 run as Arrow-batched mapInPandas kernels whose closures are
 self-contained (pickled by value — executors never import the package),
 and every registry entry carries a DuckDB oracle that recomputes the
-features straight from the text bytes. After this module the
-NotImplementedError seam (multimodal.decode_media_stub) covers only
-formats that genuinely need external codec libraries: JPEG *entropy
-variants we don't emit* (progressive, arithmetic), webp/VP8, and
-perceptual audio (MP3/AAC).
+features straight from the text bytes. Formats that genuinely need
+external codec libraries — JPEG *entropy variants we don't emit*
+(progressive, arithmetic), webp/VP8, perceptual audio (MP3/AAC) — are
+out of scope.
 
 Reference scope note: the reference engine (SURVEY.md; Master.java /
 Worker.java) has no media handling at all — this module is part of the
@@ -51,6 +50,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
@@ -533,9 +533,7 @@ def _jpeg_decode_fn():
     return decode
 
 
-def decode_image_jpeg(
-    spark: SparkSession, sf_dir: str, backend: str = "auto"
-) -> DataFrame:
+def decode_image_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL baseline-JPEG codec round trip, stdlib+numpy only (ITU-T
     T.81 is public). Encode each doc as a valid grayscale baseline
     JPEG — standard Annex-K Huffman tables shipped in a single
@@ -554,17 +552,10 @@ def decode_image_jpeg(
     DuckDB oracle replays the features from the text bytes; a hash
     match proves the whole marker/Huffman/restart/IDCT pipeline.
     """
-    from simple_map_reduce_ruuner_spark.operators import codec_backends
-
     df = _with_payload(spark, sf_dir)
     encoded = df.mapInPandas(_jpeg_encode_fn(), "doc_id long, jpg binary")
-    kernel = (
-        codec_backends.pil_image_decode_fn("jpeg", "jpg")
-        if codec_backends.resolve_backend("jpeg", backend) == "native"
-        else _jpeg_decode_fn()
-    )
     return encoded.mapInPandas(
-        kernel,
+        _jpeg_decode_fn(),
         "doc_id long, width long, height long, "
         "mean_gray_milli long, max_gray long, min_gray long",
     )
@@ -653,36 +644,33 @@ def _mulaw_encode_fn():
     return encode
 
 
-def _mulaw_decode_fn(use_audioop: bool = False):
+def _g711_expansion() -> np.ndarray:
+    """CCITT G.711 mu-law expansion of all 256 codewords to int16-range
+    samples: u = ~code; magnitude = ((mantissa*8 + 132) << exponent)
+    - 132, sign from bit 7."""
+    u = 255 - np.arange(256, dtype=np.int64)  # ~code & 0xFF
+    t = ((u & 15) * 8 + 132) << ((u >> 4) & 7)
+    return np.where(u >= 128, 132 - t, t - 132)
+
+
+MULAW_TABLE = _g711_expansion()
+
+
+def _mulaw_decode_fn():
     """Factory for the mu-law WAV decode kernel: the same word-aligned
     RIFF walk as the PCM path, but requiring format tag 7 / 8-bit and
     validating the `fact` chunk against the data length, then the REAL
-    CCITT G.711 expansion — u = ~code; magnitude = ((mantissa*8 + 132)
-    << exponent) - 132, sign from bit 7 — to int16-range samples and
+    CCITT G.711 expansion (``MULAW_TABLE``) to int16-range samples and
     integer statistics. Pure integer arithmetic (the decode side of
     this lossy codec is deterministic), so the oracle replays it in
-    SQL. Self-contained closure (see multimodal._ppm_encode_fn).
-
-    ``use_audioop=True`` swaps only the expansion step for CPython's C
-    implementation (``audioop.ulaw2lin``) — the native backend seam;
-    tests pin that both expansions agree on all 256 codewords."""
+    SQL. Self-contained closure (see multimodal._ppm_encode_fn); the
+    table is captured by value."""
+    table = MULAW_TABLE
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import struct
 
         import numpy as np
-
-        if use_audioop:
-            import audioop  # CPython C G.711; deprecated >=3.13
-
-            MULAW_TABLE = np.frombuffer(
-                audioop.ulaw2lin(bytes(range(256)), 2), dtype="<i2"
-            ).astype(np.int64)
-        else:
-            # vectorized G.711 expansion over all 256 codewords
-            u = 255 - np.arange(256, dtype=np.int64)  # ~code & 0xFF
-            t = ((u & 15) * 8 + 132) << ((u >> 4) & 7)
-            MULAW_TABLE = np.where(u >= 128, 132 - t, t - 132)
 
         def parse(b: bytes) -> tuple[int, int, "np.ndarray"]:
             if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
@@ -725,7 +713,7 @@ def _mulaw_decode_fn(use_audioop: bool = False):
                 if n_frames_fact != len(data) // ch:
                     raise ValueError("fact chunk disagrees with data length")
             codes = np.frombuffer(data, dtype=np.uint8)
-            return rate, ch, MULAW_TABLE[codes]
+            return rate, ch, table[codes]
 
         for pdf in batches:
             ids, rates, chs, frames, means, peaks, troughs = (
@@ -758,9 +746,7 @@ def _mulaw_decode_fn(use_audioop: bool = False):
     return decode
 
 
-def decode_audio_mulaw(
-    spark: SparkSession, sf_dir: str, backend: str = "auto"
-) -> DataFrame:
+def decode_audio_mulaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL G.711 mu-law round trip: encode each doc as a valid
     WAVE_FORMAT_MULAW file (format tag 7, 8-bit codewords = cycled text
     bytes, `fact` chunk, word-aligned chunks), decode with a RIFF
@@ -771,13 +757,10 @@ def decode_audio_mulaw(
     ((mantissa*8+132) << exponent, biased signs) in SQL, so a hash
     match proves the expansion table and container walk end-to-end.
     """
-    from simple_map_reduce_ruuner_spark.operators import codec_backends
-
     df = _with_payload(spark, sf_dir)
     encoded = df.mapInPandas(_mulaw_encode_fn(), "doc_id long, wav binary")
-    use_audioop = codec_backends.resolve_backend("mulaw", backend) == "native"
     return encoded.mapInPandas(
-        _mulaw_decode_fn(use_audioop=use_audioop),
+        _mulaw_decode_fn(),
         "doc_id long, sample_rate long, channels long, n_frames long, "
         "mean_milli long, peak long, trough long",
     )
@@ -1458,9 +1441,7 @@ def _gif_decode_fn():
     return decode
 
 
-def decode_image_gif(
-    spark: SparkSession, sf_dir: str, backend: str = "auto"
-) -> DataFrame:
+def decode_image_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL GIF codec round trip, stdlib-only — the LZW leg of the
     codec suite (dictionary coding; every other codec is either raw,
     deflate, DCT, or companding). Encode each doc as a valid GIF89a —
@@ -1474,17 +1455,10 @@ def decode_image_gif(
     hash match proves the dictionary-coding round trip AND that the
     decoder actually looks indexes up in the color table.
     """
-    from simple_map_reduce_ruuner_spark.operators import codec_backends
-
     df = _with_payload(spark, sf_dir)
     encoded = df.mapInPandas(_gif_encode_fn(), "doc_id long, gif binary")
-    kernel = (
-        codec_backends.pil_image_decode_fn("gif", "gif")
-        if codec_backends.resolve_backend("gif", backend) == "native"
-        else _gif_decode_fn()
-    )
     return encoded.mapInPandas(
-        kernel,
+        _gif_decode_fn(),
         "doc_id long, width long, height long, mean_idx_milli long, "
         "mean_r_milli long, mean_g_milli long, mean_b_milli long",
     )
@@ -1690,9 +1664,7 @@ def _tga_decode_fn():
     return decode
 
 
-def decode_image_tga(
-    spark: SparkSession, sf_dir: str, backend: str = "auto"
-) -> DataFrame:
+def decode_image_tga(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL TGA codec round trip, stdlib-only — the run-length-coding
     leg of the codec suite (raw/deflate/DCT/companding/LZW are covered
     by the other seven). Encode each doc as a valid Truevision TGA 2.0
@@ -1704,17 +1676,10 @@ def decode_image_tga(
     RGB image. Shares the PPM/PNG oracle template (different dimension
     formulas): a hash match proves the RLE round trip is lossless.
     """
-    from simple_map_reduce_ruuner_spark.operators import codec_backends
-
     df = _with_payload(spark, sf_dir)
     encoded = df.mapInPandas(_tga_encode_fn(), "doc_id long, tga binary")
-    kernel = (
-        codec_backends.pil_image_decode_fn("tga", "tga")
-        if codec_backends.resolve_backend("tga", backend) == "native"
-        else _tga_decode_fn()
-    )
     return encoded.mapInPandas(
-        kernel,
+        _tga_decode_fn(),
         "doc_id long, width long, height long, "
         "mean_r_milli long, mean_g_milli long, mean_b_milli long",
     )

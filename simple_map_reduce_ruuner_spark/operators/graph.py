@@ -102,15 +102,11 @@ def pagerank_trading(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4.44 s per invocation; dropping the nodes checkpoint instead
     # LOSES (5.28 s) because deg is re-derived per unrolled consumer.
     #
-    # r16 NULL RESULT (receipts in OPTIMIZATION_r16.md): a
-    # preserve_partitioning rewrite cut the plan to 5 Exchange (each
-    # iteration riding the checkpointed hash(src)/hash(node) layout,
-    # shuffle-hash contribution joins) but LOST 1.4-1.7 s per invocation
-    # in full-bench context with BOTH storage levels — the PR_ITERS+1
-    # block-cache re-reads per invocation cost more than the reused
-    # exchange + AQE's runtime ranks-broadcast conversion they replace,
-    # and deserialized blocks thrash once the bench's session-cache
-    # families occupy the storage pool. This form delegates the
+    # r16 NULL RESULT: a co-partitioned rewrite (checkpoints compiled
+    # with AQE off so each iteration rides the hash(src)/hash(node)
+    # layout) cut the plan to 5 Exchange but LOST 1.4-1.7 s per
+    # invocation in full-bench context; receipts and the reverted code
+    # path are in OPTIMIZATION_r16.md. This form delegates the
     # per-scale join strategy to AQE (broadcast at bench scale,
     # sort-merge when |V| outgrows it), which measured best end to end.
     edges = ckpt(_edges(spark, sf_dir), eager=False)

@@ -69,12 +69,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return got
 
 
-def ckpt(
-    df: DataFrame,
-    eager: bool = True,
-    preserve_partitioning: bool = False,
-    storage_level=None,
-) -> DataFrame:
+def ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
     """``localCheckpoint`` with SERIALIZED memory+disk block storage.
 
     ``eager=False`` defers materialization to the first action so that
@@ -84,22 +79,6 @@ def ckpt(
     (Even lazy, ``localCheckpoint`` compiles the physical plan at call
     time — ~0.5 s of driver-side planning per call, measured on the BPE
     chain — so construction is cheap but not free.)
-
-    ``preserve_partitioning=True`` keeps the checkpointed plan's hash
-    partitioning AND sort order visible to consumers. Under AQE the
-    checkpoint's physical plan is an ``AdaptiveSparkPlan`` whose final
-    partitioning is unknown at compile time, so the ``LogicalRDD`` Spark
-    wraps the blocks in reports ``UnknownPartitioning`` — and every
-    downstream join/groupBy on the very key the caller repartitioned by
-    pays a fresh Exchange (measured: pagerank_trading re-shuffled its
-    checkpointed edge table once per unrolled iteration). Compiling the
-    checkpoint subtree with AQE off makes the LogicalRDD carry
-    ``hashpartitioning(k, n)`` + the within-partition sort, so consumers
-    keyed on ``k`` satisfy their distribution from the blocks outright
-    (guide §2.4). Trade-off: THAT subtree executes without AQE
-    (no runtime coalescing/skew-split inside the checkpoint build), so
-    opt in only where the caller already fixed the partitioning
-    deliberately and the build join is skew-free.
 
     Spark's default checkpoint level keeps blocks DESERIALIZED in
     memory, and — worse for scale — re-inflates disk-spilled blocks
@@ -113,29 +92,12 @@ def ckpt(
     and degrades to disk streaming under pressure instead of OOM —
     blocks that fit stay in memory, so the small-scale fast path is
     unchanged. Use for every iterative/replayed checkpoint whose size
-    scales with the data.
-
-    ``storage_level`` overrides the serialized default for callers that
-    READ the blocks many times per action AND can prove the
-    deserialized footprint fits (a serialized block read pays per-row
-    java deserialization on EVERY pass — measured ~1.3 s/invocation on
-    pagerank's 6 reads of a 1.2 M-row checkpoint — while a deserialized
-    read is pointer iteration). Size-gate the choice from parquet
-    footer counts like graph.pagerank_trading does; an unconditional
-    deserialized level is exactly the 100×-sweep OOM this helper's
-    default exists to prevent."""
+    scales with the data."""
     from pyspark import StorageLevel
 
-    level = storage_level or StorageLevel.MEMORY_AND_DISK
-    if not preserve_partitioning:
-        return df.localCheckpoint(eager=eager, storageLevel=level)
-    conf = df.sparkSession.conf
-    old = conf.get("spark.sql.adaptive.enabled")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return df.localCheckpoint(eager=eager, storageLevel=level)
-    finally:
-        conf.set("spark.sql.adaptive.enabled", old)
+    return df.localCheckpoint(
+        eager=eager, storageLevel=StorageLevel.MEMORY_AND_DISK
+    )
 
 
 # Every dict handed to session_cache(), so clear_session_caches() can

@@ -74,49 +74,3 @@ def stream_running_user_totals(
         )
     )
 
-
-def stream_running_user_totals_tws(
-    spark: SparkSession, input_dir: str, events_ddl: str
-) -> DataFrame:
-    """The same running-totals operator on Spark 4's successor API,
-    ``transformWithStateInPandas`` — typed per-key state handles
-    (ValueState/ListState/MapState), timers, and TTL, replacing the
-    single-tuple state of ``applyInPandasWithState``.
-
-    Environment note: executing this stream requires ``google.protobuf``
-    (the state-server protocol dependency of transformWithState); this
-    container ships a broken protobuf, so the plan BUILDS here (tested)
-    but only executes on a cluster with protobuf installed — same
-    gated-dependency contract as multimodal.decode_image_pil. The
-    processor class is defined inside this function so cloudpickle
-    serializes it by value and executors never import this package.
-    """
-    from pyspark.sql.streaming import StatefulProcessor
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._state = handle.getValueState("totals", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values):
-            if self._state.exists():
-                n, total = self._state.get()
-            else:
-                n, total = 0, 0.0
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    src = spark.readStream.schema(events_ddl).parquet(input_dir)
-    return src.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType=OUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -1,9 +1,7 @@
-"""Checks with no SQL oracle: HLL error bound, and the multimodal decode
-stub's contract (real plan, NotImplementedError surfaces from the UDF)."""
+"""Checks with no SQL oracle: sketch error bounds and lang_id on data
+where languages actually differ."""
 
 from __future__ import annotations
-
-import pytest
 
 from simple_map_reduce_ruuner_spark.operators.approx import (
     approx_distinct_users,
@@ -56,26 +54,6 @@ def test_approx_distinct_within_5pct(spark, sf_dir):
         assert abs(approx[k] - n) <= max(1, 0.05 * n), (k, n, approx[k])
 
 
-def test_decode_media_stub_raises(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from simple_map_reduce_ruuner_spark.operators.multimodal import (
-        _with_payload,
-        decode_media_stub,
-    )
-
-    plan = decode_media_stub(_with_payload(spark, sf_dir))
-    # schema is real and typed even though execution is stubbed
-    assert [f.name for f in plan.schema.fields] == [
-        "doc_id",
-        "width",
-        "height",
-        "channels",
-    ]
-    with pytest.raises(Exception, match="NotImplementedError|media decoding"):
-        plan.collect()
-
-
 def test_lang_id_discriminates_on_multilingual_data(spark, tmp_path):
     """The driver fixtures share one vocabulary across lang labels, so
     lang_id's accuracy is untestable there (documented). On data where
@@ -103,60 +81,6 @@ def test_lang_id_discriminates_on_multilingual_data(spark, tmp_path):
         if (r.lang == "en") == (r.pred_lang == "en")
     ) / len(pred)
     assert acc == 1.0
-
-
-def _pil_available() -> bool:
-    try:
-        import PIL  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(not _pil_available(), reason="Pillow not installed")
-def test_decode_image_pil_real_codec(spark):
-    """With Pillow installed, decode_image_pil decodes real PNG bytes
-    through the same mapInPandas plumbing the stub defines."""
-    import io
-
-    from PIL import Image
-
-    from simple_map_reduce_ruuner_spark.operators.multimodal import decode_image_pil
-
-    def png(w, h, mode):
-        buf = io.BytesIO()
-        Image.new(mode, (w, h)).save(buf, format="PNG")
-        return buf.getvalue()
-
-    df = spark.createDataFrame(
-        [(1, png(4, 3, "RGB")), (2, png(7, 5, "L"))],
-        "doc_id long, payload binary",
-    )
-    got = {r.doc_id: r for r in decode_image_pil(df).collect()}
-    assert (got[1].width, got[1].height, got[1].channels) == (4, 3, 3)
-    assert (got[2].width, got[2].height, got[2].channels) == (7, 5, 1)
-
-
-@pytest.mark.skipif(_pil_available(), reason="Pillow installed: real path active")
-def test_decode_image_pil_degrades_to_stub_contract(spark, sf_dir):
-    """Without Pillow, decode_image_pil builds a valid typed plan and
-    raises NotImplementedError from the UDF at execution — identical
-    seam to decode_media_stub."""
-    from simple_map_reduce_ruuner_spark.operators.multimodal import (
-        _with_payload,
-        decode_image_pil,
-    )
-
-    plan = decode_image_pil(_with_payload(spark, sf_dir))
-    assert [f.name for f in plan.schema.fields] == [
-        "doc_id",
-        "width",
-        "height",
-        "channels",
-    ]
-    with pytest.raises(Exception, match="NotImplementedError|Pillow"):
-        plan.collect()
 
 
 def test_hll_sketches_merge_across_groups(spark, sf_dir):

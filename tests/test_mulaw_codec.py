@@ -16,6 +16,7 @@ import pandas as pd
 import pytest
 
 from simple_map_reduce_ruuner_spark.operators.codecs import (
+    MULAW_TABLE,
     _mulaw_decode_fn,
     _mulaw_encode_fn,
 )
@@ -48,6 +49,15 @@ def _expand(code: int) -> int:
     u = 255 - code
     t = ((u & 15) * 8 + 132) << ((u >> 4) & 7)
     return 132 - t if u >= 128 else t - 132
+
+
+def test_g711_expansion_matches_cpython_c_table():
+    """The kernel's expansion table vs CPython's C implementation, all
+    256 codewords — two independent derivations of the CCITT table."""
+    audioop = pytest.importorskip("audioop")
+
+    theirs = np.frombuffer(audioop.ulaw2lin(bytes(range(256)), 2), "<i2")
+    assert (MULAW_TABLE == theirs.astype(np.int64)).all()
 
 
 def test_expansion_endpoints():

@@ -734,35 +734,3 @@ def test_analyze_statistics_drive_cbo_estimates(spark, sf_dir):
     finally:
         spark.conf.set("spark.sql.cbo.enabled", prev)
         spark.sql("DROP TABLE IF EXISTS smrr_cbo_dim")
-
-
-def test_ckpt_preserve_partitioning_feeds_consumers(spark, sf_dir):
-    """ckpt(preserve_partitioning=True): the checkpointed scan must
-    advertise the hash partitioning + sort order the caller set up
-    (under AQE the LogicalRDD degrades to UnknownPartitioning, which
-    cost pagerank a re-exchange of the SAME blocks per unrolled
-    iteration), a keyed consumer must plan NO exchange on top, and the
-    session's AQE flag must be restored afterwards."""
-    from simple_map_reduce_ruuner_spark.sources.tables import ckpt
-
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    base = spark.range(0, 1000).select(
-        (F.col("id") % 97).alias("k"), F.col("id").alias("v")
-    )
-    ck = ckpt(
-        base.repartition("k").sortWithinPartitions("k"),
-        eager=False,
-        preserve_partitioning=True,
-    )
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    agg = ck.groupBy("k").agg(F.sum("v"))
-    assert "Exchange" not in plan_of(agg), plan_of(agg)
-    formatted = agg._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    assert "hashpartitioning(k" in formatted, formatted
-    # the plain form keeps its lazy-construction contract (no regression)
-    plain = ckpt(base.repartition("k"), eager=False)
-    assert plain.count() == 1000

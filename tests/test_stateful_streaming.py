@@ -127,67 +127,3 @@ def test_stateful_totals_on_rocksdb_state_store(spark, sf_dir, tmp_path):
         for r in ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     assert out.groupby("user_id")["n_events"].max().to_dict() == expected
-
-
-def _protobuf_works() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def test_transform_with_state_plan_builds(spark, sf_dir, tmp_path):
-    """transformWithStateInPandas (Spark 4 successor API): the streaming
-    plan must build with the right schema even where google.protobuf
-    (its runtime state-protocol dependency) is broken; execution is
-    covered by the test below wherever protobuf works."""
-    from simple_map_reduce_ruuner_spark.streaming.stateful import (
-        stream_running_user_totals_tws,
-    )
-    from simple_map_reduce_ruuner_spark.streaming.windows import EVENTS_DDL
-
-    src_dir = tmp_path / "events_tws_plan"
-    load_table(spark, sf_dir, "events").limit(100).coalesce(1).write.parquet(
-        str(src_dir)
-    )
-    df = stream_running_user_totals_tws(spark, str(src_dir), EVENTS_DDL)
-    assert df.isStreaming
-    assert [f.name for f in df.schema.fields] == [
-        "user_id",
-        "n_events",
-        "total_value",
-    ]
-
-
-@pytest.mark.skipif(
-    not _protobuf_works(), reason="google.protobuf broken in this container"
-)
-def test_transform_with_state_executes(spark, sf_dir, tmp_path):
-    import pandas as pd
-
-    from simple_map_reduce_ruuner_spark.streaming.stateful import (
-        stream_running_user_totals_tws,
-    )
-    from simple_map_reduce_ruuner_spark.streaming.windows import EVENTS_DDL
-
-    src_dir = tmp_path / "events_tws"
-    ev = load_table(spark, sf_dir, "events")
-    ev.coalesce(1).write.parquet(str(src_dir))
-    captured: list = []
-    q = (
-        stream_running_user_totals_tws(spark, str(src_dir), EVENTS_DDL)
-        .writeStream.foreachBatch(lambda b, i: captured.append(b.toPandas()))
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    out = pd.concat(captured, ignore_index=True)
-    expected = {
-        r.user_id: r.n
-        for r in ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert out.groupby("user_id")["n_events"].max().to_dict() == expected

@@ -9,7 +9,9 @@ Spark-level oracle parity runs in the driver gate.
 
 from __future__ import annotations
 
+import io
 import struct
+import wave
 
 import numpy as np
 import pandas as pd
@@ -69,6 +71,30 @@ def test_word_aligned_chunk_traversal():
     out = _decode([_wav(1, 8000, s, extra=odd)])
     assert out.n_frames[0] == 4
     assert out.peak[0] == 300
+
+
+def test_kernel_matches_stdlib_wave_module():
+    """The stdlib ``wave`` module is an independent RIFF parser: on every
+    encoded payload it must read the same shape and samples as ours."""
+    rng = np.random.default_rng(7)
+    ids = list(range(60))  # every (channels, rate, frames) combination
+    payloads = [
+        rng.integers(0, 256, size=int(rng.integers(0, 80)), dtype=np.uint8)
+        .tobytes()
+        for _ in ids
+    ]
+    enc = _encode(payloads, ids)
+    got = _decode(list(enc["wav"]), list(enc["doc_id"]))
+    for blob, row in zip(enc["wav"], got.itertuples()):
+        with wave.open(io.BytesIO(blob)) as w:
+            assert w.getsampwidth() == 2
+            shape = (w.getframerate(), w.getnchannels(), w.getnframes())
+            s = np.frombuffer(w.readframes(w.getnframes()), "<i2")
+        s = s.astype(np.int64)
+        tot = int(s.sum()) * 1000
+        mean = -(abs(tot) // s.size) if tot < 0 else tot // s.size
+        assert (row.sample_rate, row.channels, row.n_frames) == shape
+        assert (row.mean_milli, row.peak) == (mean, int(s.max()))
 
 
 def test_negative_mean_truncates_toward_zero():

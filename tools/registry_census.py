@@ -1,18 +1,15 @@
 #!/usr/bin/env python
 """Generate REGISTRY.md — the committed census of every registry query:
-name → implementation site → oracle kind → last driver-green round.
+name → implementation site → oracle kind.
 
-Exists so judges and future rounds read ONE file instead of re-deriving
-the query map from the CORRECTNESS_r*.json artifacts each time. Rows are
-alphabetical (NOT the LRU driver order, which rotates every round and
-would churn the diff). The last-green column is informational, stamped
-with the artifact set it was derived from; the stable columns
-(name, site, oracle kind) are pinned by tests/test_registry_census.py —
+Exists so readers find the query map in ONE file. Rows are alphabetical
+(NOT the LRU driver order, which rotates every round and would churn the
+diff). Every column is pinned by tests/test_registry_census.py —
 regenerate with `python tools/registry_census.py --write` after moving
 or adding operators.
 
 Usage: python tools/registry_census.py [--write]
-  (default prints to stdout; --write rewrites /root/repo/REGISTRY.md)
+  (default prints to stdout; --write rewrites REGISTRY.md at the repo root)
 """
 
 from __future__ import annotations
@@ -25,27 +22,22 @@ REPO = pathlib.Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 
-def census_rows() -> list[tuple[str, str, str, str]]:
-    """(name, site, oracle kind, last driver-green round) per query."""
+def census_rows() -> list[tuple[str, str, str]]:
+    """(name, site, oracle kind) per query."""
     from simple_map_reduce_ruuner_spark import registry
 
-    last = registry._last_verified_round()
     rows = []
     for name, q in sorted(registry.all_queries().items()):
         src = pathlib.Path(inspect.getsourcefile(q.fn)).resolve()
         line = inspect.getsourcelines(q.fn)[1]
         site = f"{src.relative_to(REPO)}:{line}"
         kind = "sql" if q.oracle is not None else "rows-only"
-        green = f"r{last[name]}" if name in last else "—"
-        rows.append((name, site, kind, green))
+        rows.append((name, site, kind))
     return rows
 
 
-def render(rows: list[tuple[str, str, str, str]]) -> str:
-    max_round = max(
-        (int(g[1:]) for _, _, _, g in rows if g.startswith("r")), default=0
-    )
-    n_sql = sum(1 for _, _, k, _ in rows if k == "sql")
+def render(rows: list[tuple[str, str, str]]) -> str:
+    n_sql = sum(1 for _, _, k in rows if k == "sql")
     lines = [
         "# REGISTRY — query census",
         "",
@@ -55,18 +47,15 @@ def render(rows: list[tuple[str, str, str, str]]) -> str:
         "APPROX_BOUNDS.json).",
         "",
         "Generated by `python tools/registry_census.py --write`; "
-        "name/site/oracle columns are pinned by "
-        "`tests/test_registry_census.py` (regenerate after moving or "
-        "adding operators). The driver gate records the first 50 "
-        "entries of the LRU order (`registry.all_queries()`) each "
-        "round, so 'last green' rotates by design — a stale-looking "
-        "round here is a verified-and-queued query, not a failure. "
-        f"Last-green column derived from artifacts through r{max_round:02d}.",
+        "every column is pinned by `tests/test_registry_census.py` "
+        "(regenerate after moving or adding operators). Which round "
+        "last verified a query lives in the CORRECTNESS_r*.json "
+        "artifacts, not here.",
         "",
-        "| query | implemented at | oracle | last green |",
-        "|---|---|---|---|",
+        "| query | implemented at | oracle |",
+        "|---|---|---|",
     ]
-    lines += [f"| {n} | `{s}` | {k} | {g} |" for n, s, k, g in rows]
+    lines += [f"| {n} | `{s}` | {k} |" for n, s, k in rows]
     lines += [
         "",
         "## Tombstones (gate-union bookkeeping)",

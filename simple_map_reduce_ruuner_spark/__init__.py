@@ -8,7 +8,7 @@ educational distributed MapReduce runner ``ArminF1996/Simple-Map-Reduce-Ruuner``
   workloads are algebraic aggregations — SURVEY.md §1.4 maps its
   chunk-partial → global-final contract 1:1 onto Spark's partial/final
   HashAggregate).
-- ``RDD.pipe`` / ``mapInPandas`` / ``applyInPandas`` for the reference's
+- SQL ``TRANSFORM`` / ``mapInPandas`` / ``applyInPandas`` for the reference's
   actual product surface: arbitrary external map/reduce programs
   (reference exec contract: Worker.java:134-160, Master.java:182-208).
 - Structured Streaming for windowed/stateful processing over event streams.

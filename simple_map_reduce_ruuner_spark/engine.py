@@ -9,11 +9,11 @@ Spark:
             lang="py"|"cpp", chunk_mb=10, out_path=...)
 
 pipeline: chunked line-aligned text read (A1) → per-chunk external map
-(A5, ``RDD.pipe``) → global single reduce (A7+A8, ``coalesce(1).pipe``)
-→ single text file (A9). Programs use the stdin/stdout pipe contract
-(the reference ships argv files; semantics identical — whole chunk in,
-result lines out). C++ sources are compiled like the reference worker
-does (Worker.java:146-151).
+(A5, Spark SQL ``TRANSFORM ... USING``) → global single reduce (A7+A8,
+``TRANSFORM`` over ``coalesce(1)``) → single text file (A9). Programs use
+the stdin/stdout pipe contract (the reference ships argv files; semantics
+identical — whole chunk in, result lines out). C++ sources are compiled
+like the reference worker does (Worker.java:146-151).
 
 The one difference from a 100 TB engine: the single global reducer is
 kept deliberately for contract fidelity — it is only correct/fast when
@@ -24,6 +24,7 @@ when the reference itself is correct. Scale users express the reduce as
 
 from __future__ import annotations
 
+import shlex
 import sys
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,9 +44,9 @@ from simple_map_reduce_ruuner_spark.sources.text import (
 
 def _as_command(src_path: str, lang: str) -> str:
     if lang == "py":
-        return f"{sys.executable} {src_path}"
+        return f"{shlex.quote(sys.executable)} {shlex.quote(src_path)}"
     if lang == "cpp":
-        return compile_cpp_program(src_path)
+        return shlex.quote(compile_cpp_program(src_path))
     raise ValueError(f"unsupported lang {lang!r}: expected 'py' or 'cpp'")
 
 

@@ -3,7 +3,7 @@ lateral joins / ``SELECT ... FROM udtf(...)``.
 
 The reference's entire extension surface is external-process map/reduce
 programs (Master.java:80-81 ships mapper/reducer sources); the engine's
-first-class equivalents are ``RDD.pipe`` (mapreduce.py) and Arrow-batched
+first-class equivalents are SQL ``TRANSFORM`` (mapreduce.py) and Arrow-batched
 ``mapInPandas``/``applyInPandas``. This module completes the trio with
 the UDTF shape — one input row to N output rows with a typed schema.
 

@@ -10,20 +10,22 @@ chunk-partial → global-final algebraic aggregations (SURVEY.md §1.4).
 
 Spark-native equivalents provided here:
 
-- :func:`pipe_map_reduce` — exact fidelity. ``RDD.pipe`` execs the user
-  command once per partition, streaming the partition's lines to stdin
-  and reading result lines from stdout (the reference ships files via
-  HTTP + argv instead of stdin/stdout; semantics are identical: a whole
-  chunk in, result lines out). The reduce command runs on a single
-  coalesced partition, exactly like the reference's one reducer on the
-  master. Mapper parallelism scales with partitions; the single reducer
-  is the same serial bottleneck the reference has — by design.
+- :func:`pipe_map_reduce` — exact fidelity. Spark SQL script
+  transformation (``SELECT TRANSFORM(...) USING '<cmd>'``) execs the user
+  command once per partition inside the JVM, streaming the partition's
+  lines to stdin and reading result lines from stdout (the reference
+  ships files via HTTP + argv instead of stdin/stdout; semantics are
+  identical: a whole chunk in, result lines out). No row crosses into a
+  Python worker. The reduce command runs on a single coalesced
+  partition, exactly like the reference's one reducer on the master.
+  Mapper parallelism scales with partitions; the single reducer is the
+  same serial bottleneck the reference has — by design.
 
 - :func:`map_reduce_in_pandas` — idiomatic fidelity. The same
   chunk-partial/global-final contract with Python callables over Arrow
   batches (``mapInPandas``), no process spawn per partition.
 
-At 100 TB: ``pipe`` maps are embarrassingly parallel (one exec per
+At 100 TB: piped maps are embarrassingly parallel (one exec per
 partition, ~maxPartitionBytes-sized). The global single reduce only works
 when the mapped output is small (aggregated partials); that is exactly
 the reference's implicit contract, and callers needing distributed
@@ -34,12 +36,39 @@ query in the registry does).
 from __future__ import annotations
 
 import os
+import shlex
 from collections.abc import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 from simple_map_reduce_ruuner_spark.sources.tables import ckpt
+
+# One text column each way, one line per row. The field delimiter is the
+# line delimiter, so a line is never cut at a tab, and NULL is spelled as
+# a newline, which no line read back can equal, so a literal "\N" line
+# stays text instead of turning into NULL.
+_LINES = r"ROW FORMAT DELIMITED FIELDS TERMINATED BY '\n' NULL DEFINED AS '\n'"
+
+
+def _transform(df: DataFrame, cmd: str) -> DataFrame:
+    """Pipe the one text column of ``df`` through ``cmd`` (run by
+    ``/bin/bash -c``) once per non-empty partition; a nonzero exit fails
+    the task with "Subprocess exited with status N"."""
+    # Drain what the program left unread, so one that stops reading early
+    # (``head -1``) does not fail the feeder thread with a broken pipe; the
+    # program's own exit status is kept. The shell also holds stdout open
+    # until the program has exited, so that status is always checked.
+    script = f"{cmd}\nrc=$?; cat >/dev/null; exit $rc"
+    # a SQL string literal, inside a str.format template (spark.sql's
+    # DataFrame arguments)
+    literal = script.replace("\\", "\\\\").replace("'", "\\'")
+    literal = literal.replace("{", "{{").replace("}", "}}")
+    return df.sparkSession.sql(
+        f"SELECT TRANSFORM(*) {_LINES} USING '{literal}' AS (line STRING) {_LINES} FROM {{df}}",
+        df=df,
+    )
 
 
 def pipe_map_reduce(
@@ -53,56 +82,48 @@ def pipe_map_reduce(
 
     Programs read lines on stdin and write lines to stdout (the pipe
     twin of the reference's ``<prog> <in_file> <out_file>`` contract).
+    The map phase runs before this returns; the reduce runs when the
+    returned ``DataFrame[line]`` is executed.
+
+    Where this differs from ``RDD.pipe``:
+
+    - a bare ``\\r`` ends a line of program output, like ``\\n``;
+    - an empty partition does not start the mapper (the reference never
+      ships an empty chunk); the reducer still runs once, on empty stdin,
+      when the map output is empty, as the reference's does;
+    - programs run through ``/bin/bash -c`` and inherit the executor's
+      environment (``RDD.pipe`` ran them with an empty one).
 
     :param df: input; one text column (or name it via ``input_col``).
+        NULL rows are dropped.
     :param mapper_cmd: shell command run once per chunk/partition.
     :param reducer_cmd: shell command run once, globally.
     :param num_chunks: optional repartition before mapping — the
         reference's ``chunk_size`` knob expressed in partition count.
     """
-    col = input_col or df.columns[0]
-    # NULL text rows must not reach the pipe: RDD.pipe stringifies None
-    # into a literal "None" line the mapper would count as real data
-    # (review-found; spark.read.text never yields NULLs but parquet
-    # sources can).
-    lines = (
-        df.select(col).rdd.map(lambda r: r[0]).filter(lambda v: v is not None)
-    )
+    lines = df.select(input_col or df.columns[0]).dropna()
     if num_chunks is not None:
         lines = lines.repartition(num_chunks)
-    # checkCode=True: a nonzero mapper/reducer exit fails the task — the
-    # job-status twin of the reference's "something wrong!" report
-    # (Worker.java:154-158); without it pipe swallows failures as empty
-    # output.
-    from pyspark import StorageLevel
-
-    # MEMORY_AND_DISK, not the default MEMORY_ONLY: if cached map output
-    # were evicted under memory pressure, the coalesce(1) reduce task
-    # would recompute the evicted blocks inline — silently re-serializing
-    # every mapper onto one core (the exact bottleneck the count() below
-    # exists to avoid) AND re-executing mapper subprocesses, which for a
-    # non-deterministic or side-effecting mapper diverges from the pass
-    # that was counted (advice r5). Disk spill keeps the materialized
-    # output authoritative.
-    mapped = lines.pipe(mapper_cmd, checkCode=True).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
     # Materialize the map phase BEFORE the single-partition reduce: a
     # bare coalesce(1) is a narrow dependency that would pull every
-    # chunk's pipe into ONE task, serializing all mappers on one core
-    # (review-found — the exact bottleneck the reference avoids with
-    # per-worker dispatch, Master.java:212-224). With the mapped RDD
-    # persisted and computed, coalesce(1) just concatenates the cached
-    # blocks in partition order — same deterministic line order, but
-    # the mapper processes ran one-per-partition in parallel. RDD
-    # persistence is ContextCleaner-managed: blocks free once the
-    # result drops its lineage reference.
-    mapped.count()
+    # chunk's mapper into ONE task, serializing all mappers on one core
+    # (the bottleneck the reference avoids with per-worker dispatch,
+    # Master.java:212-224). The eager checkpoint runs one mapper per
+    # partition in parallel and keeps its output authoritative (a
+    # non-deterministic mapper is never re-run); coalesce(1) then
+    # concatenates the blocks in partition order. The row count rides
+    # the same job.
+    seen = Observation()
+    mapped = ckpt(_transform(lines, mapper_cmd).observe(seen, F.count(F.lit(1)).alias("n")))
+    if seen.get["n"] == 0:
+        # The reference runs its reducer over the merged file even when
+        # that is empty (Master.java:182-208). TRANSFORM skips an empty
+        # partition, so feed one line that the command discards first.
+        empty = df.sparkSession.range(1, numPartitions=1).select(F.lit("").alias("value"))
+        return _transform(empty, f"cat >/dev/null; {reducer_cmd}")
     # Global single reduce (reference Master.java:182-208): all mapped
     # partials to one partition, one reducer process.
-    reduced = mapped.coalesce(1).pipe(reducer_cmd, checkCode=True)
-    spark = df.sparkSession
-    return spark.createDataFrame(reduced.map(lambda l: (l,)), "line: string")
+    return _transform(mapped.coalesce(1), reducer_cmd)
 
 
 def argv_file_command(program_cmd: str, out_dir: str | None = None) -> str:
@@ -114,12 +135,12 @@ def argv_file_command(program_cmd: str, out_dir: str | None = None) -> str:
     temp file, execs the program with (in, out) argv paths, and emits the
     output file to stdout. The program's own stdout is diverted to stderr
     (reference programs write results only to the out file). Nonzero exit
-    propagates so ``pipe(checkCode=True)`` surfaces failures the way the
+    propagates, so the failed task surfaces the way the
     reference master reports "something wrong!" (Worker.java:154-158).
 
-    A generated script file (not an inline ``sh -c`` string) because
-    ``RDD.pipe`` tokenizes its command on whitespace. On a real cluster
-    ship it with ``SparkContext.addFile`` like any user binary.
+    A generated script file keeps the command a single quoted path, so
+    ``program_cmd`` needs no second level of shell quoting. On a real
+    cluster ship it with ``SparkContext.addFile`` like any user binary.
     """
     import tempfile
 
@@ -137,7 +158,7 @@ def argv_file_command(program_cmd: str, out_dir: str | None = None) -> str:
             'exit "$rc"\n'
         )
     os.chmod(script, 0o755)
-    return f"/bin/sh {script}"
+    return f"/bin/sh {shlex.quote(script)}"
 
 
 def compile_cpp_program(source_path: str, out_dir: str | None = None) -> str:

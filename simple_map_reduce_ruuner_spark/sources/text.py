@@ -53,8 +53,10 @@ def write_text_single(df: DataFrame, out_path: str, column: str | None = None) -
     """
     col = column or df.columns[0]
     tmp_dir = out_path + ".__tmpdir__"
-    df.select(col).coalesce(1).write.mode("overwrite").text(tmp_dir)
-    part = glob.glob(os.path.join(tmp_dir, "part-*"))[0]
-    shutil.move(part, out_path)
-    shutil.rmtree(tmp_dir, ignore_errors=True)
+    try:
+        df.select(col).coalesce(1).write.mode("overwrite").text(tmp_dir)
+        part = glob.glob(os.path.join(tmp_dir, "part-*"))[0]
+        shutil.move(part, out_path)
+    finally:
+        shutil.rmtree(tmp_dir, ignore_errors=True)
     return out_path

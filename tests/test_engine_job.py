@@ -76,7 +76,7 @@ def test_run_job_rejects_unknown_lang(spark, tmp_path):
 
 def test_mapper_failure_surfaces_and_sets_phase(spark, tmp_path):
     """A5 failure semantics: a nonzero-exit mapper fails the job (the
-    pipe's checkCode twin of Worker.java:154-158) and job_status reports
+    exit-status check, twin of Worker.java:154-158) and job_status reports
     the reference's "something wrong!" phase (Master.java:186)."""
     from simple_map_reduce_ruuner_spark.engine import job_status
 
@@ -90,6 +90,7 @@ def test_mapper_failure_surfaces_and_sets_phase(spark, tmp_path):
     with open(identity, "w") as fh:
         fh.write("import sys\nsys.stdout.write(sys.stdin.read())\n")
 
+    out = str(tmp_path / "out.txt")
     with pytest.raises(Exception, match="exited with|Pipe function"):
         run_job(
             spark,
@@ -97,9 +98,75 @@ def test_mapper_failure_surfaces_and_sets_phase(spark, tmp_path):
             mapper_src=bad_mapper,
             reducer_src=identity,
             lang="py",
-            out_path=str(tmp_path / "out.txt"),
+            out_path=out,
         )
     assert job_status(spark)["phase"] == "something wrong!"
+    assert not os.path.exists(out)
+
+
+def test_reducer_failure_surfaces_and_leaves_no_files(spark, tmp_path):
+    """A8 failure semantics: a nonzero-exit reducer fails the job inside
+    the sink's write, job_status reports "something wrong!", and neither
+    the result file nor the sink's temp dir is left behind."""
+    from simple_map_reduce_ruuner_spark.engine import job_status
+
+    data = str(tmp_path / "in.txt")
+    with open(data, "w") as fh:
+        fh.write("a b c\n" * 100)
+    identity = str(tmp_path / "identity.py")
+    with open(identity, "w") as fh:
+        fh.write("import sys\nsys.stdout.write(sys.stdin.read())\n")
+    bad_reducer = str(tmp_path / "bad_reducer.py")
+    with open(bad_reducer, "w") as fh:
+        fh.write("import sys\nsys.stdin.read()\nsys.exit(4)\n")
+
+    out = str(tmp_path / "out.txt")
+    with pytest.raises(Exception, match="exited with"):
+        run_job(spark, data, identity, bad_reducer, lang="py", out_path=out)
+    assert job_status(spark)["phase"] == "something wrong!"
+    assert not os.path.exists(out)
+    assert not os.path.exists(out + ".__tmpdir__")
+
+
+def test_reducer_runs_once_on_empty_map_output(spark, tmp_path):
+    """The reference runs its reducer over the merged file even when it is
+    empty (Master.java:182-208): an empty data file still yields the
+    reducer's output, produced from empty stdin."""
+    data = str(tmp_path / "empty.txt")
+    open(data, "w").close()
+    identity = str(tmp_path / "identity.py")
+    with open(identity, "w") as fh:
+        fh.write("import sys\nsys.stdout.write(sys.stdin.read())\n")
+    total = str(tmp_path / "total.py")
+    with open(total, "w") as fh:
+        fh.write("import sys\nprint('total', len(sys.stdin.read()))\n")
+
+    out = run_job(spark, data, identity, total, lang="py", out_path=str(tmp_path / "out.txt"))
+    with open(out) as fh:
+        assert fh.read() == "total 0\n"
+
+
+def test_program_paths_are_shell_quoted(spark, tmp_path):
+    """Program sources under a directory whose name has a space, an
+    apostrophe and braces run as-is (quoted for the shell, escaped for
+    the SQL literal), for both languages."""
+    odd = tmp_path / "user's {progs} dir"
+    odd.mkdir()
+    for name in ("wordcount_mapper.cpp", "wordcount_reducer.py"):
+        (odd / name).write_bytes(open(f"{EXAMPLES}/{name}", "rb").read())
+    data = str(tmp_path / "in.txt")
+    with open(data, "w") as fh:
+        fh.write("x y x\n" * 10)
+
+    result = run_job(
+        spark,
+        data_path=data,
+        mapper_src=str(odd / "wordcount_mapper.cpp"),
+        reducer_src=str(odd / "wordcount_reducer.py"),
+        mapper_lang="cpp",
+        reducer_lang="py",
+    )
+    assert {r.line for r in result.collect()} == {"x 20", "y 10"}
 
 
 def test_run_job_restores_max_partition_bytes(spark, tmp_path):

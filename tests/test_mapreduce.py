@@ -59,6 +59,68 @@ def test_pipe_cpp_mapper(spark, sf_dir, tmp_path):
     assert got == expected
 
 
+@pytest.mark.parametrize(
+    "rows, mapper, want",
+    [
+        pytest.param(["a\tb\tc", "\td"], "cat", ["a\tb\tc", "\td"], id="tabs"),
+        pytest.param(["\\N", "x"], "cat", ["\\N", "x"], id="literal-backslash-N"),
+        pytest.param(["", "a", ""], "cat", ["", "a", ""], id="empty-lines"),
+        pytest.param(["héllo", "日本語 ✓", "\U0001F600"], "cat", ["héllo", "日本語 ✓", "\U0001F600"], id="non-ascii"),
+        pytest.param(["a", "b"], 'printf %s "$(cat)"', ["a", "b"], id="no-trailing-newline"),
+        pytest.param([None, "a", None], "cat", ["a"], id="null-input-rows"),
+        pytest.param(["{x}", "'q'"], "awk '{print}'", ["{x}", "'q'"], id="braces-and-quotes-in-command"),
+        # the one change from RDD.pipe, which kept "x\ry" as one line
+        pytest.param(["x\ry"], "cat", ["x", "y"], id="bare-cr-ends-a-line"),
+    ],
+)
+def test_pipe_contract_round_trips_lines(spark, rows, mapper, want):
+    df = spark.createDataFrame([(r,) for r in rows], "value string").coalesce(1)
+    got = [r.line for r in pipe_map_reduce(df, mapper, "cat").collect()]
+    assert got == want
+
+
+def test_mapper_may_stop_reading_early(spark):
+    """A mapper that exits 0 without reading its whole chunk (the reference
+    hands it a file it may read as far as it likes) must not fail the
+    task on the unread rest of its stdin."""
+    df = spark.range(200_000, numPartitions=2).select(F.col("id").cast("string"))
+    got = sorted(r.line for r in pipe_map_reduce(df, "head -1", "cat").collect())
+    assert got == ["0", "100000"]
+
+
+def test_run_job_plan_stays_in_the_jvm(spark, tmp_path, monkeypatch):
+    """Both pipes are script transformations in the SQL plan: the map runs
+    over the text scan, the reduce over the checkpointed map output, and
+    no row passes through a Python worker on the way."""
+    from simple_map_reduce_ruuner_spark import mapreduce
+    from simple_map_reduce_ruuner_spark.engine import run_job
+
+    data = str(tmp_path / "in.txt")
+    with open(data, "w") as fh:
+        fh.write("a b\n" * 100)
+    checkpointed = []
+    real_ckpt = mapreduce.ckpt
+
+    def spy(df, *args, **kwargs):
+        checkpointed.append(df._jdf.queryExecution().executedPlan().toString())
+        return real_ckpt(df, *args, **kwargs)
+
+    monkeypatch.setattr(mapreduce, "ckpt", spy)
+    result = run_job(spark, data, f"{EXAMPLES}/wordcount_mapper.py", f"{EXAMPLES}/wordcount_reducer.py")
+    qe = result._jdf.queryExecution()
+    plan, lineage = qe.executedPlan().toString(), qe.toRdd().toDebugString()
+    python_nodes = ("PythonRDD", "javaToPython", "EvalPython", "InPandas", "InArrow")
+
+    assert len(checkpointed) == 1
+    map_plan = checkpointed[0]
+    assert "ScriptTransformation" in map_plan and "FileScan text" in map_plan
+    assert "ScriptTransformation" in plan and "Coalesce 1" in plan
+    assert "LocalCheckpointRDD" in lineage
+    for text in (map_plan, plan, lineage):
+        assert not [n for n in python_nodes if n in text], text
+    assert {r.line for r in result.collect()} == {"a 100", "b 100"}
+
+
 def test_map_reduce_in_pandas_wordcount(spark, sf_dir):
     import pandas as pd
 

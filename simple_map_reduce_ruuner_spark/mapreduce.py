@@ -75,8 +75,6 @@ def pipe_map_reduce(
     df: DataFrame,
     mapper_cmd: str,
     reducer_cmd: str,
-    input_col: str | None = None,
-    num_chunks: int | None = None,
 ) -> DataFrame:
     """Run external map/reduce programs over a text DataFrame.
 
@@ -94,16 +92,12 @@ def pipe_map_reduce(
     - programs run through ``/bin/bash -c`` and inherit the executor's
       environment (``RDD.pipe`` ran them with an empty one).
 
-    :param df: input; one text column (or name it via ``input_col``).
-        NULL rows are dropped.
+    :param df: input; its first column is the text. NULL rows are
+        dropped. Each partition is one chunk.
     :param mapper_cmd: shell command run once per chunk/partition.
     :param reducer_cmd: shell command run once, globally.
-    :param num_chunks: optional repartition before mapping — the
-        reference's ``chunk_size`` knob expressed in partition count.
     """
-    lines = df.select(input_col or df.columns[0]).dropna()
-    if num_chunks is not None:
-        lines = lines.repartition(num_chunks)
+    lines = df.select(df.columns[0]).dropna()
     # Materialize the map phase BEFORE the single-partition reduce: a
     # bare coalesce(1) is a narrow dependency that would pull every
     # chunk's mapper into ONE task, serializing all mappers on one core

@@ -947,7 +947,7 @@ def neardup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     join/DISTINCT shuffle entirely — same anchor-identical float64
     math, pairs computed inside their (band, sub) group.
 
-    PARAMETER caveat (measured by tools/scale_curve.py): the banding
+    PARAMETER caveat (measured in SCALE_CURVE_r08.json): the banding
     here is FIXED (2 bands × 4 bits = 16 sub-buckets/band) for oracle
     parity, so expected candidates are ~N²/32 — sub-quadratic only by
     a constant (measured 175× growth on 100× data). That contract is
@@ -1120,7 +1120,7 @@ def neardup_embedding_lsh_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs via N-ADAPTIVE banded hyperplane-LSH —
     the actual 100 TB path for semantic dedup.
 
-    tools/scale_curve.py caught the fixed-parameter variant growing
+    SCALE_CURVE_r08.json caught the fixed-parameter variant growing
     68.9× on 10× data (expected candidates N²/32 — quadratic in all but
     name). The scaling law is classic b×r LSH: to keep candidates
     linear the band width must grow with log2(N), and the band COUNT

@@ -232,7 +232,7 @@ def webdataset_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id order and the doc lands in shard ``floor(cum_before /
     SHARD_TARGET_BYTES)`` — virtual-offset packing, the hash-checkable
     twin of the greedy per-writer packer measured in
-    tools/webdataset_write_probe.py (WEBDATASET_WRITE_r13.json). Output
+    WEBDATASET_WRITE_r13.json. Output
     is per-shard metadata: member count, payload bytes, and the exact
     archive size those members produce (entries + 1024-byte end marker).
 

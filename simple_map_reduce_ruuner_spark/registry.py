@@ -134,56 +134,6 @@ def _builtin_queries() -> dict[str, Query]:
     return q
 
 
-# Session-cache families: registry queries that share a session_cache'd
-# subtree (tables.session_cache / the dedup broadcast build). Whichever
-# member executes FIRST on a dataset pays the materialization ("cold");
-# every later execution — sibling queries and later bench reps — rides
-# the checkpoint blocks. bench.py tags its per-query output with these
-# so medians are read with the right cold/rider semantics, and
-# tests/test_cache_families.py re-derives membership from the static
-# call graph so this map cannot drift from the code.
-CACHE_FAMILIES: dict[str, tuple[str, ...]] = {
-    # dedup.py: _SHINGLE_HASH_CACHE → _LSH_CAND_CACHE →
-    # _LSH_VERIFIED_CACHE → _CLUSTERS_CACHE ladder
-    "lsh_pipeline": (
-        "corpus_clean",
-        "minhash_signatures",
-        "neardup_clusters",
-        "neardup_editdist",
-        "neardup_incremental_lsh",
-        "neardup_lsh_verified",
-        "neardup_minhash_lsh",
-        "neardup_shared_span",
-        "source_overlap_minhash",
-    ),
-    # dedup._SIMHASH_CACHE (textlm.simhash_band_pairs rides it)
-    "simhash": ("simhash", "simhash_band_pairs"),
-    # graph._COTRADING_CACHE
-    "cotrading": ("cotrading_triangles", "supplier_cotrading_pairs"),
-    # dedup._EMB_BUILD_CACHE: single member, but rep 1 pays the
-    # collect+broadcast build and later reps ride it
-    "emb_broadcast": ("neardup_embedding",),
-    # ivf.build_ivf_index: content-keyed ON-DISK index (outlives the
-    # session); the first member to run on a corpus pays the build,
-    # every later invocation probes the materialized index
-    "ivf_index": ("ann_topk_ivf_indexed", "ivf_index_stats"),
-    # bpe_index.build_bpe_merges: content-keyed ON-DISK merge table
-    # (same contract as ivf_index — first member builds, riders reuse)
-    "bpe_merges": ("bpe_encode_indexed", "bpe_merge_table"),
-    # textlm._BPE_CHAIN_CACHE: the k-step training chain (lazy per-step
-    # localCheckpoints) built once per (session, corpus) — rebuilding it
-    # is ~k × 0.5 s of driver-side physical planning with no data work.
-    # The indexed twins appear here too because build_bpe_merges walks
-    # the same chain when the on-disk index is cold.
-    "bpe_chain": (
-        "bpe_encode_docs",
-        "bpe_encode_indexed",
-        "bpe_merge_table",
-        "bpe_train_merges",
-    ),
-}
-
-
 def _last_verified_round() -> dict[str, int]:
     """name -> most recent driver round whose CORRECTNESS_r*.json artifact
     (committed at the repo root) recorded that query. Names never recorded

@@ -122,13 +122,12 @@ def clear_session_caches(sf_dir: str | None = None) -> int:
     otherwise hold strong references for the application's lifetime —
     a multi-dataset session accumulates pinned MEMORY_AND_DISK blocks
     per (app, sf_dir) key with no eviction). With ``sf_dir``, only that
-    dataset's keys are dropped — what bench.py does after its sf0.001
+    dataset's keys are dropped — bench.py does this after its sf0.001
     warm-up pass so stale warm-up blocks don't occupy the storage pool
-    during the timed run. Returns the number of evicted entries.
+    during the timed passes. Returns the number of evicted entries.
 
-    NOT called automatically on dataset switch: tools/scale_curve.py
-    interleaves small/big dirs per rep BY DESIGN (cold/rider family
-    semantics), and auto-eviction would thrash those caches."""
+    NOT called automatically on dataset switch: a session that
+    alternates between datasets keeps each one's caches warm."""
     import gc
 
     real = os.path.realpath(sf_dir) if sf_dir is not None else None

@@ -28,7 +28,7 @@ def test_pipe_map_reduce_matches_dataframe_wordcount(spark, sf_dir):
 
     mapper = f"{sys.executable} {EXAMPLES}/wordcount_mapper.py"
     reducer = f"{sys.executable} {EXAMPLES}/wordcount_reducer.py"
-    piped = pipe_map_reduce(docs.select("text"), mapper, reducer, num_chunks=4)
+    piped = pipe_map_reduce(docs.select("text").repartition(4), mapper, reducer)
     got = {
         tuple(line.rsplit(" ", 1)) for line in (r.line for r in piped.collect())
     }
@@ -49,10 +49,9 @@ def test_pipe_cpp_mapper(spark, sf_dir, tmp_path):
     binary = compile_cpp_program(f"{EXAMPLES}/wordcount_mapper.cpp", str(tmp_path))
     docs = load_table(spark, sf_dir, "documents")
     piped = pipe_map_reduce(
-        docs.select("text"),
+        docs.select("text").repartition(4),
         binary,
         f"{sys.executable} {EXAMPLES}/wordcount_reducer.py",
-        num_chunks=4,
     )
     got = {tuple(line.rsplit(" ", 1)) for line in (r.line for r in piped.collect())}
     expected = {(r.word, str(r.cnt)) for r in word_count_df(docs).collect()}

@@ -8,9 +8,10 @@ educational distributed MapReduce runner ``ArminF1996/Simple-Map-Reduce-Ruuner``
   workloads are algebraic aggregations — SURVEY.md §1.4 maps its
   chunk-partial → global-final contract 1:1 onto Spark's partial/final
   HashAggregate).
-- SQL ``TRANSFORM`` / ``mapInPandas`` / ``applyInPandas`` for the reference's
-  actual product surface: arbitrary external map/reduce programs
-  (reference exec contract: Worker.java:134-160, Master.java:182-208).
+- SQL ``TRANSFORM`` for the reference's actual product surface:
+  arbitrary external map/reduce programs (reference exec contract:
+  Worker.java:134-160, Master.java:182-208); ``mapInPandas`` /
+  ``applyInPandas`` for the Python kernels of individual queries.
 - Structured Streaming for windowed/stateful processing over event streams.
 - LLM-data-pipeline extensions: exact/near dedup, embedding similarity
   search, text analysis, multimodal column plumbing.

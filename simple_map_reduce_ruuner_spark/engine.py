@@ -108,21 +108,21 @@ def run_job(
     unmodified.
     """
     global _last_outcome
-    mapper_cmd = _as_command(mapper_src, mapper_lang or lang)
-    reducer_cmd = _as_command(reducer_src, reducer_lang or lang)
-    if argv_files:
-        mapper_cmd = argv_file_command(mapper_cmd)
-        reducer_cmd = argv_file_command(reducer_cmd)
     # chunk_mb is applied via spark.sql.files.maxPartitionBytes, which the
     # scan reads at EXECUTION time. pipe_map_reduce materializes the map
     # phase eagerly (its parallel-map contract), so the scan has consumed
     # the knob by the time it returns and the restore below is safe in
-    # EVERY branch — including early failures (a missing input path used
-    # to raise before any try, leaking the shrunken split size into all
-    # later scans and leaving job_status stale; review-found).
+    # EVERY branch — including early failures (a missing input path, an
+    # unknown lang or a C++ source that does not compile), which must all
+    # report "something wrong!" rather than the previous job's phase.
     prev_split = spark.conf.get(_MAX_PARTITION_BYTES, None)
     out = None
     try:
+        mapper_cmd = _as_command(mapper_src, mapper_lang or lang)
+        reducer_cmd = _as_command(reducer_src, reducer_lang or lang)
+        if argv_files:
+            mapper_cmd = argv_file_command(mapper_cmd)
+            reducer_cmd = argv_file_command(reducer_cmd)
         lines = read_text_chunked(spark, data_path, chunk_mb=chunk_mb)
         result = pipe_map_reduce(lines, mapper_cmd, reducer_cmd)
         if out_path is not None:

@@ -21,10 +21,6 @@ Spark-native equivalents provided here:
   Mapper parallelism scales with partitions; the single reducer is the
   same serial bottleneck the reference has — by design.
 
-- :func:`map_reduce_in_pandas` — idiomatic fidelity. The same
-  chunk-partial/global-final contract with Python callables over Arrow
-  batches (``mapInPandas``), no process spawn per partition.
-
 At 100 TB: piped maps are embarrassingly parallel (one exec per
 partition, ~maxPartitionBytes-sized). The global single reduce only works
 when the mapped output is small (aggregated partials); that is exactly
@@ -37,9 +33,7 @@ from __future__ import annotations
 
 import os
 import shlex
-from collections.abc import Callable, Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -159,6 +153,7 @@ def compile_cpp_program(source_path: str, out_dir: str | None = None) -> str:
     """Compile a user C++ map/reduce program, mirroring the reference
     worker's compile step (``g++ --std=c++11``, Worker.java:146-151).
     Returns the binary path, usable as a ``pipe_map_reduce`` command.
+    A failed compile raises ``RuntimeError`` with g++'s diagnostics.
 
     On a real cluster the binary must be shipped to executors
     (``spark.sparkContext.addFile``) or built on a shared volume; in
@@ -169,33 +164,14 @@ def compile_cpp_program(source_path: str, out_dir: str | None = None) -> str:
 
     out_dir = out_dir or tempfile.mkdtemp(prefix="smrr_cpp_")
     binary = os.path.join(out_dir, "program.out")
-    subprocess.run(
-        ["g++", "--std=c++11", "-O2", "-o", binary, source_path],
-        check=True,
-        capture_output=True,
-    )
+    try:
+        subprocess.run(
+            ["g++", "--std=c++11", "-O2", "-o", binary, source_path],
+            check=True,
+            capture_output=True,
+            text=True,
+        )
+    except subprocess.CalledProcessError as exc:
+        raise RuntimeError(f"g++ could not compile {source_path}:\n{exc.stderr}") from exc
     return binary
 
-
-MapFn = Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]
-
-
-def map_reduce_in_pandas(
-    df: DataFrame,
-    mapper: MapFn,
-    reducer: MapFn,
-    map_schema: str,
-    out_schema: str,
-) -> DataFrame:
-    """Chunk-partial → global-final contract with Python callables.
-
-    ``mapper`` sees each partition as an iterator of Arrow-backed pandas
-    batches (= the reference mapper seeing a whole chunk file);
-    ``reducer`` sees every mapped row in one partition (= the reference's
-    single reducer over the concatenation).
-    """
-    # localCheckpoint (eager) keeps the map phase parallel: coalescing
-    # the un-materialized frame would narrow the mapper into the single
-    # reduce task (same defect as pipe_map_reduce's, review-found).
-    mapped = ckpt(df.mapInPandas(mapper, schema=map_schema))
-    return mapped.coalesce(1).mapInPandas(reducer, schema=out_schema)

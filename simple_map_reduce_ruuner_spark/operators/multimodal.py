@@ -194,11 +194,6 @@ FROM s
 """
 
 
-IMG_SIDE = 8  # resize stage: first 64 payload bytes as an 8x8 gray image
-IMG_PIXELS = IMG_SIDE * IMG_SIDE
-EDGE_THRESHOLD = 16
-
-
 def _ppm_encode_fn():
     """Factory for the P6 encode kernel (module-level so tests drive the
     production code path; the RETURNED closure is self-contained and
@@ -357,97 +352,6 @@ FROM px
 DECODE_IMAGE_PPM_SQL = _decode_image_oracle_sql(
     "4 + doc_id % 5", "3 + doc_id % 7"
 )
-
-
-# Oracle byte extraction for the resize stage: the Spark path reads the
-# first 64 BYTES of the UTF-8 payload (np.frombuffer), so the oracle
-# must index bytes, not characters — substr/ascii would diverge on any
-# non-ASCII code point (review-found, latent on the ASCII driver
-# corpus). hex() of the encoded blob gives two hex digits per byte;
-# strpos decodes them.
-def _byte_sql(i: int) -> str:
-    """1-based byte i of the hex-encoded payload as a BIGINT (0 if past
-    the end)."""
-    return (
-        f"CASE WHEN length(h) >= {2 * i}"
-        f" THEN CAST({hex_byte_sql(str(i))} AS BIGINT) ELSE 0 END"
-    )
-
-
-_PX_CTE = f"""
-codes AS (
-    SELECT doc_id, hex(encode(text)) AS h FROM documents
-),
-px AS (
-    SELECT doc_id,
-           [{", ".join(_byte_sql(i) for i in range(1, IMG_PIXELS + 1))}] AS p
-    FROM codes
-)"""
-
-
-RESIZE_FACTOR = 4  # 8x8 -> 2x2 via 4x4 integer block means
-RESIZE_SIDE = IMG_SIDE // RESIZE_FACTOR
-
-
-def resize_image_fake(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, q00, q01, q10, q11): the fake 8×8 image downsampled to
-    2×2 by exact integer 4×4 block means — the RESIZE stage of the
-    multimodal pipeline, same Arrow-batch numpy path as
-    ``decode_image_ppm`` (swap the block-mean for cv2/PIL thumbnailing
-    and the plumbing is unchanged). Block means are floor divisions of
-    16-pixel integer sums, so the oracle replays them exactly.
-    """
-    df = _with_payload(spark, sf_dir)
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            n = len(pdf)
-            img = np.zeros((n, IMG_PIXELS), dtype=np.int64)
-            for i, b in enumerate(pdf["payload"]):
-                v = np.frombuffer(b[:IMG_PIXELS], dtype=np.uint8)
-                img[i, : v.size] = v
-            blocks = (
-                img.reshape(n, RESIZE_SIDE, RESIZE_FACTOR, RESIZE_SIDE, RESIZE_FACTOR)
-                .sum(axis=(2, 4))
-                // (RESIZE_FACTOR * RESIZE_FACTOR)
-            )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "q00": blocks[:, 0, 0],
-                    "q01": blocks[:, 0, 1],
-                    "q10": blocks[:, 1, 0],
-                    "q11": blocks[:, 1, 1],
-                }
-            )
-
-    return df.mapInPandas(
-        resize, "doc_id long, q00 long, q01 long, q10 long, q11 long"
-    )
-
-
-def _resize_block_sql(br: int, bc: int) -> str:
-    """Sum of the (br, bc) 4x4 block over the 1-based 64-pixel list."""
-    idx = [
-        (br * RESIZE_FACTOR + r) * IMG_SIDE + (bc * RESIZE_FACTOR + c) + 1
-        for r in range(RESIZE_FACTOR)
-        for c in range(RESIZE_FACTOR)
-    ]
-    total = " + ".join(f"p[{i}]" for i in idx)
-    return f"CAST(({total}) // {RESIZE_FACTOR * RESIZE_FACTOR} AS BIGINT)"
-
-
-RESIZE_IMAGE_FAKE_SQL = f"""
-WITH {_PX_CTE}
-SELECT doc_id,
-       {_resize_block_sql(0, 0)} AS q00,
-       {_resize_block_sql(0, 1)} AS q01,
-       {_resize_block_sql(1, 0)} AS q10,
-       {_resize_block_sql(1, 1)} AS q11
-FROM px
-"""
 
 
 # --- PNG codec (RFC 2083 / ISO 15948; stdlib-only: zlib + crc32) -----
@@ -701,8 +605,7 @@ def decode_image_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DuckDB oracle (shared template with decode_image_ppm, different
     dimension formula) recomputes the features straight from the text
     bytes: a hash match proves the filter/compress/chunk round trip is
-    lossless. Replaces ``resize_image_fake`` in the registry (r11
-    verdict item 4).
+    lossless.
     """
     df = _with_payload(spark, sf_dir)
     encoded = df.mapInPandas(_png_encode_fn(), "doc_id long, png binary")
@@ -983,10 +886,6 @@ QUERIES: dict[str, Query] = {
         DECODE_IMAGE_PPM_SQL,
         "real Netpbm P6 codec round trip: encode + header-parse decode via mapInPandas",
     ),
-    # r12: decode_image_png REPLACES resize_image_fake in this slot
-    # (verdict item 4; registry stays at 152). The resize stage itself
-    # remains above as pipeline plumbing + direct tests — only its
-    # registry seat moved to the second real codec.
     "decode_image_png": Query(
         decode_image_png,
         DECODE_IMAGE_PNG_SQL,

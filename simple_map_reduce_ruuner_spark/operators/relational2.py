@@ -255,12 +255,11 @@ def order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Pattern: repartition by key so every group is complete within one
     partition, then ONE vectorized pandas groupby per partition via
-    mapInPandas. The naive per-group ``applyInPandas``
-    (:func:`order_gaps_grouped`, kept for the API surface and tested
-    equal) dispatches Python once per customer — measured 24 s vs ~2 s
-    for this formulation at sf0.1, purely interpreter dispatch overhead
-    on 15k tiny groups. Same lesson at 100 TB: grouped Python must be
-    batched per partition, not per key.
+    mapInPandas. A per-group ``applyInPandas`` form dispatches Python
+    once per customer — measured 24 s vs ~2 s for this formulation at
+    sf0.1, purely interpreter dispatch overhead on 15k tiny groups. Same
+    lesson at 100 TB: grouped Python must be batched per partition, not
+    per key.
     """
     import pandas as pd
 
@@ -290,30 +289,6 @@ def order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return orders.repartition("o_custkey").mapInPandas(
         gaps_per_partition, "o_custkey long, n_orders long, max_gap_days long"
-    )
-
-
-def order_gaps_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group ``applyInPandas`` form of :func:`order_gaps` — the
-    grouped-map API surface (reference B15 idiomatically). Correct but
-    dispatch-bound on high-cardinality keys; see order_gaps docstring."""
-    import pandas as pd
-
-    orders = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderdate")
-
-    def gaps(pdf: pd.DataFrame) -> pd.DataFrame:
-        days = pdf["o_orderdate"].sort_values().dt.normalize()
-        diffs = days.diff().dt.days.dropna()
-        return pd.DataFrame(
-            {
-                "o_custkey": [pdf["o_custkey"].iloc[0]],
-                "n_orders": [len(pdf)],
-                "max_gap_days": [int(diffs.max()) if len(diffs) else 0],
-            }
-        )
-
-    return orders.groupBy("o_custkey").applyInPandas(
-        gaps, "o_custkey long, n_orders long, max_gap_days long"
     )
 
 

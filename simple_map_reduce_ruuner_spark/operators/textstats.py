@@ -32,7 +32,6 @@ from simple_map_reduce_ruuner_spark.sources.tables import load_table, spread_sca
 STOPWORDS = (
     "the", "a", "of", "and", "to", "in", "is", "on", "for", "with",
 )
-WORD_RE = "[a-z]+"
 FP_MOD = 1_000_000_007
 FP_MULT = 31
 

@@ -1,4 +1,3 @@
-from simple_map_reduce_ruuner_spark.plans.bucketing import write_bucketed_table
-from simple_map_reduce_ruuner_spark.plans.skew import salted_aggregate, salted_join
+from simple_map_reduce_ruuner_spark.plans.skew import salted_aggregate
 
-__all__ = ["write_bucketed_table", "salted_aggregate", "salted_join"]
+__all__ = ["salted_aggregate"]

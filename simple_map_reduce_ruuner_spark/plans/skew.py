@@ -1,16 +1,16 @@
 """Skew mitigation by key salting.
 
-AQE's skew-join handles most hot keys automatically (enabled in the
-session factory); these utilities are the manual form for the cases AQE
-can't see — skewed *aggregation* keys, and joins where the skew is known
-ahead of planning. Both are algebraic rewrites (two-phase aggregation /
-small-side replication), so results are exactly equal to the unsalted
-form — asserted in tests/test_skew.py.
+AQE's skew-join handles hot join keys automatically (enabled in the
+session factory); :func:`salted_aggregate` is the manual form for what
+AQE can't see — skewed *aggregation* keys. It is an algebraic rewrite
+(two-phase aggregation), so results are exactly equal to the unsalted
+form — asserted in tests/test_bucketing_and_skew.py and by the
+``salted_word_count`` registry query's oracle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -53,25 +53,3 @@ def salted_aggregate(
         finals.append(getattr(F, remerge[fn])(out).alias(out))
     return phase1.groupBy(*key_cols).agg(*finals)
 
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Inner equi-join with a salted key: the big (skewed) side gets a
-    deterministic salt in [0, n_salts); the small side is replicated
-    n_salts times. A hot key's rows land on n_salts reducers instead of
-    one. Costs n_salts× the small side — use only when the small side is
-    modest and the skew is real.
-    """
-    big_salted = big.withColumn(
-        "__salt",
-        F.pmod(F.xxhash64(*[c for c in big.columns]), F.lit(n_salts)),
-    )
-    small_rep = small.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    ).withColumn("__salt", F.col("__salt").cast(big_salted.schema["__salt"].dataType))
-    joined = big_salted.join(small_rep, [key, "__salt"])
-    return joined.drop("__salt")

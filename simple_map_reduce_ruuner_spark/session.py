@@ -26,24 +26,19 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 def get_spark(
     app_name: str = "simple-map-reduce-ruuner-spark",
     cpus: str | int | None = None,
-    shuffle_partitions: int | None = None,
-    chunk_mb: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's defaults.
 
-    ``chunk_mb`` mirrors the reference's user-facing chunk-size knob
-    (Master.java:82,93-95): it bounds input-split bytes, i.e. the size of
-    the line-aligned chunk each (map) task consumes.
+    Input chunking is not a session setting: it is the ``chunk_mb`` of
+    :func:`~simple_map_reduce_ruuner_spark.sources.text.read_text_chunked`
+    and :func:`~simple_map_reduce_ruuner_spark.engine.run_job`.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-    )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -53,10 +48,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    if chunk_mb is not None:
-        builder = builder.config(
-            "spark.sql.files.maxPartitionBytes", str(chunk_mb * 1024 * 1024)
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -24,8 +24,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 # (applicationId, realpath(sf_dir)) -> {table name -> DataFrame}.
 # ``spark.read.parquet`` is ~100 ms of DRIVER work per call (py4j

@@ -1,52 +1,13 @@
-"""Bucketed joins eliminate the per-query exchange; salted rewrites are
-result-identical to their unsalted forms."""
+"""Skew handling: the salted aggregation is result-identical to its
+unsalted form, and AQE splits a hot join partition at runtime."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from simple_map_reduce_ruuner_spark.plans.bucketing import (
-    read_table,
-    write_bucketed_table,
-)
-from simple_map_reduce_ruuner_spark.plans.skew import salted_aggregate, salted_join
+from simple_map_reduce_ruuner_spark.plans.skew import salted_aggregate
 from simple_map_reduce_ruuner_spark.sources.tables import load_table
-
-
-def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-
-    write_bucketed_table(
-        li, "li_bkt", ["l_orderkey"], 8,
-        sort_keys=["l_orderkey"], path=str(tmp_path / "li_bkt"),
-    )
-    write_bucketed_table(
-        orders, "ord_bkt", ["o_orderkey"], 8,
-        sort_keys=["o_orderkey"], path=str(tmp_path / "ord_bkt"),
-    )
-
-    # disable broadcast so the join must consider partitioning
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        bkt = read_table(spark, "li_bkt").join(
-            read_table(spark, "ord_bkt"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        plan_bkt = bkt._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan_bkt, plan_bkt
-
-        plain = li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        plan_plain = plain._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in plan_plain
-
-        # identical results either way
-        assert bkt.count() == plain.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.sql("DROP TABLE IF EXISTS li_bkt")
-        spark.sql("DROP TABLE IF EXISTS ord_bkt")
 
 
 def test_salted_aggregate_equals_plain(spark, sf_dir):
@@ -59,22 +20,6 @@ def test_salted_aggregate_equals_plain(spark, sf_dir):
         F.count(F.lit(1)).alias("cnt"), F.max("value").alias("mx")
     )
     expected = {(r.event_type, r.cnt, r.mx) for r in plain.collect()}
-    assert got == expected
-
-
-def test_salted_join_equals_plain(spark, sf_dir):
-    orders = load_table(spark, sf_dir, "orders").withColumnRenamed(
-        "o_custkey", "custkey"
-    )
-    customer = load_table(spark, sf_dir, "customer").withColumnRenamed(
-        "c_custkey", "custkey"
-    )
-    salted = salted_join(orders, customer.select("custkey", "c_name"), "custkey", 8)
-    plain = orders.join(customer.select("custkey", "c_name"), "custkey")
-    got = {(r.o_orderkey, r.c_name) for r in salted.select("o_orderkey", "c_name").collect()}
-    expected = {
-        (r.o_orderkey, r.c_name) for r in plain.select("o_orderkey", "c_name").collect()
-    }
     assert got == expected
 
 

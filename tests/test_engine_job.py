@@ -104,6 +104,41 @@ def test_mapper_failure_surfaces_and_sets_phase(spark, tmp_path):
     assert not os.path.exists(out)
 
 
+def test_compile_failure_after_success_sets_phase(spark, tmp_path):
+    """A C++ mapper that does not compile fails the job before any Spark
+    work: job_status must move from the previous job's "All done!" to
+    "something wrong!", the error must carry g++'s diagnostic, and no
+    result file is written."""
+    from simple_map_reduce_ruuner_spark.engine import job_status
+
+    data = str(tmp_path / "in.txt")
+    with open(data, "w") as fh:
+        fh.write("x y\n" * 10)
+    identity = str(tmp_path / "identity.py")
+    with open(identity, "w") as fh:
+        fh.write("import sys\nsys.stdout.write(sys.stdin.read())\n")
+    run_job(spark, data, identity, identity, lang="py", out_path=str(tmp_path / "ok.txt"))
+    assert job_status(spark)["phase"] == "All done!"
+
+    broken = str(tmp_path / "broken_mapper.cpp")
+    with open(broken, "w") as fh:
+        fh.write("int main() { return undeclared_name; }\n")
+    out = str(tmp_path / "out.txt")
+    with pytest.raises(Exception) as exc:
+        run_job(
+            spark,
+            data_path=data,
+            mapper_src=broken,
+            reducer_src=identity,
+            mapper_lang="cpp",
+            reducer_lang="py",
+            out_path=out,
+        )
+    assert "error:" in str(exc.value)
+    assert job_status(spark)["phase"] == "something wrong!"
+    assert not os.path.exists(out)
+
+
 def test_reducer_failure_surfaces_and_leaves_no_files(spark, tmp_path):
     """A8 failure semantics: a nonzero-exit reducer fails the job inside
     the sink's write, job_status reports "something wrong!", and neither

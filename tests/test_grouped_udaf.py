@@ -1,24 +1,7 @@
-"""The per-group applyInPandas form and the partition-grouped mapInPandas
-form of order_gaps must agree exactly (same UDAF, two dispatch shapes)."""
+"""Python UDTF surface: a lateral table function agrees with its JVM
+twin."""
 
 from __future__ import annotations
-
-from simple_map_reduce_ruuner_spark.operators.relational2 import (
-    order_gaps,
-    order_gaps_grouped,
-)
-
-
-def test_order_gaps_forms_agree(spark, sf_dir):
-    fast = {
-        (r.o_custkey, r.n_orders, r.max_gap_days)
-        for r in order_gaps(spark, sf_dir).collect()
-    }
-    grouped = {
-        (r.o_custkey, r.n_orders, r.max_gap_days)
-        for r in order_gaps_grouped(spark, sf_dir).collect()
-    }
-    assert fast == grouped
 
 
 def test_python_udtf_matches_jvm_explode(spark):

@@ -10,10 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from simple_map_reduce_ruuner_spark.mapreduce import (
-    map_reduce_in_pandas,
-    pipe_map_reduce,
-)
+from simple_map_reduce_ruuner_spark.mapreduce import pipe_map_reduce
 from simple_map_reduce_ruuner_spark.operators.suspects import suspects_df
 from simple_map_reduce_ruuner_spark.operators.wordcount import word_count_df
 from simple_map_reduce_ruuner_spark.sources.tables import load_table
@@ -118,37 +115,6 @@ def test_run_job_plan_stays_in_the_jvm(spark, tmp_path, monkeypatch):
     for text in (map_plan, plan, lineage):
         assert not [n for n in python_nodes if n in text], text
     assert {r.line for r in result.collect()} == {"a 100", "b 100"}
-
-
-def test_map_reduce_in_pandas_wordcount(spark, sf_dir):
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents")
-
-    def mapper(batches):
-        from collections import Counter
-
-        counts: Counter = Counter()
-        for pdf in batches:
-            for text in pdf["text"]:
-                counts.update(text.lower().split())
-        yield pd.DataFrame(
-            {"word": list(counts.keys()), "cnt": list(counts.values())}
-        )
-
-    def reducer(batches):
-        acc: dict[str, int] = {}
-        for pdf in batches:
-            for word, cnt in zip(pdf["word"], pdf["cnt"]):
-                acc[word] = acc.get(word, 0) + int(cnt)
-        yield pd.DataFrame({"word": list(acc.keys()), "cnt": list(acc.values())})
-
-    result = map_reduce_in_pandas(
-        docs.select("text"), mapper, reducer, "word string, cnt long", "word string, cnt long"
-    )
-    got = {(r.word, r.cnt) for r in result.collect()}
-    expected = {(r.word, r.cnt) for r in word_count_df(docs).collect()}
-    assert got == expected
 
 
 @pytest.mark.skipif(

@@ -1,31 +1,16 @@
 """Source/sink coverage: chunked text read (reference A1), single-file
-text sink (A9), CSV/JSON/Parquet round-trips, partitioned writes."""
+text sink (A9), the SQL front-end over the fixture views, and Spark's
+own parquet schema merging and dynamic partition pruning."""
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import functions as F
-
-from simple_map_reduce_ruuner_spark.sources.formats import (
-    read_csv,
-    read_json,
-    read_orc,
-    read_parquet,
-    write_csv,
-    write_json,
-    write_orc,
-    write_parquet,
-)
 from simple_map_reduce_ruuner_spark.sources.tables import load_table
 from simple_map_reduce_ruuner_spark.sources.text import (
     read_text_chunked,
     write_text_single,
 )
-
-
-def _rows(df, cols):
-    return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
 def test_text_chunked_read_and_single_sink(spark, tmp_path):
@@ -46,58 +31,6 @@ def test_text_chunked_read_and_single_sink(spark, tmp_path):
     assert os.path.exists(out)
     with open(out) as fh:
         assert sorted(fh.read().splitlines()) == sorted(lines)
-
-
-def test_csv_json_parquet_roundtrip(spark, sf_dir, tmp_path):
-    nation = load_table(spark, sf_dir, "nation")
-    cols = ["n_nationkey", "n_name", "n_regionkey"]
-    expected = _rows(nation, cols)
-    schema = "n_nationkey int, n_name string, n_regionkey int"
-
-    csv_dir = str(tmp_path / "nation_csv")
-    write_csv(nation, csv_dir)
-    assert _rows(read_csv(spark, csv_dir, schema), cols) == expected
-
-    json_dir = str(tmp_path / "nation_json")
-    write_json(nation, json_dir)
-    assert _rows(read_json(spark, json_dir, schema), cols) == expected
-
-    pq_dir = str(tmp_path / "nation_pq")
-    write_parquet(nation, pq_dir)
-    assert _rows(read_parquet(spark, pq_dir), cols) == expected
-
-    orc_dir = str(tmp_path / "nation_orc")
-    write_orc(nation, orc_dir)
-    assert _rows(read_orc(spark, orc_dir), cols) == expected
-
-
-def test_orc_partitioned_write_prunes(spark, sf_dir, tmp_path):
-    """ORC gets the same partition-pruning behavior as parquet: a filter
-    on the partition column reads only that directory."""
-    orders = load_table(spark, sf_dir, "orders")
-    out = str(tmp_path / "orders_orc")
-    write_orc(orders, out, partition_by=["o_orderstatus"])
-    df = read_orc(spark, out).where("o_orderstatus = 'F'")
-    expected = orders.where("o_orderstatus = 'F'").count()
-    assert df.count() == expected
-    scan = df._jdf.queryExecution().executedPlan().toString()
-    assert "o_orderstatus=F" in scan or "PartitionFilters" in scan
-
-
-def test_partitioned_parquet_write_prunes(spark, sf_dir, tmp_path):
-    orders = load_table(spark, sf_dir, "orders")
-    out = str(tmp_path / "orders_by_status")
-    write_parquet(orders, out, partition_by=["o_orderstatus"])
-    # partition dirs exist
-    subdirs = {d for d in os.listdir(out) if d.startswith("o_orderstatus=")}
-    assert len(subdirs) >= 2
-    back = read_parquet(spark, out)
-    one = back.where(F.col("o_orderstatus") == "F")
-    # partition pruning reaches the scan: PartitionFilters names the column
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert "o_orderstatus" in plan and "PartitionFilters" in plan
-    assert back.count() == orders.count()
-    assert one.count() == orders.where(F.col("o_orderstatus") == "F").count()
 
 
 def test_sql_surface_over_registered_views(spark, sf_dir):
@@ -128,43 +61,6 @@ def test_sql_surface_over_registered_views(spark, sf_dir):
     assert via_sql == via_df and via_sql
 
 
-def test_csv_quarantine_captures_malformed_rows(spark, tmp_path):
-    """Dirty input: good rows parse, malformed rows land in
-    _corrupt_record (auditable quarantine) — the job never dies."""
-    from simple_map_reduce_ruuner_spark.sources.formats import read_csv_quarantine
-
-    path = str(tmp_path / "dirty.csv")
-    with open(path, "w") as fh:
-        fh.write("id,qty\n1,10\nnot_an_int,20\n3,30\n")
-    df = read_csv_quarantine(spark, path, "id int, qty int").cache()
-    good = df.where(df._corrupt_record.isNull())
-    bad = df.where(df._corrupt_record.isNotNull())
-    assert {(r.id, r.qty) for r in good.collect()} == {(1, 10), (3, 30)}
-    bad_rows = bad.collect()
-    assert len(bad_rows) == 1 and "not_an_int" in bad_rows[0]._corrupt_record
-    df.unpersist()
-
-
-def test_compact_parquet_merges_small_files(spark, sf_dir, tmp_path):
-    """200 tiny files compact into the byte-sized file count; data
-    survives bit-exact."""
-    from simple_map_reduce_ruuner_spark.sources.formats import compact_parquet
-
-    src = str(tmp_path / "fragmented")
-    dst = str(tmp_path / "compacted")
-    orders = load_table(spark, sf_dir, "orders")
-    orders.repartition(200).write.parquet(src)
-    import glob
-
-    assert len(glob.glob(f"{src}/*.parquet")) == 200
-    n = compact_parquet(spark, src, dst, target_file_mb=128)
-    got_files = glob.glob(f"{dst}/*.parquet")
-    assert len(got_files) == n  # tiny table → 1 file
-    want = {tuple(r) for r in orders.collect()}
-    got = {tuple(r) for r in spark.read.parquet(dst).collect()}
-    assert got == want
-
-
 def test_schema_evolution_merge_schema(spark, sf_dir, tmp_path):
     """mergeSchema unions column sets across file generations (the
     additive-evolution contract an append-only corpus needs)."""
@@ -193,109 +89,3 @@ def test_dynamic_partition_pruning_in_plan(spark, sf_dir, tmp_path):
     joined = fact.join(dim, "event_type").groupBy("event_type").count()
     plan = joined._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruning" in plan.lower(), plan[:2000]
-
-
-def test_python_datasource_chunked_text(spark, tmp_path):
-    """The Spark 4 Python DataSource twin of read_text_chunked: same rows
-    as the built-in text reader, multiple planned partitions, no torn or
-    duplicated lines at chunk boundaries."""
-    from simple_map_reduce_ruuner_spark.sources.pytext_source import (
-        ChunkedTextDataSource,
-    )
-
-    path = tmp_path / "corpus.txt"
-    lines = [f"line-{i:05d} " + "x" * (i % 97) for i in range(5000)]
-    path.write_text("\n".join(lines) + "\n")
-
-    spark.dataSource.register(ChunkedTextDataSource)
-    df = (
-        spark.read.format("smrr_chunked_text")
-        .option("path", str(path))
-        .option("chunk_mb", "0.05")  # ~51 KB chunks -> many partitions
-        .load()
-    )
-    assert df.rdd.getNumPartitions() > 1
-    got = sorted(r.value for r in df.collect())
-    assert got == sorted(lines)
-
-    # byte-0 edge: an empty file yields zero rows, not a crash
-    empty = tmp_path / "empty.txt"
-    empty.write_text("")
-    assert (
-        spark.read.format("smrr_chunked_text")
-        .option("path", str(empty))
-        .load()
-        .count()
-        == 0
-    )
-
-
-def test_binary_file_source_reads_and_prunes(spark, tmp_path):
-    """binaryFile whole-file ingest: content round-trips byte-exact,
-    pathGlobFilter prunes at listing time, and the max_bytes bound
-    reaches the reader as a length pushdown."""
-    from simple_map_reduce_ruuner_spark.sources.formats import read_binary_files
-
-    blobs = {"a.jpg": b"\xff\xd8jpeg-bytes", "b.jpg": b"\xff\xd8" + b"x" * 64,
-             "c.txt": b"not-an-image"}
-    for name, payload in blobs.items():
-        (tmp_path / name).write_bytes(payload)
-
-    df = read_binary_files(spark, str(tmp_path), glob_filter="*.jpg")
-    rows = {os.path.basename(r.path): bytes(r.content) for r in df.collect()}
-    assert rows == {"a.jpg": blobs["a.jpg"], "b.jpg": blobs["b.jpg"]}
-
-    small = read_binary_files(
-        spark, str(tmp_path), glob_filter="*.jpg", max_bytes=20
-    )
-    assert [os.path.basename(r.path) for r in small.collect()] == ["a.jpg"]
-    plan = small._jdf.queryExecution().executedPlan().toString()
-    assert "length" in plan  # size bound pushed toward the reader
-
-
-def test_dynamic_partition_overwrite_touches_only_changed_days(spark, sf_dir, tmp_path):
-    """Incremental backfill: overwriting a one-day correction frame
-    rewrites ONLY that day's partition — other partitions' files are
-    bit-identical afterwards, and the table equals the full recompute."""
-    from simple_map_reduce_ruuner_spark.sources.formats import (
-        overwrite_partitions_dynamic,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).alias("n"), F.sum(F.col("value").cast("decimal(30,6)")).alias("v")
-    )
-    path = str(tmp_path / "rollup")
-    overwrite_partitions_dynamic(daily, path, "day")
-
-    import glob
-    import hashlib
-
-    def digests():
-        out = {}
-        for f in glob.glob(f"{path}/day=*/*.parquet"):
-            out[f] = hashlib.md5(open(f, "rb").read()).hexdigest()
-        return out
-
-    before = digests()
-    target_day = sorted(
-        d.day for d in daily.select("day").distinct().collect()
-    )[3]
-    corrected = (
-        daily.where(F.col("day") == F.lit(target_day))
-        .withColumn("n", F.col("n") + 1)
-    )
-    overwrite_partitions_dynamic(corrected, path, "day")
-    after = digests()
-
-    changed_prefix = f"{path}/day={target_day}"
-    for f, h in before.items():
-        if not f.startswith(changed_prefix):
-            assert after.get(f) == h, f"untouched partition rewritten: {f}"
-    assert any(f.startswith(changed_prefix) for f in after)
-
-    got = spark.read.parquet(path)
-    assert got.where(F.col("day") == F.lit(target_day)).collect()[0].n == (
-        daily.where(F.col("day") == F.lit(target_day)).collect()[0].n + 1
-    )
-    assert got.count() == daily.count()

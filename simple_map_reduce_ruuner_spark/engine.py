@@ -13,7 +13,9 @@ pipeline: chunked line-aligned text read (A1) → per-chunk external map
 ``TRANSFORM`` over ``coalesce(1)``) → single text file (A9). Programs use
 the stdin/stdout pipe contract (the reference ships argv files; semantics
 identical — whole chunk in, result lines out). C++ sources are compiled
-like the reference worker does (Worker.java:146-151).
+like the reference worker does (Worker.java:146-151), but once per Spark
+application: the binary is cached under a key on its preprocessed
+source, so only an edited program or header compiles again.
 
 The one difference from a 100 TB engine: the single global reducer is
 kept deliberately for contract fidelity — it is only correct/fast when
@@ -42,11 +44,11 @@ from simple_map_reduce_ruuner_spark.sources.text import (
 )
 
 
-def _as_command(src_path: str, lang: str) -> str:
+def _as_command(spark: SparkSession, src_path: str, lang: str) -> str:
     if lang == "py":
         return f"{shlex.quote(sys.executable)} {shlex.quote(src_path)}"
     if lang == "cpp":
-        return shlex.quote(compile_cpp_program(src_path))
+        return shlex.quote(compile_cpp_program(spark, src_path))
     raise ValueError(f"unsupported lang {lang!r}: expected 'py' or 'cpp'")
 
 
@@ -118,11 +120,11 @@ def run_job(
     prev_split = spark.conf.get(_MAX_PARTITION_BYTES, None)
     out = None
     try:
-        mapper_cmd = _as_command(mapper_src, mapper_lang or lang)
-        reducer_cmd = _as_command(reducer_src, reducer_lang or lang)
+        mapper_cmd = _as_command(spark, mapper_src, mapper_lang or lang)
+        reducer_cmd = _as_command(spark, reducer_src, reducer_lang or lang)
         if argv_files:
-            mapper_cmd = argv_file_command(mapper_cmd)
-            reducer_cmd = argv_file_command(reducer_cmd)
+            mapper_cmd = argv_file_command(spark, mapper_cmd)
+            reducer_cmd = argv_file_command(spark, reducer_cmd)
         lines = read_text_chunked(spark, data_path, chunk_mb=chunk_mb)
         result = pipe_map_reduce(lines, mapper_cmd, reducer_cmd)
         if out_path is not None:

@@ -174,10 +174,10 @@ def neardup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # returned DataFrame (nothing ever unpersisted them — review-found
     # storage-pool leak across gate+bench reps), while checkpoint blocks
     # are reference-counted and freed by the ContextCleaner once the
-    # result is consumed. eager=False keeps construction job-free; the
-    # first action materializes the compact per-doc arrays once and
-    # both join sides explode off the blocks. Carrying size(sharr)
-    # through the pair join (two extra ints per candidate row) replaces
+    # result is consumed. eager=False defers the block write (AQE still
+    # runs the shuffle stages before it here, see ckpt); the first action
+    # writes the per-doc arrays once and both join sides explode off the
+    # blocks. Carrying size(sharr) through the pair join (2 ints/row) replaces
     # the old sizes groupBy AND its two post-agg joins — the r9 rework
     # that took this query from six exchanges to two (isolated sf0.1
     # reps: 2.8/2.5/2.3 s before → 2.3/1.8/1.6/1.4 s after; the old
@@ -492,8 +492,8 @@ SIMHASH_BITS = 60  # our portable hash has 60 usable bits
 # registry query and `simhash_band_pairs`, textlm.py) — same
 # keyed-lazy-checkpoint sharing as graph._COTRADING_CACHE: whichever
 # query EXECUTES first materializes the (doc_id, simhash) blocks
-# (n_docs × 16 B — tiny), the sibling rides them. eager=False keeps
-# construction job-free for EXPLAIN/plan tests/registry sweeps.
+# (n_docs × 16 B — tiny), the sibling rides them. Under AQE the plan's
+# shuffle stages still run when the entry is built (see ckpt).
 _SIMHASH_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 

@@ -70,13 +70,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
     """``localCheckpoint`` with SERIALIZED memory+disk block storage.
 
-    ``eager=False`` defers materialization to the first action so that
-    building the DataFrame (EXPLAIN, plan tests, registry sweeps) stays
-    side-effect-free; use it when the checkpoint exists to dedupe
-    multiple references *within one query* rather than across iterations.
-    (Even lazy, ``localCheckpoint`` compiles the physical plan at call
-    time — ~0.5 s of driver-side planning per call, measured on the BPE
-    chain — so construction is cheap but not free.)
+    ``eager=False`` defers writing the checkpoint blocks to the first
+    action; use it when the checkpoint exists to dedupe multiple
+    references *within one query* rather than across iterations. It does
+    NOT make construction job-free: even lazy, ``localCheckpoint`` takes
+    ``queryExecution.toRdd`` at call time, and under AQE (on in
+    ``get_spark``) building that RDD runs every shuffle map stage of
+    ``df`` as Spark jobs — a lazy checkpoint of ``groupBy().count()``
+    runs 1 job with AQE on, 0 with it off. Only a plan without an
+    exchange stays job-free, and even then the call plans the query
+    (~0.5 s of driver-side planning, measured on the BPE chain).
 
     Spark's default checkpoint level keeps blocks DESERIALIZED in
     memory, and — worse for scale — re-inflates disk-spilled blocks
@@ -157,11 +160,13 @@ def session_cache(
 
     ``build()`` runs once per (session, dataset); with ``checkpoint``
     the result is wrapped in a LAZY localCheckpoint (``ckpt(eager=
-    False)``), so construction stays job-free (EXPLAIN, plan tests,
-    registry sweeps), the first query that EXECUTES materializes the
-    blocks (serialized MEMORY_AND_DISK — spills, never OOMs), and every
-    later execution in the session — sibling queries of the same
-    family, later bench reps — reads the blocks. ``checkpoint=False``
+    False)``): the first query that EXECUTES writes the blocks
+    (serialized MEMORY_AND_DISK — spills, never OOMs), but under AQE the
+    build's shuffle map stages already run as jobs at construction time
+    (see :func:`ckpt`), so EXPLAIN, plan tests and registry sweeps pay
+    them the first time a dataset's entry is built. Every later
+    execution in the session — sibling queries of the same family,
+    later bench reps — reads the blocks. ``checkpoint=False``
     memoizes the DataFrame as-is, for builders that already return
     checkpointed/eagerly-computed results (e.g. the connected-
     components fixpoint). The applicationId key makes a restarted

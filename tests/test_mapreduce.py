@@ -35,7 +35,7 @@ def test_pipe_map_reduce_matches_dataframe_wordcount(spark, sf_dir):
     assert got == expected
 
 
-def test_pipe_cpp_mapper(spark, sf_dir, tmp_path):
+def test_pipe_cpp_mapper(spark, sf_dir):
     """The reference's C++ path (Worker.java:146-153): compile a user C++
     mapper, pipe chunks through the binary, reduce with the Python
     reducer — language-mixing exactly as the reference allows."""
@@ -43,7 +43,7 @@ def test_pipe_cpp_mapper(spark, sf_dir, tmp_path):
 
     from simple_map_reduce_ruuner_spark.mapreduce import compile_cpp_program
 
-    binary = compile_cpp_program(f"{EXAMPLES}/wordcount_mapper.cpp", str(tmp_path))
+    binary = compile_cpp_program(spark, f"{EXAMPLES}/wordcount_mapper.cpp")
     docs = load_table(spark, sf_dir, "documents")
     piped = pipe_map_reduce(
         docs.select("text").repartition(4),

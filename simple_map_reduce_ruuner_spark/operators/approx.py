@@ -183,8 +183,7 @@ CROSS JOIN (VALUES ('p50'), ('p90'), ('p99')) t(q)
 # records a weaker rows-only check for them); their bounded-error
 # evidence vs the exact anchors is measured per round into
 # APPROX_BOUNDS.json (tools/approx_bounds.py) and asserted by
-# tests/test_approx_and_stubs.py. Gate ordering is the registry-wide
-# least-recently-verified sweep (registry.all_queries).
+# tests/test_approx_and_stubs.py.
 QUERIES: dict[str, Query] = {
     "exact_distinct_users": Query(
         exact_distinct_users, EXACT_DISTINCT_USERS_SQL, "exact distinct counts"

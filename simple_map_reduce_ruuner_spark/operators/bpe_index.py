@@ -83,7 +83,6 @@ def build_bpe_merges(
     sf_dir: str,
     k: int = BPE_MERGES,
     base_dir: str | None = None,
-    rebuild: bool = False,
 ) -> str:
     """Materialize (or reuse) the trained BPE merge table + final type
     symbolization for ``sf_dir``; returns the index directory.
@@ -116,7 +115,6 @@ def build_bpe_merges(
             "k": k,
             "sf_dir": os.path.realpath(sf_dir),
         },
-        rebuild=rebuild,
     )
 
 

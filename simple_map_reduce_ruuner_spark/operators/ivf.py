@@ -110,7 +110,6 @@ def build_ivf_index(
     sf_dir: str,
     n_cells: int = IVF_CELLS,
     base_dir: str | None = None,
-    rebuild: bool = False,
     n_iters: int = 1,
 ) -> str:
     """Materialize (or reuse) the IVF index for ``sf_dir``; returns its
@@ -172,7 +171,6 @@ def build_ivf_index(
             "n_vectors": n_vecs,
             "sf_dir": os.path.realpath(sf_dir),
         },
-        rebuild=rebuild,
     )
 
 

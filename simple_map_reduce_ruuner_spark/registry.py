@@ -8,7 +8,6 @@ weaker rows-only check).
 
 from __future__ import annotations
 
-import pathlib
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -17,10 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 from simple_map_reduce_ruuner_spark.operators import peaks, relational, suspects, wordcount
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
-
-# The external driver's gate records exactly the first GATE_WIDTH
-# ``queries()`` entries each round (observed r1..r4).
-GATE_WIDTH = 50
 
 
 @dataclass(frozen=True)
@@ -134,47 +129,12 @@ def _builtin_queries() -> dict[str, Query]:
     return q
 
 
-def _last_verified_round() -> dict[str, int]:
-    """name -> most recent driver round whose CORRECTNESS_r*.json artifact
-    (committed at the repo root) recorded that query. Names never recorded
-    are absent (treated as round 0 = stalest). Returns {} outside the
-    driver checkout, degrading the ordering below to plain alphabetical."""
-    import json
-    import re
-
-    root = pathlib.Path(__file__).resolve().parent.parent
-    last: dict[str, int] = {}
-    try:
-        artifacts = sorted(root.glob("CORRECTNESS_r*.json"))
-    except OSError:
-        return last
-    for path in artifacts:
-        m = re.search(r"r(\d+)", path.name)
-        rnd = int(m.group(1)) if m else 0
-        try:
-            data = json.loads(path.read_text())
-        except (OSError, ValueError):
-            continue
-        if isinstance(data, dict):
-            for name in data:
-                last[name] = max(last.get(name, 0), rnd)
-    return last
-
-
 def all_queries() -> dict[str, Query]:
     """Full registry: the builtin queries plus every extension module's
     ``QUERIES`` dict. The extension modules import ``Query`` from this
     module, so they are imported here rather than at the top; an import
     error propagates instead of silently dropping a module's queries.
-
-    Ordering contract (r5): least-recently-driver-verified first. The
-    driver gate records only the first GATE_WIDTH entries per round, so a
-    fixed ordering would re-verify the same 50 forever while the other 51
-    green rows go stale (observed: r3 and r4 gated identical name sets).
-    Sorting by (last verified round, name) makes the gate an LRU sweep:
-    never-verified queries lead, then the stalest greens, and each round's
-    gate run automatically pushes its 50 names to the back of the queue
-    for the next round.
+    Entries are sorted by name.
     """
     from simple_map_reduce_ruuner_spark.operators import (
         approx, behavior, bpe_index, clustering, codecs, cogroup_ops,
@@ -194,6 +154,4 @@ def all_queries() -> dict[str, Query]:
         sql4, textlm, textstats, timeseries, training, windows,
     ):
         q.update(module.QUERIES)
-    last = _last_verified_round()
-    names = sorted(q, key=lambda name: (last.get(name, 0), name))
-    return {name: q[name] for name in names}
+    return {name: q[name] for name in sorted(q)}

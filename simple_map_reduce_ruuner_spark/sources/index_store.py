@@ -29,16 +29,13 @@ def materialize_index(
     key: str,
     write_scratch: Callable[[str], None],
     manifest: dict,
-    rebuild: bool = False,
 ) -> str:
     """Ensure ``<base>/<key>`` exists (building via ``write_scratch``
     into a private scratch dir if not) and return it."""
     final = os.path.join(base, key)
     manifest_path = os.path.join(final, "_MANIFEST.json")
-    if not rebuild and os.path.exists(manifest_path):
+    if os.path.exists(manifest_path):
         return final
-    if rebuild and os.path.exists(final):
-        shutil.rmtree(final, ignore_errors=True)
 
     os.makedirs(base, exist_ok=True)
     scratch = f"{final}.building-{os.getpid()}-{uuid.uuid4().hex[:8]}"

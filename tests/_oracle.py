@@ -1,9 +1,10 @@
-"""Local mirror of the driver's correctness gate: run a registry query on
+"""Local mirror of the driver's correctness check: run a registry query on
 Spark and its oracle SQL on DuckDB over the same parquet tables, compare
 row count, column names, and order-insensitive values.
 
-Used by the pytest parity gates; ``tools/driver_sim.py`` is the
-standalone end-to-end mirror run before every commit.
+The one comparator: the pytest parity tests and ``tools/driver_sim.py``
+(the standalone end-to-end run over every query in a plain session) both
+call ``check_query``.
 """
 
 from __future__ import annotations

@@ -2,7 +2,7 @@
 
 Correctness of the two registry queries is covered by the oracle-parity
 sweep; these tests pin the INDEX machinery itself — content-keyed
-reuse, rebuild determinism, partition-pruned probes — which the oracle
+reuse, build determinism, partition-pruned probes — which the oracle
 cannot see (it replays train+probe from scratch)."""
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_build_is_reused_then_rebuilt(spark, sf_dir, index_base):
+def test_build_is_reused_then_rebuilt(spark, sf_dir, index_base, tmp_path):
     p1 = ivf.build_ivf_index(spark, sf_dir, base_dir=index_base)
     manifest = os.path.join(p1, "_MANIFEST.json")
     stamp = os.path.getmtime(manifest)
@@ -33,11 +33,16 @@ def test_build_is_reused_then_rebuilt(spark, sf_dir, index_base):
     assert p2 == p1
     assert os.path.getmtime(manifest) == stamp, "reuse must not rewrite"
     before = _rows(ivf.ann_topk_ivf_indexed(spark, sf_dir, base_dir=index_base))
-    p3 = ivf.build_ivf_index(spark, sf_dir, base_dir=index_base, rebuild=True)
-    assert p3 == p1
-    assert os.path.getmtime(manifest) != stamp, "rebuild must rewrite"
-    after = _rows(ivf.ann_topk_ivf_indexed(spark, sf_dir, base_dir=index_base))
-    assert before == after, "rebuild must be value-deterministic"
+    # a second build from scratch in a fresh base dir lands under the
+    # same content key and answers identically
+    fresh = str(tmp_path / "ivf_fresh")
+    p3 = ivf.build_ivf_index(spark, sf_dir, base_dir=fresh)
+    assert p3 == os.path.join(fresh, os.path.basename(p1))
+    assert json.load(open(os.path.join(p3, "_MANIFEST.json"))) == json.load(
+        open(manifest)
+    )
+    after = _rows(ivf.ann_topk_ivf_indexed(spark, sf_dir, base_dir=fresh))
+    assert before == after, "a rebuild must be value-deterministic"
 
 
 def test_index_key_is_content_addressed(sf_dir):

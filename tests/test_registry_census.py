@@ -1,8 +1,9 @@
 """Registry completeness guard: every operator/streaming module that
 exposes a ``QUERIES`` dict must be wired into ``registry.all_queries()``.
 A module left out of the explicit import list would fail SILENTLY (its
-queries simply never reach the driver gate), so this test walks the
-packages on disk and diffs against the live registry.
+queries simply never reach the driver), so this test walks the
+packages on disk and diffs against the live registry. The registry's
+order (sorted by name) and the REGISTRY.md census are pinned here too.
 """
 
 from __future__ import annotations
@@ -34,6 +35,13 @@ def test_every_module_query_is_registered():
     assert not missing, f"QUERIES defined but not reachable: {sorted(missing)}"
 
 
+def test_all_queries_is_sorted_by_name():
+    """The driver walks ``queries()`` in dict order; that order is the
+    name order, independent of anything else committed in the repo."""
+    names = list(registry.all_queries())
+    assert names == sorted(names)
+
+
 def test_all_queries_raises_when_an_extension_module_is_broken(monkeypatch):
     """A module that cannot be imported must fail the registry loudly,
     never silently drop its queries from the driver's view."""
@@ -58,9 +66,9 @@ def test_every_oracle_belongs_to_a_query():
 
 
 def test_registry_md_census_is_current():
-    """REGISTRY.md (the committed name → site → oracle-kind census) must
-    match a live regeneration — a new/renamed/moved query without a
-    census refresh fails here; run
+    """REGISTRY.md (the committed name → ``path::function`` → oracle-kind
+    census) must match a live regeneration — a new/renamed query, or one
+    moved to another module, without a census refresh fails here; run
     `python tools/registry_census.py --write`."""
     import pathlib
     import re
@@ -72,7 +80,7 @@ def test_registry_md_census_is_current():
 
     live = set(registry_census.census_rows())
     committed = set()
-    row = re.compile(r"^\| (\S+) \| `([^`]+)` \| (sql|rows-only) \|$")
+    row = re.compile(r"^\| (\S+) \| `(\S+\.py::\w+)` \| (sql|rows-only) \|$")
     for line in (root / "REGISTRY.md").read_text().splitlines():
         m = row.match(line)
         if m:

@@ -1,78 +1,43 @@
 #!/usr/bin/env python
-"""Local simulation of the driver's correctness gate.
+"""Local simulation of the driver's correctness check.
 
-Runs entry() + every queries()[name] vs oracle_sql()[name] at the given
-sf dir (default sf0.01) in THIS process's plain SparkSession — built like
-the driver would, NOT via the repo's tuned session factory. Mirrors the
-driver compare: sorted column names + order-insensitive normalized values.
+Verifies the tree this script sits in (printed on the first line), so a
+copy of the repo checks itself. Runs ``entry()`` as a smoke check, then
+every ``__spark_entry__.queries()`` name through
+``tests/_oracle.check_query`` (Spark vs its DuckDB oracle, same compare
+as the oracle-parity tests) at the given sf dir, default sf0.01. The
+session is a plain one built like the driver would, NOT the repo's tuned
+session factory.
 
 Usage: python tools/driver_sim.py [sf_dir] [--tz America/New_York]
-                                  [--only name1,name2] [--first-n 50]
-Exit code 0 iff every oracle-backed query matches. --first-n N restricts
-the sweep to the first N registry entries in driver order. CAVEAT: that
-window equals the external gate's only when the local CORRECTNESS_r*.json
-set equals the committed set — the LRU order is derived from those
-artifacts on disk, so an untracked/modified artifact shifts the local
-window away from what a clean driver checkout of HEAD would compute (the
-sim warns when it detects this).
+                                  [--only name1,name2]
+Exit code 0 iff every query matches.
 """
 
 from __future__ import annotations
 
 import importlib.util
-import math
+import pathlib
 import sys
 import time
 
-import duckdb
-
-REPO = "/root/repo"
-sys.path.insert(0, REPO)
-
-# single source of truth for the table catalog (a table added there but
-# missing here would error every oracle that references it)
-from simple_map_reduce_ruuner_spark.sources.tables import TABLE_NAMES as TABLES
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 
-def norm(v):
-    """Keep in lockstep with tests/_oracle._norm_cell (same
-    normalization, incl. the pandas-NA -> None branch)."""
-    import pandas as pd
-
-    if isinstance(v, (list, tuple)) or type(v).__name__ == "ndarray":
-        return tuple(norm(x) for x in v)
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else repr(v + 0.0)
-    if pd.isna(v):
-        return None
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
-    return v
-
-
-def _untracked_correctness_artifacts() -> list[str]:
-    """CORRECTNESS_r*.json files whose working-tree state differs from
-    HEAD (untracked, modified, or deleted) — exactly the files that make
-    the local LRU window diverge from a clean driver checkout's."""
-    import subprocess
-
-    try:
-        out = subprocess.run(
-            ["git", "-C", REPO, "status", "--porcelain", "--", "CORRECTNESS_r*.json"],
-            capture_output=True,
-            text=True,
-            timeout=10,
-        ).stdout
-    except Exception:
-        return []
-    return [line[3:] for line in out.splitlines() if line.strip()]
+def _load(relpath: str):
+    """Import a repo file that is not part of the package, by path."""
+    path = ROOT / relpath
+    spec = importlib.util.spec_from_file_location(path.stem, path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:]]
+    args = sys.argv[1:]
     tz = None
     only: set[str] | None = None
-    first_n: int | None = None
     if "--tz" in args:
         i = args.index("--tz")
         tz = args[i + 1]
@@ -81,17 +46,11 @@ def main() -> int:
         i = args.index("--only")
         only = set(args[i + 1].split(","))
         del args[i : i + 2]
-    if "--first-n" in args:
-        i = args.index("--first-n")
-        first_n = int(args[i + 1])
-        del args[i : i + 2]
     sf = args[0] if args else "/root/testdata/sf0.01"
+    print(f"verifying {ROOT}")
 
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", f"{REPO}/__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    entry = _load("__spark_entry__.py")
+    oracle = _load("tests/_oracle.py")
 
     from pyspark.sql import SparkSession
 
@@ -101,98 +60,43 @@ def main() -> int:
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    n = mod.entry(spark).count()
+    n = entry.entry(spark).count()
     print(f"SMOKE entry(): rows={n}")
     assert n > 0
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
-        )
-
-    qs, osql = mod.queries(), mod.oracle_sql()
+    names, osql = list(entry.queries()), entry.oracle_sql()
     if only is not None:
-        # validate against the FULL registry before any windowing, so a
-        # valid name outside the --first-n window is reported as a
-        # windowing effect, not mislabeled as unknown (advice r6)
-        unknown = only - set(qs)
+        unknown = only - set(names)
         if unknown:
             print(f"UNKNOWN --only names: {sorted(unknown)}")
             return 1
-    if first_n is not None:
-        # dict order IS driver order (LRU, registry.all_queries)
-        dirty = _untracked_correctness_artifacts()
-        if dirty:
-            print(
-                "WARNING: local CORRECTNESS_r*.json set differs from the "
-                f"committed set ({dirty}); the --first-n window may not "
-                "match the external gate's."
-            )
-        qs = {k: qs[k] for k in list(qs)[:first_n]}
-    if only is not None:
-        outside = only - set(qs)
-        if outside:
-            print(
-                f"NOTE: --only names outside the --first-n window "
-                f"(valid registry names, not gated this round): "
-                f"{sorted(outside)}"
-            )
-        qs = {k: v for k, v in qs.items() if k in only}
+        names = sorted(only)
     fails, zeros = [], []
-    for name in sorted(qs):
+    for name in names:
         t0 = time.perf_counter()
         # one failing query must not abort the sweep — record and move
         # on so every remaining mismatch still gets reported
         try:
-            sdf = qs[name](spark, sf).toPandas()
+            r = oracle.check_query(spark, sf, name)
         except Exception as e:
             fails.append(name)
-            print(f"{name}: SPARK-ERROR {str(e)[:160]}")
+            print(f"{name}: ERROR {type(e).__name__}: {str(e)[:160]}")
             continue
-        if len(sdf) == 0:
+        if r["rows_spark"] == 0:
             zeros.append(name)
-        if name not in osql:
-            print(f"{name}: rows-only rows={len(sdf)} ({time.perf_counter()-t0:.1f}s)")
-            continue
-        try:
-            ddf = con.execute(osql[name]).df()
-        except Exception as e:
-            fails.append(name)
-            print(f"{name}: ORACLE-ERROR {str(e)[:160]}")
-            continue
-        sc, dc = sorted(sdf.columns), sorted(ddf.columns)
-        # The real driver canonicalizes with pandas sort_values, which
-        # raises on unhashable cells (arrays/maps) — r1's suspects_orders
-        # crash. Reproduce that exact step so the sim catches it first.
-        try:
-            sdf[sc].sort_values(by=sc)
-        except TypeError as e:
-            fails.append(name)
-            print(f"{name}: DRIVER-CRASH (unhashable output column): {e}")
-            continue
-        sr = sorted(
-            (tuple(norm(v) for v in r) for r in sdf[sc].itertuples(index=False, name=None)),
-            key=repr,
-        )
-        dr = sorted(
-            (tuple(norm(v) for v in r) for r in ddf[dc].itertuples(index=False, name=None)),
-            key=repr,
-        )
-        ok = sc == dc and sr == dr
+        rows = f"{r['rows_spark']}/{r.get('rows_duck', 'rows-only')}"
         print(
-            f"{name}: {'MATCH' if ok else 'MISMATCH'} rows={len(sr)}/{len(dr)}"
-            f" ({time.perf_counter()-t0:.1f}s)"
+            f"{name}: {'MATCH' if r['ok'] else 'MISMATCH'} rows={rows}"
+            f" ({time.perf_counter() - t0:.1f}s)"
         )
-        if not ok:
+        if not r["ok"]:
             fails.append(name)
-            if sc != dc:
-                print(f"  cols: {sc} vs {dc}")
+            if not r["cols_match"]:
+                print(f"  cols: {r['cols_spark']} vs {r['cols_duck']}")
             else:
-                s, d = set(sr), set(dr)
-                print(f"  spark_only: {list(s - d)[:3]}")
-                print(f"  duck_only : {list(d - s)[:3]}")
-    print(f"queries={len(qs)} oracles={len(osql)} zero-row={zeros}")
+                print(f"  spark_only: {r.get('spark_only', [])[:3]}")
+                print(f"  duck_only : {r.get('duck_only', [])[:3]}")
+    print(f"queries={len(names)} oracles={len(osql)} zero-row={zeros}")
     print("RESULT:", "ALL MATCH" if not fails else f"FAILS: {fails}")
     return 0 if not fails else 1
 

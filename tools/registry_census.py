@@ -3,10 +3,11 @@
 name → implementation site → oracle kind.
 
 Exists so readers find the query map in ONE file. Rows are alphabetical
-(NOT the LRU driver order, which rotates every round and would churn the
-diff). Every column is pinned by tests/test_registry_census.py —
-regenerate with `python tools/registry_census.py --write` after moving
-or adding operators.
+and each site is ``path::function`` (no line numbers, so moving code
+inside a module does not stale the census). Every column is pinned by
+tests/test_registry_census.py — regenerate with
+`python tools/registry_census.py --write` after adding, renaming or
+moving operators between modules.
 
 Usage: python tools/registry_census.py [--write]
   (default prints to stdout; --write rewrites REGISTRY.md at the repo root)
@@ -27,10 +28,9 @@ def census_rows() -> list[tuple[str, str, str]]:
     from simple_map_reduce_ruuner_spark import registry
 
     rows = []
-    for name, q in sorted(registry.all_queries().items()):
+    for name, q in registry.all_queries().items():
         src = pathlib.Path(inspect.getsourcefile(q.fn)).resolve()
-        line = inspect.getsourcelines(q.fn)[1]
-        site = f"{src.relative_to(REPO)}:{line}"
+        site = f"{src.relative_to(REPO)}::{q.fn.__qualname__}"
         kind = "sql" if q.oracle is not None else "rows-only"
         rows.append((name, site, kind))
     return rows
@@ -48,30 +48,12 @@ def render(rows: list[tuple[str, str, str]]) -> str:
         "",
         "Generated by `python tools/registry_census.py --write`; "
         "every column is pinned by `tests/test_registry_census.py` "
-        "(regenerate after moving or adding operators). Which round "
-        "last verified a query lives in the CORRECTNESS_r*.json "
-        "artifacts, not here.",
+        "(regenerate after adding, renaming or moving operators).",
         "",
         "| query | implemented at | oracle |",
         "|---|---|---|",
     ]
     lines += [f"| {n} | `{s}` | {k} |" for n, s, k in rows]
-    lines += [
-        "",
-        "## Tombstones (gate-union bookkeeping)",
-        "",
-        "Names green in old CORRECTNESS_r*.json artifacts that no longer",
-        "exist in the registry — they were RENAMED, not dropped, when the",
-        "deterministic fake decoders became real from-scratch codecs.",
-        "Gate-union arithmetic over the artifacts must EXCLUDE these (a",
-        "naive union over all artifact names counts 179, not the true",
-        "registry coverage):",
-        "",
-        "| retired name | last artifact green | replaced by (r11/r12) |",
-        "|---|---|---|",
-        "| decode_image_fake | r10 | decode_image_ppm |",
-        "| resize_image_fake | r11 | decode_image_png |",
-    ]
     return "\n".join(lines) + "\n"
 
 

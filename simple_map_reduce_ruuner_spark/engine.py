@@ -148,7 +148,7 @@ def run_job(
     return out
 
 
-def observed(df: DataFrame, metrics: dict, name: str = "job_metrics"):
+def observed(df: DataFrame, metrics: dict):
     """A10 extension: attach pipeline audit metrics that are computed as
     a side-effect of the SAME action that materializes ``df``.
 
@@ -171,6 +171,6 @@ def observed(df: DataFrame, metrics: dict, name: str = "job_metrics"):
     """
     from pyspark.sql import Observation
 
-    obs = Observation(name)
+    obs = Observation("job_metrics")
     cols = [c.alias(n) for n, c in metrics.items()]
     return df.observe(obs, *cols), obs

@@ -24,9 +24,10 @@ TOKS_SQL = r"list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')"
 NORM_TEXT_SQL = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
 
 
-def explode_tokens(df, text_col: str = "text", out: str = "token", keep=()):
-    """``df`` → one row per whitespace token of ``text_col`` (lowercased,
-    empties dropped), named ``out``, with ``keep`` columns carried along.
+def explode_tokens(df, out: str = "token", keep=()):
+    """``df`` → one row per whitespace token of its ``text`` column
+    (lowercased, empties dropped), named ``out``, with ``keep`` columns
+    carried along.
 
     Row-for-row identical to ``F.explode(tokens(col))`` but the
     empty-token filter runs as a post-explode WHERE instead of the array
@@ -38,28 +39,25 @@ def explode_tokens(df, text_col: str = "text", out: str = "token", keep=()):
     ``tokens()`` remains the canonical form where the ARRAY itself is
     the operand (shingles, per-doc vocab)."""
     return df.select(
-        *keep, F.explode(F.split(F.lower(F.col(text_col)), WS)).alias(out)
+        *keep, F.explode(F.split(F.lower(F.col("text")), WS)).alias(out)
     ).where(F.col(out) != "")
 
 
-def explode_chars(df, text_col: str = "text", out: str = "ch", keep=()):
-    """``df`` → one row per character of ``text_col`` (newlines excluded
-    — the reference char_count semantics, char_count/mapper.py:8-15),
-    named ``out``, with ``keep`` columns carried along.
+def explode_chars(df):
+    """``df`` → one row per character of its ``text`` column (newlines
+    excluded — the reference char_count semantics,
+    char_count/mapper.py:8-15), named ``ch``.
 
     Chars analogue of :func:`explode_tokens`, same codegen rationale:
     newlines are stripped string-side (translate), then split → explode
     → WHERE-empty runs as one whole-stage-codegen span instead of an
     interpreted array-HOF filter."""
     return df.select(
-        *keep,
-        F.explode(F.split(F.translate(F.col(text_col), "\n", ""), "")).alias(
-            out
-        ),
-    ).where(F.col(out) != "")
+        F.explode(F.split(F.translate(F.col("text"), "\n", ""), "")).alias("ch")
+    ).where(F.col("ch") != "")
 
 
-def tokens(col: Column, lowercase: bool = True) -> Column:
+def tokens(col: Column) -> Column:
     """Array of whitespace-delimited tokens (empty tokens removed).
     DuckDB twin: :data:`TOKS_SQL`.
 
@@ -68,8 +66,7 @@ def tokens(col: Column, lowercase: bool = True) -> Column:
     elements), but array_remove is an ordinary collection expression
     with codegen, while lambda HOFs are interpreted per element. Every
     array consumer (shingles, per-doc vocab, token counts) rides this."""
-    c = F.lower(col) if lowercase else col
-    return F.array_remove(F.split(c, WS), "")
+    return F.array_remove(F.split(F.lower(col), WS), "")
 
 
 def chars(col: Column) -> Column:

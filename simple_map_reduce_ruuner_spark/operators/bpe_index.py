@@ -66,26 +66,22 @@ _MERGES_SCHEMA = "step long, left_sym string, right_sym string, cnt long"
 _TYPES_SCHEMA = "w string, enc string, wc long"
 
 
-def _index_key(sf_dir: str, k: int) -> str:
+def _index_key(sf_dir: str) -> str:
     """Content key: any change to the documents parquet (size/mtime of
     every part), the merge count, or the on-disk format invalidates.
     The separator byte is structural to the encoding, so it rides the
     format version (changing it changes the layout, not a knob)."""
     stats = _parquet_file_stats(os.path.join(sf_dir, "documents.parquet"))
     raw = json.dumps(
-        [INDEX_FORMAT_VERSION, os.path.realpath(sf_dir), k, stats]
+        [INDEX_FORMAT_VERSION, os.path.realpath(sf_dir), BPE_MERGES, stats]
     )
     return hashlib.md5(raw.encode()).hexdigest()
 
 
-def build_bpe_merges(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = BPE_MERGES,
-    base_dir: str | None = None,
-) -> str:
+def build_bpe_merges(spark: SparkSession, sf_dir: str) -> str:
     """Materialize (or reuse) the trained BPE merge table + final type
-    symbolization for ``sf_dir``; returns the index directory.
+    symbolization for ``sf_dir`` under ``$SMRR_BPE_INDEX_DIR`` (default:
+    the temp dir); returns the index directory.
 
     Cost shape: the k ckpt'd merge iterations run ONCE per corpus
     content (vocabulary-bounded shuffles — see ``bpe_train_merges``);
@@ -93,14 +89,12 @@ def build_bpe_merges(
     chain is not re-derived between them. Every later invocation is a
     manifest stat call.
     """
-    if k < 1:
-        raise ValueError(f"BPE needs at least one merge step, got k={k}")
-    base = base_dir or os.environ.get("SMRR_BPE_INDEX_DIR") or os.path.join(
+    base = os.environ.get("SMRR_BPE_INDEX_DIR") or os.path.join(
         tempfile.gettempdir(), "smrr_bpe_index"
     )
 
     def write(scratch: str) -> None:
-        merges, t = _bpe_state_chain(spark, sf_dir, k)
+        merges, t = _bpe_state_chain(spark, sf_dir)
         merge_rows(merges).write.parquet(os.path.join(scratch, "merges"))
         t.select(
             "w", "enc", F.col("wc").cast("long").alias("wc")
@@ -108,39 +102,29 @@ def build_bpe_merges(
 
     return materialize_index(
         base,
-        _index_key(sf_dir, k),
+        _index_key(sf_dir),
         write,
         {
             "format_version": INDEX_FORMAT_VERSION,
-            "k": k,
+            "k": BPE_MERGES,
             "sf_dir": os.path.realpath(sf_dir),
         },
     )
 
 
-def bpe_merge_table(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = BPE_MERGES,
-    base_dir: str | None = None,
-) -> DataFrame:
+def bpe_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained merge table read straight off the materialized index
     (explicit schema: an empty corpus writes no part files and the
     probe must still answer empty). Verified against the full k-step
     from-scratch replay oracle — the materialization-changes-nothing
     gate."""
-    path = build_bpe_merges(spark, sf_dir, k, base_dir=base_dir)
+    path = build_bpe_merges(spark, sf_dir)
     return spark.read.schema(_MERGES_SCHEMA).parquet(
         os.path.join(path, "merges")
     )
 
 
-def bpe_encode_indexed(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = BPE_MERGES,
-    base_dir: str | None = None,
-) -> DataFrame:
+def bpe_encode_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc token accounting under the MATERIALIZED merge table —
     the deployment encode path: no merge chain at encode time, just
     (corpus explode) ⋈ (types lookup) + a per-doc aggregate, identical
@@ -152,7 +136,7 @@ def bpe_encode_indexed(
     encode job this is a map-side join against a frozen few-MB asset,
     the industrial tokenizer shape.
     """
-    path = build_bpe_merges(spark, sf_dir, k, base_dir=base_dir)
+    path = build_bpe_merges(spark, sf_dir)
     types = spark.read.schema(_TYPES_SCHEMA).parquet(
         os.path.join(path, "types")
     )

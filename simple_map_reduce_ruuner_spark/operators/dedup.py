@@ -620,36 +620,24 @@ GROUP BY doc_id
 # --------------------------------------------------------------------------
 
 
-DEFAULT_CLUSTER_MAX_ITER = 25
+CLUSTER_MAX_ITER = 25
 
 
-def neardup_clusters(
-    spark: SparkSession, sf_dir: str, max_iter: int | None = None
-) -> DataFrame:
-    """Session-cached (default max_iter only; see _CLUSTERS_CACHE
-    block): the fixpoint loop below runs EAGERLY at call time, so
-    without the memo corpus_clean re-runs the whole iteration. The
-    result is already a localCheckpoint — memoized as-is
-    (checkpoint=False). Only the ``max_iter=None`` default path is
-    memoized (a single DEFAULT_CLUSTER_MAX_ITER constant, so the memo
-    guard can't drift from the default); an explicit budget always
-    computes fresh."""
-    if max_iter is not None:
-        return _neardup_clusters_fixpoint(spark, sf_dir, max_iter)
+def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session-cached (see _CLUSTERS_CACHE): the fixpoint loop below
+    runs EAGERLY at call time, so without the memo corpus_clean re-runs
+    the whole iteration. The result is already a localCheckpoint —
+    memoized as-is (checkpoint=False)."""
     return session_cache(
         _CLUSTERS_CACHE,
         spark,
         sf_dir,
-        lambda: _neardup_clusters_fixpoint(
-            spark, sf_dir, DEFAULT_CLUSTER_MAX_ITER
-        ),
+        lambda: _neardup_clusters_fixpoint(spark, sf_dir),
         checkpoint=False,
     )
 
 
-def _neardup_clusters_fixpoint(
-    spark: SparkSession, sf_dir: str, max_iter: int
-) -> DataFrame:
+def _neardup_clusters_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cluster_id): connected components of the near-dup graph,
     cluster_id = min doc_id in the component; singletons keep their own id.
 
@@ -690,7 +678,7 @@ def _neardup_clusters_fixpoint(
         .repartition("doc_id")
         .sortWithinPartitions("doc_id")
     )
-    for _ in range(max_iter):
+    for _ in range(CLUSTER_MAX_ITER):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.doc_id)
             .groupBy("src")
@@ -713,13 +701,14 @@ def _neardup_clusters_fixpoint(
         if changed == 0:
             break
     else:
-        # a component whose diameter exceeds max_iter hops would return
-        # SPLIT clusters with no signal (review-found) — corpus_clean
-        # would then keep extra "canonical" duplicates. Fail loudly;
-        # callers with genuinely deep chains pass a larger max_iter.
+        # a component whose diameter exceeds CLUSTER_MAX_ITER hops
+        # would return SPLIT clusters with no signal (review-found) —
+        # corpus_clean would then keep extra "canonical" duplicates.
+        # Fail loudly instead.
         raise RuntimeError(
-            f"neardup_clusters did not converge in {max_iter} iterations "
-            f"({changed} labels still changing) — raise max_iter"
+            f"neardup_clusters did not converge in {CLUSTER_MAX_ITER} "
+            f"iterations ({changed} labels still changing) — a near-dup "
+            "chain is longer than CLUSTER_MAX_ITER hops"
         )
     return labels.select("doc_id", F.col("label").alias("cluster_id"))
 
@@ -1187,18 +1176,18 @@ WHERE CASE WHEN ea.nrm * eb.nrm = 0 THEN 0.0
 """
 
 
-def _gate_embeddings_n(default: int = 500) -> int:
-    """Embeddings row count at the DRIVER GATE size (sf0.01 — the one
-    scale the registry oracle is compared at, see TESTDATA.md): the
-    N-adaptive operator derives (bands, bits) from its input's footer,
-    so its static registry oracle must be generated for that same N.
-    Read from the gate table's footer when present (zero Spark jobs);
-    the fallback is the committed sf0.01 count, so building the
-    registry never fails on a machine without the testdata tree."""
+def _gate_embeddings_n() -> int:
+    """The embeddings row count the static registry oracle is written
+    for: the N-adaptive operator derives (bands, bits) from its input's
+    footer, so its oracle must be generated for the N it is compared
+    at — sf0.01's (see TESTDATA.md). Read from that table's footer when
+    present (zero Spark jobs); the fallback is the committed sf0.01
+    count, 500, so building the registry never fails on a machine
+    without the testdata tree."""
     try:
         return _parquet_row_count("/root/testdata/sf0.01/embeddings.parquet")
     except OSError:
-        return default
+        return 500
 
 
 def _neardup_embedding_lsh_sql() -> str:

@@ -18,7 +18,7 @@ This module is the deployable shape:
     **partitioned by cell**: the inverted file. A probe that joins on
     ``cell`` against a broadcast probe set reads ONLY the probed
     cells' files (partition pruning) — at 100 TB the per-query scan is
-    nprobe/C of the corpus, not the corpus.
+    IVF_NPROBE/C of the corpus, not the corpus.
 
   The index is content-keyed (embeddings parquet size+mtime, C,
   format version) and reused across invocations/sessions via the shared
@@ -28,7 +28,7 @@ This module is the deployable shape:
 
 - :func:`ann_topk_ivf_indexed` — the probe. Quantizes only the query
   vectors, ranks TRAINED cells by exact integer L2 (ties to smaller
-  cid), probes the ``nprobe`` nearest, and scores candidates with the
+  cid), probes the IVF_NPROBE nearest, and scores candidates with the
   unrolled exact-IEEE cosine. Everything is deterministic, so the
   DuckDB oracle replays train+assign+probe from scratch and must agree
   bit-for-bit — materializing the index can never change an answer.
@@ -74,7 +74,7 @@ from simple_map_reduce_ruuner_spark.sources.tables import load_table
 # C ≈ sqrt(N) at the test corpora (500 embeddings at sf0.001 AND
 # sf0.01) — the scale-appropriate cell count the r14 curve showed the
 # first-N quantizer failing at. Distinct from clustering.K=16 on
-# purpose: this family's defaults follow the deployment sizing rule.
+# purpose: this family's sizes follow the deployment sizing rule.
 IVF_CELLS = 22
 IVF_NPROBE = 2
 
@@ -83,9 +83,10 @@ _CENTROIDS_SCHEMA = "cid long, c array<long>"
 _POSTINGS_SCHEMA = "vec_id long, embedding array<float>, dist2 long, cell int"
 
 
-def _index_key(sf_dir: str, n_cells: int, n_iters: int) -> str:
+def _index_key(sf_dir: str) -> str:
     """Content key: any change to the embeddings parquet (size/mtime of
-    every part), the training params, or the on-disk format invalidates.
+    every part), the training params (C and the one Lloyd update), or
+    the on-disk format invalidates.
     The quantization constants are part of the key (review-found): a
     QSCALE/DIM change would otherwise silently reuse an index built
     under the OLD quantization while the oracle replays with the new —
@@ -95,8 +96,8 @@ def _index_key(sf_dir: str, n_cells: int, n_iters: int) -> str:
         [
             INDEX_FORMAT_VERSION,
             os.path.realpath(sf_dir),
-            n_cells,
-            n_iters,
+            IVF_CELLS,
+            1,  # Lloyd updates
             QSCALE,
             DIM,
             stats,
@@ -105,28 +106,21 @@ def _index_key(sf_dir: str, n_cells: int, n_iters: int) -> str:
     return hashlib.md5(raw.encode()).hexdigest()
 
 
-def build_ivf_index(
-    spark: SparkSession,
-    sf_dir: str,
-    n_cells: int = IVF_CELLS,
-    base_dir: str | None = None,
-    n_iters: int = 1,
-) -> str:
-    """Materialize (or reuse) the IVF index for ``sf_dir``; returns its
+def build_ivf_index(spark: SparkSession, sf_dir: str) -> str:
+    """Materialize (or reuse) the IVF index for ``sf_dir`` under
+    ``$SMRR_IVF_INDEX_DIR`` (default: the temp dir); returns its
     directory. See the module docstring for layout and invalidation.
 
-    Cost shape: ``n_iters``+1 assignment passes over the corpus (numpy
-    cogroup kernel, no shuffle — centroids replicate to each ≤50k-row
-    group) plus ``n_iters`` Lloyd updates (C×DIM-bounded shuffles) and
-    one join to attach raw embeddings to the postings — all one-time;
-    every probe afterwards reads only the probed cells. This is the
-    pass ANN_RECALL_CURVE_r14.json measured dominating per-query wall
-    clock when re-run inline; here it is paid once per corpus. The
-    registry entries train with the oracle-replayed default
-    ``n_iters=1``; more iterations are the deployment knob the recall
-    probe sweeps.
+    Cost shape: two assignment passes over the corpus (numpy cogroup
+    kernel, no shuffle — centroids replicate to each ≤50k-row group)
+    around one Lloyd update (C×DIM-bounded shuffles) and one join to
+    attach raw embeddings to the postings — all one-time; every probe
+    afterwards reads only the probed cells. This is the pass
+    ANN_RECALL_CURVE_r14.json measured dominating per-query wall clock
+    when re-run inline; here it is paid once per corpus. The oracle
+    replays exactly this seed-assign → update → re-assign pipeline.
     """
-    base = base_dir or os.environ.get("SMRR_IVF_INDEX_DIR") or os.path.join(
+    base = os.environ.get("SMRR_IVF_INDEX_DIR") or os.path.join(
         tempfile.gettempdir(), "smrr_ivf_index"
     )
     n_vecs = _parquet_row_count(os.path.join(sf_dir, "embeddings.parquet"))
@@ -134,14 +128,13 @@ def build_ivf_index(
     def write(scratch: str) -> None:
         n_groups = max(1, ceil(n_vecs / clustering._ASSIGN_GROUP_ROWS))
         qv = clustering._quantized(spark, sf_dir)
-        seeds = qv.where(F.col("vec_id") < n_cells).select(
+        seeds = qv.where(F.col("vec_id") < IVF_CELLS).select(
             F.col("vec_id").alias("cid"), F.col("q").alias("c")
         )
-        assigned = clustering._assign(spark, qv, seeds, n_groups)
-        trained = seeds
-        for _ in range(n_iters):
-            trained = clustering._update(assigned)
-            assigned = clustering._assign(spark, qv, trained, n_groups)
+        trained = clustering._update(
+            clustering._assign(spark, qv, seeds, n_groups)
+        )
+        assigned = clustering._assign(spark, qv, trained, n_groups)
 
         trained.write.parquet(os.path.join(scratch, "centroids"))
         emb = load_table(spark, sf_dir, "embeddings").select(
@@ -162,12 +155,12 @@ def build_ivf_index(
 
     return materialize_index(
         base,
-        _index_key(sf_dir, n_cells, n_iters),
+        _index_key(sf_dir),
         write,
         {
             "format_version": INDEX_FORMAT_VERSION,
-            "n_cells": n_cells,
-            "n_iters": n_iters,
+            "n_cells": IVF_CELLS,
+            "n_iters": 1,
             "n_vectors": n_vecs,
             "sf_dir": os.path.realpath(sf_dir),
         },
@@ -188,14 +181,11 @@ def _read_index(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
 
 
 def probe_cells(
-    spark: SparkSession,
-    sf_dir: str,
-    cents: DataFrame,
-    nprobe: int,
+    spark: SparkSession, sf_dir: str, cents: DataFrame
 ) -> DataFrame:
-    """(query_id, q_emb, cell): each query's ``nprobe`` nearest TRAINED
+    """(query_id, q_emb, cell): each query's IVF_NPROBE nearest TRAINED
     cells by exact BIGINT L2 on the quantized coordinates, ties to the
-    smaller cid — shared by the probe operator and the recall tool."""
+    smaller cid."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     q = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -214,21 +204,13 @@ def probe_cells(
         q.crossJoin(F.broadcast(cents))
         .withColumn("dist2", d2)
         .withColumn("rk", F.row_number().over(w_cell))
-        .where(F.col("rk") <= nprobe)
+        .where(F.col("rk") <= IVF_NPROBE)
         .select("query_id", "q_emb", F.col("cid").cast("int").alias("cell"))
     )
 
 
-def ann_topk_ivf_indexed(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = TOP_K,
-    n_cells: int = IVF_CELLS,
-    nprobe: int = IVF_NPROBE,
-    base_dir: str | None = None,
-    n_iters: int = 1,
-) -> DataFrame:
-    """Top-k cosine within the ``nprobe`` TRAINED cells nearest each
+def ann_topk_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-k cosine within the IVF_NPROBE TRAINED cells nearest each
     query — the probe side of the build/probe split.
 
     Plan shape: the C-row centroid table broadcasts against the
@@ -243,11 +225,8 @@ def ann_topk_ivf_indexed(
     the one-time :func:`build_ivf_index`; a deployment schedules that
     build as its own job and probes ride the content-keyed reuse).
     """
-    path = build_ivf_index(
-        spark, sf_dir, n_cells, base_dir=base_dir, n_iters=n_iters
-    )
-    cents, post = _read_index(spark, path)
-    probes = probe_cells(spark, sf_dir, cents, nprobe)
+    cents, post = _read_index(spark, build_ivf_index(spark, sf_dir))
+    probes = probe_cells(spark, sf_dir, cents)
     cand = (
         post.join(F.broadcast(probes), "cell")
         .where(F.col("vec_id") != F.col("query_id"))
@@ -260,7 +239,7 @@ def ann_topk_ivf_indexed(
     )
     return (
         cand.withColumn("rank", F.row_number().over(w_rank))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOP_K)
         .select(
             "query_id",
             "vec_id",
@@ -270,12 +249,7 @@ def ann_topk_ivf_indexed(
     )
 
 
-def ivf_index_stats(
-    spark: SparkSession,
-    sf_dir: str,
-    n_cells: int = IVF_CELLS,
-    base_dir: str | None = None,
-) -> DataFrame:
+def ivf_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cell occupancy report straight off the materialized postings:
     (cell, n_vectors, mean_dist2, share_milli). ``share_milli`` is each
     cell's exact per-mille share of the corpus — the expected probe
@@ -285,8 +259,7 @@ def ivf_index_stats(
     joins back as a broadcast 1-row scalar (the ``forecast`` pattern),
     not an unbounded window.
     """
-    path = build_ivf_index(spark, sf_dir, n_cells, base_dir=base_dir)
-    _, post = _read_index(spark, path)
+    _, post = _read_index(spark, build_ivf_index(spark, sf_dir))
     per_cell = post.groupBy(F.col("cell").cast("long").alias("cell")).agg(
         F.count(F.lit(1)).alias("n"),
         F.expr("sum(dist2) div count(*)").cast("long").alias("mean_dist2"),
@@ -300,11 +273,11 @@ def ivf_index_stats(
     )
 
 
-def _probe_cte(n_cells: int, nprobe: int) -> str:
+def _probe_cte() -> str:
     """Oracle CTE chain: replay train+assign (clustering's verified
-    pipeline at C=``n_cells``) then rank TRAINED cells per query by the
+    pipeline at C=IVF_CELLS) then rank TRAINED cells per query by the
     same exact integer L2 / (dist2, cid) order as the Spark probe."""
-    return f"""{clustering._pipeline_cte(n_cells)},
+    return f"""{clustering._pipeline_cte(IVF_CELLS)},
 qcell AS (
     SELECT d.vec_id AS query_id, c.cid,
            sum((d.q - c.q) * (d.q - c.q)) AS dist2
@@ -315,12 +288,12 @@ qcell AS (
 probes AS (
     SELECT query_id, cid AS cell FROM qcell
     QUALIFY row_number() OVER (PARTITION BY query_id
-                               ORDER BY dist2, cid) <= {nprobe}
+                               ORDER BY dist2, cid) <= {IVF_NPROBE}
 )"""
 
 
 ANN_TOPK_IVF_INDEXED_SQL = f"""
-WITH {_probe_cte(IVF_CELLS, IVF_NPROBE)},
+WITH {_probe_cte()},
 e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
 qe AS (SELECT vec_id AS query_id, emb AS q_emb FROM e WHERE vec_id < {N_QUERIES}),
 scored AS (

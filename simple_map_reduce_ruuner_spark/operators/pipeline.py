@@ -100,7 +100,7 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate_map = F.create_map(
         *[F.lit(x) for kv in SAMPLE_RATES.items() for x in kv]
     )
-    rate = F.coalesce(rate_map.getItem(F.col("lang")), F.lit(DEFAULT_RATE))
+    rate = F.coalesce(rate_map[F.col("lang")], F.lit(DEFAULT_RATE))
     bucket = F.pmod(
         hash60(F.concat(F.lit("sample:"), F.col("doc_id").cast("string"))),
         F.lit(100),

@@ -122,8 +122,10 @@ GROUP BY n_name
 # a driver-side k-row heap, never a full sort at scale).
 # --------------------------------------------------------------------------
 
+TOP_SUPPLIERS_K = 5
 
-def top_suppliers_revenue(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
+
+def top_suppliers_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     supplier = load_table(spark, sf_dir, "supplier")
     revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -132,7 +134,7 @@ def top_suppliers_revenue(spark: SparkSession, sf_dir: str, k: int = 5) -> DataF
         .groupBy("s_suppkey", "s_name")
         .agg(as_money(dsum(revenue)).alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("s_suppkey"))
-        .limit(k)
+        .limit(TOP_SUPPLIERS_K)
     )
 
 
@@ -142,7 +144,7 @@ SELECT s_suppkey, s_name,
 FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
 GROUP BY s_suppkey, s_name
 ORDER BY revenue DESC, s_suppkey ASC
-LIMIT 5
+LIMIT {TOP_SUPPLIERS_K}
 """
 
 
@@ -191,15 +193,17 @@ WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_partkey = p_partkey)
 # Window functions: rank-per-group top-N and running totals.
 # --------------------------------------------------------------------------
 
+TOP_ORDERS_N = 3
 
-def top_orders_per_customer(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
+
+def top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.desc("o_totalprice"), F.asc("o_orderkey")
     )
     return (
         orders.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n)
+        .where(F.col("rn") <= TOP_ORDERS_N)
         .select(
             "o_custkey",
             "o_orderkey",
@@ -209,7 +213,7 @@ def top_orders_per_customer(spark: SparkSession, sf_dir: str, n: int = 3) -> Dat
     )
 
 
-TOP_ORDERS_PER_CUSTOMER_SQL = """
+TOP_ORDERS_PER_CUSTOMER_SQL = f"""
 SELECT o_custkey, o_orderkey, ROUND(o_totalprice, 2) AS totalprice, rn
 FROM (
     SELECT o_custkey, o_orderkey, o_totalprice,
@@ -219,7 +223,7 @@ FROM (
            ) AS rn
     FROM orders
 )
-WHERE rn <= 3
+WHERE rn <= {TOP_ORDERS_N}
 """
 
 

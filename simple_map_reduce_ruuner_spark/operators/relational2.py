@@ -385,7 +385,8 @@ QUERIES: dict[str, Query] = {
     "order_gaps": Query(
         order_gaps,
         ORDER_GAPS_SQL,
-        "applyInPandas grouped-map aggregate (max day-gap per customer)",
+        "repartition + mapInPandas per-partition pandas groupby "
+        "(max day-gap per customer)",
     ),
     "window_showcase": Query(
         window_showcase,

@@ -338,7 +338,7 @@ def banded_codes_of(
     return emb.mapInPandas(codes, "vec_id long, band int, sub long")
 
 
-def ann_topk_lsh(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
+def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k within the query's LSH bucket — the scale path.
 
     Deterministic (bucketing + scoring + total-order rank), so it has an
@@ -365,7 +365,7 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(F.desc("raw_score"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOP_K)
         .select(
             "query_id",
             "vec_id",
@@ -416,9 +416,7 @@ N_CELLS = 16
 NPROBE = 2
 
 
-def _cell_scores(
-    spark: SparkSession, sf_dir: str, n_cells: int = N_CELLS
-) -> DataFrame:
+def _cell_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cent_id, sim, rk): cosine of every vector against every
     centroid, ranked per vector. Centroids are the first N_CELLS vectors —
     deterministic stand-ins for k-means centroids (real deployments train
@@ -457,7 +455,7 @@ def _cell_scores(
         tbl = pq.read_table(
             path,
             columns=["vec_id", "embedding"],
-            filters=[("vec_id", "<", n_cells)],
+            filters=[("vec_id", "<", N_CELLS)],
         )
         ids = tbl.column("vec_id").to_numpy()
         order = np.argsort(ids)
@@ -521,13 +519,7 @@ def _cell_scores(
     return emb.mapInPandas(score, "vec_id long, cent_id long, sim double, rk int")
 
 
-def ann_topk_ivf(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = TOP_K,
-    n_cells: int = N_CELLS,
-    nprobe: int = NPROBE,
-) -> DataFrame:
+def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k within the query's NPROBE nearest IVF cells — the
     inverted-file ANN pattern (Sivic & Zisserman 2003 visual words /
     FAISS IVF): coarse-quantize every vector to its nearest centroid
@@ -541,11 +533,11 @@ def ann_topk_ivf(
     from pyspark.sql import Window
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cells = _cell_scores(spark, sf_dir, n_cells)
+    cells = _cell_scores(spark, sf_dir)
     assign = cells.where(F.col("rk") == 1).select("vec_id", F.col("cent_id").alias("cell"))
     vecs = emb.join(assign, "vec_id")
     probes = (
-        cells.where((F.col("vec_id") < N_QUERIES) & (F.col("rk") <= nprobe))
+        cells.where((F.col("vec_id") < N_QUERIES) & (F.col("rk") <= NPROBE))
         .select(F.col("vec_id").alias("query_id"), F.col("cent_id").alias("cell"))
     )
     q_emb = emb.where(F.col("vec_id") < N_QUERIES).select(
@@ -565,7 +557,7 @@ def ann_topk_ivf(
     w = Window.partitionBy("query_id").orderBy(F.desc("raw_score"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOP_K)
         .select(
             "query_id",
             "vec_id",

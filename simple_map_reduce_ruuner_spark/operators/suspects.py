@@ -33,11 +33,14 @@ from pyspark.sql import functions as F
 from simple_map_reduce_ruuner_spark.sources.tables import load_table
 
 MIN_DISTINCT_CITIES = 10  # reference threshold, finding_the_suspects/reducer.py:18
+# the driver-table binding's threshold, read by the builder and its oracle
+MIN_DISTINCT_MONTHS = 8
 
 
-def suspects_df(df: DataFrame, min_distinct: int = MIN_DISTINCT_CITIES) -> DataFrame:
+def suspects_df(df: DataFrame) -> DataFrame:
     """Literal reference shape: df(name, family, city, year) →
-    (key, cities array) for keys with > min_distinct distinct cities."""
+    (key, cities array) for keys with > MIN_DISTINCT_CITIES distinct
+    cities."""
     return (
         df.groupBy(
             F.concat_ws("-", "name", "family", F.col("year").cast("string")).alias(
@@ -45,15 +48,14 @@ def suspects_df(df: DataFrame, min_distinct: int = MIN_DISTINCT_CITIES) -> DataF
             )
         )
         .agg(F.array_sort(F.collect_set("city")).alias("cities"))
-        .where(F.size("cities") > min_distinct)
+        .where(F.size("cities") > MIN_DISTINCT_CITIES)
     )
 
 
-def suspects_orders(
-    spark: SparkSession, sf_dir: str, min_distinct_months: int = 8
-) -> DataFrame:
-    """Driver-table binding: customers with more than N distinct order
-    months. The customer dim is broadcast (small at any scale vs orders)."""
+def suspects_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Driver-table binding: customers with more than MIN_DISTINCT_MONTHS
+    distinct order months. The customer dim is broadcast (small at any
+    scale vs orders)."""
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     months = F.array_sort(F.collect_set(F.date_format("o_orderdate", "yyyy-MM")))
@@ -64,7 +66,7 @@ def suspects_orders(
         orders.join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
         .groupBy("c_custkey", "c_name")
         .agg(months.alias("months_arr"))
-        .where(F.size("months_arr") > min_distinct_months)
+        .where(F.size("months_arr") > MIN_DISTINCT_MONTHS)
         .select(
             "c_custkey",
             "c_name",
@@ -74,7 +76,7 @@ def suspects_orders(
     )
 
 
-SUSPECTS_ORDERS_SQL = """
+SUSPECTS_ORDERS_SQL = f"""
 SELECT c_custkey, c_name, CAST(len(months_arr) AS BIGINT) AS n_months,
        array_to_string(months_arr, ',') AS months
 FROM (
@@ -83,5 +85,5 @@ FROM (
     FROM orders JOIN customer ON o_custkey = c_custkey
     GROUP BY c_custkey, c_name
 )
-WHERE len(months_arr) > 8
+WHERE len(months_arr) > {MIN_DISTINCT_MONTHS}
 """

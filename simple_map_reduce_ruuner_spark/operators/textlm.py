@@ -632,34 +632,29 @@ _BPE_SYMS = (
 # construction exactly like the lsh_pipeline signature ladder: blocks
 # still materialize on first EXECUTION (cold member), and the per-rep
 # encode/argmax data work downstream of the chain is unchanged.
-# Default-k only — a caller exploring another k builds a fresh chain.
 _BPE_CHAIN_CACHE: dict = {}
 
 
 def _bpe_state_chain(
-    spark: SparkSession, sf_dir: str, k: int
+    spark: SparkSession, sf_dir: str
 ) -> tuple[list[DataFrame], DataFrame]:
-    """([best₁..best_k], final state): the k-iteration greedy merge loop
-    over the (word type, count) table, shared by the trainer (which
-    emits the merge table) and the encoder (which tokenizes with the
-    final state). State rows carry (w, enc, wc); see
+    """([best₁..best_k], final state): the k = BPE_MERGES iteration
+    greedy merge loop over the (word type, count) table, shared by the
+    trainer (which emits the merge table) and the encoder (which
+    tokenizes with the final state). State rows carry (w, enc, wc); see
     :func:`bpe_train_merges` for the algorithm and oracle discipline.
-    Session-cached at the default k (see _BPE_CHAIN_CACHE)."""
-    if k < 1:
-        raise ValueError(f"BPE needs at least one merge step, got k={k}")
-    if k != BPE_MERGES:
-        return _bpe_chain_build(spark, sf_dir, k)
+    Session-cached (see _BPE_CHAIN_CACHE)."""
     return session_cache(
         _BPE_CHAIN_CACHE,
         spark,
         sf_dir,
-        lambda: _bpe_chain_build(spark, sf_dir, k),
+        lambda: _bpe_chain_build(spark, sf_dir),
         checkpoint=False,
     )
 
 
 def _bpe_chain_build(
-    spark: SparkSession, sf_dir: str, k: int
+    spark: SparkSession, sf_dir: str
 ) -> tuple[list[DataFrame], DataFrame]:
     docs = spread_scan(load_table(spark, sf_dir, "documents"), key="doc_id")
     types = (
@@ -686,7 +681,7 @@ def _bpe_chain_build(
     pair_arr = f"arrays_zip(slice(syms, 1, {n1}), slice(syms, 2, {n1}))"
 
     merges: list[DataFrame] = []
-    for _step in range(1, k + 1):
+    for _step in range(BPE_MERGES):
         t = ckpt(t, eager=False)
         pc = (
             t.select("wc", F.expr(_BPE_SYMS).alias("syms"))
@@ -709,10 +704,8 @@ def _bpe_chain_build(
     return merges, t
 
 
-def bpe_train_merges(
-    spark: SparkSession, sf_dir: str, k: int = BPE_MERGES
-) -> DataFrame:
-    """(step, left_sym, right_sym, cnt): the first ``k`` greedy BPE
+def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(step, left_sym, right_sym, cnt): the first k = BPE_MERGES greedy BPE
     merges over the corpus (Sennrich et al. 2016) — the trained
     tokenizer's merge table, extending :func:`bpe_pair_counts` (one
     merge statistic) to the full training loop.
@@ -734,7 +727,7 @@ def bpe_train_merges(
     Reference parity note: the reference (`Master.java:174-208`) has no
     tokenizer training; north-star text-analysis extension.
     """
-    merges, _ = _bpe_state_chain(spark, sf_dir, k)
+    merges, _ = _bpe_state_chain(spark, sf_dir)
     return merge_rows(merges)
 
 
@@ -754,9 +747,7 @@ def merge_rows(merges: list[DataFrame]) -> DataFrame:
     return out
 
 
-def bpe_encode_docs(
-    spark: SparkSession, sf_dir: str, k: int = BPE_MERGES
-) -> DataFrame:
+def bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_words, n_tokens, n_chars, chars_per_token_milli): the
     APPLY side of the trainer — every document tokenized with the k
     trained merges, reported as per-doc token accounting (the number a
@@ -773,7 +764,7 @@ def bpe_encode_docs(
     merges the state chain goes empty (cross join with an empty argmax)
     — a corpus that small has no meaningful BPE vocabulary.
     """
-    _, t = _bpe_state_chain(spark, sf_dir, k)
+    _, t = _bpe_state_chain(spark, sf_dir)
     return encode_against_types(spark, sf_dir, type_token_counts(t))
 
 

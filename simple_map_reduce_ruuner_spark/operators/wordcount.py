@@ -27,30 +27,32 @@ from simple_map_reduce_ruuner_spark.functions.text import (
 from simple_map_reduce_ruuner_spark.sources.tables import load_table
 
 
-def word_count_df(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(word, cnt) frequency of whitespace tokens, lowercased.
+def word_count_df(df: DataFrame) -> DataFrame:
+    """(word, cnt) frequency of the ``text`` column's whitespace tokens,
+    lowercased.
 
     Tokenization rides :func:`explode_tokens` (the one canonical
     split → explode → WHERE-empty codegen span — see its docstring for
     why the HOF ``filter`` form is avoided on hot paths)."""
     return (
-        explode_tokens(df, text_col, out="word")
+        explode_tokens(df, out="word")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 
-def char_count_df(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(ch, cnt) frequency of characters (newline excluded), via the
-    chars analogue :func:`explode_chars` (same codegen-span rationale)."""
+def char_count_df(df: DataFrame) -> DataFrame:
+    """(ch, cnt) frequency of the ``text`` column's characters (newline
+    excluded), via the chars analogue :func:`explode_chars` (same
+    codegen-span rationale)."""
     return (
-        explode_chars(df, text_col, out="ch")
+        explode_chars(df)
         .groupBy("ch")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 
-def char_count_kernel_df(df: DataFrame, text_col: str = "text") -> DataFrame:
+def char_count_kernel_df(df: DataFrame) -> DataFrame:
     """(ch, cnt) — value-identical to :func:`char_count_df`, computed as
     a per-partition Arrow kernel instead of a corpus×chars explode.
 
@@ -77,7 +79,7 @@ def char_count_kernel_df(df: DataFrame, text_col: str = "text") -> DataFrame:
     def count_chars(batches):
         acc = np.zeros(0x110000, dtype=np.int64)
         for b in batches:
-            txt = "".join(b[text_col].dropna().tolist())
+            txt = "".join(b["text"].dropna().tolist())
             if not txt:
                 continue
             cp = np.frombuffer(txt.encode("utf-32-le"), dtype=np.uint32)
@@ -90,7 +92,7 @@ def char_count_kernel_df(df: DataFrame, text_col: str = "text") -> DataFrame:
             {"ch": [chr(int(c)) for c in nz], "cnt": acc[nz]}
         )
 
-    partials = df.select(text_col).mapInPandas(count_chars, "ch string, cnt long")
+    partials = df.select("text").mapInPandas(count_chars, "ch string, cnt long")
     return partials.groupBy("ch").agg(F.sum("cnt").alias("cnt"))
 
 

@@ -4,6 +4,11 @@
 that is implemented gets one named entry here; oracle SQL is ``None`` only
 for genuinely non-SQL-expressible operators (the driver then records a
 weaker rows-only check).
+
+Every builder is called as ``fn(spark, sf_dir)`` and takes nothing else:
+the one oracle per entry is written for the builder's fixed settings
+(top-k sizes, thresholds, index parameters), so those are module
+constants that the builder and its oracle both read, never options.
 """
 
 from __future__ import annotations

@@ -45,13 +45,12 @@ def read_text_chunked(
     return spark.read.text(path)
 
 
-def write_text_single(df: DataFrame, out_path: str, column: str | None = None) -> str:
-    """Write a single text file (reference A9: final_result.out).
-
-    ``df`` must have exactly one string column, or pass ``column``.
-    Returns the path of the written file.
+def write_text_single(df: DataFrame, out_path: str) -> str:
+    """Write a single text file (reference A9: final_result.out) from
+    ``df``'s first column, which must be a string. Returns the path of
+    the written file.
     """
-    col = column or df.columns[0]
+    col = df.columns[0]
     tmp_dir = out_path + ".__tmpdir__"
     try:
         df.select(col).coalesce(1).write.mode("overwrite").text(tmp_dir)

@@ -19,15 +19,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from simple_map_reduce_ruuner_spark.streaming.windows import EVENTS_DDL
+from simple_map_reduce_ruuner_spark.operators.timeseries import THROTTLE_COOLDOWN_S
+from simple_map_reduce_ruuner_spark.streaming.windows import EVENTS_DDL, WATERMARK
+
+# both join sides' watermark delay: longer than the 10-minute join window
+JOIN_WATERMARK = "30 minutes"
 
 
-def stream_clicks_before_errors(
-    spark: SparkSession,
-    input_dir: str,
-    watermark: str = "30 minutes",
-    reader_options: dict[str, str] | None = None,
-) -> DataFrame:
+def stream_clicks_before_errors(spark: SparkSession, input_dir: str) -> DataFrame:
     """(user_id, error_id, click_ts) pairs: each error joined to the
     same user's clicks in the preceding 10 minutes, as a watermarked
     stream-stream INNER join emitted in append mode.
@@ -40,11 +39,7 @@ def stream_clicks_before_errors(
     passes, unobservable under a single availableNow batch — the test
     compares against the batch join restricted to matched rows.
     """
-    src = (
-        spark.readStream.schema(EVENTS_DDL)
-        .options(**(reader_options or {}))  # e.g. maxFilesPerTrigger
-        .parquet(input_dir)
-    )
+    src = spark.readStream.schema(EVENTS_DDL).parquet(input_dir)
     events = src.withColumn("ts", F.col("ts").cast("timestamp"))
     errors = (
         events.where(F.col("event_type") == "error")
@@ -53,12 +48,12 @@ def stream_clicks_before_errors(
             F.col("event_id").alias("error_id"),
             F.col("ts").alias("error_ts"),
         )
-        .withWatermark("error_ts", watermark)
+        .withWatermark("error_ts", JOIN_WATERMARK)
     )
     clicks = (
         events.where(F.col("event_type") == "click")
         .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", JOIN_WATERMARK)
     )
     joined = errors.join(
         clicks,
@@ -73,9 +68,7 @@ def stream_clicks_before_errors(
     )
 
 
-def stream_clicks_errors_left(
-    spark: SparkSession, input_dir: str, watermark: str = "30 minutes"
-) -> DataFrame:
+def stream_clicks_errors_left(spark: SparkSession, input_dir: str) -> DataFrame:
     """LEFT OUTER variant of :func:`stream_clicks_before_errors`: errors
     with no preceding click still emit, null-padded — but only after the
     watermark passes the error's join window, because until then a
@@ -94,12 +87,12 @@ def stream_clicks_errors_left(
             F.col("event_id").alias("error_id"),
             F.col("ts").alias("error_ts"),
         )
-        .withWatermark("error_ts", watermark)
+        .withWatermark("error_ts", JOIN_WATERMARK)
     )
     clicks = (
         events.where(F.col("event_type") == "click")
         .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", JOIN_WATERMARK)
     )
     joined = errors.join(
         clicks,
@@ -116,9 +109,7 @@ def stream_clicks_errors_left(
     )
 
 
-def stream_dedup_events(
-    spark: SparkSession, input_dir: str, watermark: str = "10 minutes"
-) -> DataFrame:
+def stream_dedup_events(spark: SparkSession, input_dir: str) -> DataFrame:
     """Streaming exact-dedup: ``dropDuplicatesWithinWatermark`` on the
     event key — the streaming-ingest twin of ``exact_dedup``.
 
@@ -132,7 +123,7 @@ def stream_dedup_events(
     src = spark.readStream.schema(EVENTS_DDL).parquet(input_dir)
     events = src.withColumn("ts", F.col("ts").cast("timestamp"))
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .dropDuplicatesWithinWatermark(["event_id"])
         .select(
             "event_id",
@@ -144,9 +135,7 @@ def stream_dedup_events(
     )
 
 
-def stream_cooldown_dedup(
-    spark: SparkSession, input_dir: str, cooldown: str = "6 hours"
-) -> DataFrame:
+def stream_cooldown_dedup(spark: SparkSession, input_dir: str) -> DataFrame:
     """Streaming keyed-cooldown dedup: ``dropDuplicatesWithinWatermark``
     on (user_id, event_type) with the cooldown as the watermark delay —
     the stream form of ``operators.timeseries.throttle_suppress``
@@ -168,7 +157,7 @@ def stream_cooldown_dedup(
     src = spark.readStream.schema(EVENTS_DDL).parquet(input_dir)
     events = src.withColumn("ts", F.col("ts").cast("timestamp"))
     return (
-        events.withWatermark("ts", cooldown)
+        events.withWatermark("ts", f"{THROTTLE_COOLDOWN_S} seconds")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select(
             "user_id",

@@ -138,7 +138,6 @@ def banded_rows(docs: DataFrame) -> DataFrame:
 def stream_neardup_incremental(
     spark: SparkSession,
     input_dir: str,
-    docs_ddl: str = DOCS_DDL,
     reader_options: dict[str, str] | None = None,
 ) -> DataFrame:
     """readStream(documents) → per-row banding → per-(band, sig_key)
@@ -176,7 +175,7 @@ def stream_neardup_incremental(
             )
 
     src = (
-        spark.readStream.schema(docs_ddl)
+        spark.readStream.schema(DOCS_DDL)
         .options(**(reader_options or {}))
         .parquet(input_dir)
     )

@@ -26,10 +26,7 @@ STATE_SCHEMA = "n long, total double"
 
 
 def stream_running_user_totals(
-    spark: SparkSession,
-    input_dir: str,
-    events_ddl: str,
-    reader_options: dict[str, str] | None = None,
+    spark: SparkSession, input_dir: str, events_ddl: str
 ) -> DataFrame:
     """readStream → groupBy(user) → applyInPandasWithState running totals.
 
@@ -58,11 +55,7 @@ def stream_running_user_totals(
             {"user_id": [user_id], "n_events": [n], "total_value": [total]}
         )
 
-    src = (
-        spark.readStream.schema(events_ddl)
-        .options(**(reader_options or {}))  # e.g. maxFilesPerTrigger
-        .parquet(input_dir)
-    )
+    src = spark.readStream.schema(events_ddl).parquet(input_dir)
     return (
         src.groupBy("user_id")
         .applyInPandasWithState(

@@ -134,12 +134,13 @@ EVENTS_DDL = (
     "event_id long, ts timestamp_ntz, user_id long, event_type string, "
     "value double, props string"
 )
+# how far behind the max event time a window stays open for late rows
+WATERMARK = "10 minutes"
 
 
 def stream_tumbling_counts(
     spark: SparkSession,
     input_dir: str,
-    watermark: str = "10 minutes",
     reader_options: dict[str, str] | None = None,
 ) -> DataFrame:
     """readStream → watermark → tumbling-window agg. Append-safe: the
@@ -155,7 +156,7 @@ def stream_tumbling_counts(
     # With the session timezone at its UTC default this is lossless.
     return (
         src.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", TUMBLE).alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), _dsum(F.col("value")).alias("sum_value"))
         .select(
@@ -167,23 +168,14 @@ def stream_tumbling_counts(
     )
 
 
-def stream_sliding_counts(
-    spark: SparkSession,
-    input_dir: str,
-    watermark: str = "10 minutes",
-    reader_options: dict[str, str] | None = None,
-) -> DataFrame:
+def stream_sliding_counts(spark: SparkSession, input_dir: str) -> DataFrame:
     """Streaming twin of :func:`sliding_counts` — overlapping windows via
     the same ``F.window(duration, step)``; each event updates 2 windows'
     state, watermark bounds how long a window stays open."""
-    src = (
-        spark.readStream.schema(EVENTS_DDL)
-        .options(**(reader_options or {}))  # e.g. maxFilesPerTrigger
-        .parquet(input_dir)
-    )
+    src = spark.readStream.schema(EVENTS_DDL).parquet(input_dir)
     return (
         src.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", SLIDE_DURATION, SLIDE_STEP).alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
@@ -194,24 +186,15 @@ def stream_sliding_counts(
     )
 
 
-def stream_session_windows(
-    spark: SparkSession,
-    input_dir: str,
-    watermark: str = "10 minutes",
-    reader_options: dict[str, str] | None = None,
-) -> DataFrame:
+def stream_session_windows(spark: SparkSession, input_dir: str) -> DataFrame:
     """Streaming twin of :func:`session_windows` — ``F.session_window``
     merges overlapping per-key windows in the state store; the watermark
     finalizes a session once no event can extend it (gap + watermark past
     its end), which is what bounds state at 100 TB."""
-    src = (
-        spark.readStream.schema(EVENTS_DDL)
-        .options(**(reader_options or {}))  # e.g. maxFilesPerTrigger
-        .parquet(input_dir)
-    )
+    src = spark.readStream.schema(EVENTS_DDL).parquet(input_dir)
     return (
         src.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", WATERMARK)
         .groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
@@ -255,27 +238,19 @@ GROUP BY 1, 2
 
 
 def stream_segment_counts(
-    spark: SparkSession,
-    input_dir: str,
-    sf_dir: str,
-    watermark: str = "10 minutes",
-    reader_options: dict[str, str] | None = None,
+    spark: SparkSession, input_dir: str, sf_dir: str
 ) -> DataFrame:
     """Stream-static enrichment: the event stream joins a STATIC dim
     table (re-read per micro-batch, broadcast) before the windowed agg —
     the standard pattern for enriching a fact stream with slowly-changing
     reference data without a stream-stream join's state."""
-    src = (
-        spark.readStream.schema(EVENTS_DDL)
-        .options(**(reader_options or {}))  # e.g. maxFilesPerTrigger
-        .parquet(input_dir)
-    )
+    src = spark.readStream.schema(EVENTS_DDL).parquet(input_dir)
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
     return (
         src.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", WATERMARK)
         .join(F.broadcast(cust), "user_id")
         .groupBy(F.window("ts", TUMBLE).alias("w"), "c_mktsegment")
         .agg(F.count(F.lit(1)).alias("n"))

@@ -21,42 +21,44 @@ def index_base(tmp_path_factory):
     return str(tmp_path_factory.mktemp("ivf_base"))
 
 
+@pytest.fixture(autouse=True)
+def _index_dir(monkeypatch, index_base):
+    monkeypatch.setenv("SMRR_IVF_INDEX_DIR", index_base)
+
+
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_build_is_reused_then_rebuilt(spark, sf_dir, index_base, tmp_path):
-    p1 = ivf.build_ivf_index(spark, sf_dir, base_dir=index_base)
+def test_build_is_reused_then_rebuilt(spark, sf_dir, tmp_path, monkeypatch):
+    p1 = ivf.build_ivf_index(spark, sf_dir)
     manifest = os.path.join(p1, "_MANIFEST.json")
     stamp = os.path.getmtime(manifest)
-    p2 = ivf.build_ivf_index(spark, sf_dir, base_dir=index_base)
+    p2 = ivf.build_ivf_index(spark, sf_dir)
     assert p2 == p1
     assert os.path.getmtime(manifest) == stamp, "reuse must not rewrite"
-    before = _rows(ivf.ann_topk_ivf_indexed(spark, sf_dir, base_dir=index_base))
+    before = _rows(ivf.ann_topk_ivf_indexed(spark, sf_dir))
     # a second build from scratch in a fresh base dir lands under the
     # same content key and answers identically
     fresh = str(tmp_path / "ivf_fresh")
-    p3 = ivf.build_ivf_index(spark, sf_dir, base_dir=fresh)
+    monkeypatch.setenv("SMRR_IVF_INDEX_DIR", fresh)
+    p3 = ivf.build_ivf_index(spark, sf_dir)
     assert p3 == os.path.join(fresh, os.path.basename(p1))
     assert json.load(open(os.path.join(p3, "_MANIFEST.json"))) == json.load(
         open(manifest)
     )
-    after = _rows(ivf.ann_topk_ivf_indexed(spark, sf_dir, base_dir=fresh))
+    after = _rows(ivf.ann_topk_ivf_indexed(spark, sf_dir))
     assert before == after, "a rebuild must be value-deterministic"
 
 
 def test_index_key_is_content_addressed(sf_dir):
-    k_default = ivf._index_key(sf_dir, ivf.IVF_CELLS, 1)
-    assert ivf._index_key(sf_dir, ivf.IVF_CELLS, 1) == k_default
-    assert ivf._index_key(sf_dir, ivf.IVF_CELLS + 1, 1) != k_default
-    assert ivf._index_key(sf_dir, ivf.IVF_CELLS, 2) != k_default
-    assert (
-        ivf._index_key("/root/testdata/sf0.01", ivf.IVF_CELLS, 1) != k_default
-    )
+    key = ivf._index_key(sf_dir)
+    assert ivf._index_key(sf_dir) == key
+    assert ivf._index_key("/root/testdata/sf0.01") != key
 
 
-def test_manifest_and_layout(spark, sf_dir, index_base):
-    path = ivf.build_ivf_index(spark, sf_dir, base_dir=index_base)
+def test_manifest_and_layout(spark, sf_dir):
+    path = ivf.build_ivf_index(spark, sf_dir)
     meta = json.load(open(os.path.join(path, "_MANIFEST.json")))
     assert meta["n_cells"] == ivf.IVF_CELLS
     assert meta["format_version"] == ivf.INDEX_FORMAT_VERSION
@@ -68,23 +70,23 @@ def test_manifest_and_layout(spark, sf_dir, index_base):
     assert post.count() == meta["n_vectors"]
 
 
-def test_stats_account_for_whole_corpus(spark, sf_dir, index_base):
+def test_stats_account_for_whole_corpus(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    stats = ivf.ivf_index_stats(spark, sf_dir, base_dir=index_base)
+    stats = ivf.ivf_index_stats(spark, sf_dir)
     row = stats.agg(
         F.sum("n_vectors").alias("n"), F.max("share_milli").alias("mx")
     ).collect()[0]
     meta_path = os.path.join(
-        ivf.build_ivf_index(spark, sf_dir, base_dir=index_base),
+        ivf.build_ivf_index(spark, sf_dir),
         "_MANIFEST.json",
     )
     assert row["n"] == json.load(open(meta_path))["n_vectors"]
     assert row["mx"] <= 1000
 
 
-def test_probe_plan_is_pruned_and_broadcast(spark, sf_dir, index_base):
-    df = ivf.ann_topk_ivf_indexed(spark, sf_dir, base_dir=index_base)
+def test_probe_plan_is_pruned_and_broadcast(spark, sf_dir):
+    df = ivf.ann_topk_ivf_indexed(spark, sf_dir)
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"

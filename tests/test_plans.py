@@ -149,6 +149,19 @@ def test_stratified_sample_is_shuffle_free(spark, sf_dir):
     assert "text" not in read_schema  # the wide column must not be read
 
 
+def test_stratified_sample_builds_without_future_warning(spark, sf_dir):
+    """The per-language rate lookup indexes the map with ``map[col]``:
+    ``getItem(Column)`` is deprecated and warns (FutureWarning) on every
+    build, ahead of its removal from pyspark."""
+    import warnings
+
+    from simple_map_reduce_ruuner_spark.operators import pipeline
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        pipeline.stratified_sample(spark, sf_dir)
+
+
 def test_whole_stage_codegen_present(spark, sf_dir):
     q = relational.pricing_summary(spark, sf_dir)
     q.collect()  # AQE finalizes the physical plan only on execution

@@ -9,6 +9,7 @@ order (sorted by name) and the REGISTRY.md census are pinned here too.
 from __future__ import annotations
 
 import importlib
+import inspect
 import pkgutil
 import sys
 
@@ -40,6 +41,18 @@ def test_all_queries_is_sorted_by_name():
     name order, independent of anything else committed in the repo."""
     names = list(registry.all_queries())
     assert names == sorted(names)
+
+
+def test_every_builder_takes_spark_and_sf_dir_only():
+    """The driver calls every entry as ``fn(spark, sf_dir)`` and checks it
+    against one oracle; a builder option would give answers no oracle
+    checks."""
+    wrong = {
+        name: list(inspect.signature(q.fn).parameters)
+        for name, q in registry.all_queries().items()
+        if list(inspect.signature(q.fn).parameters) != ["spark", "sf_dir"]
+    }
+    assert not wrong, wrong
 
 
 def test_all_queries_raises_when_an_extension_module_is_broken(monkeypatch):

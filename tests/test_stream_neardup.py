@@ -75,7 +75,7 @@ def test_stream_equals_batch_operator(spark, sf_dir, tmp_path):
 
     q = (
         stream_neardup_incremental(
-            spark, str(src), DOCS_DDL, {"maxFilesPerTrigger": "1"}
+            spark, str(src), reader_options={"maxFilesPerTrigger": "1"}
         )
         .writeStream.foreachBatch(sink)
         .outputMode("append")
@@ -121,7 +121,7 @@ def test_late_corpus_doc_is_invisible_to_earlier_probe(spark, tmp_path):
     captured: list = []
     q = (
         stream_neardup_incremental(
-            spark, str(src), DOCS_DDL, {"maxFilesPerTrigger": "1"}
+            spark, str(src), reader_options={"maxFilesPerTrigger": "1"}
         )
         .writeStream.foreachBatch(
             lambda df, _id: captured.append(df.toPandas())

@@ -42,7 +42,7 @@ def test_append_mode_drops_late_rows(spark, tmp_path):
             captured.append(batch_df.toPandas())
 
         q = (
-            stream_tumbling_counts(spark, src, watermark="10 minutes")
+            stream_tumbling_counts(spark, src)
             .writeStream.foreachBatch(sink)
             .outputMode("append")
             .option("checkpointLocation", ckpt)

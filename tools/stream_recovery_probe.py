@@ -66,8 +66,7 @@ spark.conf.set(
 )
 q = (
     stream_tumbling_counts(
-        spark, {src!r}, watermark="10 minutes",
-        reader_options={{"maxFilesPerTrigger": "1"}},
+        spark, {src!r}, reader_options={{"maxFilesPerTrigger": "1"}}
     )
     .writeStream.format("parquet")
     .option("path", {sink!r})

@@ -43,7 +43,6 @@ from simple_map_reduce_ruuner_spark.registry import Query
 from simple_map_reduce_ruuner_spark.sources.tables import (
     ckpt,
     load_table,
-    register_cache_clear_hook,
     session_cache,
     spread_scan,
 )
@@ -172,10 +171,12 @@ def neardup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     # localCheckpoint, NOT .cache(): CacheManager entries outlive the
     # returned DataFrame (nothing ever unpersisted them — review-found
-    # storage-pool leak across gate+bench reps), while checkpoint blocks
-    # are reference-counted and freed by the ContextCleaner once the
-    # result is consumed. eager=False defers the block write (AQE still
-    # runs the shuffle stages before it here, see ckpt); the first action
+    # storage-pool leak across gate+bench reps). Checkpoint blocks are
+    # not freed when the result is dropped either: an executed, dropped
+    # localCheckpoint stayed in getPersistentRDDs() through 36 s of
+    # gc.collect() + System.gc() (Spark 4.1.2, local[4]); only an
+    # explicit unpersist frees it. eager=False defers the block write
+    # (AQE still runs the shuffle stages before it here, see ckpt); the first action
     # writes the per-doc arrays once and both join sides explode off the
     # blocks. Carrying size(sharr) through the pair join (2 ints/row) replaces
     # the old sizes groupBy AND its two post-agg joins — the r9 rework
@@ -252,20 +253,18 @@ WHERE n_common * 1.0 / (sa.n + sb.n - n_common) >= {JACCARD_THRESHOLD}
 # feeds corpus_clean. Before r9 each of those seven queries recomputed
 # its whole chain from the corpus (100× curve: 325 s family total).
 # Session-scoped lazy checkpoints at every level (sources.tables.
-# session_cache — the co-trading/simhash pattern) make the first
-# EXECUTED query of the family materialize each subtree it touches once
-# per session+dataset; the rest ride the blocks.
-_SHINGLE_HASH_CACHE: dict[tuple[str, str], DataFrame] = {}
-_LSH_CAND_CACHE: dict[tuple[str, str], DataFrame] = {}
-_LSH_VERIFIED_CACHE: dict[tuple[str, str], DataFrame] = {}
-_CLUSTERS_CACHE: dict[tuple[str, str], DataFrame] = {}
+# session_cache — the co-trading/simhash pattern: memo entries
+# "shingle_hashes", "lsh_candidates", "lsh_verified" and "clusters")
+# make the first EXECUTED query of the family materialize each subtree
+# it touches once per session+dataset; the rest ride the blocks, which
+# stay pinned until clear_session_caches frees them.
 
 
 def _doc_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_cache(
-        _SHINGLE_HASH_CACHE,
         spark,
         sf_dir,
+        "shingle_hashes",
         lambda: _doc_shingle_hashes_plan(spark, sf_dir),
     )
 
@@ -340,11 +339,14 @@ MINHASH_SIGNATURES_SQL = _minhash_sql()
 
 
 def neardup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Candidate pairs, session-cached (see _LSH_CAND_CACHE block):
+    """Candidate pairs, session-cached (see the LSH pipeline block):
     consumed by neardup_lsh_verified, neardup_editdist, and
     neardup_shared_span besides its own registry entry."""
     return session_cache(
-        _LSH_CAND_CACHE, spark, sf_dir, lambda: _neardup_minhash_lsh_plan(spark, sf_dir)
+        spark,
+        sf_dir,
+        "lsh_candidates",
+        lambda: _neardup_minhash_lsh_plan(spark, sf_dir),
     )
 
 
@@ -408,12 +410,12 @@ NEARDUP_MINHASH_LSH_SQL = _lsh_sql()
 
 
 def neardup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verified pairs, session-cached (see _LSH_VERIFIED_CACHE block):
+    """Verified pairs, session-cached (see the LSH pipeline block):
     consumed by neardup_clusters besides its own registry entry."""
     return session_cache(
-        _LSH_VERIFIED_CACHE,
         spark,
         sf_dir,
+        "lsh_verified",
         lambda: _neardup_lsh_verified_plan(spark, sf_dir),
     )
 
@@ -490,16 +492,16 @@ SIMHASH_BITS = 60  # our portable hash has 60 usable bits
 
 # simhash signatures are consumed twice per session (the `simhash`
 # registry query and `simhash_band_pairs`, textlm.py) — same
-# keyed-lazy-checkpoint sharing as graph._COTRADING_CACHE: whichever
+# keyed-lazy-checkpoint sharing as graph's "cotrading" memo: whichever
 # query EXECUTES first materializes the (doc_id, simhash) blocks
-# (n_docs × 16 B — tiny), the sibling rides them. Under AQE the plan's
-# shuffle stages still run when the entry is built (see ckpt).
-_SIMHASH_CACHE: dict[tuple[str, str], DataFrame] = {}
+# (n_docs × 16 B — tiny), the sibling rides them until
+# clear_session_caches frees them. Under AQE the plan's shuffle stages
+# still run when the entry is built (see ckpt).
 
 
 def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_cache(
-        _SIMHASH_CACHE, spark, sf_dir, lambda: _simhash_plan(spark, sf_dir)
+        spark, sf_dir, "simhash", lambda: _simhash_plan(spark, sf_dir)
     )
 
 
@@ -536,8 +538,9 @@ def _simhash_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     set bits, and every doc with ≥1 token reaches the fold, so doc
     coverage is exactly the explode form's.
 
-    Measured 100× (SCALE_CURVE_100X_r09.json; cold session, the row
-    carries the signature-checkpoint materialization): r8 explode
+    Measured 100× (cold session, the row carries the signature-
+    checkpoint materialization; ``git show
+    68922be:SCALE_CURVE_100X_r09.json``, simhash 6.474 s): r8 explode
     70.3 s → two-shuffle kernel 47.4 s → this form 6.5 s, with
     simhash_band_pairs riding the shared signatures 62.8 → 17.6 s —
     family total 110 → 24 s.
@@ -624,14 +627,14 @@ CLUSTER_MAX_ITER = 25
 
 
 def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached (see _CLUSTERS_CACHE): the fixpoint loop below
+    """Session-cached (memo entry "clusters"): the fixpoint loop below
     runs EAGERLY at call time, so without the memo corpus_clean re-runs
     the whole iteration. The result is already a localCheckpoint —
     memoized as-is (checkpoint=False)."""
     return session_cache(
-        _CLUSTERS_CACHE,
         spark,
         sf_dir,
+        "clusters",
         lambda: _neardup_clusters_fixpoint(spark, sf_dir),
         checkpoint=False,
     )
@@ -749,33 +752,6 @@ COSINE_DUP_THRESHOLD = 0.45
 # broadcast contract is enforced, not aspirational.
 MAX_BROADCAST_VECTORS = 2_000_000
 
-# (applicationId, parquet fingerprint) -> Broadcast[(ids, matrix, norms)];
-# see neardup_embedding. At most one live entry per SparkContext.
-_EMB_BUILD_CACHE: dict[tuple, object] = {}
-
-
-def _clear_emb_build_cache(sf_dir: str | None) -> None:
-    """clear_session_caches() hook: the broadcast cache is keyed by
-    (app, parquet file fingerprint) rather than (app, sf_dir), and its
-    values need an explicit Broadcast.unpersist — the generic dict
-    sweep can't do either."""
-    real = os.path.realpath(sf_dir) + os.sep if sf_dir is not None else None
-    victims = [
-        k
-        for k in _EMB_BUILD_CACHE
-        if real is None
-        or any(os.path.realpath(f).startswith(real) for f, _, _ in k[1])
-    ]
-    for k in victims:
-        try:
-            _EMB_BUILD_CACHE.pop(k).unpersist()
-        except Exception:
-            pass  # context already stopped; nothing to free
-
-
-register_cache_clear_hook(_clear_emb_build_cache)
-
-
 def _parquet_file_stats(path: str) -> tuple[tuple[str, int, int], ...]:
     """(file, size, mtime_ns) fingerprint of a parquet file/directory —
     the cache key for anything derived from its on-disk content."""
@@ -794,22 +770,15 @@ def _parquet_file_stats(path: str) -> tuple[tuple[str, int, int], ...]:
     return tuple(out)
 
 
-_ROW_COUNT_CACHE: dict[tuple, int] = {}
-
-
 def _parquet_row_count(path: str) -> int:
     """Total rows from parquet footer metadata (file or directory of part
-    files) — no data read, no Spark job. Cached per (file, size, mtime)
-    fingerprint so repeated calls (bench reps, gate + bench in one
-    session) stat the files but re-read no footers."""
+    files) — no data read, no Spark job. Not memoized: a footer read
+    is ~0.1 ms (sf0.01 and sf0.1 embeddings file)."""
     import pyarrow.parquet as pq
 
-    key = _parquet_file_stats(path)
-    if key not in _ROW_COUNT_CACHE:
-        _ROW_COUNT_CACHE[key] = sum(
-            pq.ParquetFile(f).metadata.num_rows for f, _, _ in key
-        )
-    return _ROW_COUNT_CACHE[key]
+    return sum(
+        pq.ParquetFile(f).metadata.num_rows for f, _, _ in _parquet_file_stats(path)
+    )
 
 
 def neardup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -852,26 +821,27 @@ def neardup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         return emb.sparkSession.createDataFrame(
             [], "vec_a long, vec_b long, cos_sim double"
         )
-    # Build side cached per (SparkContext, file fingerprint): the vector
-    # analog of reusing a broadcast hash-join build side across queries in
-    # one session. Repeated calls (bench reps, gate+bench) pay only the
-    # streaming-side matmul job; a changed file or restarted context
-    # rebuilds and unpersists the evicted broadcast. Measured at sf0.1:
+    # Build side memoized per session, dataset and file fingerprint: the
+    # vector analog of reusing a broadcast hash-join build side across
+    # queries in one session. Repeated calls (bench reps, gate+bench) pay
+    # only the streaming-side matmul job; a rewritten file (new
+    # fingerprint in the memo name) or restarted context rebuilds, and
+    # clear_session_caches destroys the broadcast. Measured at sf0.1:
     # the collect+broadcast rebuild is ~0.2-1.4 s of a ~0.6 s query.
-    key = (spark.sparkContext.applicationId, _parquet_file_stats(emb_path))
-    bc = _EMB_BUILD_CACHE.get(key)
-    if bc is None:
+    def build_side():
         side = emb.toPandas()  # parallel Arrow collect (size-checked above)
         ids_b = side["vec_id"].to_numpy(dtype=np.int64)
         M_b = np.stack([np.asarray(e, dtype=np.float64) for e in side["embedding"]])
         n_b = np.sqrt((M_b * M_b).sum(axis=1))
-        bc = spark.sparkContext.broadcast((ids_b, M_b, n_b))
-        for old_key in [k for k in _EMB_BUILD_CACHE if k[0] == key[0]]:
-            try:
-                _EMB_BUILD_CACHE.pop(old_key).unpersist()
-            except Exception:
-                pass  # context already stopped; nothing to free
-        _EMB_BUILD_CACHE[key] = bc
+        return spark.sparkContext.broadcast((ids_b, M_b, n_b))
+
+    bc = session_cache(
+        spark,
+        sf_dir,
+        ("embeddings_broadcast", _parquet_file_stats(emb_path)),
+        build_side,
+        checkpoint=False,
+    )
     threshold = COSINE_DUP_THRESHOLD
 
     def score(batches):
@@ -936,11 +906,11 @@ def neardup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     join/DISTINCT shuffle entirely — same anchor-identical float64
     math, pairs computed inside their (band, sub) group.
 
-    PARAMETER caveat (measured in SCALE_CURVE_r08.json): the banding
-    here is FIXED (2 bands × 4 bits = 16 sub-buckets/band) for oracle
-    parity, so expected candidates are ~N²/32 — sub-quadratic only by
-    a constant (measured 175× growth on 100× data). That contract is
-    ENFORCED like the other anchors: above MAX_FIXED_BAND_VECTORS it
+    PARAMETER caveat: the banding here is FIXED (2 bands × 4 bits = 16
+    sub-buckets/band) for oracle parity, so expected candidates are
+    ~N²/32 — sub-quadratic only by a constant (measured 175× growth on
+    100× data, ``git show 2aa7189:SCALE_CURVE_100X_r07.json``). That
+    contract is ENFORCED like the other anchors: above MAX_FIXED_BAND_VECTORS it
     refuses and directs callers to :func:`neardup_embedding_lsh_auto`,
     which widens the codes with N so candidate counts stay ~linear.
     The check reads parquet footer row counts — zero Spark jobs.
@@ -1109,9 +1079,9 @@ def neardup_embedding_lsh_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs via N-ADAPTIVE banded hyperplane-LSH —
     the actual 100 TB path for semantic dedup.
 
-    SCALE_CURVE_r08.json caught the fixed-parameter variant growing
-    68.9× on 10× data (expected candidates N²/32 — quadratic in all but
-    name). The scaling law is classic b×r LSH: to keep candidates
+    The 10× scale curve (``git show 81f98e6:SCALE_CURVE_r08.json``)
+    caught the fixed-parameter variant growing 68.9× on 10× data
+    (expected candidates N²/32 — quadratic in all but name). The scaling law is classic b×r LSH: to keep candidates
     linear the band width must grow with log2(N), and the band COUNT
     must grow with it to hold recall at the duplicate threshold. This
     variant reads N from parquet footers (zero Spark jobs, same

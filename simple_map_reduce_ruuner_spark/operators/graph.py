@@ -105,8 +105,8 @@ def pagerank_trading(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r16 NULL RESULT: a co-partitioned rewrite (checkpoints compiled
     # with AQE off so each iteration rides the hash(src)/hash(node)
     # layout) cut the plan to 5 Exchange but LOST 1.4-1.7 s per
-    # invocation in full-bench context; receipts and the reverted code
-    # path are in OPTIMIZATION_r16.md. This form delegates the
+    # invocation in full-bench context (receipts and the reverted code
+    # path: ``git show d3c6a43:OPTIMIZATION_r16.md``). This form delegates the
     # per-scale join strategy to AQE (broadcast at bench scale,
     # sort-merge when |V| outgrows it), which measured best end to end.
     edges = ckpt(_edges(spark, sf_dir), eager=False)
@@ -232,8 +232,8 @@ TOP_PAIRS = 100  # co-trading report size
 TRI_EDGES = 200  # projected-graph edge budget for triangle counting
 
 
-# Session-scoped cache of the projected co-trading edge list, keyed by
-# (applicationId, resolved sf_dir). supplier_cotrading_pairs and
+# Session memo "cotrading" (sources.tables.session_cache) of the
+# projected co-trading edge list. supplier_cotrading_pairs and
 # cotrading_triangles both consume the SAME (s1, s2, shared_customers)
 # projection, and it is their dominant cost (the two heaviest absolute
 # rows of the r8 100× curve, 108 s / 118 s — each re-ran the projection
@@ -243,14 +243,14 @@ TRI_EDGES = 200  # projected-graph edge budget for triangle counting
 # that EXECUTES pays the projection once and pins the blocks
 # (serialized MEMORY_AND_DISK — spills, never OOMs), and every later
 # execution in the session — the sibling query, later bench reps —
-# reads the cached blocks. The applicationId key makes a restarted
-# session rebuild instead of touching dead block-manager state.
-_COTRADING_CACHE: dict[tuple[str, str], DataFrame] = {}
+# reads the cached blocks. The blocks stay pinned until
+# clear_session_caches unpersists them: dropping the DataFrame does not
+# free them.
 
 
 def _cotrading_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_cache(
-        _COTRADING_CACHE, spark, sf_dir, lambda: _cotrading_counts_plan(spark, sf_dir)
+        spark, sf_dir, "cotrading", lambda: _cotrading_counts_plan(spark, sf_dir)
     )
 
 
@@ -303,12 +303,13 @@ def supplier_cotrading_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (count desc, s1, s2) makes the cut deterministic.
 
     The projection itself comes from the session-scoped shared
-    checkpoint (see _COTRADING_CACHE): whichever of this query and
+    checkpoint (see the "cotrading" memo): whichever of this query and
     cotrading_triangles executes first in a session materializes it;
     the other rides the blocks. Measured sf0.1 (bench rep trace): the
     first executing query pays ~3.9 s, after which BOTH run in
-    0.15-0.55 s/rep (r8: 2.7 + 3.0 s every rep, no sharing); see
-    SCALE_CURVE_100X_r09.json for the 100× rows (r8: 108 s / 118 s)."""
+    0.15-0.55 s/rep (r8: 2.7 + 3.0 s every rep, no sharing). At 100×
+    the r8 rows were 108 s / 118 s; with sharing, cotrading_triangles
+    took 1.072 s (``git show 68922be:SCALE_CURVE_100X_r09.json``)."""
     return (
         _cotrading_counts(spark, sf_dir)
         .orderBy(F.col("shared_customers").desc(), "s1", "s2")

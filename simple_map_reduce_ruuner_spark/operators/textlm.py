@@ -94,7 +94,7 @@ def doc_lm_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1, and both r16 single-tokenize rewrites LOST (shared
     pair-grain exchange +0.3 s, per-(doc,token) pre-aggregation
     +0.15 s — the added exchange/aggregate outweighs the tokenize;
-    receipts in OPTIMIZATION_r16.md), so the two-branch form stays.
+    ``git show d3c6a43:OPTIMIZATION_r16.md``), so the two-branch form stays.
     The ppm products are computed in DECIMAL(38,0) (int128-class) so the
     math survives 100 TB corpora: sum_cnt * 1e6 wraps int64 past ~9.2e12
     total token occurrences, well under web scale. The DuckDB oracle
@@ -282,7 +282,7 @@ def simhash_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit_count(xor), the SimHash twin of ``neardup_lsh_verified``.
 
     ``simhash()`` returns the session-cached signature checkpoint
-    (dedup._SIMHASH_CACHE), so whichever of this query and the
+    (dedup's "simhash" memo), so whichever of this query and the
     ``simhash`` registry entry executes first materializes the
     (doc_id, simhash) blocks and the other rides them — 100×: 62.8 s
     (recompute-from-scratch) → 17.6 s (rider).
@@ -484,7 +484,7 @@ def token_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries no bigram text, only per-doc counts. Every stage is keyed
     by bigram-hash or doc_id; nothing is quadratic and nothing
     broadcasts corpus-sized state. 100×: 39.6 s (r8 string-distinct
-    form) → see SCALE_CURVE_100X_r09.json.
+    form) → 18.233 s (``git show 68922be:SCALE_CURVE_100X_r09.json``).
     """
     from pyspark.sql import Window
 
@@ -632,7 +632,9 @@ _BPE_SYMS = (
 # construction exactly like the lsh_pipeline signature ladder: blocks
 # still materialize on first EXECUTION (cold member), and the per-rep
 # encode/argmax data work downstream of the chain is unchanged.
-_BPE_CHAIN_CACHE: dict = {}
+# clear_session_caches drops the entry but frees none of the chain's
+# checkpoints (the store did not make them): all 6 stayed in
+# getPersistentRDDs() after a clear at sf0.001.
 
 
 def _bpe_state_chain(
@@ -643,11 +645,11 @@ def _bpe_state_chain(
     trainer (which emits the merge table) and the encoder (which
     tokenizes with the final state). State rows carry (w, enc, wc); see
     :func:`bpe_train_merges` for the algorithm and oracle discipline.
-    Session-cached (see _BPE_CHAIN_CACHE)."""
+    Session-cached (memo entry "bpe_chain")."""
     return session_cache(
-        _BPE_CHAIN_CACHE,
         spark,
         sf_dir,
+        "bpe_chain",
         lambda: _bpe_chain_build(spark, sf_dir),
         checkpoint=False,
     )

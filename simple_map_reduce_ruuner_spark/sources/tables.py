@@ -8,8 +8,12 @@ the TPC-H-ish star schema plus events/documents/embeddings (TESTDATA.md).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Hashable
+from typing import Any, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
 
 TABLE_NAMES = (
     "region",
@@ -25,20 +29,17 @@ TABLE_NAMES = (
 )
 
 
-# (applicationId, realpath(sf_dir)) -> {table name -> DataFrame}.
-# ``spark.read.parquet`` is ~100 ms of DRIVER work per call (py4j
-# round-trips + file listing + footer/schema read), and the registry's
-# 200 query builders call load_table 1-6× each — measured 0.15-0.75 s
-# of per-query build time at sf0.1, all of it re-resolving the same
-# ten immutable fixture tables (guide §6: file listing is driver-side,
-# single-process work; Spark's own catalog caches it per session for
-# exactly this reason). The memo stores the UNRESOLVED DataFrame (a
-# logical plan — no data, no blocks, nothing materialized), so reusing
-# it is semantically identical to re-reading: execution still scans
-# parquet every time. Keyed by applicationId so a restarted session
-# re-lists, and registered for clear_session_caches so dataset-scoped
-# clears drop it like every other session memo.
-_TABLE_MEMO: dict = {}
+# Each dataset's tables live in one session memo entry, "tables":
+# {table name -> DataFrame}. ``spark.read.parquet`` is ~100 ms of DRIVER
+# work per call (py4j round-trips + file listing + footer/schema read),
+# and the registry's 200 query builders call load_table 1-6× each —
+# measured 0.15-0.75 s of per-query build time at sf0.1, all of it
+# re-resolving the same ten immutable fixture tables (guide §6: file
+# listing is driver-side, single-process work; Spark's own catalog
+# caches it per session for exactly this reason). The entry stores the
+# UNRESOLVED DataFrames (logical plans — no data, no blocks, nothing
+# materialized), so reusing them is semantically identical to
+# re-reading: execution still scans parquet every time.
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -49,12 +50,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     table): tables under an sf_dir are immutable fixtures, and the
     memo only dedupes driver-side plan construction (listing + schema
     resolution), never data."""
-    if not any(c is _TABLE_MEMO for c in _REGISTERED_CACHES):
-        _REGISTERED_CACHES.append(_TABLE_MEMO)
-    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
-    per_dir = _TABLE_MEMO.get(key)
-    if per_dir is None:
-        per_dir = _TABLE_MEMO[key] = {}
+    per_dir = session_cache(spark, sf_dir, "tables", dict, checkpoint=False)
     got = per_dir.get(name)
     if got is None:
         path = os.path.join(sf_dir, f"{name}.parquet")
@@ -101,87 +97,88 @@ def ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
     )
 
 
-# Every dict handed to session_cache(), so clear_session_caches() can
-# find them without each operator module exporting its private cache.
-_REGISTERED_CACHES: list[dict] = []
-# Clear hooks for caches with non-(app, sf_dir) keys or non-DataFrame
-# values (the embedding broadcast); called with the sf_dir filter.
-_CLEAR_HOOKS: list = []
-
-
-def register_cache_clear_hook(hook) -> None:
-    """Register ``hook(sf_dir: str | None)`` to run inside
-    :func:`clear_session_caches` — for caches that need custom teardown
-    (e.g. ``Broadcast.unpersist``) or use non-standard keys."""
-    if not any(h is hook for h in _CLEAR_HOOKS):
-        _CLEAR_HOOKS.append(hook)
+# (applicationId, realpath(sf_dir), name) -> (value, checkpointed): the
+# one store of session memos. A value is a DataFrame, a Broadcast or any
+# other object a builder derives from one dataset; ``checkpointed``
+# marks entries whose checkpoint RDD this store made and so must free.
+_SESSION_MEMO: dict[tuple, tuple[Any, bool]] = {}
 
 
 def clear_session_caches(sf_dir: str | None = None) -> int:
-    """Drop session-scoped memoized DataFrames so their localCheckpoint
-    blocks become ContextCleaner-collectable (the module-level dicts
-    otherwise hold strong references for the application's lifetime —
-    a multi-dataset session accumulates pinned MEMORY_AND_DISK blocks
-    per (app, sf_dir) key with no eviction). With ``sf_dir``, only that
-    dataset's keys are dropped — bench.py does this after its sf0.001
-    warm-up pass so stale warm-up blocks don't occupy the storage pool
-    during the timed passes. Returns the number of evicted entries.
+    """Drop session memos and free what they pinned. With ``sf_dir``,
+    only that dataset's entries go — bench.py does this after its
+    sf0.001 warm-up pass so stale warm-up blocks don't occupy the
+    storage pool during the timed passes. Returns the number of evicted
+    entries.
+
+    Dropping the reference alone frees nothing: a localCheckpoint that
+    was executed and then dropped stays in
+    ``sc._jsc.getPersistentRDDs()`` with its blocks after ``gc.collect()``
+    and ``System.gc()`` every 0.5 s for 36 s (Spark 4.1.2, local[4]).
+    So each entry the store checkpointed has its checkpoint RDD (the
+    ``LogicalRDD`` of its analyzed plan) unpersisted, and each
+    ``Broadcast`` is destroyed; any other value is only dropped.
+
+    Contract: a DataFrame built before a clear is not executed after
+    it — its checkpoint blocks or broadcast may be gone. Build again.
 
     NOT called automatically on dataset switch: a session that
-    alternates between datasets keeps each one's caches warm."""
-    import gc
+    alternates between datasets keeps each one's memos warm."""
+    from py4j.protocol import Py4JError
+    from pyspark import Broadcast
 
     real = os.path.realpath(sf_dir) if sf_dir is not None else None
-    n = 0
-    for cache in _REGISTERED_CACHES:
-        victims = [
-            k
-            for k in cache
-            if real is None
-            or (isinstance(k, tuple) and len(k) == 2 and k[1] == real)
-        ]
-        for k in victims:
-            cache.pop(k, None)
-            n += 1
-    for hook in _CLEAR_HOOKS:
-        hook(sf_dir)
-    # The checkpoint RDDs are now unreferenced on the Python side; a GC
-    # cycle lets py4j drop the JVM refs so ContextCleaner frees blocks.
-    gc.collect()
-    return n
+    victims = [k for k in _SESSION_MEMO if real is None or k[1] == real]
+    for k in victims:
+        value, checkpointed = _SESSION_MEMO.pop(k)
+        try:
+            if checkpointed:
+                value._jdf.queryExecution().analyzed().rdd().unpersist(False)
+            elif isinstance(value, Broadcast):
+                value.destroy()
+        except (Py4JError, OSError):
+            pass  # its SparkContext is already stopped; nothing to free
+    return len(victims)
 
 
 def session_cache(
-    cache: dict, spark: SparkSession, sf_dir: str, build, checkpoint: bool = True
-) -> DataFrame:
-    """Session-scoped memo of a per-dataset DataFrame, keyed by
-    (applicationId, resolved sf_dir) — the shared-subtree pattern behind
-    graph._COTRADING_CACHE and dedup's LSH-pipeline caches.
+    spark: SparkSession,
+    sf_dir: str,
+    name: Hashable,
+    build: Callable[[], T],
+    checkpoint: bool = True,
+) -> T:
+    """Session-scoped memo of one value derived from a dataset, keyed by
+    (applicationId, resolved sf_dir, name) — the shared-subtree reuse
+    behind the co-trading projection, the LSH dedup ladder, the simhash
+    signatures, the BPE chain, the embedding broadcast and the table
+    catalog.
 
-    ``build()`` runs once per (session, dataset); with ``checkpoint``
-    the result is wrapped in a LAZY localCheckpoint (``ckpt(eager=
-    False)``): the first query that EXECUTES writes the blocks
-    (serialized MEMORY_AND_DISK — spills, never OOMs), but under AQE the
-    build's shuffle map stages already run as jobs at construction time
-    (see :func:`ckpt`), so EXPLAIN, plan tests and registry sweeps pay
-    them the first time a dataset's entry is built. Every later
-    execution in the session — sibling queries of the same family,
-    later bench reps — reads the blocks. ``checkpoint=False``
-    memoizes the DataFrame as-is, for builders that already return
-    checkpointed/eagerly-computed results (e.g. the connected-
-    components fixpoint). The applicationId key makes a restarted
-    session rebuild instead of touching dead block-manager state.
+    ``build()`` runs once per (session, dataset, name); with
+    ``checkpoint`` the result is wrapped in a LAZY localCheckpoint
+    (``ckpt(eager=False)``): the first query that EXECUTES writes the
+    blocks (serialized MEMORY_AND_DISK — spills, never OOMs), but under
+    AQE the build's shuffle map stages already run as jobs at
+    construction time (see :func:`ckpt`), so EXPLAIN, plan tests and
+    registry sweeps pay them the first time a dataset's entry is built.
+    Every later execution in the session — sibling queries of the same
+    family, later bench reps — reads the blocks. ``checkpoint=False``
+    memoizes the value as-is, for builders that already return
+    checkpointed/eagerly-computed results or values that are not
+    DataFrames. The applicationId key makes a restarted session rebuild
+    instead of touching dead block-manager state. The blocks stay until
+    :func:`clear_session_caches` frees them.
     """
-    if not any(c is cache for c in _REGISTERED_CACHES):
-        _REGISTERED_CACHES.append(cache)
-    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
-    got = cache.get(key)
+    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir), name)
+    got = _SESSION_MEMO.get(key)
     if got is None:
-        got = build()
+        value = build()
         if checkpoint:
-            got = ckpt(got, eager=False)
-        cache[key] = got
-    return got
+            value = ckpt(value, eager=False)
+        # setdefault: a concurrent builder of the same key (perfbench's
+        # threaded warm-up) gets the entry that won
+        got = _SESSION_MEMO.setdefault(key, (value, checkpoint))
+    return got[0]
 
 
 def spread_scan(df: DataFrame, key: str | None = None) -> DataFrame:

@@ -27,3 +27,15 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def sf_correct() -> str:
     return SF_CORRECT
+
+
+@pytest.fixture(scope="session", autouse=True)
+def _index_dirs(tmp_path_factory):
+    """Keep the IVF/BPE on-disk indexes that tests build under the run's
+    tmp dir instead of ``$TMPDIR/smrr_{ivf,bpe}_index``, which nothing
+    deletes. A test's own ``monkeypatch.setenv`` still overrides this."""
+    base = tmp_path_factory.mktemp("index")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("SMRR_IVF_INDEX_DIR", str(base / "ivf"))
+        mp.setenv("SMRR_BPE_INDEX_DIR", str(base / "bpe"))
+        yield

@@ -1,11 +1,11 @@
-"""clear_session_caches(): eviction semantics for the session-scoped
-memo dicts (and the embedding broadcast's custom clear hook)."""
+"""The session memo store (``sources.tables``): dataset-scoped and global
+eviction, freeing of what an entry pinned, and the one-store design."""
 
 from __future__ import annotations
 
-import os
+import ast
+import pathlib
 
-from simple_map_reduce_ruuner_spark.sources import tables
 from simple_map_reduce_ruuner_spark.sources.tables import (
     clear_session_caches,
     session_cache,
@@ -14,43 +14,104 @@ from simple_map_reduce_ruuner_spark.sources.tables import (
 
 def test_clear_session_caches_by_dataset_and_global(spark, sf_dir, tmp_path):
     other_dir = str(tmp_path)
-    cache: dict = {}
-    df = spark.range(3)
-    session_cache(cache, spark, sf_dir, lambda: df, checkpoint=False)
-    session_cache(cache, spark, other_dir, lambda: df, checkpoint=False)
-    assert len(cache) == 2
-    assert any(c is cache for c in tables._REGISTERED_CACHES)
+    builds: list[str] = []
 
-    # dataset-scoped eviction drops only that sf_dir's key
-    n = clear_session_caches(sf_dir)
-    assert n >= 1
-    assert len(cache) == 1
-    (key,) = cache
-    assert key[1] == os.path.realpath(other_dir)
+    def get(d: str):
+        return session_cache(
+            spark, d, "eviction_probe", lambda: builds.append(d) or d, checkpoint=False
+        )
 
+    get(sf_dir)
+    get(other_dir)
+    get(other_dir)
+    assert builds == [sf_dir, other_dir]
+
+    # dataset-scoped eviction drops only that sf_dir's entries
+    assert clear_session_caches(other_dir) == 1
+    get(sf_dir)
+    assert builds == [sf_dir, other_dir]
     # a later call rebuilds the evicted entry
-    session_cache(cache, spark, sf_dir, lambda: df, checkpoint=False)
-    assert len(cache) == 2
+    get(other_dir)
+    assert builds == [sf_dir, other_dir, other_dir]
 
-    # global clear empties every registered cache
+    # a global clear drops every dataset's entries
+    assert clear_session_caches() >= 2
+    get(sf_dir)
+    get(other_dir)
+    assert builds == [sf_dir, other_dir, other_dir, sf_dir, other_dir]
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()))
+
+
+def test_clear_frees_checkpoints_and_broadcasts(spark, sf_dir, monkeypatch):
+    """Dropping a memo's reference frees nothing (an executed, dropped
+    localCheckpoint stays in getPersistentRDDs()), so the clear must
+    unpersist the checkpoints and destroy the broadcasts it pinned —
+    at once, with no wait on Spark's ContextCleaner."""
+    from simple_map_reduce_ruuner_spark.operators import dedup, graph
+
+    sc = spark.sparkContext
+
+    def persistent() -> set[int]:
+        return set(sc._jsc.getPersistentRDDs().keySet())
+
+    clear_session_caches()  # entries built by earlier tests would hide the adds
+    before = persistent()
+    sim = _rows(dedup.simhash(spark, sf_dir))
+    cot = _rows(graph._cotrading_counts(spark, sf_dir))
+    added = persistent() - before
+    assert added, "simhash and _cotrading_counts pin no checkpoint"
     clear_session_caches()
-    assert not cache
+    assert not added & persistent()
 
+    made = []
+    broadcast = sc.broadcast
 
-def test_clear_hook_runs_and_emb_cache_is_registered(spark, sf_dir):
-    """The embedding broadcast cache has non-(app, sf_dir) keys, so it is
-    cleared via a registered hook rather than the generic dict sweep."""
-    from simple_map_reduce_ruuner_spark.operators import dedup
+    def recording_broadcast(value):
+        made.append(broadcast(value))
+        return made[-1]
 
-    assert any(
-        h is dedup._clear_emb_build_cache for h in tables._CLEAR_HOOKS
-    )
-    # Build the broadcast by running the query plan once at sf_dir, then
-    # clear that dataset and observe the cache entry go away.
+    monkeypatch.setattr(sc, "broadcast", recording_broadcast)
     dedup.neardup_embedding(spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
-    app = spark.sparkContext.applicationId
-    assert any(k[0] == app for k in dedup._EMB_BUILD_CACHE)
-    clear_session_caches(sf_dir)
-    assert not any(k[0] == app for k in dedup._EMB_BUILD_CACHE)
+    assert made and all(bc._jbroadcast.isValid() for bc in made)
+    clear_session_caches()
+    assert not any(bc._jbroadcast.isValid() for bc in made)
+
+    # queries rebuilt after the clear give the same rows
+    assert _rows(dedup.simhash(spark, sf_dir)) == sim
+    assert _rows(graph._cotrading_counts(spark, sf_dir)) == cot
+
+
+def test_session_memos_live_only_in_the_store():
+    """No package module but ``sources/tables.py`` keeps a module-level
+    memo dict: every session memo goes through ``session_cache`` so
+    ``clear_session_caches`` can find and free it."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "simple_map_reduce_ruuner_spark"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pkg / "sources" / "tables.py":
+            continue
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.Assign):
+                targets, value = node.targets, node.value
+            elif isinstance(node, ast.AnnAssign) and node.value is not None:
+                targets, value = [node.target], node.value
+            else:
+                continue
+            is_dict = isinstance(value, (ast.Dict, ast.DictComp)) or (
+                isinstance(value, ast.Call)
+                and isinstance(value.func, ast.Name)
+                and value.func.id in ("dict", "defaultdict", "OrderedDict")
+            )
+            for t in targets:
+                if (
+                    is_dict
+                    and isinstance(t, ast.Name)
+                    and t.id.endswith(("_CACHE", "_MEMO"))
+                ):
+                    offenders.append(f"{path.relative_to(pkg)}:{node.lineno} {t.id}")
+    assert not offenders, offenders

@@ -180,10 +180,10 @@ CROSS JOIN (VALUES ('p50'), ('p90'), ('p99')) t(q)
 
 
 # Rows-only sketch queries are registered with oracle=None (the driver
-# records a weaker rows-only check for them); their bounded-error
-# evidence vs the exact anchors is measured per round into
-# APPROX_BOUNDS.json (tools/approx_bounds.py) and asserted by
-# tests/test_approx_and_stubs.py.
+# records a weaker rows-only check for them); their error bounds vs the
+# exact anchors are asserted on every test run by
+# tests/test_approx_and_stubs.py (APPROX_BOUNDS.json keeps the last
+# measured errors at sf0.01 and sf0.1).
 QUERIES: dict[str, Query] = {
     "exact_distinct_users": Query(
         exact_distinct_users, EXACT_DISTINCT_USERS_SQL, "exact distinct counts"

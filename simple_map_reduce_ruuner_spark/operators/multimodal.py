@@ -1,35 +1,39 @@
 """Multimodal-column plumbing (north-star extension).
 
 Pattern for 100 TB multimodal pipelines: media lives as opaque ``binary``
-columns with typed metadata alongside; decode / feature-extraction runs as
-Arrow-batched Pandas functions (``mapInPandas``) so bytes cross the
-Python boundary in columnar batches, never row-at-a-time.
+columns with typed metadata alongside; decode / feature-extraction runs
+in Arrow-batched Pandas functions so bytes cross the Python boundary in
+columnar batches, never row-at-a-time.
 
 The driver tables carry no real media, so the binary column is
 synthesized deterministically (UTF-8 payload of the document text).
 REAL here: the Spark-side plumbing (binary column handling, metadata
-projection, mapInPandas batch signature, schema/partition behavior) AND
-three full public-format codecs — :func:`decode_image_ppm` encodes
-valid binary Netpbm P6 images and decodes them with an actual header
-parser (r11; no image library needed, the format is bytes +
-arithmetic), :func:`decode_image_png` (r12) does the same for PNG with
-stdlib zlib (all five scanline filters, CRC-checked chunks, multi-IDAT
-reassembly), and :func:`decode_audio_wav` (r12) covers the audio leg
-with a word-aligned RIFF/PCM parser. Every decoder here and in
+projection, schema/partition behavior) AND full public-format codecs —
+:func:`decode_image_ppm` encodes valid binary Netpbm P6 images and
+decodes them with an actual header parser (no image library needed, the
+format is bytes + arithmetic), :func:`decode_image_png` does the same
+for PNG with stdlib zlib (all five scanline filters, CRC-checked chunks,
+multi-IDAT reassembly), and :func:`decode_audio_wav` covers the audio
+leg with a word-aligned RIFF/PCM parser. Every decoder here and in
 operators/codecs.py is pure stdlib/numpy: one kernel per format, no
 optional library path.
+
+Every codec is one factory ``_<fmt>_codec()`` returning two per-row
+functions, ``encode(doc_id, payload) -> bytes`` and
+``decode(blob) -> rows``; its query is one :func:`per_doc` call on
+``lambda d, p: decode(encode(d, p))``, so encode and decode share one
+Python crossing and the blob never returns to the JVM.
 
 - multimodal_meta     — metadata projection over the binary column
                         (size, sha256 digest, synthetic format tag).
 - payload_byte_stats  — per-doc byte statistics computed in Python over
-                        the raw bytes via mapInPandas (the decode-shaped
-                        hot path, Arrow-batched); exact DuckDB oracle
-                        since the payload is deterministic.
+                        the raw bytes, vectorised per Arrow batch; exact
+                        DuckDB oracle since the payload is deterministic.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -68,17 +72,54 @@ def _with_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spread_scan (guide §2.5, input skew): documents.parquet at test
     scale is ONE file with one row group = one input split, so without
-    the repartition every mapInPandas encode/decode kernel downstream —
-    the most CPU-expensive Python in the repo — ran on a single core
-    (measured: decode_image_gif 2.3 s wall for ~1.4 s of kernel CPU
-    that 32 cores should absorb). Every kernel is strictly per-row
-    (each doc encodes to its own container/image/stream), so the
-    round-robin split cannot change any result; at production scale
-    the scan has thousands of splits and spread_scan is a no-op."""
+    the repartition every Python kernel downstream — the most
+    CPU-expensive Python in the repo — ran as one task on one core
+    however many cores the session had (measured on a 32-core session:
+    decode_image_gif took 2.3 s wall for ~1.4 s of kernel CPU). Every
+    kernel is strictly per-row (each doc encodes to its own
+    container/image/stream), so the round-robin split cannot change any
+    result; at production scale the scan has thousands of splits and
+    spread_scan is a no-op."""
     docs = spread_scan(load_table(spark, sf_dir, "documents"), key="doc_id")
     return docs.select(
         "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
     )
+
+
+def per_doc(
+    spark: SparkSession, sf_dir: str, row_fn: Callable, schema: str
+) -> DataFrame:
+    """One Python crossing over (doc_id, payload): ``row_fn(doc_id,
+    payload)`` returns the rows of one document WITHOUT its doc_id,
+    which the kernel prepends (``schema`` starts with ``doc_id long``).
+    The kernel is the one loop over Arrow batches and the one place
+    that builds the output frame; an empty batch yields an empty frame
+    with the schema's columns.
+
+    Each codec query passes ``lambda d, p: decode(encode(d, p))``, so
+    the encoded blob stays inside the Python worker; two chained Python
+    nodes cost one more JVM<->Python round of the whole payload (≈0.27 s
+    on the 5,000-doc sf0.1 payload, 4 cores).
+
+    Pickling contract: the kernel and ``row_fn`` are closures that look
+    up no package-level name, so cloudpickle ships them by value and
+    executors never import this package (their workers do not see the
+    driver's sys.path). Module-level functions would be pickled by
+    reference instead; that is why each codec is a factory."""
+    cols = [field.split()[0] for field in schema.split(",")]
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
+        for pdf in batches:
+            rows = [
+                (doc_id, *row)
+                for doc_id, payload in zip(pdf["doc_id"].tolist(), pdf["payload"])
+                for row in row_fn(doc_id, bytes(payload))
+            ]
+            yield pd.DataFrame.from_records(rows, columns=cols)
+
+    return _with_payload(spark, sf_dir).mapInPandas(kernel, schema)
 
 
 def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -116,9 +157,10 @@ FROM documents
 def payload_byte_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Byte statistics computed Python-side over binary payloads.
 
-    This is the decode-shaped path: mapInPandas receives Arrow record
-    batches, the UDF touches raw bytes (stand-in for pixel/sample
-    decoding), and emits a typed frame. Integer sums keep it exact.
+    This is the decode-shaped path vectorised per Arrow batch instead
+    of per row (so it does not go through :func:`per_doc`): the kernel
+    touches raw bytes (stand-in for pixel/sample decoding) and emits a
+    typed frame. Integer sums keep it exact.
     """
     df = _with_payload(spark, sf_dir)
 
@@ -194,129 +236,88 @@ FROM s
 """
 
 
-def _ppm_encode_fn():
-    """Factory for the P6 encode kernel (module-level so tests drive the
-    production code path; the RETURNED closure is self-contained and
-    pickled by value, so executors never import this package)."""
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            blobs = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w = 4 + doc_id % 5
-                h = 3 + doc_id % 7
-                need = int(w * h * 3)
-                t = np.frombuffer(bytes(payload), dtype=np.uint8)
-                px = (
-                    np.resize(t, need)  # cycles the source bytes
-                    if t.size
-                    else np.zeros(need, dtype=np.uint8)
-                )
-                blobs.append(b"P6\n%d %d\n255\n" % (w, h) + px.tobytes())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "ppm": blobs})
-
-    return encode
+IMAGE_RGB_SCHEMA = (
+    "doc_id long, width long, height long, "
+    "mean_r_milli long, mean_g_milli long, mean_b_milli long"
+)
 
 
-def _ppm_decode_fn():
-    """Factory for the P6 decode kernel: a REAL Netpbm parser (magic,
-    '#'-comments, whitespace-tokenized width/height/maxval, one
-    whitespace byte before the raster), then numpy per-channel integer
-    means. Rejects non-P6 and truncated input. Self-contained closure —
-    see _ppm_encode_fn for the pickling contract."""
+def _ppm_codec():
+    """Netpbm P6 codec. encode: ``P6\\n{w} {h}\\n255\\n`` header + w*h*3
+    RGB bytes cycling the doc's UTF-8 text (zero-filled for empty docs).
+    decode: a REAL Netpbm parser (magic, '#'-comments, whitespace-
+    tokenized width/height/maxval, one whitespace byte before the
+    raster), then one (width, height, per-channel integer means) row.
+    Rejects non-P6 and truncated input."""
+    import numpy as np
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def encode(doc_id: int, payload: bytes) -> bytes:
+        w, h = 4 + doc_id % 5, 3 + doc_id % 7
+        # np.resize cycles the source bytes (all zeros when there are none)
+        px = np.resize(np.frombuffer(payload, np.uint8), w * h * 3)
+        return b"P6\n%d %d\n255\n" % (w, h) + px.tobytes()
 
-        def parse_header(b: bytes) -> tuple[int, int, int, int]:
-            """(width, height, maxval, raster_offset) per the Netpbm
-            spec: 'P6', then whitespace-separated width/height/maxval
-            (with '#'-to-newline comments allowed anywhere whitespace
-            is), then exactly one whitespace byte before the raster."""
-            if b[:2] != b"P6":
-                raise ValueError("not a binary PPM (P6) payload")
-            # the magic must be its own token: 'P6123 4 ...' is NOT a
-            # valid header with width 123 — require whitespace (or a
-            # comment) between the magic and the first field
-            if not (b[2:3].isspace() or b[2:3] == b"#"):
-                raise ValueError("malformed PPM: no whitespace after magic")
-            pos, end, fields = 2, len(b), []
-            while len(fields) < 3:
-                while pos < end and (
-                    b[pos : pos + 1].isspace() or b[pos] == 0x23  # '#'
-                ):
-                    if b[pos] == 0x23:  # comment runs to end of line
-                        while pos < end and b[pos] != 0x0A:
-                            pos += 1
-                    else:
+    def parse_header(b: bytes) -> tuple[int, int, int, int]:
+        """(width, height, maxval, raster_offset) per the Netpbm
+        spec: 'P6', then whitespace-separated width/height/maxval
+        (with '#'-to-newline comments allowed anywhere whitespace
+        is), then exactly one whitespace byte before the raster."""
+        if b[:2] != b"P6":
+            raise ValueError("not a binary PPM (P6) payload")
+        # the magic must be its own token: 'P6123 4 ...' is NOT a
+        # valid header with width 123 — require whitespace (or a
+        # comment) between the magic and the first field
+        if not (b[2:3].isspace() or b[2:3] == b"#"):
+            raise ValueError("malformed PPM: no whitespace after magic")
+        pos, end, fields = 2, len(b), []
+        while len(fields) < 3:
+            while pos < end and (
+                b[pos : pos + 1].isspace() or b[pos] == 0x23  # '#'
+            ):
+                if b[pos] == 0x23:  # comment runs to end of line
+                    while pos < end and b[pos] != 0x0A:
                         pos += 1
-                start = pos
-                while pos < end and not b[pos : pos + 1].isspace():
+                else:
                     pos += 1
-                if start == pos:
-                    raise ValueError("truncated PPM header")
-                fields.append(int(b[start:pos]))
-            return fields[0], fields[1], fields[2], pos + 1
+            start = pos
+            while pos < end and not b[pos : pos + 1].isspace():
+                pos += 1
+            if start == pos:
+                raise ValueError("truncated PPM header")
+            fields.append(int(b[start:pos]))
+        return fields[0], fields[1], fields[2], pos + 1
 
-        for pdf in batches:
-            ids, ws, hs, means = [], [], [], []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["ppm"]):
-                b = bytes(blob)
-                w, h, maxval, off = parse_header(b)
-                if maxval != 255:
-                    raise ValueError("8-bit raster expected")
-                px = np.frombuffer(
-                    b, dtype=np.uint8, offset=off, count=h * w * 3
-                ).reshape(h * w, 3)
-                ids.append(doc_id)
-                ws.append(w)
-                hs.append(h)
-                means.append(px.sum(axis=0, dtype=np.int64) * 1000 // (w * h))
-            m = (
-                np.stack(means)
-                if means
-                else np.empty((0, 3), dtype=np.int64)
-            )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "width": pd.Series(ws, dtype="int64"),
-                    "height": pd.Series(hs, dtype="int64"),
-                    "mean_r_milli": m[:, 0],
-                    "mean_g_milli": m[:, 1],
-                    "mean_b_milli": m[:, 2],
-                }
-            )
+    def decode(b: bytes) -> list[tuple]:
+        w, h, maxval, off = parse_header(b)
+        if maxval != 255:
+            raise ValueError("8-bit raster expected")
+        px = np.frombuffer(b, dtype=np.uint8, offset=off, count=h * w * 3)
+        means = px.reshape(h * w, 3).sum(axis=0, dtype=np.int64) * 1000 // (w * h)
+        return [(w, h, *means.tolist())]
 
-    return decode
+    return encode, decode
 
 
 def decode_image_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image-codec round trip over a public format: encode each doc
     as a valid binary Netpbm P6 (PPM) image, then decode it with an
     actual header parser — no synthetic pixel shortcut on the decode
-    side (replaces r1-r10's ``decode_image_fake``, which skipped the
-    format and read raw payload bytes).
+    side.
 
-    Encode stage (mapInPandas): ``P6\\n{w} {h}\\n255\\n`` header + w*h*3
-    RGB bytes, pixels drawn by cycling the doc's UTF-8 text bytes
-    (zero-filled for empty docs). Dimensions vary per doc
-    (w = 4 + doc_id % 5, h = 3 + doc_id % 7) so the decoder must
-    genuinely parse the header — a fixed-size crop could fake it.
+    Encode: ``P6\\n{w} {h}\\n255\\n`` header + w*h*3 RGB bytes, pixels
+    drawn by cycling the doc's UTF-8 text bytes (zero-filled for empty
+    docs). Dimensions vary per doc (w = 4 + doc_id % 5,
+    h = 3 + doc_id % 7) so the decoder must genuinely parse the header
+    — a fixed-size crop could fake it.
 
-    Decode stage (second mapInPandas): _ppm_decode_fn's spec parser,
-    then per-channel integer means. The DuckDB oracle recomputes the
-    features straight from the text bytes and the dimension formula —
-    agreement proves the encode->parse->extract round trip is lossless.
+    Decode: _ppm_codec's spec parser, then per-channel integer means.
+    The DuckDB oracle recomputes the features straight from the text
+    bytes and the dimension formula — agreement proves the
+    encode->parse->extract round trip is lossless.
     """
-    df = _with_payload(spark, sf_dir)
-    encoded = df.mapInPandas(_ppm_encode_fn(), "doc_id long, ppm binary")
-    return encoded.mapInPandas(
-        _ppm_decode_fn(),
-        "doc_id long, width long, height long, "
-        "mean_r_milli long, mean_g_milli long, mean_b_milli long",
+    encode, decode = _ppm_codec()
+    return per_doc(
+        spark, sf_dir, lambda d, p: decode(encode(d, p)), IMAGE_RGB_SCHEMA
     )
 
 
@@ -362,235 +363,187 @@ PNG_W_EXPR = "2 + doc_id % 6"  # 2..7 px wide
 PNG_H_EXPR = "2 + doc_id % 5"  # 2..6 px tall
 
 
-def _png_encode_fn():
-    """Factory for the PNG encode kernel: a REAL spec-conformant writer
-    (stdlib zlib/struct/binascii only — the point of the exercise).
+def _png_codec():
+    """PNG codec, stdlib zlib/struct/binascii only (the point of the
+    exercise).
 
-    Per doc: 8-bit RGB (color type 2), no interlace, w = 2 + doc_id % 6,
-    h = 2 + doc_id % 5, pixel bytes cycling the doc's UTF-8 text (the
-    same recipe the oracle replays). Every row is filtered with type
-    row % 5, so ALL FIVE scanline filters (None/Sub/Up/Average/Paeth)
-    appear in every image taller than 4 rows and the decoder's
-    unfiltering is exercised for real. The IDAT stream is split across
-    two chunks when possible (spec-legal, forces reassembly) and a tEXt
-    chunk sits before them (decoder must skip ancillary chunks). The
-    closure is self-contained and pickled by value — executors never
-    import this package (see _ppm_encode_fn)."""
+    encode: a REAL spec-conformant writer. Per doc: 8-bit RGB (color
+    type 2), no interlace, w = 2 + doc_id % 6, h = 2 + doc_id % 5, pixel
+    bytes cycling the doc's UTF-8 text (the same recipe the oracle
+    replays). Every row is filtered with type row % 5, so ALL FIVE
+    scanline filters (None/Sub/Up/Average/Paeth) appear in every image
+    taller than 4 rows and the decoder's unfiltering is exercised for
+    real. The IDAT stream is split across two chunks when possible
+    (spec-legal, forces reassembly) and a tEXt chunk sits before them
+    (decoder must skip ancillary chunks).
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import binascii
-        import struct
-        import zlib
+    decode: signature check, chunk walk with CRC32 verification, IHDR
+    validation (8-bit RGB, deflate, filter method 0, no interlace),
+    multi-IDAT reassembly, zlib.decompress, and per-scanline unfiltering
+    for all five filter types (RFC 2083 §6) — then the same per-channel
+    integer means the PPM path emits. Rejects bad signatures, CRC
+    mismatches, truncated streams, and unsupported IHDR shapes."""
+    import binascii
+    import struct
+    import zlib
 
-        import numpy as np
+    import numpy as np
 
-        def chunk(ctype: bytes, data: bytes) -> bytes:
-            return (
-                struct.pack(">I", len(data))
-                + ctype
-                + data
-                + struct.pack(">I", binascii.crc32(ctype + data))
+    def chunk(ctype: bytes, data: bytes) -> bytes:
+        return (
+            struct.pack(">I", len(data))
+            + ctype
+            + data
+            + struct.pack(">I", binascii.crc32(ctype + data))
+        )
+
+    def filter_rows(raw: "np.ndarray", w: int, h: int) -> bytes:
+        """Filter each scanline with type row % 5. PNG filters read
+        the RAW bytes of the current and prior scanline (the decoder
+        reconstructs them), so encoding is fully vectorized."""
+        stride = w * 3
+        img = raw.reshape(h, stride).astype(np.int64)
+        out = bytearray()
+        for r in range(h):
+            cur = img[r]
+            prior = img[r - 1] if r else np.zeros(stride, np.int64)
+            left = np.concatenate(([0, 0, 0], cur[:-3]))
+            upleft = np.concatenate(([0, 0, 0], prior[:-3]))
+            f = r % 5
+            if f == 0:
+                filt = cur
+            elif f == 1:  # Sub
+                filt = cur - left
+            elif f == 2:  # Up
+                filt = cur - prior
+            elif f == 3:  # Average
+                filt = cur - (left + prior) // 2
+            else:  # Paeth
+                p = left + prior - upleft
+                pa = np.abs(p - left)
+                pb = np.abs(p - prior)
+                pc = np.abs(p - upleft)
+                pred = np.where(
+                    (pa <= pb) & (pa <= pc),
+                    left,
+                    np.where(pb <= pc, prior, upleft),
+                )
+                filt = cur - pred
+            out.append(f)
+            out.extend((filt % 256).astype(np.uint8).tobytes())
+        return bytes(out)
+
+    def encode(doc_id: int, payload: bytes) -> bytes:
+        w, h = 2 + doc_id % 6, 2 + doc_id % 5
+        raw = np.resize(np.frombuffer(payload, np.uint8), w * h * 3)
+        idat = zlib.compress(filter_rows(raw, w, h))
+        mid = len(idat) // 2
+        parts = [
+            b"\x89PNG\r\n\x1a\n",
+            chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)),
+            chunk(b"tEXt", b"Comment\x00smrr synthetic"),
+        ]
+        if mid:  # spec-legal multi-IDAT: decoder must reassemble
+            parts += [chunk(b"IDAT", idat[:mid]), chunk(b"IDAT", idat[mid:])]
+        else:
+            parts.append(chunk(b"IDAT", idat))
+        parts.append(chunk(b"IEND", b""))
+        return b"".join(parts)
+
+    def parse(b: bytes) -> tuple[int, int, bytes]:
+        """(width, height, raw RGB bytes) or raise ValueError."""
+        if b[:8] != b"\x89PNG\r\n\x1a\n":
+            raise ValueError("not a PNG: bad signature")
+        pos, end = 8, len(b)
+        ihdr = None
+        idat = bytearray()
+        seen_iend = False
+        while pos < end:
+            if pos + 8 > end:
+                raise ValueError("truncated PNG: chunk header")
+            (length,) = struct.unpack(">I", b[pos : pos + 4])
+            ctype = b[pos + 4 : pos + 8]
+            data = b[pos + 8 : pos + 8 + length]
+            if len(data) != length or pos + 12 + length > end:
+                raise ValueError("truncated PNG: chunk data")
+            (crc,) = struct.unpack(">I", b[pos + 8 + length : pos + 12 + length])
+            if binascii.crc32(ctype + data) != crc:
+                raise ValueError(f"CRC mismatch in {ctype!r} chunk")
+            if ctype == b"IHDR":
+                ihdr = struct.unpack(">IIBBBBB", data)
+            elif ctype == b"IDAT":
+                idat.extend(data)
+            elif ctype == b"IEND":
+                seen_iend = True
+                break
+            # ancillary chunks (tEXt etc.) are skipped
+            pos += 12 + length
+        if ihdr is None or not seen_iend:
+            raise ValueError("PNG missing IHDR or IEND")
+        w, h, depth, ctype_i, comp, filt, inter = ihdr
+        if (depth, ctype_i, comp, filt, inter) != (8, 2, 0, 0, 0):
+            raise ValueError(
+                "unsupported PNG shape (want 8-bit RGB, deflate, "
+                "filter method 0, no interlace)"
             )
+        stride = w * 3
+        want = h * (1 + stride)
+        try:
+            # bounded inflate: a corrupt/hostile IDAT must not be able
+            # to expand past the declared raster size (zip-bomb guard —
+            # at fleet scale an unbounded decompress is an executor OOM
+            # vector); +1 detects overflow cheaply
+            d = zlib.decompressobj()
+            stream = d.decompress(bytes(idat), want + 1)
+        except zlib.error as exc:
+            # CRC-consistent but corrupt deflate data (coordinated
+            # corruption) must keep the ValueError contract
+            raise ValueError(f"corrupt PNG deflate stream: {exc}") from exc
+        if len(stream) != want or not d.eof:
+            raise ValueError("PNG raster size mismatch")
+        recon = np.zeros((h, stride), dtype=np.int64)
+        for r in range(h):
+            row = stream[r * (1 + stride) : (r + 1) * (1 + stride)]
+            f, filt_b = row[0], np.frombuffer(
+                row, dtype=np.uint8, offset=1
+            ).astype(np.int64)
+            prior = recon[r - 1] if r else np.zeros(stride, np.int64)
+            if f == 0:
+                recon[r] = filt_b
+            elif f == 2:  # Up — vectorized, prior row fully known
+                recon[r] = (filt_b + prior) % 256
+            elif f in (1, 3, 4):
+                # Sub/Average/Paeth reconstruct left-to-right: the
+                # left neighbor is the already-RECONSTRUCTED byte
+                cur = recon[r]
+                for i in range(stride):
+                    a = cur[i - 3] if i >= 3 else 0  # left
+                    bb = prior[i]  # up
+                    if f == 1:
+                        pred = a
+                    elif f == 3:
+                        pred = (a + bb) // 2
+                    else:
+                        c = prior[i - 3] if i >= 3 else 0  # up-left
+                        p = a + bb - c
+                        pa, pb_, pc = abs(p - a), abs(p - bb), abs(p - c)
+                        pred = (
+                            a
+                            if pa <= pb_ and pa <= pc
+                            else (bb if pb_ <= pc else c)
+                        )
+                    cur[i] = (filt_b[i] + pred) % 256
+            else:
+                raise ValueError(f"unknown PNG filter type {f}")
+        return w, h, recon.reshape(-1).astype(np.uint8).tobytes()
 
-        def filter_rows(raw: "np.ndarray", w: int, h: int) -> bytes:
-            """Filter each scanline with type row % 5. PNG filters read
-            the RAW bytes of the current and prior scanline (the decoder
-            reconstructs them), so encoding is fully vectorized."""
-            stride = w * 3
-            img = raw.reshape(h, stride).astype(np.int64)
-            out = bytearray()
-            for r in range(h):
-                cur = img[r]
-                prior = img[r - 1] if r else np.zeros(stride, np.int64)
-                left = np.concatenate(([0, 0, 0], cur[:-3]))
-                upleft = np.concatenate(([0, 0, 0], prior[:-3]))
-                f = r % 5
-                if f == 0:
-                    filt = cur
-                elif f == 1:  # Sub
-                    filt = cur - left
-                elif f == 2:  # Up
-                    filt = cur - prior
-                elif f == 3:  # Average
-                    filt = cur - (left + prior) // 2
-                else:  # Paeth
-                    p = left + prior - upleft
-                    pa = np.abs(p - left)
-                    pb = np.abs(p - prior)
-                    pc = np.abs(p - upleft)
-                    pred = np.where(
-                        (pa <= pb) & (pa <= pc),
-                        left,
-                        np.where(pb <= pc, prior, upleft),
-                    )
-                    filt = cur - pred
-                out.append(f)
-                out.extend((filt % 256).astype(np.uint8).tobytes())
-            return bytes(out)
+    def decode(b: bytes) -> list[tuple]:
+        w, h, raw = parse(b)
+        px = np.frombuffer(raw, dtype=np.uint8).reshape(h * w, 3)
+        means = px.sum(axis=0, dtype=np.int64) * 1000 // (w * h)
+        return [(w, h, *means.tolist())]
 
-        for pdf in batches:
-            blobs = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w = int(2 + doc_id % 6)
-                h = int(2 + doc_id % 5)
-                need = w * h * 3
-                t = np.frombuffer(bytes(payload), dtype=np.uint8)
-                raw = (
-                    np.resize(t, need)  # cycles the source bytes
-                    if t.size
-                    else np.zeros(need, dtype=np.uint8)
-                )
-                idat = zlib.compress(filter_rows(raw, w, h))
-                mid = len(idat) // 2
-                parts = [
-                    b"\x89PNG\r\n\x1a\n",
-                    chunk(
-                        b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-                    ),
-                    chunk(b"tEXt", b"Comment\x00smrr synthetic"),
-                ]
-                if mid:  # spec-legal multi-IDAT: decoder must reassemble
-                    parts += [
-                        chunk(b"IDAT", idat[:mid]),
-                        chunk(b"IDAT", idat[mid:]),
-                    ]
-                else:
-                    parts.append(chunk(b"IDAT", idat))
-                parts.append(chunk(b"IEND", b""))
-                blobs.append(b"".join(parts))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "png": blobs})
-
-    return encode
-
-
-def _png_decode_fn():
-    """Factory for the PNG decode kernel: signature check, chunk walk
-    with CRC32 verification, IHDR validation (8-bit RGB, deflate,
-    filter method 0, no interlace), multi-IDAT reassembly,
-    zlib.decompress, and per-scanline unfiltering for all five filter
-    types (RFC 2083 §6) — then the same per-channel integer means the
-    PPM path emits. Rejects bad signatures, CRC mismatches, truncated
-    streams, and unsupported IHDR shapes. Self-contained closure (see
-    _ppm_encode_fn for the pickling contract)."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import binascii
-        import struct
-        import zlib
-
-        import numpy as np
-
-        def parse(b: bytes) -> tuple[int, int, bytes]:
-            """(width, height, raw RGB bytes) or raise ValueError."""
-            if b[:8] != b"\x89PNG\r\n\x1a\n":
-                raise ValueError("not a PNG: bad signature")
-            pos, end = 8, len(b)
-            ihdr = None
-            idat = bytearray()
-            seen_iend = False
-            while pos < end:
-                if pos + 8 > end:
-                    raise ValueError("truncated PNG: chunk header")
-                (length,) = struct.unpack(">I", b[pos : pos + 4])
-                ctype = b[pos + 4 : pos + 8]
-                data = b[pos + 8 : pos + 8 + length]
-                if len(data) != length or pos + 12 + length > end:
-                    raise ValueError("truncated PNG: chunk data")
-                (crc,) = struct.unpack(
-                    ">I", b[pos + 8 + length : pos + 12 + length]
-                )
-                if binascii.crc32(ctype + data) != crc:
-                    raise ValueError(f"CRC mismatch in {ctype!r} chunk")
-                if ctype == b"IHDR":
-                    ihdr = struct.unpack(">IIBBBBB", data)
-                elif ctype == b"IDAT":
-                    idat.extend(data)
-                elif ctype == b"IEND":
-                    seen_iend = True
-                    break
-                # ancillary chunks (tEXt etc.) are skipped
-                pos += 12 + length
-            if ihdr is None or not seen_iend:
-                raise ValueError("PNG missing IHDR or IEND")
-            w, h, depth, ctype_i, comp, filt, inter = ihdr
-            if (depth, ctype_i, comp, filt, inter) != (8, 2, 0, 0, 0):
-                raise ValueError(
-                    "unsupported PNG shape (want 8-bit RGB, deflate, "
-                    "filter method 0, no interlace)"
-                )
-            stride = w * 3
-            want = h * (1 + stride)
-            try:
-                # bounded inflate: a corrupt/hostile IDAT must not be
-                # able to expand past the declared raster size (zip-bomb
-                # guard — at fleet scale an unbounded decompress is an
-                # executor OOM vector); +1 detects overflow cheaply
-                d = zlib.decompressobj()
-                stream = d.decompress(bytes(idat), want + 1)
-            except zlib.error as exc:
-                # CRC-consistent but corrupt deflate data (coordinated
-                # corruption) must keep the ValueError contract
-                raise ValueError(f"corrupt PNG deflate stream: {exc}") from exc
-            if len(stream) != want or not d.eof:
-                raise ValueError("PNG raster size mismatch")
-            recon = np.zeros((h, stride), dtype=np.int64)
-            for r in range(h):
-                row = stream[r * (1 + stride) : (r + 1) * (1 + stride)]
-                f, filt_b = row[0], np.frombuffer(
-                    row, dtype=np.uint8, offset=1
-                ).astype(np.int64)
-                prior = recon[r - 1] if r else np.zeros(stride, np.int64)
-                if f == 0:
-                    recon[r] = filt_b
-                elif f == 2:  # Up — vectorized, prior row fully known
-                    recon[r] = (filt_b + prior) % 256
-                elif f in (1, 3, 4):
-                    # Sub/Average/Paeth reconstruct left-to-right: the
-                    # left neighbor is the already-RECONSTRUCTED byte
-                    cur = recon[r]
-                    for i in range(stride):
-                        a = cur[i - 3] if i >= 3 else 0  # left
-                        bb = prior[i]  # up
-                        if f == 1:
-                            pred = a
-                        elif f == 3:
-                            pred = (a + bb) // 2
-                        else:
-                            c = prior[i - 3] if i >= 3 else 0  # up-left
-                            p = a + bb - c
-                            pa, pb_, pc = abs(p - a), abs(p - bb), abs(p - c)
-                            pred = (
-                                a
-                                if pa <= pb_ and pa <= pc
-                                else (bb if pb_ <= pc else c)
-                            )
-                        cur[i] = (filt_b[i] + pred) % 256
-                else:
-                    raise ValueError(f"unknown PNG filter type {f}")
-            return w, h, recon.reshape(-1).astype(np.uint8).tobytes()
-
-        for pdf in batches:
-            ids, ws, hs, means = [], [], [], []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["png"]):
-                w, h, raw = parse(bytes(blob))
-                px = np.frombuffer(raw, dtype=np.uint8).reshape(h * w, 3)
-                ids.append(doc_id)
-                ws.append(w)
-                hs.append(h)
-                means.append(px.sum(axis=0, dtype=np.int64) * 1000 // (w * h))
-            m = np.stack(means) if means else np.empty((0, 3), dtype=np.int64)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "width": pd.Series(ws, dtype="int64"),
-                    "height": pd.Series(hs, dtype="int64"),
-                    "mean_r_milli": m[:, 0],
-                    "mean_g_milli": m[:, 1],
-                    "mean_b_milli": m[:, 2],
-                }
-            )
-
-    return decode
+    return encode, decode
 
 
 def decode_image_png(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -607,12 +560,9 @@ def decode_image_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes: a hash match proves the filter/compress/chunk round trip is
     lossless.
     """
-    df = _with_payload(spark, sf_dir)
-    encoded = df.mapInPandas(_png_encode_fn(), "doc_id long, png binary")
-    return encoded.mapInPandas(
-        _png_decode_fn(),
-        "doc_id long, width long, height long, "
-        "mean_r_milli long, mean_g_milli long, mean_b_milli long",
+    encode, decode = _png_codec()
+    return per_doc(
+        spark, sf_dir, lambda d, p: decode(encode(d, p)), IMAGE_RGB_SCHEMA
     )
 
 
@@ -630,134 +580,95 @@ WAV_RATE_EXPR = "8000 * (1 + doc_id % 3)"  # 8/16/24 kHz
 WAV_FRAMES_EXPR = "40 + doc_id % 30"
 
 
-def _wav_encode_fn():
-    """Factory for the WAV encode kernel: a spec-conformant RIFF/WAVE
-    writer (stdlib struct only). 16-bit PCM; channels/rate/frames vary
-    per doc; samples map the doc's cycled UTF-8 bytes to int16 via
+def _wav_codec():
+    """RIFF/WAVE 16-bit PCM codec, stdlib struct only.
+
+    encode: a spec-conformant RIFF/WAVE writer; channels/rate/frames
+    vary per doc; samples map the doc's cycled UTF-8 bytes to int16 via
     (byte - 128) * 256 (zero bytes for empty docs). A LIST/INFO chunk
     with an ODD payload sits between fmt and data — RIFF pads chunks to
     word boundaries, and a decoder that forgets the pad byte desyncs
-    (the deliberate spec trap, like PNG's split IDAT). Self-contained
-    closure (see _ppm_encode_fn for the pickling contract)."""
+    (the deliberate spec trap, like PNG's split IDAT).
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    decode: RIFF walker (magic, WAVE form type, word-aligned chunk
+    traversal), fmt validation (PCM, 16-bit), data extraction, then
+    integer sample statistics. Rejects non-RIFF, truncated chunks,
+    non-PCM and non-16-bit input, and a data chunk that disagrees with
+    the fmt block alignment."""
+    import struct
 
-        import numpy as np
+    import numpy as np
 
-        def chunk(ctype: bytes, data: bytes) -> bytes:
-            pad = b"\x00" if len(data) % 2 else b""  # word-align
-            return ctype + struct.pack("<I", len(data)) + data + pad
+    def chunk(ctype: bytes, data: bytes) -> bytes:
+        pad = b"\x00" if len(data) % 2 else b""  # word-align
+        return ctype + struct.pack("<I", len(data)) + data + pad
 
-        for pdf in batches:
-            blobs = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                ch = int(1 + doc_id % 2)
-                rate = int(8000 * (1 + doc_id % 3))
-                frames = int(40 + doc_id % 30)
-                n_samp = frames * ch
-                t = np.frombuffer(bytes(payload), dtype=np.uint8)
-                b = (
-                    np.resize(t, n_samp)
-                    if t.size
-                    else np.zeros(n_samp, dtype=np.uint8)
-                )
-                samples = ((b.astype(np.int64) - 128) * 256).astype("<i2")
-                fmt = struct.pack(
-                    "<HHIIHH", 1, ch, rate, rate * ch * 2, ch * 2, 16
-                )  # PCM, block align = ch * 16-bit
-                body = (
-                    b"WAVE"
-                    + chunk(b"fmt ", fmt)
-                    + chunk(b"LIST", b"INFOIART\x05\x00\x00\x00smrr\x00")
-                    + chunk(b"data", samples.tobytes())
-                )
-                blobs.append(
-                    b"RIFF" + struct.pack("<I", len(body)) + body
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "wav": blobs})
+    def encode(doc_id: int, payload: bytes) -> bytes:
+        ch = 1 + doc_id % 2
+        rate = 8000 * (1 + doc_id % 3)
+        frames = 40 + doc_id % 30
+        b = np.resize(np.frombuffer(payload, np.uint8), frames * ch)
+        samples = ((b.astype(np.int64) - 128) * 256).astype("<i2")
+        fmt = struct.pack(
+            "<HHIIHH", 1, ch, rate, rate * ch * 2, ch * 2, 16
+        )  # PCM, block align = ch * 16-bit
+        body = (
+            b"WAVE"
+            + chunk(b"fmt ", fmt)
+            + chunk(b"LIST", b"INFOIART\x05\x00\x00\x00smrr\x00")
+            + chunk(b"data", samples.tobytes())
+        )
+        return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    return encode
+    def parse(b: bytes) -> tuple[int, int, "np.ndarray"]:
+        """(sample_rate, channels, int64 samples) or ValueError."""
+        if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+            raise ValueError("not a RIFF/WAVE payload")
+        (riff_size,) = struct.unpack("<I", b[4:8])
+        if riff_size + 8 > len(b):
+            raise ValueError("truncated WAV: RIFF size past end")
+        pos, end = 12, 8 + riff_size
+        fmt = data = None
+        while pos + 8 <= end:
+            ctype = b[pos : pos + 4]
+            (length,) = struct.unpack("<I", b[pos + 4 : pos + 8])
+            if pos + 8 + length > end:
+                raise ValueError("truncated WAV: chunk past RIFF end")
+            payload = b[pos + 8 : pos + 8 + length]
+            if len(payload) != length:
+                raise ValueError("truncated WAV: chunk data")
+            if ctype == b"fmt ":
+                fmt = payload
+            elif ctype == b"data":
+                data = payload
+            # word-aligned traversal: odd chunks carry a pad byte
+            pos += 8 + length + (length % 2)
+        if fmt is None or data is None:
+            raise ValueError("WAV missing fmt or data chunk")
+        if len(fmt) < 16:
+            raise ValueError("malformed fmt chunk")
+        audio_fmt, ch, rate, _, block, bits = struct.unpack("<HHIIHH", fmt[:16])
+        if audio_fmt != 1 or bits != 16:
+            raise ValueError("unsupported WAV (want 16-bit PCM)")
+        if ch == 0:
+            raise ValueError("WAV declares zero channels")
+        if block != ch * 2 or len(data) % block:
+            raise ValueError("data chunk disagrees with block align")
+        samples = np.frombuffer(data, dtype="<i2").astype(np.int64)
+        return rate, ch, samples
 
+    def decode(b: bytes) -> list[tuple]:
+        rate, ch, s = parse(b)
+        # mean can be NEGATIVE (int16 PCM): divide truncating toward
+        # zero to match DuckDB's `//` (-7 // 2 = -3 there, -4 in
+        # Python/numpy — the image paths never hit this because pixel
+        # sums are non-negative)
+        tot = int(s.sum()) * 1000
+        q = abs(tot) // s.size if s.size else 0
+        peak = int(s.max()) if s.size else 0
+        return [(rate, ch, len(s) // ch, -q if tot < 0 else q, peak)]
 
-def _wav_decode_fn():
-    """Factory for the WAV decode kernel: RIFF walker (magic, WAVE form
-    type, word-aligned chunk traversal), fmt validation (PCM, 16-bit),
-    data extraction, then integer sample statistics. Rejects non-RIFF,
-    truncated chunks, non-PCM and non-16-bit input, and a data chunk
-    that disagrees with the fmt block alignment. Self-contained closure
-    (see _ppm_encode_fn for the pickling contract)."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-
-        def parse(b: bytes) -> tuple[int, int, "np.ndarray"]:
-            """(sample_rate, channels, int64 samples) or ValueError."""
-            if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-                raise ValueError("not a RIFF/WAVE payload")
-            (riff_size,) = struct.unpack("<I", b[4:8])
-            if riff_size + 8 > len(b):
-                raise ValueError("truncated WAV: RIFF size past end")
-            pos, end = 12, 8 + riff_size
-            fmt = data = None
-            while pos + 8 <= end:
-                ctype = b[pos : pos + 4]
-                (length,) = struct.unpack("<I", b[pos + 4 : pos + 8])
-                if pos + 8 + length > end:
-                    raise ValueError("truncated WAV: chunk past RIFF end")
-                payload = b[pos + 8 : pos + 8 + length]
-                if len(payload) != length:
-                    raise ValueError("truncated WAV: chunk data")
-                if ctype == b"fmt ":
-                    fmt = payload
-                elif ctype == b"data":
-                    data = payload
-                # word-aligned traversal: odd chunks carry a pad byte
-                pos += 8 + length + (length % 2)
-            if fmt is None or data is None:
-                raise ValueError("WAV missing fmt or data chunk")
-            if len(fmt) < 16:
-                raise ValueError("malformed fmt chunk")
-            audio_fmt, ch, rate, _, block, bits = struct.unpack(
-                "<HHIIHH", fmt[:16]
-            )
-            if audio_fmt != 1 or bits != 16:
-                raise ValueError("unsupported WAV (want 16-bit PCM)")
-            if block != ch * 2 or len(data) % block:
-                raise ValueError("data chunk disagrees with block align")
-            samples = np.frombuffer(data, dtype="<i2").astype(np.int64)
-            return rate, ch, samples
-
-        for pdf in batches:
-            ids, rates, chs, frames, means, peaks = [], [], [], [], [], []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["wav"]):
-                rate, ch, s = parse(bytes(blob))
-                ids.append(doc_id)
-                rates.append(rate)
-                chs.append(ch)
-                frames.append(len(s) // ch)
-                # mean can be NEGATIVE (int16 PCM): divide truncating
-                # toward zero to match DuckDB's `//` (-7 // 2 = -3
-                # there, -4 in Python/numpy — the image paths never hit
-                # this because pixel sums are non-negative)
-                tot = int(s.sum()) * 1000
-                q = abs(tot) // s.size if s.size else 0
-                means.append(-q if tot < 0 else q)
-                peaks.append(int(s.max()) if s.size else 0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "sample_rate": pd.Series(rates, dtype="int64"),
-                    "channels": pd.Series(chs, dtype="int64"),
-                    "n_frames": pd.Series(frames, dtype="int64"),
-                    "mean_milli": pd.Series(means, dtype="int64"),
-                    "peak": pd.Series(peaks, dtype="int64"),
-                }
-            )
-
-    return decode
+    return encode, decode
 
 
 def decode_audio_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -769,10 +680,11 @@ def decode_audio_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the text bytes and the per-doc shape formulas — a hash match
     proves the PCM pack/parse round trip is lossless. Third real codec
     beside decode_image_ppm/decode_image_png."""
-    df = _with_payload(spark, sf_dir)
-    encoded = df.mapInPandas(_wav_encode_fn(), "doc_id long, wav binary")
-    return encoded.mapInPandas(
-        _wav_decode_fn(),
+    encode, decode = _wav_codec()
+    return per_doc(
+        spark,
+        sf_dir,
+        lambda d, p: decode(encode(d, p)),
         "doc_id long, sample_rate long, channels long, n_frames long, "
         "mean_milli long, peak long",
     )
@@ -812,38 +724,30 @@ def frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     This is the video/audio frame-sampling shape — seek offsets computed
     from media length, a decoder invoked per window — with the decoder
-    replaced by a digest (container has no codecs). The mapInPandas UDF
+    replaced by a digest (container has no codecs). The per-doc function
     does real byte slicing Python-side; one output row per frame.
     """
     import hashlib
 
-    df = _with_payload(spark, sf_dir)
+    n_frames, width = N_FRAMES, FRAME_BYTES
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            doc_ids, frame_idx, offsets, digests = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                n = len(b)
-                for i in range(N_FRAMES):
-                    # evenly spaced, clamped so the window stays in-bounds
-                    off = 0 if n <= FRAME_BYTES else (i * (n - FRAME_BYTES)) // (N_FRAMES - 1)
-                    frame = b[off : off + FRAME_BYTES]
-                    doc_ids.append(doc_id)
-                    frame_idx.append(i)
-                    offsets.append(off)
-                    digests.append(hashlib.sha256(frame).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(doc_ids, dtype="int64"),
-                    "frame_idx": pd.Series(frame_idx, dtype="int64"),
-                    "offset": pd.Series(offsets, dtype="int64"),
-                    "frame_sha256": digests,
-                }
-            )
+    def frames(doc_id: int, b: bytes) -> list[tuple]:
+        n = len(b)
+        # evenly spaced, clamped so the window stays in-bounds
+        offs = [
+            0 if n <= width else (i * (n - width)) // (n_frames - 1)
+            for i in range(n_frames)
+        ]
+        return [
+            (i, off, hashlib.sha256(b[off : off + width]).hexdigest())
+            for i, off in enumerate(offs)
+        ]
 
-    return df.mapInPandas(
-        sample, "doc_id long, frame_idx long, offset long, frame_sha256 string"
+    return per_doc(
+        spark,
+        sf_dir,
+        frames,
+        "doc_id long, frame_idx long, offset long, frame_sha256 string",
     )
 
 

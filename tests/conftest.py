@@ -39,3 +39,19 @@ def _index_dirs(tmp_path_factory):
         mp.setenv("SMRR_IVF_INDEX_DIR", str(base / "ivf"))
         mp.setenv("SMRR_BPE_INDEX_DIR", str(base / "bpe"))
         yield
+
+
+@pytest.fixture
+def codec_kernel(monkeypatch):
+    """Call a per-doc query builder without Spark: returns the
+    ``(kernel, schema)`` pair that ``multimodal.per_doc`` hands to
+    mapInPandas, so tests drive the exact production batch function
+    over hand-made (doc_id, payload) frames."""
+    from simple_map_reduce_ruuner_spark.operators import multimodal
+
+    class _Capture:
+        def mapInPandas(self, kernel, schema):
+            return kernel, schema
+
+    monkeypatch.setattr(multimodal, "_with_payload", lambda spark, sf_dir: _Capture())
+    return lambda builder: builder(None, None)

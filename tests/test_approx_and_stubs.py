@@ -18,9 +18,9 @@ def test_approx_percentiles_rank_error_bound(spark, sf_dir):
     values can differ by a full inter-element gap even when the sketch is
     perfect). A value with ties occupies the whole rank interval
     [count(<v), count(<=v)]/n, so the error is the distance from q to
-    that interval (tools/approx_bounds.py uses the same convention —
-    the earlier side="right"-only form overstated error by the tie mass
-    at the replicated 10x scale). Assert distance ≤ 1/accuracy + 2/n."""
+    that interval (APPROX_BOUNDS.json was measured with the same
+    convention — the earlier side="right"-only form overstated error by
+    the tie mass at the replicated 10x scale). Assert distance ≤ 1/accuracy + 2/n."""
     import numpy as np
 
     from simple_map_reduce_ruuner_spark.sources.tables import load_table

@@ -1,5 +1,5 @@
-"""RIFF/AVI container kernels (codecs.decode_video_avi), driven
-directly through the production factories — no Spark session needed.
+"""RIFF/AVI container codec (codecs.decode_video_avi), driven directly
+through the production per-row functions — no Spark session needed.
 
 The decoder must parse the header LISTs and then SEEK to the sampled
 frame via the idx1 index, undoing the three DIB transforms (bottom-up
@@ -10,25 +10,27 @@ runs in the driver gate.
 from __future__ import annotations
 
 import struct
+from collections import namedtuple
 
 import numpy as np
 import pandas as pd
 import pytest
 
 from simple_map_reduce_ruuner_spark.operators.codecs import (
-    _avi_decode_fn,
-    _avi_encode_fn,
+    _avi_codec,
+    decode_video_avi,
+)
+
+encode, decode = _avi_codec()
+Row = namedtuple(
+    "Row",
+    "width height n_frames fps frame_idx mean_r_milli mean_g_milli mean_b_milli",
 )
 
 
-def _decode(blobs: list[bytes], ids: list[int] | None = None) -> pd.DataFrame:
-    pdf = pd.DataFrame({"doc_id": ids or list(range(len(blobs))), "avi": blobs})
-    return pd.concat(list(_avi_decode_fn()([pdf])), ignore_index=True)
-
-
-def _encode(payloads: list[bytes], ids: list[int]) -> pd.DataFrame:
-    pdf = pd.DataFrame({"doc_id": ids, "payload": payloads})
-    return pd.concat(list(_avi_encode_fn()([pdf])), ignore_index=True)
+def _row(blob: bytes) -> Row:
+    [row] = decode(blob)
+    return Row(*row)
 
 
 def _expected(payload: bytes, doc_id: int):
@@ -48,11 +50,9 @@ def test_roundtrip_undoes_all_dib_transforms():
     so flipped rows / swapped channels / kept padding would all fail."""
     ids = [0, 1, 2, 3]
     payloads = [b"hello world", b"", bytes(range(200)), b"\xff\x01\x02 pad"]
-    enc = _encode(payloads, ids)
-    out = _decode(list(enc["avi"]), list(enc["doc_id"]))
     for d, p in zip(ids, payloads):
         w, h, nf, fps, fi, means = _expected(p, d)
-        row = out[out.doc_id == d].iloc[0]
+        row = _row(encode(d, p))
         assert (row.width, row.height, row.n_frames, row.fps, row.frame_idx) == (
             w, h, nf, fps, fi,
         )
@@ -68,14 +68,13 @@ def test_channel_order_is_really_undone():
     # w=2,h=2,nf=3, sampled frame = 1). Build a payload whose frame 1
     # is (255,0,0) everywhere: bytes 12*1..12*2 of the cycle.
     payload = bytes([0, 0, 0] * 4 + [255, 0, 0] * 4 + [9, 9, 9] * 4)
-    enc = _encode([payload], [0])
-    out = _decode(list(enc["avi"]), [0])
-    assert out.mean_r_milli[0] == 255000
-    assert out.mean_g_milli[0] == 0
-    assert out.mean_b_milli[0] == 0
+    blob = encode(0, payload)
+    out = _row(blob)
+    assert out.mean_r_milli == 255000
+    assert out.mean_g_milli == 0
+    assert out.mean_b_milli == 0
     # and the stored bytes really are BGR bottom-up: the raw movi chunk
     # for frame 1 must START with blue==0,green==0,red==255
-    blob = bytes(enc["avi"][0])
     movi = blob.find(b"movi")
     first = blob.find(b"00db", movi)
     second = blob.find(b"00db", first + 4)
@@ -86,8 +85,7 @@ def test_channel_order_is_really_undone():
 def test_absolute_idx1_offsets_supported():
     """Both idx1 conventions exist in the wild; rewrite the index to
     absolute file offsets and the decoder must still land."""
-    enc = _encode([b"some video payload"], [3])
-    blob = bytearray(enc["avi"][0])
+    blob = bytearray(encode(3, b"some video payload"))
     movi_tag = bytes(blob).find(b"movi")
     idx_at = bytes(blob).find(b"idx1")
     (idx_len,) = struct.unpack("<I", blob[idx_at + 4 : idx_at + 8])
@@ -95,31 +93,30 @@ def test_absolute_idx1_offsets_supported():
         at = idx_at + 8 + 16 * e + 8
         (off,) = struct.unpack("<I", blob[at : at + 4])
         blob[at : at + 4] = struct.pack("<I", off + movi_tag)
-    out = _decode([bytes(blob)], [3])
+    out = _row(bytes(blob))
     w, h, nf, fps, fi, means = _expected(b"some video payload", 3)
-    assert (out.width[0], out.n_frames[0], out.frame_idx[0]) == (w, nf, fi)
-    assert out.mean_r_milli[0] == means[0]
+    assert (out.width, out.n_frames, out.frame_idx) == (w, nf, fi)
+    assert out.mean_r_milli == means[0]
 
 
 def test_parser_rejects_invalid_input():
-    enc = _encode([b"abc"], [1])
-    good = bytes(enc["avi"][0])
+    good = encode(1, b"abc")
     with pytest.raises(ValueError, match="not a RIFF/AVI"):
-        _decode([good[:8] + b"WAVE" + good[12:]])
+        _row(good[:8] + b"WAVE" + good[12:])
     with pytest.raises(ValueError, match="truncated AVI"):
-        _decode([good[:-20]])
+        _row(good[:-20])
     # 8-bit DIB (biBitCount byte inside strf)
     strf_at = good.find(b"strf")
     bad = bytearray(good)
     bad[strf_at + 8 + 14] = 8
     with pytest.raises(ValueError, match="want 24-bit BI_RGB"):
-        _decode([bytes(bad)])
+        _row(bytes(bad))
     # top-down DIB (negative biHeight)
     bad = bytearray(good)
     (bih,) = struct.unpack("<i", good[strf_at + 8 + 8 : strf_at + 8 + 12])
     bad[strf_at + 8 + 8 : strf_at + 8 + 12] = struct.pack("<i", -bih)
     with pytest.raises(ValueError, match="top-down DIB"):
-        _decode([bytes(bad)])
+        _row(bytes(bad))
     # idx1 entry count disagreeing with avih frame count
     idx_at = good.find(b"idx1")
     bad = bytearray(good)
@@ -129,7 +126,7 @@ def test_parser_rejects_invalid_input():
     (nf,) = struct.unpack("<I", good[avih_at + 8 + 16 : avih_at + 8 + 20])
     bad[avih_at + 8 + 16 : avih_at + 8 + 20] = struct.pack("<I", nf - 1)
     with pytest.raises(ValueError, match="idx1 length disagrees"):
-        _decode([bytes(bad)])
+        _row(bytes(bad))
     # index offset pointing into garbage
     bad = bytearray(good)
     target = (nf // 2) * 16
@@ -137,14 +134,13 @@ def test_parser_rejects_invalid_input():
         "<I", 2
     )
     with pytest.raises(ValueError, match="does not land on a chunk"):
-        _decode([bytes(bad)])
+        _row(bytes(bad))
 
 
 def test_short_header_chunks_raise_value_error():
     """avih/strh/strf shorter than their fixed layouts must raise
     ValueError, not struct.error (review-found)."""
-    enc = _encode([b"abc"], [1])
-    good = bytes(enc["avi"][0])
+    good = encode(1, b"abc")
     avih_at = good.find(b"avih")
     bad = bytearray(good)
     # shrink avih to 8 bytes and turn its tail into a JUNK chunk so the
@@ -152,7 +148,7 @@ def test_short_header_chunks_raise_value_error():
     bad[avih_at + 4 : avih_at + 8] = struct.pack("<I", 8)
     bad[avih_at + 16 : avih_at + 24] = b"JUNK" + struct.pack("<I", 40)
     with pytest.raises(ValueError, match="malformed AVI header"):
-        _decode([bytes(bad)])
+        _row(bytes(bad))
 
 
 def test_junk_chunk_word_alignment():
@@ -160,17 +156,17 @@ def test_junk_chunk_word_alignment():
     movi; if the walker forgot RIFF pad bytes it would desync and miss
     movi entirely — so a successful parse IS the assertion. Verify the
     chunk really is odd-length."""
-    enc = _encode([b"zz"], [2])
-    blob = bytes(enc["avi"][0])
+    blob = encode(2, b"zz")
     at = blob.find(b"JUNK")
     (ln,) = struct.unpack("<I", blob[at + 4 : at + 8])
     assert ln % 2 == 1
-    out = _decode([blob], [2])
-    assert out.n_frames[0] == 5
+    out = _row(blob)
+    assert out.n_frames == 5
 
 
-def test_empty_batch_yields_typed_empty_frame():
-    out = _decode([])
+def test_empty_batch_yields_typed_empty_frame(codec_kernel):
+    kernel, _ = codec_kernel(decode_video_avi)
+    (out,) = kernel([pd.DataFrame({"doc_id": [], "payload": []})])
     assert len(out) == 0
     assert list(out.columns) == [
         "doc_id",

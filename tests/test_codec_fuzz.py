@@ -1,8 +1,9 @@
-"""Mutation fuzzing over all seven real codecs: flipping any single
-byte (or truncating at any point) of a valid file must either decode
-cleanly (flips in don't-care or data regions legitimately change
-values) or raise ValueError — never IndexError, KeyError, struct.error,
-zlib.error, or a numpy shape error. This is the malformed-input
+"""Mutation fuzzing over the per-row decoders of all thirteen real
+codecs: flipping any single byte (or truncating at any point) of a
+valid file must either decode cleanly (flips in don't-care or data
+regions legitimately change values) or raise ValueError — never
+IndexError, KeyError, struct.error, zlib.error, or a numpy shape
+error. This is the malformed-input
 contract the unit tests pin pointwise, enforced here across the whole
 byte surface. Seeded and deterministic.
 """
@@ -10,75 +11,55 @@ byte surface. Seeded and deterministic.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from simple_map_reduce_ruuner_spark.operators.codecs import (
-    _avi_decode_fn,
-    _avi_encode_fn,
-    _gif_decode_fn,
-    _gif_encode_fn,
-    _jpeg_decode_fn,
-    _jpeg_encode_fn,
-    _mulaw_decode_fn,
-    _mulaw_encode_fn,
-    _tar_decode_fn,
-    _tar_encode_fn,
-    _tga_decode_fn,
-    _tga_encode_fn,
-    _gzip_decode_fn,
-    _gzip_encode_fn,
-    _sqlite_decode_fn,
-    _sqlite_encode_fn,
-    _xz_decode_fn,
-    _xz_encode_fn,
-    _zip_decode_fn,
-    _zip_encode_fn,
+    _avi_codec,
+    _gif_codec,
+    _gzip_codec,
+    _jpeg_codec,
+    _mulaw_codec,
+    _sqlite_codec,
+    _tar_codec,
+    _tga_codec,
+    _xz_codec,
+    _zip_codec,
 )
 from simple_map_reduce_ruuner_spark.operators.multimodal import (
-    _png_decode_fn,
-    _png_encode_fn,
-    _ppm_decode_fn,
-    _ppm_encode_fn,
-    _wav_decode_fn,
-    _wav_encode_fn,
+    _png_codec,
+    _ppm_codec,
+    _wav_codec,
 )
 
 CODECS = {
-    "ppm": (_ppm_encode_fn, _ppm_decode_fn, "ppm"),
-    "png": (_png_encode_fn, _png_decode_fn, "png"),
-    "wav": (_wav_encode_fn, _wav_decode_fn, "wav"),
-    "jpeg": (_jpeg_encode_fn, _jpeg_decode_fn, "jpg"),
-    "mulaw": (_mulaw_encode_fn, _mulaw_decode_fn, "wav"),
-    "avi": (_avi_encode_fn, _avi_decode_fn, "avi"),
-    "gif": (_gif_encode_fn, _gif_decode_fn, "gif"),
-    "tga": (_tga_encode_fn, _tga_decode_fn, "tga"),
-    "tar": (_tar_encode_fn, _tar_decode_fn, "tar"),
-    "zip": (_zip_encode_fn, _zip_decode_fn, "zip"),
-    "gzip": (_gzip_encode_fn, _gzip_decode_fn, "gz"),
-    "xz": (_xz_encode_fn, _xz_decode_fn, "xz"),
-    "sqlite": (_sqlite_encode_fn, _sqlite_decode_fn, "db"),
+    "ppm": _ppm_codec,
+    "png": _png_codec,
+    "wav": _wav_codec,
+    "jpeg": _jpeg_codec,
+    "mulaw": _mulaw_codec,
+    "avi": _avi_codec,
+    "gif": _gif_codec,
+    "tga": _tga_codec,
+    "tar": _tar_codec,
+    "zip": _zip_codec,
+    "gzip": _gzip_codec,
+    "xz": _xz_codec,
+    "sqlite": _sqlite_codec,
 }
 
 N_FLIPS = 400
 N_TRUNCS = 120
 
 
-def _valid_blob(encode_fn, doc_id: int = 7) -> bytes:
-    pdf = pd.DataFrame({"doc_id": [doc_id], "payload": [b"fuzz me gently 123"]})
-    enc = pd.concat(list(encode_fn()([pdf])), ignore_index=True)
-    return bytes(enc.iloc[0, 1])
-
-
-def _decode_one(decode_fn, blob_col: str, blob: bytes):
-    pdf = pd.DataFrame({"doc_id": [7], blob_col: [blob]})
-    return pd.concat(list(decode_fn()([pdf])), ignore_index=True)
+def _valid_blob(codec) -> bytes:
+    encode, _ = codec()
+    return encode(7, b"fuzz me gently 123")
 
 
 @pytest.mark.parametrize("name", sorted(CODECS))
 def test_single_byte_flips_never_escape_value_error(name):
-    encode_fn, decode_fn, col = CODECS[name]
-    blob = _valid_blob(encode_fn)
+    _, decode = CODECS[name]()
+    blob = _valid_blob(CODECS[name])
     rng = np.random.RandomState(42)
     for _ in range(N_FLIPS):
         pos = int(rng.randint(0, len(blob)))
@@ -86,7 +67,7 @@ def test_single_byte_flips_never_escape_value_error(name):
         mutated = bytearray(blob)
         mutated[pos] ^= val
         try:
-            _decode_one(decode_fn, col, bytes(mutated))
+            decode(bytes(mutated))
         except ValueError:
             pass  # the documented rejection contract
         except Exception as exc:  # noqa: BLE001 — the assertion itself
@@ -104,7 +85,7 @@ def test_png_crc_consistent_deflate_corruption():
     import binascii
     import struct
 
-    blob = _valid_blob(_png_encode_fn)
+    blob = _valid_blob(_png_codec)
     pos = blob.find(b"IDAT")
     (length,) = struct.unpack(">I", blob[pos - 4 : pos])
     data = bytearray(blob[pos + 4 : pos + 4 + length])
@@ -117,7 +98,7 @@ def test_png_crc_consistent_deflate_corruption():
         + blob[pos + 4 + length + 4 :]
     )
     with pytest.raises(ValueError, match="corrupt PNG deflate"):
-        _decode_one(_png_decode_fn, "png", mutated)
+        _png_codec()[1](mutated)
 
 
 def test_decompression_bombs_rejected_before_allocation():
@@ -129,24 +110,24 @@ def test_decompression_bombs_rejected_before_allocation():
     import zlib
 
     # JPEG: rewrite SOF0 dims to 65528 x 65528 (multiples of 8)
-    blob = _valid_blob(_jpeg_encode_fn)
+    blob = _valid_blob(_jpeg_codec)
     at = blob.find(b"\xff\xc0") + 5
     bad = blob[:at] + struct.pack(">HH", 65528, 65528) + blob[at + 4 :]
     with pytest.raises(ValueError, match="raster too large"):
-        _decode_one(_jpeg_decode_fn, "jpg", bad)
+        _jpeg_codec()[1](bad)
 
     # GIF: rewrite LSD + descriptor dims to 65535 x 65535
-    blob = _valid_blob(_gif_encode_fn)
+    blob = _valid_blob(_gif_codec)
     big = struct.pack("<HH", 65535, 65535)
     desc = blob.find(b"\x2c", 6 + 7 + 768)
     bad = (
         blob[:6] + big + blob[10 : desc + 5] + big + blob[desc + 9 :]
     )
     with pytest.raises(ValueError, match="raster too large"):
-        _decode_one(_gif_decode_fn, "gif", bad)
+        _gif_codec()[1](bad)
 
     # PNG: CRC-consistent IDAT that inflates far past the raster size
-    blob = _valid_blob(_png_encode_fn)
+    blob = _valid_blob(_png_codec)
     import binascii
 
     bomb = zlib.compress(bytes(1 << 22))  # 4 MiB of zeros, ~4 KB packed
@@ -166,18 +147,32 @@ def test_decompression_bombs_rejected_before_allocation():
         + blob[end_second:]
     )
     with pytest.raises(ValueError, match="raster size mismatch"):
-        _decode_one(_png_decode_fn, "png", bad)
+        _png_codec()[1](bad)
+
+
+@pytest.mark.parametrize("name", ["wav", "mulaw"])
+def test_zero_channel_fmt_rejected(name):
+    """A fmt chunk declaring 0 channels with block align 0 passes the
+    block-align equality, so the parser must reject it before dividing
+    by the block size (a ZeroDivisionError would escape the contract)."""
+    _, decode = CODECS[name]()
+    blob = bytearray(_valid_blob(CODECS[name]))
+    fmt = blob.find(b"fmt ") + 8  # start of the fmt chunk's payload
+    blob[fmt + 2 : fmt + 4] = bytes(2)  # channels
+    blob[fmt + 12 : fmt + 14] = bytes(2)  # block align
+    with pytest.raises(ValueError, match="zero channels"):
+        decode(bytes(blob))
 
 
 @pytest.mark.parametrize("name", sorted(CODECS))
 def test_truncations_never_escape_value_error(name):
-    encode_fn, decode_fn, col = CODECS[name]
-    blob = _valid_blob(encode_fn)
+    _, decode = CODECS[name]()
+    blob = _valid_blob(CODECS[name])
     rng = np.random.RandomState(1234)
     cuts = sorted(set(int(c) for c in rng.randint(0, len(blob), N_TRUNCS)))
     for cut in cuts:
         try:
-            _decode_one(decode_fn, col, blob[:cut])
+            decode(blob[:cut])
         except ValueError:
             pass
         except Exception as exc:  # noqa: BLE001

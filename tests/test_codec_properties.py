@@ -10,43 +10,38 @@ stress byte stuffing)."""
 
 from __future__ import annotations
 
+from collections import namedtuple
+
 import numpy as np
-import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from simple_map_reduce_ruuner_spark.operators.codecs import (
-    _avi_decode_fn,
-    _avi_encode_fn,
-    _gif_decode_fn,
-    _gif_encode_fn,
-    _jpeg_decode_fn,
-    _jpeg_encode_fn,
-    _mulaw_decode_fn,
-    _mulaw_encode_fn,
-    _tga_decode_fn,
-    _tga_encode_fn,
+    _avi_codec,
+    _gif_codec,
+    _jpeg_codec,
+    _mulaw_codec,
+    _tga_codec,
 )
 from simple_map_reduce_ruuner_spark.operators.multimodal import (
-    _png_decode_fn,
-    _png_encode_fn,
-    _ppm_decode_fn,
-    _ppm_encode_fn,
-    _wav_decode_fn,
-    _wav_encode_fn,
+    _png_codec,
+    _ppm_codec,
+    _wav_codec,
 )
 
 payloads = st.binary(min_size=0, max_size=300)
 doc_ids = st.integers(min_value=0, max_value=10**9)
 
 
-def _roundtrip(encode_fn, decode_fn, blob_col, doc_id, payload):
-    pdf = pd.DataFrame({"doc_id": [doc_id], "payload": [payload]})
-    enc = pd.concat(list(encode_fn()([pdf])), ignore_index=True)
-    return pd.concat(
-        list(decode_fn()([enc.rename(columns={enc.columns[1]: blob_col})])),
-        ignore_index=True,
-    ).iloc[0]
+MEANS = "mean_r_milli mean_g_milli mean_b_milli"
+RGB = "width height " + MEANS
+
+
+def _roundtrip(codec, fields: str, doc_id, payload):
+    """decode(encode(doc_id, payload)) — one row, named by `fields`."""
+    encode, decode = codec()
+    [row] = decode(encode(doc_id, payload))
+    return namedtuple("Row", fields)(*row)
 
 
 def _cycled(payload: bytes, n: int) -> np.ndarray:
@@ -58,7 +53,7 @@ def _cycled(payload: bytes, n: int) -> np.ndarray:
 @given(doc_id=doc_ids, payload=payloads)
 def test_ppm_roundtrip_property(doc_id, payload):
     w, h = 4 + doc_id % 5, 3 + doc_id % 7
-    row = _roundtrip(_ppm_encode_fn, _ppm_decode_fn, "ppm", doc_id, payload)
+    row = _roundtrip(_ppm_codec, RGB, doc_id, payload)
     px = _cycled(payload, w * h * 3).reshape(w * h, 3)
     want = px.sum(axis=0, dtype=np.int64) * 1000 // (w * h)
     assert (row.width, row.height) == (w, h)
@@ -69,7 +64,7 @@ def test_ppm_roundtrip_property(doc_id, payload):
 @given(doc_id=doc_ids, payload=payloads)
 def test_png_roundtrip_property(doc_id, payload):
     w, h = 2 + doc_id % 6, 2 + doc_id % 5
-    row = _roundtrip(_png_encode_fn, _png_decode_fn, "png", doc_id, payload)
+    row = _roundtrip(_png_codec, RGB, doc_id, payload)
     px = _cycled(payload, w * h * 3).reshape(w * h, 3)
     want = px.sum(axis=0, dtype=np.int64) * 1000 // (w * h)
     assert (row.width, row.height) == (w, h)
@@ -82,7 +77,7 @@ def test_wav_roundtrip_property(doc_id, payload):
     ch = 1 + doc_id % 2
     rate = 8000 * (1 + doc_id % 3)
     frames = 40 + doc_id % 30
-    row = _roundtrip(_wav_encode_fn, _wav_decode_fn, "wav", doc_id, payload)
+    row = _roundtrip(_wav_codec, "sample_rate channels n_frames mean_milli peak", doc_id, payload)
     s = (_cycled(payload, frames * ch).astype(np.int64) - 128) * 256
     tot = int(s.sum()) * 1000
     mean = -(abs(tot) // s.size) if tot < 0 else tot // s.size
@@ -98,7 +93,7 @@ def test_jpeg_roundtrip_property(doc_id, payload):
     block values — for EVERY payload, including 0xFF runs that force
     maximal byte stuffing and values crossing each DC category."""
     bw, bh = 1 + doc_id % 4, 1 + doc_id % 3
-    row = _roundtrip(_jpeg_encode_fn, _jpeg_decode_fn, "jpg", doc_id, payload)
+    row = _roundtrip(_jpeg_codec, "width height mean_gray_milli max_gray min_gray", doc_id, payload)
     vals = _cycled(payload, bw * bh).astype(np.int64)
     assert (row.width, row.height) == (8 * bw, 8 * bh)
     assert row.mean_gray_milli == int(vals.sum()) * 1000 // (bw * bh)
@@ -115,7 +110,7 @@ def _mulaw_expand(codes: np.ndarray) -> np.ndarray:
 @given(doc_id=doc_ids, payload=payloads)
 def test_mulaw_roundtrip_property(doc_id, payload):
     ch, frames = 1 + doc_id % 2, 50 + doc_id % 40
-    row = _roundtrip(_mulaw_encode_fn, _mulaw_decode_fn, "wav", doc_id, payload)
+    row = _roundtrip(_mulaw_codec, "sample_rate channels n_frames mean_milli peak trough", doc_id, payload)
     s = _mulaw_expand(_cycled(payload, frames * ch))
     tot = int(s.sum()) * 1000
     mean = -(abs(tot) // s.size) if tot < 0 else tot // s.size
@@ -132,7 +127,7 @@ def test_avi_roundtrip_property(doc_id, payload):
     RGB layout for every stride-padding case (w = 2..5)."""
     w, h = 2 + doc_id % 4, 2 + doc_id % 3
     nf, fps = 3 + doc_id % 4, 10 + doc_id % 6
-    row = _roundtrip(_avi_encode_fn, _avi_decode_fn, "avi", doc_id, payload)
+    row = _roundtrip(_avi_codec, "width height n_frames fps frame_idx " + MEANS, doc_id, payload)
     frame = (
         _cycled(payload, nf * h * w * 3)
         .reshape(nf, h, w, 3)[nf // 2]
@@ -154,7 +149,7 @@ def test_gif_roundtrip_property(doc_id, payload):
     growth), and cycled repeats (deep dictionary chains) alike — and
     the channels must come from the palette, not the indexes."""
     w, h = 16 + doc_id % 17, 12 + doc_id % 13
-    row = _roundtrip(_gif_encode_fn, _gif_decode_fn, "gif", doc_id, payload)
+    row = _roundtrip(_gif_codec, "width height mean_idx_milli " + MEANS, doc_id, payload)
     idx = _cycled(payload, w * h).astype(np.int64)
     assert (row.width, row.height) == (w, h)
     assert row.mean_idx_milli == int(idx.sum()) * 1000 // (w * h)
@@ -169,7 +164,7 @@ def test_tga_roundtrip_property(doc_id, payload):
     (RLE packets), near-random bytes (raw packets), and the mixed
     boundaries between them — through the bottom-up BGR storage."""
     w, h = 3 + doc_id % 6, 3 + doc_id % 5
-    row = _roundtrip(_tga_encode_fn, _tga_decode_fn, "tga", doc_id, payload)
+    row = _roundtrip(_tga_codec, RGB, doc_id, payload)
     px = _cycled(payload, w * h * 3).reshape(w * h, 3)
     want = px.sum(axis=0, dtype=np.int64) * 1000 // (w * h)
     assert (row.width, row.height) == (w, h)

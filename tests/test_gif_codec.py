@@ -1,5 +1,5 @@
-"""GIF89a codec kernels (codecs.decode_image_gif), driven directly
-through the production factories — no Spark session needed.
+"""GIF89a codec (codecs.decode_image_gif), driven directly through the
+production per-row functions — no Spark session needed.
 
 The decoder must be a REAL GIF parser with a full variable-width LZW
 decoder (KwKwK, late code widening, mid-stream CLEAR resets) and must
@@ -11,6 +11,7 @@ gate.
 from __future__ import annotations
 
 import struct
+from collections import namedtuple
 
 import numpy as np
 import pandas as pd
@@ -18,19 +19,19 @@ import pytest
 
 from simple_map_reduce_ruuner_spark.operators.codecs import (
     GIF_CLEAR_EVERY,
-    _gif_decode_fn,
-    _gif_encode_fn,
+    _gif_codec,
+    decode_image_gif,
+)
+
+encode, decode = _gif_codec()
+Row = namedtuple(
+    "Row", "width height mean_idx_milli mean_r_milli mean_g_milli mean_b_milli"
 )
 
 
-def _decode(blobs: list[bytes], ids: list[int] | None = None) -> pd.DataFrame:
-    pdf = pd.DataFrame({"doc_id": ids or list(range(len(blobs))), "gif": blobs})
-    return pd.concat(list(_gif_decode_fn()([pdf])), ignore_index=True)
-
-
-def _encode(payloads: list[bytes], ids: list[int]) -> pd.DataFrame:
-    pdf = pd.DataFrame({"doc_id": ids, "payload": payloads})
-    return pd.concat(list(_gif_encode_fn()([pdf])), ignore_index=True)
+def _row(blob: bytes) -> Row:
+    [row] = decode(blob)
+    return Row(*row)
 
 
 def _expected(payload: bytes, doc_id: int):
@@ -45,11 +46,9 @@ def _expected(payload: bytes, doc_id: int):
 def test_roundtrip_and_palette_lookup():
     ids = [0, 1, 7]
     payloads = [b"hello world", b"", bytes(range(256))]
-    enc = _encode(payloads, ids)
-    out = _decode(list(enc["gif"]), list(enc["doc_id"]))
     for d, p in zip(ids, payloads):
         w, h, idx = _expected(p, d)
-        row = out[out.doc_id == d].iloc[0]
+        row = _row(encode(d, p))
         assert (row.width, row.height) == (w, h)
         assert row.mean_idx_milli == int(idx.sum()) * 1000 // (w * h)
         # palette-mapped channels: non-identity formulas
@@ -68,11 +67,10 @@ def test_roundtrip_and_palette_lookup():
 def test_kwkwk_runs_decode_exactly():
     """Constant pixels produce the KwKwK pattern (code == next_code)
     immediately and repeatedly."""
-    enc = _encode([b"a" * 10], [0])  # every pixel = 97
-    out = _decode(list(enc["gif"]), [0])
+    out = _row(encode(0, b"a" * 10))  # every pixel = 97
     w, h, idx = _expected(b"a" * 10, 0)
-    assert out.mean_idx_milli[0] == 97_000
-    assert out.mean_r_milli[0] == ((97 * 7 + 13) % 256) * 1000
+    assert out.mean_idx_milli == 97_000
+    assert out.mean_r_milli == ((97 * 7 + 13) % 256) * 1000
 
 
 def test_code_width_growth_and_midstream_clear():
@@ -82,22 +80,20 @@ def test_code_width_growth_and_midstream_clear():
     rng = np.random.RandomState(3)
     payload = bytes(rng.randint(0, 256, 768, dtype=np.int64).astype(np.uint8))
     # doc 220: 16+220%17=32, 12+220%13=24 -> 768 px
-    enc = _encode([payload], [220])
-    out = _decode(list(enc["gif"]), [220])
+    out = _row(encode(220, payload))
     w, h, idx = _expected(payload, 220)
-    assert (w * h, out.width[0], out.height[0]) == (768, 32, 24)
-    assert out.mean_idx_milli[0] == int(idx.sum()) * 1000 // 768
+    assert (w * h, out.width, out.height) == (768, 32, 24)
+    assert out.mean_idx_milli == int(idx.sum()) * 1000 // 768
     # sanity: incompressible input must actually emit >CLEAR_EVERY codes
     assert 768 > GIF_CLEAR_EVERY
 
 
 def test_parser_rejects_invalid_input():
-    enc = _encode([b"abc"], [2])
-    good = bytes(enc["gif"][0])
+    good = encode(2, b"abc")
     with pytest.raises(ValueError, match="bad signature"):
-        _decode([b"JIF89a" + good[6:]])
+        _row(b"JIF89a" + good[6:])
     with pytest.raises(ValueError, match="truncated GIF"):
-        _decode([good[:40]])
+        _row(good[:40])
     # the image descriptor sits after header(6) + LSD(7) + GCT(768) +
     # extensions — 0x2C bytes inside the palette must not be matched
     at = good.find(b"\x2c", 6 + 7 + 768)
@@ -105,35 +101,35 @@ def test_parser_rejects_invalid_input():
     bad = bytearray(good)
     bad[at + 9] |= 0x40
     with pytest.raises(ValueError, match="interlaced"):
-        _decode([bytes(bad)])
+        _row(bytes(bad))
     # missing trailer
     with pytest.raises(ValueError, match="missing trailer"):
-        _decode([good[:-1]])
+        _row(good[:-1])
     # file ending inside the image descriptor (review-found: used to
     # surface as struct.error instead of the ValueError contract)
     with pytest.raises(ValueError, match="truncated GIF"):
-        _decode([good[: at + 5]])
+        _row(good[: at + 5])
     # corrupt a mid-stream LZW byte: must fail loudly (size mismatch,
     # overflow, or an out-of-range code), never return wrong means
     sub_at = at + 10 + 1  # first sub-block length byte
     bad = bytearray(good)
     bad[sub_at + 3] ^= 0xFF
     with pytest.raises(ValueError):
-        _decode([bytes(bad)])
+        _row(bytes(bad))
 
 
 def test_extensions_are_skipped():
     """The encoder plants GCE + Comment extensions; parse success plus
     exact means proves the sub-block walk. Verify they are present."""
-    enc = _encode([b"zz"], [4])
-    blob = bytes(enc["gif"][0])
+    blob = encode(4, b"zz")
     assert b"\x21\xf9" in blob and b"\x21\xfe" in blob
-    out = _decode([blob], [4])
-    assert out.width[0] == 20
+    out = _row(blob)
+    assert out.width == 20
 
 
-def test_empty_batch_yields_typed_empty_frame():
-    out = _decode([])
+def test_empty_batch_yields_typed_empty_frame(codec_kernel):
+    kernel, _ = codec_kernel(decode_image_gif)
+    (out,) = kernel([pd.DataFrame({"doc_id": [], "payload": []})])
     assert len(out) == 0
     assert list(out.columns) == [
         "doc_id",
@@ -147,7 +143,7 @@ def test_empty_batch_yields_typed_empty_frame():
 
 
 def test_decoder_handles_12bit_codes_and_deferred_clear():
-    """ADVICE r12: the repo encoder CLEARs every 400 codes, so its own
+    """The repo encoder CLEARs every 400 codes, so its own
     output never exercises the decoder's 11/12-bit widening or the
     deferred-clear branch (a full 4096 table with NO reset — the encoder
     just stops adding, per the spec's deferred-clear tolerance). Drive
@@ -230,7 +226,7 @@ def test_decoder_handles_12bit_codes_and_deferred_clear():
         + sub
         + b"\x00\x3b"
     )
-    row = _decode([blob], [0]).iloc[0]
+    row = _row(blob)
     li = idx.astype(np.int64)
     assert (row.width, row.height) == (w, h)
     assert row.mean_idx_milli == int(li.sum()) * 1000 // (w * h)

@@ -16,27 +16,24 @@ import pytest
 
 from simple_map_reduce_ruuner_spark.operators.codecs import (
     GZIP_HEAD_BYTES,
-    _gzip_decode_fn,
-    _gzip_encode_fn,
+    _gzip_codec,
+    gzip_member_stats,
 )
 
-
-def _encode(payloads: list[bytes], ids: list[int]) -> pd.DataFrame:
-    pdf = pd.DataFrame({"doc_id": ids, "payload": payloads})
-    return pd.concat(list(_gzip_encode_fn()([pdf])), ignore_index=True)
+encode, decode = _gzip_codec()
 
 
-def _decode(blobs: list[bytes], ids: list[int] | None = None) -> pd.DataFrame:
-    pdf = pd.DataFrame({"doc_id": ids or list(range(len(blobs))), "gz": blobs})
-    return pd.concat(list(_gzip_decode_fn()([pdf])), ignore_index=True)
+def _members(blob: bytes) -> pd.DataFrame:
+    return pd.DataFrame(
+        decode(blob), columns=["member_idx", "name", "n_bytes", "sum_bytes"]
+    )
 
 
 def test_roundtrip_two_members_and_stats():
     payloads = [b"gzip me please", b"", bytes(range(200))]
     ids = [0, 4, 11]
-    out = _decode(list(_encode(payloads, ids)["gz"]), ids)
     for d, p in zip(ids, payloads):
-        rows = out[out.doc_id == d].sort_values("member_idx")
+        rows = _members(encode(d, p))
         assert list(rows.name) == [f"doc{d}/text.txt", f"doc{d}/head.bin"]
         head = (
             np.resize(np.frombuffer(p, np.uint8), GZIP_HEAD_BYTES)
@@ -55,7 +52,7 @@ def test_third_party_gzip_reads_our_streams():
     text + head (multistream concatenation semantics), despite the
     FEXTRA/FCOMMENT/FHCRC fields on member 1."""
     payload = b"interop payload " * 10
-    blob = bytes(_encode([payload], [5])["gz"][0])
+    blob = encode(5, payload)
     head = np.resize(np.frombuffer(payload, np.uint8), GZIP_HEAD_BYTES).tobytes()
     assert _gzip.decompress(blob) == payload + head
     # (stdlib GzipFile does not expose the FNAME field; content equality
@@ -72,7 +69,7 @@ def test_our_parser_reads_stdlib_written_streams():
     with _gzip.GzipFile("third/party.txt", "wb", fileobj=buf, mtime=0) as gf:
         gf.write(b"named member body " * 8)
     blob = _gzip.compress(a) + buf.getvalue()
-    out = _decode([blob])
+    out = _members(blob)
     assert list(out.member_idx) == [0, 1]
     assert list(out.name) == ["", "party.txt"]  # GzipFile stores basename
     assert out.n_bytes[0] == len(a)
@@ -82,7 +79,7 @@ def test_our_parser_reads_stdlib_written_streams():
 
 
 def test_parser_rejections():
-    blob = bytes(_encode([b"some payload"], [1])["gz"][0])
+    blob = encode(1, b"some payload")
 
     for bad, msg in [
         (b"", "empty"),
@@ -92,27 +89,27 @@ def test_parser_rejections():
         (blob + b"garbage", "magic|truncated"),
     ]:
         with pytest.raises(ValueError, match=msg):
-            _decode([bad])
+            _members(bad)
 
     # reserved flag bits
     b2 = bytearray(blob)
     b2[3] |= 0x80
     with pytest.raises(ValueError, match="reserved"):
-        _decode([bytes(b2)])
+        _members(bytes(b2))
 
     # header CRC mismatch: flip a byte inside the FNAME of member 1
     b3 = bytearray(blob)
     pos = blob.find(b"text.txt")
     b3[pos] ^= 0x01
     with pytest.raises(ValueError, match="header CRC"):
-        _decode([bytes(b3)])
+        _members(bytes(b3))
 
     # trailer CRC32 mismatch on a stdlib-framed member (no FHCRC):
     # corrupting the stored CRC leaves deflate intact
     simple = bytearray(_gzip.compress(b"x" * 64))
     simple[-5] ^= 0xFF
     with pytest.raises(ValueError, match="CRC32"):
-        _decode([bytes(simple)])
+        _members(bytes(simple))
 
 
 def test_bomb_guard_caps_inflated_size():
@@ -126,14 +123,12 @@ def test_bomb_guard_caps_inflated_size():
         + struct.pack("<II", zlib.crc32(b"\x00" * ((1 << 24) + 512)), (1 << 24) + 512)
     )
     with pytest.raises(ValueError, match="too large"):
-        _decode([blob])
+        _members(blob)
 
 
-def test_empty_batch_yields_typed_empty_frame():
-    out = pd.concat(
-        list(_gzip_decode_fn()([pd.DataFrame({"doc_id": [], "gz": []})])),
-        ignore_index=True,
-    )
+def test_empty_batch_yields_typed_empty_frame(codec_kernel):
+    kernel, _ = codec_kernel(gzip_member_stats)
+    (out,) = kernel([pd.DataFrame({"doc_id": [], "payload": []})])
     assert list(out.columns) == [
         "doc_id", "member_idx", "name", "n_bytes", "sum_bytes",
     ]

@@ -1,5 +1,5 @@
-"""Baseline-JPEG codec kernels (codecs.decode_image_jpeg), driven
-directly through the production factories — no Spark session needed.
+"""Baseline-JPEG codec (codecs.decode_image_jpeg), driven directly
+through the production per-row functions — no Spark session needed.
 
 The decoder must be a REAL general T.81 baseline decoder, so beyond the
 production round trip (DC-only blocks, exact by construction) these
@@ -11,6 +11,7 @@ double-sum IDCT. Spark-level oracle parity runs in the driver gate.
 from __future__ import annotations
 
 import struct
+from collections import namedtuple
 
 import numpy as np
 import pandas as pd
@@ -21,19 +22,17 @@ from simple_map_reduce_ruuner_spark.operators.codecs import (
     JPEG_AC_VALS,
     JPEG_DC_BITS,
     JPEG_DC_VALS,
-    _jpeg_decode_fn,
-    _jpeg_encode_fn,
+    _jpeg_codec,
+    decode_image_jpeg,
 )
 
-
-def _decode(blobs: list[bytes], ids: list[int] | None = None) -> pd.DataFrame:
-    pdf = pd.DataFrame({"doc_id": ids or list(range(len(blobs))), "jpg": blobs})
-    return pd.concat(list(_jpeg_decode_fn()([pdf])), ignore_index=True)
+encode, decode = _jpeg_codec()
+Row = namedtuple("Row", "width height mean_gray_milli max_gray min_gray")
 
 
-def _encode(payloads: list[bytes], ids: list[int]) -> pd.DataFrame:
-    pdf = pd.DataFrame({"doc_id": ids, "payload": payloads})
-    return pd.concat(list(_jpeg_encode_fn()([pdf])), ignore_index=True)
+def _row(blob: bytes) -> Row:
+    [row] = decode(blob)
+    return Row(*row)
 
 
 # --- independent mini-encoder (test-local, NOT the production code) ---
@@ -160,16 +159,14 @@ def _reference_idct(coef: np.ndarray) -> np.ndarray:
 
 
 def test_roundtrip_matches_block_formula():
-    enc = _encode([b"hello world", b""], [7, 1])
-    out = _decode(list(enc["jpg"]), list(enc["doc_id"]))
     # doc 7: bw=1+7%4=4, bh=1+7%3=2 -> 8 blocks (exercises one RST)
-    row = out[out.doc_id == 7].iloc[0]
+    row = _row(encode(7, b"hello world"))
     vals = np.resize(np.frombuffer(b"hello world", np.uint8), 8).astype(np.int64)
     assert (row.width, row.height) == (32, 16)
     assert row.mean_gray_milli == int(vals.sum()) * 1000 // 8
     assert (row.max_gray, row.min_gray) == (int(vals.max()), int(vals.min()))
     # doc 1 (empty text): all-zero blocks
-    row = out[out.doc_id == 1].iloc[0]
+    row = _row(encode(1, b""))
     assert (row.width, row.height) == (16, 16)
     assert (row.mean_gray_milli, row.max_gray, row.min_gray) == (0, 0, 0)
 
@@ -177,12 +174,11 @@ def test_roundtrip_matches_block_formula():
 def test_restart_markers_present_and_consumed():
     """doc_id 11 -> 4x3 = 12 blocks -> two RSTn markers at DRI=4; the
     file must contain ffd0 and ffd1 and still round-trip exactly."""
-    enc = _encode([bytes(range(1, 13))], [11])
-    blob = bytes(enc["jpg"][0])
+    blob = encode(11, bytes(range(1, 13)))
     scan = blob[blob.rfind(b"\xff\xda") :]
     assert b"\xff\xd0" in scan and b"\xff\xd1" in scan
-    out = _decode([blob], [11])
-    assert out.mean_gray_milli[0] == sum(range(1, 13)) * 1000 // 12
+    out = _row(blob)
+    assert out.mean_gray_milli == sum(range(1, 13)) * 1000 // 12
 
 
 def test_nonzero_ac_against_independent_idct():
@@ -201,19 +197,19 @@ def test_nonzero_ac_against_independent_idct():
     blk2[0, 0] = -30
     blk2[2, 3] = 9
     blob = _build_jpeg([blk, blk2], bw=2, bh=1, quant=quant)
-    out = _decode([blob])
-    assert (out.width[0], out.height[0]) == (16, 8)
+    out = _row(blob)
+    assert (out.width, out.height) == (16, 8)
     want = np.concatenate(
         [
             _reference_idct((b * quant).astype(float)).reshape(-1)
             for b in (blk, blk2)
         ]
     )
-    got_mean = out.mean_gray_milli[0]
+    got_mean = out.mean_gray_milli
     want_mean = int(want.sum()) * 1000 // 128
     assert abs(got_mean - want_mean) <= 1000  # <=1 gray level of drift
-    assert abs(out.max_gray[0] - want.max()) <= 1
-    assert abs(out.min_gray[0] - want.min()) <= 1
+    assert abs(out.max_gray - want.max()) <= 1
+    assert abs(out.min_gray - want.min()) <= 1
 
 
 def test_dc_only_blocks_decode_exactly():
@@ -223,28 +219,27 @@ def test_dc_only_blocks_decode_exactly():
         blk = np.zeros((8, 8), dtype=np.int64)
         blk[0, 0] = 8 * (v - 128)
         blob = _build_jpeg([blk], 1, 1, np.ones((8, 8), dtype=np.int64))
-        out = _decode([blob])
-        assert (out.max_gray[0], out.min_gray[0]) == (v, v)
-        assert out.mean_gray_milli[0] == v * 1000
+        out = _row(blob)
+        assert (out.max_gray, out.min_gray) == (v, v)
+        assert out.mean_gray_milli == v * 1000
 
 
 def test_parser_rejects_invalid_input():
-    enc = _encode([b"abc"], [2])
-    good = bytes(enc["jpg"][0])
+    good = encode(2, b"abc")
     with pytest.raises(ValueError, match="missing SOI"):
-        _decode([b"\x00\x00" + good[2:]])
+        _row(b"\x00\x00" + good[2:])
     with pytest.raises(ValueError, match="truncated"):
-        _decode([good[:40]])
+        _row(good[:40])
     # progressive SOF2 instead of baseline SOF0
     prog = good.replace(b"\xff\xc0", b"\xff\xc2")
     with pytest.raises(ValueError, match="non-baseline"):
-        _decode([prog])
+        _row(prog)
     # multi-component frame (claims 3 components)
     sof = good.find(b"\xff\xc0")
     bad = bytearray(good)
     bad[sof + 9] = 3  # ncomps byte of SOF0
     with pytest.raises(ValueError, match="grayscale"):
-        _decode([bytes(bad)])
+        _row(bytes(bad))
 
 
 def test_zrl_past_block_end_rejected():
@@ -267,30 +262,30 @@ def test_zrl_past_block_end_rejected():
     scan_at = blob.rfind(b"\xff\xda") + 2 + 2 + 6  # marker+len+header
     bad = blob[:scan_at] + bytes(w.out) + b"\xff\xd9"
     with pytest.raises(ValueError, match="AC run past block end"):
-        _decode([bad])
+        _row(bad)
 
 
 def test_eof_inside_fill_bytes_rejected():
     """A file ending in a run of 0xFF fill bytes must raise ValueError,
     not IndexError (review-found)."""
     with pytest.raises(ValueError, match="truncated JPEG"):
-        _decode([b"\xff\xd8\xff\xff"])
+        _row(b"\xff\xd8\xff\xff")
 
 
 def test_corrupted_restart_marker_rejected():
     """doc_id 7 has one RST0; breaking its marker number must fail the
     expect_rst sequence check, not silently desync."""
-    enc = _encode([b"some text payload"], [7])
-    blob = bytearray(enc["jpg"][0])
+    blob = bytearray(encode(7, b"some text payload"))
     scan_at = bytes(blob).rfind(b"\xff\xd0")
     assert scan_at > 0
     blob[scan_at + 1] = 0xD5  # RST5 where RST0 expected
     with pytest.raises(ValueError, match="bad restart marker"):
-        _decode([bytes(blob)])
+        _row(bytes(blob))
 
 
-def test_empty_batch_yields_typed_empty_frame():
-    out = _decode([])
+def test_empty_batch_yields_typed_empty_frame(codec_kernel):
+    kernel, _ = codec_kernel(decode_image_jpeg)
+    (out,) = kernel([pd.DataFrame({"doc_id": [], "payload": []})])
     assert len(out) == 0
     assert list(out.columns) == [
         "doc_id",

@@ -1,5 +1,5 @@
-"""G.711 mu-law codec kernels (codecs.decode_audio_mulaw), driven
-directly through the production factories — no Spark session needed.
+"""G.711 mu-law codec (codecs.decode_audio_mulaw), driven directly
+through the production per-row functions — no Spark session needed.
 
 The decoder must implement the REAL CCITT expansion and refuse plain
 PCM: mu-law is the first lossy codec in the suite, and its decode side
@@ -10,6 +10,7 @@ Spark-level oracle parity runs in the driver gate.
 from __future__ import annotations
 
 import struct
+from collections import namedtuple
 
 import numpy as np
 import pandas as pd
@@ -17,19 +18,17 @@ import pytest
 
 from simple_map_reduce_ruuner_spark.operators.codecs import (
     MULAW_TABLE,
-    _mulaw_decode_fn,
-    _mulaw_encode_fn,
+    _mulaw_codec,
+    decode_audio_mulaw,
 )
 
-
-def _decode(blobs: list[bytes], ids: list[int] | None = None) -> pd.DataFrame:
-    pdf = pd.DataFrame({"doc_id": ids or list(range(len(blobs))), "wav": blobs})
-    return pd.concat(list(_mulaw_decode_fn()([pdf])), ignore_index=True)
+encode, decode = _mulaw_codec()
+Row = namedtuple("Row", "sample_rate channels n_frames mean_milli peak trough")
 
 
-def _encode(payloads: list[bytes], ids: list[int]) -> pd.DataFrame:
-    pdf = pd.DataFrame({"doc_id": ids, "payload": payloads})
-    return pd.concat(list(_mulaw_encode_fn()([pdf])), ignore_index=True)
+def _row(blob: bytes) -> Row:
+    [row] = decode(blob)
+    return Row(*row)
 
 
 def _wav(ch: int, codes: bytes, with_fact: bool = True, tag: int = 7) -> bytes:
@@ -63,9 +62,9 @@ def test_g711_expansion_matches_cpython_c_table():
 def test_expansion_endpoints():
     """The canonical G.711 landmarks: 0x00 -> -32124, 0x80 -> +32124,
     0xFF -> +0, 0x7F -> -0 (both zeros decode to 0)."""
-    out = _decode([_wav(1, bytes([0x00, 0x80, 0xFF, 0x7F]))])
-    assert out.peak[0] == 32124
-    assert out.trough[0] == -32124
+    out = _row(_wav(1, bytes([0x00, 0x80, 0xFF, 0x7F])))
+    assert out.peak == 32124
+    assert out.trough == -32124
     assert _expand(0xFF) == 0 and _expand(0x7F) == 0
     assert _expand(0x00) == -32124 and _expand(0x80) == 32124
 
@@ -80,10 +79,8 @@ def test_expansion_monotone_per_segment():
 
 
 def test_roundtrip_inverts_encoder():
-    enc = _encode([b"xyz", b""], [1, 2])
-    out = _decode(list(enc["wav"]), list(enc["doc_id"]))
     # doc 1: ch=2, frames=51
-    row = out[out.doc_id == 1].iloc[0]
+    row = _row(encode(1, b"xyz"))
     assert (row.sample_rate, row.channels, row.n_frames) == (8000, 2, 51)
     codes = np.resize(np.frombuffer(b"xyz", np.uint8), 102)
     s = np.array([_expand(int(c)) for c in codes], dtype=np.int64)
@@ -95,7 +92,7 @@ def test_roundtrip_inverts_encoder():
         int(s.min()),
     )
     # doc 2 (empty text): codeword 0x00 everywhere -> -32124
-    row = out[out.doc_id == 2].iloc[0]
+    row = _row(encode(2, b""))
     assert (row.mean_milli, row.peak, row.trough) == (
         -32124000,
         -32124,
@@ -108,28 +105,28 @@ def test_negative_mean_truncates_toward_zero():
     to a negative sample, so a flooring kernel would hash-mismatch."""
     s = _expand(0x30)
     assert s < 0
-    out = _decode([_wav(1, bytes([0x30, 0xFF, 0xFF]))])  # sum = s, n = 3
+    out = _row(_wav(1, bytes([0x30, 0xFF, 0xFF])))  # sum = s, n = 3
     want = -(abs(s * 1000) // 3)
-    assert out.mean_milli[0] == want
+    assert out.mean_milli == want
 
 
 def test_parser_rejects_invalid_input():
     codes = bytes([0x10, 0x90, 0x55, 0xAA])
     good = _wav(2, codes)
     with pytest.raises(ValueError, match="not a RIFF/WAVE"):
-        _decode([b"OggS" + good[4:]])
+        _row(b"OggS" + good[4:])
     # a 16-bit PCM file (tag 1) must be rejected by the mu-law decoder
     with pytest.raises(ValueError, match="want 8-bit mu-law"):
-        _decode([_wav(2, codes, tag=1)])
+        _row(_wav(2, codes, tag=1))
     # fact chunk disagreeing with the data length
     bad = bytearray(_wav(1, codes))
     at = bytes(bad).find(b"fact") + 8
     bad[at : at + 4] = struct.pack("<I", 99)
     with pytest.raises(ValueError, match="fact chunk disagrees"):
-        _decode([bytes(bad)])
+        _row(bytes(bad))
     # stereo data whose length is not a multiple of block align
     with pytest.raises(ValueError, match="block align"):
-        _decode([_wav(2, bytes([1, 2, 3]), with_fact=False)])
+        _row(_wav(2, bytes([1, 2, 3]), with_fact=False))
 
 
 def test_short_header_chunks_raise_value_error():
@@ -142,14 +139,14 @@ def test_short_header_chunks_raise_value_error():
 
     body = b"WAVE" + chunk(b"fmt ", bytes(8)) + chunk(b"data", codes)
     with pytest.raises(ValueError, match="malformed fmt"):
-        _decode([b"RIFF" + struct.pack("<I", len(body)) + body])
+        _row(b"RIFF" + struct.pack("<I", len(body)) + body)
     fmt = struct.pack("<HHIIHH", 7, 1, 8000, 8000, 1, 8)
     body = (
         b"WAVE" + chunk(b"fmt ", fmt) + chunk(b"fact", b"\x02")
         + chunk(b"data", codes)
     )
     with pytest.raises(ValueError, match="malformed fact"):
-        _decode([b"RIFF" + struct.pack("<I", len(body)) + body])
+        _row(b"RIFF" + struct.pack("<I", len(body)) + body)
 
 
 def test_chunk_past_riff_end_rejected():
@@ -162,15 +159,15 @@ def test_chunk_past_riff_end_rejected():
     (riff,) = struct.unpack("<I", good[4:8])
     bad[4:8] = struct.pack("<I", riff - 3)
     with pytest.raises(ValueError, match="RIFF end"):
-        _decode([bytes(bad)])
+        _row(bytes(bad))
 
 
 def test_missing_fact_is_tolerated():
     """fact is required by the spec for compressed formats, but the
     parser treats it as validate-if-present (real files vary)."""
-    out = _decode([_wav(1, bytes([0xFF, 0x80]), with_fact=False)])
-    assert out.n_frames[0] == 2
-    assert out.peak[0] == 32124
+    out = _row(_wav(1, bytes([0xFF, 0x80]), with_fact=False))
+    assert out.n_frames == 2
+    assert out.peak == 32124
 
 
 def test_odd_data_chunk_keeps_walker_aligned():
@@ -189,13 +186,14 @@ def test_odd_data_chunk_keeps_walker_aligned():
         + chunk(b"fmt ", fmt)
         + chunk(b"fact", struct.pack("<I", 3))
     )
-    out = _decode([b"RIFF" + struct.pack("<I", len(body)) + body])
-    assert out.n_frames[0] == 3
-    assert out.peak[0] == 32124
+    out = _row(b"RIFF" + struct.pack("<I", len(body)) + body)
+    assert out.n_frames == 3
+    assert out.peak == 32124
 
 
-def test_empty_batch_yields_typed_empty_frame():
-    out = _decode([])
+def test_empty_batch_yields_typed_empty_frame(codec_kernel):
+    kernel, _ = codec_kernel(decode_audio_mulaw)
+    (out,) = kernel([pd.DataFrame({"doc_id": [], "payload": []})])
     assert len(out) == 0
     assert list(out.columns) == [
         "doc_id",
@@ -209,10 +207,10 @@ def test_empty_batch_yields_typed_empty_frame():
 
 
 def test_fmt_chunk_is_18_byte_non_pcm_variant():
-    """ADVICE r12: non-PCM format tags require the 18-byte fmt variant
+    """Non-PCM format tags require the 18-byte fmt variant
     (cbSize=0 extension field); strict third-party parsers reject a bare
     16-byte fmt for tag 7. Walk the emitted RIFF and pin it."""
-    blob = bytes(_encode([b"hi"], [0])["wav"][0])
+    blob = encode(0, b"hi")
     pos, end = 12, 8 + struct.unpack("<I", blob[4:8])[0]
     fmt = None
     while pos + 8 <= end:

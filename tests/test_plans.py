@@ -8,6 +8,8 @@ the world, and no accidental cartesian products.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -703,17 +705,57 @@ def test_rank_stats_rank_post_aggregate_only(spark, sf_dir):
         assert plan.rindex("HashAggregate") > plan.index("Window"), fn.__name__
 
 
+# A Python operator node at the start of a plan-tree line (after the
+# "+- " / ":- " prefix and an optional codegen "*(n) " stage marker).
+PYTHON_OP = re.compile(
+    r"^[\s:+\-|]*(?:\*\(\d+\) )?"
+    r"(\w*In(?:Pandas|Arrow)|(?:Arrow|Batch)EvalPython\w*)\b"
+)
+
+# The codec/container round trips: encode + decode in ONE Python node.
+CODEC_QUERIES = {
+    "decode_audio_mulaw",
+    "decode_audio_wav",
+    "decode_image_gif",
+    "decode_image_jpeg",
+    "decode_image_png",
+    "decode_image_ppm",
+    "decode_image_tga",
+    "decode_video_avi",
+    "gzip_member_stats",
+    "sqlite_table_stats",
+    "tar_shard_members",
+    "xz_block_stats",
+    "zip_shard_members",
+}
+
+
 def test_no_row_at_a_time_python_udfs(spark, sf_dir):
-    """Registry-wide invariant: Python reaches plans only through Arrow
-    batches (ArrowEvalPython / *InPandas) — BatchEvalPython (row-at-a-
-    time pickling, the 10-100× slow path) must never appear."""
+    """Registry-wide invariants on how Python reaches plans:
+
+    - only through Arrow batches (ArrowEvalPython / *InPandas) —
+      BatchEvalPython (row-at-a-time pickling, the 10-100× slow path)
+      must never appear;
+    - never as two adjacent Python operators: each one is a full
+      JVM<->Python round of its input, so a Python node feeding another
+      must be one kernel instead;
+    - each codec round trip is exactly one Python operator."""
     from simple_map_reduce_ruuner_spark.registry import all_queries
 
-    offenders = []
+    row_at_a_time, adjacent, codec_nodes = [], [], {}
     for name, q in all_queries().items():
-        if "BatchEvalPython" in plan_of(q.fn(spark, sf_dir)):
-            offenders.append(name)
-    assert not offenders, offenders
+        plan = plan_of(q.fn(spark, sf_dir))
+        ops = [PYTHON_OP.match(line) for line in plan.splitlines()]
+        if "BatchEvalPython" in plan:
+            row_at_a_time.append(name)
+        # a Python operator is unary, so the next plan line is its child
+        if any(a and b for a, b in zip(ops, ops[1:])):
+            adjacent.append(name)
+        if name in CODEC_QUERIES:
+            codec_nodes[name] = [op[1] for op in ops if op]
+    assert not row_at_a_time, row_at_a_time
+    assert not adjacent, adjacent
+    assert codec_nodes == {name: ["MapInPandas"] for name in CODEC_QUERIES}
 
 
 def test_analyze_statistics_drive_cbo_estimates(spark, sf_dir):

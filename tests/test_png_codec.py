@@ -1,5 +1,5 @@
-"""PNG codec kernels (multimodal.decode_image_png), driven directly
-through the production factories — no Spark session needed.
+"""PNG codec (multimodal.decode_image_png), driven directly through
+the production per-row functions — no Spark session needed.
 
 The decoder must be a REAL parser: verify the signature and every
 chunk CRC, validate IHDR, reassemble multi-chunk IDAT streams, inflate,
@@ -19,21 +19,11 @@ import pandas as pd
 import pytest
 
 from simple_map_reduce_ruuner_spark.operators.multimodal import (
-    _png_decode_fn,
-    _png_encode_fn,
+    _png_codec,
+    decode_image_png,
 )
 
-
-def _decode(blobs: list[bytes], ids: list[int] | None = None) -> pd.DataFrame:
-    pdf = pd.DataFrame(
-        {"doc_id": ids or list(range(len(blobs))), "png": blobs}
-    )
-    return pd.concat(list(_png_decode_fn()([pdf])), ignore_index=True)
-
-
-def _encode(payloads: list[bytes], ids: list[int]) -> pd.DataFrame:
-    pdf = pd.DataFrame({"doc_id": ids, "payload": payloads})
-    return pd.concat(list(_png_encode_fn()([pdf])), ignore_index=True)
+encode, decode = _png_codec()
 
 
 def _chunk(ctype: bytes, data: bytes) -> bytes:
@@ -88,27 +78,18 @@ def _means(raw: bytes, w: int, h: int) -> tuple[int, int, int]:
 
 
 def test_roundtrip_inverts_encoder():
-    enc = _encode([b"abcdefg", b""], [1, 2])
-    out = _decode(list(enc["png"]), list(enc["doc_id"]))
     # doc 1: w=2+1%6=3, h=2+1%5=3 — raster cycles 'abcdefg'
-    row = out[out.doc_id == 1].iloc[0]
-    assert (row.width, row.height) == (3, 3)
+    [(w, h, *rgb)] = decode(encode(1, b"abcdefg"))
+    assert (w, h) == (3, 3)
     raw = np.resize(np.frombuffer(b"abcdefg", np.uint8), 3 * 3 * 3).tobytes()
-    assert (
-        row.mean_r_milli,
-        row.mean_g_milli,
-        row.mean_b_milli,
-    ) == _means(raw, 3, 3)
+    assert tuple(rgb) == _means(raw, 3, 3)
     # doc 2 (empty text): zero raster, dims from the formula (w=4, h=4)
-    row = out[out.doc_id == 2].iloc[0]
-    assert (row.width, row.height) == (4, 4)
-    assert (row.mean_r_milli, row.mean_g_milli, row.mean_b_milli) == (0, 0, 0)
+    assert decode(encode(2, b"")) == [(4, 4, 0, 0, 0)]
 
 
 def test_encoder_rotates_all_five_filters_and_splits_idat():
     # doc_id 28: w=2+28%6=6, h=2+28%5=5 -> 5 rows, filters 0..4 all used
-    enc = _encode([bytes(range(90))], [28])
-    blob = bytes(enc["png"][0])
+    blob = encode(28, bytes(range(90)))
     # walk chunks, collect types and the raw filter bytes
     pos, types, idat = 8, [], bytearray()
     while pos < len(blob):
@@ -133,23 +114,22 @@ def test_each_filter_type_reconstructs():
     w, h = 4, 3
     raw = bytes((i * 37 + 11) % 256 for i in range(w * h * 3))
     for f in range(5):
-        out = _decode([_minimal_png(w, h, raw, filters=[f] * h)])
-        got = (out.mean_r_milli[0], out.mean_g_milli[0], out.mean_b_milli[0])
-        assert got == _means(raw, w, h), f"filter {f} broken"
+        [(_, _, *got)] = decode(_minimal_png(w, h, raw, filters=[f] * h))
+        assert tuple(got) == _means(raw, w, h), f"filter {f} broken"
 
 
 def test_parser_rejects_invalid_input():
     raw = bytes(12)
     good = _minimal_png(2, 1, bytes(range(6)))
     with pytest.raises(ValueError, match="bad signature"):
-        _decode([b"P6\n2 1\n255\n" + raw])
+        decode(b"P6\n2 1\n255\n" + raw)
     # flip one pixel byte inside IDAT without fixing the CRC
     corrupt = bytearray(good)
     corrupt[-17] ^= 0xFF
     with pytest.raises(ValueError, match="CRC mismatch|error"):
-        _decode([bytes(corrupt)])
+        decode(bytes(corrupt))
     with pytest.raises(ValueError, match="truncated|missing"):
-        _decode([good[:-12]])  # IEND sliced off
+        decode(good[:-12])  # IEND sliced off
     # 16-bit depth is spec-valid but outside this decoder's contract
     deep = (
         b"\x89PNG\r\n\x1a\n"
@@ -158,7 +138,7 @@ def test_parser_rejects_invalid_input():
         + _chunk(b"IEND", b"")
     )
     with pytest.raises(ValueError, match="unsupported PNG shape"):
-        _decode([deep])
+        decode(deep)
     # raster length disagreeing with IHDR
     short = (
         b"\x89PNG\r\n\x1a\n"
@@ -167,11 +147,12 @@ def test_parser_rejects_invalid_input():
         + _chunk(b"IEND", b"")
     )
     with pytest.raises(ValueError, match="raster size mismatch"):
-        _decode([short])
+        decode(short)
 
 
-def test_empty_batch_yields_typed_empty_frame():
-    out = _decode([])
+def test_empty_batch_yields_typed_empty_frame(codec_kernel):
+    kernel, _ = codec_kernel(decode_image_png)
+    (out,) = kernel([pd.DataFrame({"doc_id": [], "payload": []})])
     assert len(out) == 0
     assert list(out.columns) == [
         "doc_id",

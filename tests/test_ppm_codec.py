@@ -1,5 +1,5 @@
-"""Netpbm P6 codec kernels (multimodal.decode_image_ppm), driven
-directly through the production factories — no Spark session needed.
+"""Netpbm P6 codec (multimodal.decode_image_ppm), driven directly
+through the production per-row functions — no Spark session needed.
 
 The decoder must be a REAL parser: accept any spec-valid header
 (comments, arbitrary whitespace), reject non-P6 and truncated input,
@@ -14,16 +14,11 @@ import pandas as pd
 import pytest
 
 from simple_map_reduce_ruuner_spark.operators.multimodal import (
-    _ppm_decode_fn,
-    _ppm_encode_fn,
+    _ppm_codec,
+    decode_image_ppm,
 )
 
-
-def _decode(blobs: list[bytes], ids: list[int] | None = None) -> pd.DataFrame:
-    pdf = pd.DataFrame(
-        {"doc_id": ids or list(range(len(blobs))), "ppm": blobs}
-    )
-    return pd.concat(list(_ppm_decode_fn()([pdf])), ignore_index=True)
+encode, decode = _ppm_codec()
 
 
 def _ppm(w: int, h: int, px: bytes, header: bytes | None = None) -> bytes:
@@ -31,22 +26,15 @@ def _ppm(w: int, h: int, px: bytes, header: bytes | None = None) -> bytes:
 
 
 def test_roundtrip_inverts_encoder():
-    pdf = pd.DataFrame(
-        {"doc_id": [1, 2], "payload": [b"abc", b""]}  # cycled + zero-fill
-    )
-    encoded = pd.concat(list(_ppm_encode_fn()([pdf])), ignore_index=True)
-    out = _decode(list(encoded["ppm"]), list(encoded["doc_id"]))
     # doc 1: w=4+1%5=5, h=3+1%7=4; R channel cycles abc -> indices 0,3,6..
-    row = out[out.doc_id == 1].iloc[0]
-    assert (row.width, row.height) == (5, 4)
+    [(w, h, *rgb)] = decode(encode(1, b"abc"))
+    assert (w, h) == (5, 4)
     npx = 5 * 4
     raster = np.resize(np.frombuffer(b"abc", np.uint8), npx * 3)
     want = raster.reshape(npx, 3).sum(axis=0, dtype=np.int64) * 1000 // npx
-    assert (row.mean_r_milli, row.mean_g_milli, row.mean_b_milli) == tuple(want)
+    assert tuple(rgb) == tuple(want)
     # doc 2 (empty text): zero raster, dims still from the formula
-    row = out[out.doc_id == 2].iloc[0]
-    assert (row.width, row.height) == (6, 5)
-    assert (row.mean_r_milli, row.mean_g_milli, row.mean_b_milli) == (0, 0, 0)
+    assert decode(encode(2, b"")) == [(6, 5, 0, 0, 0)]
 
 
 def test_parser_accepts_spec_valid_headers():
@@ -61,29 +49,30 @@ def test_parser_accepts_spec_valid_headers():
         b"P6\n\n\n  2   1\n255 " + px,
     ]
     for blob in variants:
-        out = _decode([blob])
-        assert (out.width[0], out.height[0]) == (2, 1), blob
+        [(w, h, mean_r, _, _)] = decode(blob)
+        assert (w, h) == (2, 1), blob
         # pixel bytes 0..5: R mean = (0+3)*1000//2 = 1500
-        assert out.mean_r_milli[0] == 1500, blob
+        assert mean_r == 1500, blob
 
 
 def test_parser_rejects_invalid_input():
     with pytest.raises(ValueError, match="not a binary PPM"):
-        _decode([b"P5\n2 1\n255\n" + bytes(6)])  # grayscale PGM magic
+        decode(b"P5\n2 1\n255\n" + bytes(6))  # grayscale PGM magic
     with pytest.raises(ValueError, match="not a binary PPM"):
-        _decode([b"\x89PNG\r\n\x1a\n"])
+        decode(b"\x89PNG\r\n\x1a\n")
     with pytest.raises(ValueError, match="truncated"):
-        _decode([b"P6\n2 1\n"])  # header ends before maxval
+        decode(b"P6\n2 1\n")  # header ends before maxval
     with pytest.raises(ValueError, match="8-bit raster"):
-        _decode([b"P6\n2 1\n65535\n" + bytes(12)])
-    # magic must be its own token (advice r11): 'P6123 4 255' must not
-    # silently parse as width=123
+        decode(b"P6\n2 1\n65535\n" + bytes(12))
+    # magic must be its own token: 'P6123 4 255' must not silently
+    # parse as width=123
     with pytest.raises(ValueError, match="whitespace after magic"):
-        _decode([b"P6123 4 255\n" + bytes(123 * 4 * 3)])
+        decode(b"P6123 4 255\n" + bytes(123 * 4 * 3))
 
 
-def test_empty_batch_yields_typed_empty_frame():
-    out = _decode([])
+def test_empty_batch_yields_typed_empty_frame(codec_kernel):
+    kernel, _ = codec_kernel(decode_image_ppm)
+    (out,) = kernel([pd.DataFrame({"doc_id": [], "payload": []})])
     assert len(out) == 0
     assert list(out.columns) == [
         "doc_id",

@@ -15,19 +15,15 @@ import pytest
 
 from simple_map_reduce_ruuner_spark.operators.codecs import (
     SQLITE_HEAD_BYTES,
-    _sqlite_decode_fn,
-    _sqlite_encode_fn,
+    _sqlite_codec,
+    sqlite_table_stats,
 )
 
-
-def _encode(payloads: list[bytes], ids: list[int]) -> pd.DataFrame:
-    pdf = pd.DataFrame({"doc_id": ids, "payload": payloads})
-    return pd.concat(list(_sqlite_encode_fn()([pdf])), ignore_index=True)
+encode, decode = _sqlite_codec()
 
 
-def _decode(blobs: list[bytes], ids: list[int] | None = None) -> pd.DataFrame:
-    pdf = pd.DataFrame({"doc_id": ids or list(range(len(blobs))), "db": blobs})
-    return pd.concat(list(_sqlite_decode_fn()([pdf])), ignore_index=True)
+def _table_rows(blob: bytes) -> pd.DataFrame:
+    return pd.DataFrame(decode(blob), columns=["row_idx", "n_bytes", "sum_bytes"])
 
 
 def _custom_db(rows, pragmas: list[str] = ()) -> bytes:
@@ -43,9 +39,8 @@ def _custom_db(rows, pragmas: list[str] = ()) -> bytes:
 def test_roundtrip_two_rows_and_stats():
     payloads = [b"sqlite me please", b"", bytes(range(200))]
     ids = [0, 4, 11]
-    out = _decode(list(_encode(payloads, ids)["db"]), ids)
     for d, p in zip(ids, payloads):
-        rows = out[out.doc_id == d].sort_values("row_idx")
+        rows = _table_rows(encode(d, p))
         assert list(rows.row_idx) == [0, 1]
         head = (
             np.resize(np.frombuffer(p, np.uint8), SQLITE_HEAD_BYTES)
@@ -64,7 +59,7 @@ def test_overflow_chain_assembled():
     reassemble it exactly via the spec's K/M inline-size formulas."""
     big = bytes(i % 251 for i in range(100_000))
     blob = _custom_db([(0, big), (1, b"x")])
-    out = _decode([blob]).sort_values("row_idx")
+    out = _table_rows(blob).sort_values("row_idx")
     assert list(out.n_bytes) == [100_000, 1]
     assert out.sum_bytes.iloc[0] == int(
         np.frombuffer(big, np.uint8).sum(dtype=np.int64)
@@ -75,7 +70,7 @@ def test_interior_pages_walked():
     """5000 rows force a multi-level table b-tree (interior 0x05 pages)."""
     rows = [(i, (b"row %d " % i) * 20) for i in range(5000)]
     blob = _custom_db(rows)
-    out = _decode([blob])
+    out = _table_rows(blob)
     assert len(out) == 5000
     got = dict(zip(out.row_idx, out.n_bytes))
     assert got[4321] == len((b"row 4321 ") * 20)
@@ -87,7 +82,7 @@ def test_non_default_page_size():
     blob = _custom_db(
         [(0, b"tiny pages " * 40), (1, b"y")], pragmas=["pragma page_size=512"]
     )
-    out = _decode([blob]).sort_values("row_idx")
+    out = _table_rows(blob).sort_values("row_idx")
     assert list(out.n_bytes) == [len(b"tiny pages " * 40), 1]
 
 
@@ -95,18 +90,18 @@ def test_rowid_alias_reconstructed():
     """INTEGER PRIMARY KEY is stored as NULL in the record; row_idx must
     come back as the declared id, including non-contiguous ones."""
     blob = _custom_db([(7, b"seven"), (42, b"forty-two")])
-    out = _decode([blob]).sort_values("row_idx")
+    out = _table_rows(blob).sort_values("row_idx")
     assert list(out.row_idx) == [7, 42]
     assert list(out.n_bytes) == [5, 9]
 
 
 def test_parser_rejections_and_fuzz():
-    blob = bytearray(bytes(_encode([b"fuzz body " * 30], [3])["db"][0]))
+    blob = bytearray(encode(3, b"fuzz body " * 30))
 
     with pytest.raises(ValueError, match="magic"):
-        _decode([b"Not a SQLite file at all" + bytes(blob[24:])])
+        _table_rows(b"Not a SQLite file at all" + bytes(blob[24:]))
     with pytest.raises(ValueError, match="magic|truncated|page"):
-        _decode([bytes(blob[:50])])
+        _table_rows(bytes(blob[:50]))
 
     rng = np.random.RandomState(42)
     base = bytes(blob)
@@ -116,7 +111,7 @@ def test_parser_rejections_and_fuzz():
         mutated = bytearray(base)
         mutated[pos] ^= val
         try:
-            _decode([bytes(mutated)])
+            _table_rows(bytes(mutated))
         except ValueError:
             pass  # structural rejection (the format has no checksums,
             # so many flips legitimately decode to different values)
@@ -128,7 +123,7 @@ def test_parser_rejections_and_fuzz():
     for _ in range(120):
         cut = int(rng.randint(0, len(base)))
         try:
-            _decode([base[:cut]])
+            _table_rows(base[:cut])
         except ValueError:
             pass
         except Exception as exc:  # noqa: BLE001
@@ -138,10 +133,8 @@ def test_parser_rejections_and_fuzz():
             ) from exc
 
 
-def test_empty_batch_yields_typed_empty_frame():
-    out = pd.concat(
-        list(_sqlite_decode_fn()([pd.DataFrame({"doc_id": [], "db": []})])),
-        ignore_index=True,
-    )
+def test_empty_batch_yields_typed_empty_frame(codec_kernel):
+    kernel, _ = codec_kernel(sqlite_table_stats)
+    (out,) = kernel([pd.DataFrame({"doc_id": [], "payload": []})])
     assert list(out.columns) == ["doc_id", "row_idx", "n_bytes", "sum_bytes"]
     assert len(out) == 0

@@ -1,5 +1,5 @@
-"""POSIX ustar shard kernels (codecs.tar_shard_members), driven
-directly through the production factories — no Spark session needed.
+"""POSIX ustar shard codec (codecs.tar_shard_members), driven directly
+through the production per-row functions — no Spark session needed.
 
 Uniquely among the container formats, a third-party reader EXISTS in
 this environment (stdlib tarfile), so the writer is validated against
@@ -19,27 +19,24 @@ import pytest
 
 from simple_map_reduce_ruuner_spark.operators.codecs import (
     TAR_HEAD_BYTES,
-    _tar_decode_fn,
-    _tar_encode_fn,
+    _tar_codec,
+    tar_shard_members,
 )
 
-
-def _decode(blobs: list[bytes], ids: list[int] | None = None) -> pd.DataFrame:
-    pdf = pd.DataFrame({"doc_id": ids or list(range(len(blobs))), "tar": blobs})
-    return pd.concat(list(_tar_decode_fn()([pdf])), ignore_index=True)
+encode, decode = _tar_codec()
 
 
-def _encode(payloads: list[bytes], ids: list[int]) -> pd.DataFrame:
-    pdf = pd.DataFrame({"doc_id": ids, "payload": payloads})
-    return pd.concat(list(_tar_encode_fn()([pdf])), ignore_index=True)
+def _members(blob: bytes) -> pd.DataFrame:
+    return pd.DataFrame(
+        decode(blob), columns=["member_idx", "name", "n_bytes", "sum_bytes"]
+    )
 
 
 def test_stdlib_tarfile_reads_our_shards():
     """Third-party interop: the stdlib tar reader must accept the
     writer's output byte-for-byte (names, sizes, contents)."""
-    enc = _encode([b"interop check", b""], [5, 6])
     for row_id, payload in ((5, b"interop check"), (6, b"")):
-        blob = bytes(enc[enc.doc_id == row_id]["tar"].iloc[0])
+        blob = encode(row_id, payload)
         tf = tarfile.open(fileobj=io.BytesIO(blob))
         names = tf.getnames()
         assert names == [
@@ -55,8 +52,7 @@ def test_stdlib_tarfile_reads_our_shards():
 
 def test_member_stats_match_formulas():
     payload = bytes(range(200))
-    enc = _encode([payload], [42])
-    out = _decode(list(enc["tar"]), [42]).sort_values("member_idx")
+    out = _members(encode(42, payload))
     t = np.frombuffer(payload, np.uint8).astype(np.int64)
     head = np.resize(t, TAR_HEAD_BYTES)
     assert list(out.n_bytes) == [200, TAR_HEAD_BYTES, 2]
@@ -70,26 +66,24 @@ def test_member_stats_match_formulas():
 def test_checksum_verification():
     """Corrupting one header byte must fail the checksum, not silently
     parse."""
-    enc = _encode([b"abc"], [1])
-    blob = bytearray(enc["tar"][0])
+    blob = bytearray(encode(1, b"abc"))
     blob[0] ^= 0x01  # first byte of the first member name
     with pytest.raises(ValueError, match="checksum mismatch"):
-        _decode([bytes(blob)])
+        _members(bytes(blob))
 
 
 def test_end_marker_and_truncation():
-    enc = _encode([b"abc"], [1])
-    good = bytes(enc["tar"][0])
+    good = encode(1, b"abc")
     with pytest.raises(ValueError, match="truncated tar"):
-        _decode([good[:700]])
+        _members(good[:700])
     # drop the second end block
     with pytest.raises(ValueError, match="second end block"):
-        _decode([good[:-512]])
+        _members(good[:-512])
     # non-ustar magic
     bad = bytearray(good)
     bad[257:263] = b"gnutar"
     with pytest.raises(ValueError, match="not a ustar"):
-        _decode([bytes(bad)])
+        _members(bytes(bad))
 
 
 def test_stdlib_written_tar_is_accepted():
@@ -103,14 +97,15 @@ def test_stdlib_written_tar_is_accepted():
     info.mtime = 0
     tf.addfile(info, io.BytesIO(data))
     tf.close()
-    out = _decode([buf.getvalue()])
+    out = _members(buf.getvalue())
     assert list(out.name) == ["doc9/text.txt"]
     assert out.n_bytes[0] == len(data)
     assert out.sum_bytes[0] == sum(data)
 
 
-def test_empty_batch_yields_typed_empty_frame():
-    out = _decode([])
+def test_empty_batch_yields_typed_empty_frame(codec_kernel):
+    kernel, _ = codec_kernel(tar_shard_members)
+    (out,) = kernel([pd.DataFrame({"doc_id": [], "payload": []})])
     assert len(out) == 0
     assert list(out.columns) == [
         "doc_id",

@@ -1,5 +1,5 @@
-"""RIFF/PCM WAV codec kernels (multimodal.decode_audio_wav), driven
-directly through the production factories — no Spark session needed.
+"""RIFF/PCM WAV codec (multimodal.decode_audio_wav), driven directly
+through the production per-row functions — no Spark session needed.
 
 The decoder must be a REAL RIFF parser: word-aligned chunk traversal
 (odd chunks carry a pad byte — the encoder plants an odd LIST chunk to
@@ -12,27 +12,24 @@ from __future__ import annotations
 import io
 import struct
 import wave
+from collections import namedtuple
 
 import numpy as np
 import pandas as pd
 import pytest
 
 from simple_map_reduce_ruuner_spark.operators.multimodal import (
-    _wav_decode_fn,
-    _wav_encode_fn,
+    _wav_codec,
+    decode_audio_wav,
 )
 
-
-def _decode(blobs: list[bytes], ids: list[int] | None = None) -> pd.DataFrame:
-    pdf = pd.DataFrame(
-        {"doc_id": ids or list(range(len(blobs))), "wav": blobs}
-    )
-    return pd.concat(list(_wav_decode_fn()([pdf])), ignore_index=True)
+encode, decode = _wav_codec()
+Row = namedtuple("Row", "sample_rate channels n_frames mean_milli peak")
 
 
-def _encode(payloads: list[bytes], ids: list[int]) -> pd.DataFrame:
-    pdf = pd.DataFrame({"doc_id": ids, "payload": payloads})
-    return pd.concat(list(_wav_encode_fn()([pdf])), ignore_index=True)
+def _row(blob: bytes) -> Row:
+    [row] = decode(blob)
+    return Row(*row)
 
 
 def _wav(ch: int, rate: int, samples: np.ndarray, extra: bytes = b"") -> bytes:
@@ -47,10 +44,8 @@ def _wav(ch: int, rate: int, samples: np.ndarray, extra: bytes = b"") -> bytes:
 
 
 def test_roundtrip_inverts_encoder():
-    enc = _encode([b"xyz", b""], [1, 2])
-    out = _decode(list(enc["wav"]), list(enc["doc_id"]))
     # doc 1: ch=1+1%2=2, rate=8000*(1+1%3)=16000, frames=40+1%30=41
-    row = out[out.doc_id == 1].iloc[0]
+    row = _row(encode(1, b"xyz"))
     assert (row.sample_rate, row.channels, row.n_frames) == (16000, 2, 41)
     b = np.resize(np.frombuffer(b"xyz", np.uint8), 41 * 2).astype(np.int64)
     s = (b - 128) * 256
@@ -58,7 +53,7 @@ def test_roundtrip_inverts_encoder():
     want_mean = -(abs(tot) // s.size) if tot < 0 else tot // s.size
     assert (row.mean_milli, row.peak) == (want_mean, int(s.max()))
     # doc 2 (empty text): zero bytes -> every sample is (0-128)*256
-    row = out[out.doc_id == 2].iloc[0]
+    row = _row(encode(2, b""))
     assert (row.sample_rate, row.channels, row.n_frames) == (24000, 1, 42)
     assert (row.mean_milli, row.peak) == (-32768 * 1000, -32768)
 
@@ -68,9 +63,9 @@ def test_word_aligned_chunk_traversal():
     walker — RIFF pads chunks to word boundaries."""
     s = np.array([100, -200, 300, -400], dtype=np.int64)
     odd = b"JUNK" + struct.pack("<I", 3) + b"abc" + b"\x00"  # 3-byte chunk + pad
-    out = _decode([_wav(1, 8000, s, extra=odd)])
-    assert out.n_frames[0] == 4
-    assert out.peak[0] == 300
+    out = _row(_wav(1, 8000, s, extra=odd))
+    assert out.n_frames == 4
+    assert out.peak == 300
 
 
 def test_kernel_matches_stdlib_wave_module():
@@ -83,9 +78,9 @@ def test_kernel_matches_stdlib_wave_module():
         .tobytes()
         for _ in ids
     ]
-    enc = _encode(payloads, ids)
-    got = _decode(list(enc["wav"]), list(enc["doc_id"]))
-    for blob, row in zip(enc["wav"], got.itertuples()):
+    for doc_id, payload in zip(ids, payloads):
+        blob = encode(doc_id, payload)
+        row = _row(blob)
         with wave.open(io.BytesIO(blob)) as w:
             assert w.getsampwidth() == 2
             shape = (w.getframerate(), w.getnchannels(), w.getnframes())
@@ -101,33 +96,33 @@ def test_negative_mean_truncates_toward_zero():
     """DuckDB's integer // truncates toward zero; the kernel must match
     or every negative-mean doc hash-mismatches the oracle."""
     s = np.array([-3, -4], dtype=np.int64)  # sum=-7, *1000 // 2
-    out = _decode([_wav(1, 8000, s)])
-    assert out.mean_milli[0] == -3500
+    out = _row(_wav(1, 8000, s))
+    assert out.mean_milli == -3500
     s = np.array([-7, 0], dtype=np.int64)  # -7000/2 = -3500 exact
-    out = _decode([_wav(1, 8000, s)])
-    assert out.mean_milli[0] == -3500
+    out = _row(_wav(1, 8000, s))
+    assert out.mean_milli == -3500
     s = np.array([-7, -7, -7], dtype=np.int64)  # -21000/3 = -7000
-    out = _decode([_wav(1, 8000, s)])
-    assert out.mean_milli[0] == -7000
+    out = _row(_wav(1, 8000, s))
+    assert out.mean_milli == -7000
     s = np.array([-1, 0, 0], dtype=np.int64)  # -1000/3 -> -333 (not -334)
-    out = _decode([_wav(1, 8000, s)])
-    assert out.mean_milli[0] == -333
+    out = _row(_wav(1, 8000, s))
+    assert out.mean_milli == -333
 
 
 def test_parser_rejects_invalid_input():
     s = np.zeros(4, dtype=np.int64)
     good = _wav(2, 8000, s)
     with pytest.raises(ValueError, match="not a RIFF/WAVE"):
-        _decode([b"OggS" + good[4:]])
+        _row(b"OggS" + good[4:])
     with pytest.raises(ValueError, match="not a RIFF/WAVE"):
-        _decode([good[:8] + b"AVI " + good[12:]])
+        _row(good[:8] + b"AVI " + good[12:])
     with pytest.raises(ValueError, match="truncated WAV"):
-        _decode([good[:-4]])  # RIFF size now points past end
+        _row(good[:-4])  # RIFF size now points past end
     # non-PCM format tag
     bad_fmt = bytearray(good)
     bad_fmt[20] = 3  # IEEE float tag
     with pytest.raises(ValueError, match="unsupported WAV"):
-        _decode([bytes(bad_fmt)])
+        _row(bytes(bad_fmt))
     # data length not a multiple of block align (stereo, 1.5 frames)
     fmt = struct.pack("<HHIIHH", 1, 2, 8000, 8000 * 4, 4, 16)
     body = (
@@ -137,11 +132,12 @@ def test_parser_rejects_invalid_input():
     )
     broken = b"RIFF" + struct.pack("<I", len(body)) + body
     with pytest.raises(ValueError, match="block align"):
-        _decode([broken])
+        _row(broken)
 
 
-def test_empty_batch_yields_typed_empty_frame():
-    out = _decode([])
+def test_empty_batch_yields_typed_empty_frame(codec_kernel):
+    kernel, _ = codec_kernel(decode_audio_wav)
+    (out,) = kernel([pd.DataFrame({"doc_id": [], "payload": []})])
     assert len(out) == 0
     assert list(out.columns) == [
         "doc_id",

@@ -16,27 +16,22 @@ import pytest
 
 from simple_map_reduce_ruuner_spark.operators.codecs import (
     XZ_HEAD_BYTES,
-    _xz_decode_fn,
-    _xz_encode_fn,
+    _xz_codec,
+    xz_block_stats,
 )
 
-
-def _encode(payloads: list[bytes], ids: list[int]) -> pd.DataFrame:
-    pdf = pd.DataFrame({"doc_id": ids, "payload": payloads})
-    return pd.concat(list(_xz_encode_fn()([pdf])), ignore_index=True)
+encode, decode = _xz_codec()
 
 
-def _decode(blobs: list[bytes], ids: list[int] | None = None) -> pd.DataFrame:
-    pdf = pd.DataFrame({"doc_id": ids or list(range(len(blobs))), "xz": blobs})
-    return pd.concat(list(_xz_decode_fn()([pdf])), ignore_index=True)
+def _blocks(blob: bytes) -> pd.DataFrame:
+    return pd.DataFrame(decode(blob), columns=["block_idx", "n_bytes", "sum_bytes"])
 
 
 def test_roundtrip_two_blocks_and_stats():
     payloads = [b"xz me please", b"", bytes(range(200))]
     ids = [0, 4, 11]
-    out = _decode(list(_encode(payloads, ids)["xz"]), ids)
     for d, p in zip(ids, payloads):
-        rows = out[out.doc_id == d].sort_values("block_idx")
+        rows = _blocks(encode(d, p))
         assert list(rows.block_idx) == [0, 1]
         head = (
             np.resize(np.frombuffer(p, np.uint8), XZ_HEAD_BYTES)
@@ -55,7 +50,7 @@ def test_third_party_lzma_reads_our_streams():
     to text + head — liblzma validating every container byte we wrote
     (stream header, block headers, index, footer)."""
     payload = b"interop payload " * 10
-    blob = bytes(_encode([payload], [5])["xz"][0])
+    blob = encode(5, payload)
     head = np.resize(np.frombuffer(payload, np.uint8), XZ_HEAD_BYTES).tobytes()
     assert lzma.decompress(blob) == payload + head
 
@@ -72,7 +67,7 @@ def test_our_parser_reads_stdlib_streams_all_check_types():
         lzma.CHECK_NONE,
     ):
         blob = lzma.compress(data, check=check)
-        out = _decode([blob])
+        out = _blocks(blob)
         assert list(out.block_idx) == [0]
         assert out.n_bytes[0] == len(data)
         assert out.sum_bytes[0] == int(np.frombuffer(data, np.uint8).sum())
@@ -83,10 +78,10 @@ def test_concatenated_streams_with_stream_padding():
     forward order (spec §2.2); misaligned padding is rejected."""
     a, b = b"first stream", b"second stream!"
     blob = lzma.compress(a) + b"\x00" * 8 + lzma.compress(b)
-    out = _decode([blob])
+    out = _blocks(blob)
     assert list(out.n_bytes) == [len(a), len(b)]
     with pytest.raises(ValueError, match="footer magic"):
-        _decode([lzma.compress(a) + b"\x00" * 3 + lzma.compress(b)])
+        _blocks(lzma.compress(a) + b"\x00" * 3 + lzma.compress(b))
 
 
 def test_index_drives_block_positions():
@@ -94,7 +89,7 @@ def test_index_drives_block_positions():
     must be caught — first by the index CRC, then, when the CRC is
     recomputed to match, by the per-block verification. Proves the
     parser really reads positions from the index, not by scanning."""
-    blob = bytearray(bytes(_encode([b"position me " * 20], [3])["xz"][0]))
+    blob = bytearray(encode(3, b"position me " * 20))
     # locate index: footer backward-size points at it
     (bw,) = struct.unpack("<I", bytes(blob[-8:-4]))
     idx_size = (bw + 1) * 4
@@ -103,18 +98,18 @@ def test_index_drives_block_positions():
     # count=2, first record's unpadded-size varint starts at idx_start+2
     blob[idx_start + 2] ^= 0x01
     with pytest.raises(ValueError, match="index CRC"):
-        _decode([bytes(blob)])
+        _blocks(bytes(blob))
     # recompute the index CRC so the corrupted record is "valid"
     body = bytes(blob[idx_start : idx_start + idx_size - 4])
     blob[idx_start + idx_size - 4 : idx_start + idx_size] = struct.pack(
         "<I", zlib.crc32(body)
     )
     with pytest.raises(ValueError):
-        _decode([bytes(blob)])
+        _blocks(bytes(blob))
 
 
 def test_parser_rejections():
-    blob = bytes(_encode([b"some payload"], [1])["xz"][0])
+    blob = encode(1, b"some payload")
 
     for bad, msg in [
         (b"", "empty"),
@@ -124,19 +119,19 @@ def test_parser_rejections():
         (b"\xfd8zXZ\x00" + blob[6:], "stream header magic"),
     ]:
         with pytest.raises(ValueError, match=msg):
-            _decode([bad])
+            _blocks(bad)
 
     # flip a block-header byte: its CRC32 must catch it
     b2 = bytearray(blob)
     b2[13] ^= 0x10  # inside first block header (stream header is 12 bytes)
     with pytest.raises(ValueError, match="block header CRC|reserved"):
-        _decode([bytes(b2)])
+        _blocks(bytes(b2))
 
     # flip one compressed byte: LZMA2 or the CRC32 check must catch it
     b3 = bytearray(blob)
     b3[30] ^= 0x01
     with pytest.raises(ValueError):
-        _decode([bytes(b3)])
+        _blocks(bytes(b3))
 
 
 def test_oversized_props_varint_rejected_not_indexerror():
@@ -144,7 +139,7 @@ def test_oversized_props_varint_rejected_not_indexerror():
     region (header CRC recomputed so the author-controlled CRC check
     passes) must raise ValueError, not IndexError (review-found: an
     empty props slice used to hit props[0])."""
-    blob = bytearray(bytes(_encode([b"guard me " * 8], [2])["xz"][0]))
+    blob = bytearray(encode(2, b"guard me " * 8))
     # first block header starts after the 12-byte stream header
     hsz = (blob[12] + 1) * 4
     hdr = bytearray(blob[12 : 12 + hsz])
@@ -154,7 +149,7 @@ def test_oversized_props_varint_rejected_not_indexerror():
     hdr[-4:] = struct.pack("<I", zlib.crc32(bytes(hdr[:-4])))
     blob[12 : 12 + hsz] = hdr
     with pytest.raises(ValueError, match="props length"):
-        _decode([bytes(blob)])
+        _blocks(bytes(blob))
 
 
 def test_bomb_guard_caps_inflated_size():
@@ -162,13 +157,11 @@ def test_bomb_guard_caps_inflated_size():
     bound, not after allocating the whole expansion."""
     big = lzma.compress(b"\x00" * ((1 << 24) + 512))
     with pytest.raises(ValueError, match="too large"):
-        _decode([big])
+        _blocks(big)
 
 
-def test_empty_batch_yields_typed_empty_frame():
-    out = pd.concat(
-        list(_xz_decode_fn()([pd.DataFrame({"doc_id": [], "xz": []})])),
-        ignore_index=True,
-    )
+def test_empty_batch_yields_typed_empty_frame(codec_kernel):
+    kernel, _ = codec_kernel(xz_block_stats)
+    (out,) = kernel([pd.DataFrame({"doc_id": [], "payload": []})])
     assert list(out.columns) == ["doc_id", "block_idx", "n_bytes", "sum_bytes"]
     assert len(out) == 0

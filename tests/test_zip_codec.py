@@ -16,27 +16,24 @@ import pytest
 
 from simple_map_reduce_ruuner_spark.operators.codecs import (
     ZIP_HEAD_BYTES,
-    _zip_decode_fn,
-    _zip_encode_fn,
+    _zip_codec,
+    zip_shard_members,
 )
 
-
-def _encode(payloads: list[bytes], ids: list[int]) -> pd.DataFrame:
-    pdf = pd.DataFrame({"doc_id": ids, "payload": payloads})
-    return pd.concat(list(_zip_encode_fn()([pdf])), ignore_index=True)
+encode, decode = _zip_codec()
 
 
-def _decode(blobs: list[bytes], ids: list[int] | None = None) -> pd.DataFrame:
-    pdf = pd.DataFrame({"doc_id": ids or list(range(len(blobs))), "zip": blobs})
-    return pd.concat(list(_zip_decode_fn()([pdf])), ignore_index=True)
+def _members(blob: bytes) -> pd.DataFrame:
+    return pd.DataFrame(
+        decode(blob), columns=["member_idx", "name", "n_bytes", "sum_bytes"]
+    )
 
 
 def test_roundtrip_members_and_stats():
     payloads = [b"hello zip world", b"", bytes(range(256))]
     ids = [0, 3, 9]
-    out = _decode(list(_encode(payloads, ids)["zip"]), ids)
     for d, p in zip(ids, payloads):
-        rows = out[out.doc_id == d].sort_values("member_idx")
+        rows = _members(encode(d, p))
         assert list(rows.name) == [
             f"doc{d}/text.txt", f"doc{d}/head.bin", f"doc{d}/meta.txt",
         ]
@@ -58,7 +55,7 @@ def test_third_party_zipfile_reads_our_archives():
     return byte-identical member contents — including the DEFLATED
     text member and the local-extra-field trap on head.bin."""
     payload = b"the quick brown fox " * 20
-    blob = bytes(_encode([payload], [7])["zip"][0])
+    blob = encode(7, payload)
     with zipfile.ZipFile(io.BytesIO(blob)) as zf:
         assert zf.testzip() is None  # all CRCs good
         assert zf.comment == b"smrr-zip"
@@ -88,7 +85,7 @@ def test_our_parser_reads_zipfile_written_archives():
             zipfile.ZipInfo("b.txt"), b, compress_type=zipfile.ZIP_DEFLATED
         )
         zf.comment = b"third party"
-    out = _decode([buf.getvalue()])
+    out = _members(buf.getvalue())
     assert list(out.name) == ["a.bin", "b.txt"]
     assert list(out.n_bytes) == [len(a), len(b)]
     assert list(out.sum_bytes) == [
@@ -98,24 +95,24 @@ def test_our_parser_reads_zipfile_written_archives():
 
 
 def test_parser_rejections():
-    blob = bytearray(_encode([b"payload bytes here"], [1])["zip"][0])
+    blob = bytearray(encode(1, b"payload bytes here"))
 
     with pytest.raises(ValueError, match="end-of-central-directory"):
-        _decode([bytes(blob) + b"trailing garbage"])
+        _members(bytes(blob) + b"trailing garbage")
     with pytest.raises(ValueError, match="end-of-central-directory"):
-        _decode([b"PK\x03\x04 not really a zip"])
+        _members(b"PK\x03\x04 not really a zip")
 
     # flip one byte of the deflated text data -> deflate or CRC error
     data_off = bytes(blob).find(b"doc1/text.txt") + len(b"doc1/text.txt")
     corrupt = bytearray(blob)
     corrupt[data_off + 2] ^= 0xFF
     with pytest.raises(ValueError, match="deflate|CRC"):
-        _decode([bytes(corrupt)])
+        _members(bytes(corrupt))
 
     # truncation inside member data
     eocd = bytes(blob).rfind(b"PK\x05\x06")
     with pytest.raises(ValueError, match="truncated|end-of-central"):
-        _decode([bytes(blob)[: eocd // 2]])
+        _members(bytes(blob)[: eocd // 2])
 
     # encrypted flag set in a central entry
     enc = bytearray(blob)
@@ -123,25 +120,23 @@ def test_parser_rejections():
     flags_at = cd + 8
     enc[flags_at] |= 0x1
     with pytest.raises(ValueError, match="encrypted"):
-        _decode([bytes(enc)])
+        _members(bytes(enc))
 
 
 def test_bomb_guard_rejects_before_allocating():
     """A central entry declaring a multi-GB uncompressed size must be
     rejected from the declared size alone — no decompression attempt."""
-    blob = bytearray(_encode([b"x" * 100], [2])["zip"][0])
+    blob = bytearray(encode(2, b"x" * 100))
     cd = bytes(blob).find(b"PK\x01\x02")
     # central usize field is at offset 24 within the 46-byte header
     struct.pack_into("<I", blob, cd + 24, 1 << 31)
     with pytest.raises(ValueError, match="too large"):
-        _decode([bytes(blob)])
+        _members(bytes(blob))
 
 
-def test_empty_batch_yields_typed_empty_frame():
-    out = pd.concat(
-        list(_zip_decode_fn()([pd.DataFrame({"doc_id": [], "zip": []})])),
-        ignore_index=True,
-    )
+def test_empty_batch_yields_typed_empty_frame(codec_kernel):
+    kernel, _ = codec_kernel(zip_shard_members)
+    (out,) = kernel([pd.DataFrame({"doc_id": [], "payload": []})])
     assert list(out.columns) == [
         "doc_id", "member_idx", "name", "n_bytes", "sum_bytes",
     ]

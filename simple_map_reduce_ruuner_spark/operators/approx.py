@@ -367,7 +367,8 @@ def bloom_index_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     family, fill ratio and predicted false-positive rate in ppm —
     the numbers a 100 TB deployment uses to size per-partition bloom
     indexes for scan pruning (and the deterministic twin of the AQE
-    runtime bloom join measured in BLOOM_FILTER_r13.json).
+    runtime bloom join, which cut probe-side shuffle records 129× at
+    20× sf0.1; ``git show ffa0b7b:BLOOM_FILTER_r13.json``).
 
     Exact-oracle sketch, same pattern as the count-min: bits_set is a
     COUNT DISTINCT over (hash_i(token) % BLOOM_BITS), fully replayable;
@@ -409,8 +410,8 @@ def bloom_index_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # "token hashes", not tokens: the count is distinct over the 60-bit
     # portable hash, so a (vanishingly rare) hash collision undercounts
-    # by one — the same semantics the filter itself sees (ADVICE r14:
-    # the old n_tokens name overstated what is measured)
+    # by one — the same semantics the filter itself sees (the old
+    # n_tokens name overstated what is measured)
     distinct_tokens = uniq.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_token_hashes")
     )

@@ -2,7 +2,8 @@
 
 ``textlm.bpe_encode_docs`` re-runs the k-iteration greedy merge chain on
 every invocation (train+apply in one query — the correctness anchor, and
-the most expensive addition of its round at 2.7 s in BENCH_FULL_r15).
+the most expensive addition of its round, 2.6 s on its first sf0.1
+rep; ``git show ffa0b7b:BENCH_FULL_r15.json``).
 A deployment trains once and tokenizes many corpora/batches with the
 frozen merge table, exactly the way ``ivf.build_ivf_index`` amortizes
 the N×C assignment pass. This module is that shape:

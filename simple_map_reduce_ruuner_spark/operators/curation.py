@@ -139,8 +139,9 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the old two-branch form tokenized the corpus twice (the interpreted
     higher-order split is the CPU hot spot) and joined the two per-doc
     aggregates back — one tokenize, two exchanges, and conditional
-    aggregation replaces the join (guide §2.4;
-    plans/r15/repetition_stats_before.txt shows the doubled subtree).
+    aggregation replaces the join (guide §2.4; the doubled subtree
+    had 7 exchanges,
+    ``git show ffa0b7b:plans/r15/repetition_stats_before.txt``).
     """
     docs = spread_scan(load_table(spark, sf_dir, "documents"), key="doc_id")
     toks = docs.select("doc_id", tokens(F.col("text")).alias("toks"))

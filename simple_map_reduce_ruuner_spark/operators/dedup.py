@@ -539,8 +539,8 @@ def _simhash_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     coverage is exactly the explode form's.
 
     Measured 100× (cold session, the row carries the signature-
-    checkpoint materialization; ``git show
-    68922be:SCALE_CURVE_100X_r09.json``, simhash 6.474 s): r8 explode
+    checkpoint materialization;
+    ``git show 68922be:SCALE_CURVE_100X_r09.json``, simhash 6.474 s): r8 explode
     70.3 s → two-shuffle kernel 47.4 s → this form 6.5 s, with
     simhash_band_pairs riding the shared signatures 62.8 → 17.6 s —
     family total 110 → 24 s.

@@ -30,11 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from simple_map_reduce_ruuner_spark.registry import Query
-from simple_map_reduce_ruuner_spark.sources.tables import (
-    ckpt,
-    load_table,
-    session_cache,
-)
+from simple_map_reduce_ruuner_spark.sources.tables import load_table, session_cache
 
 PR_ITERS = 5
 SCALE_FEMTO = 10**15  # rank unit = 1e-15
@@ -96,8 +92,8 @@ def pagerank_trading(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same data work rides the action's own job graph (no extra
     # job-scheduling round-trips, stages overlap). Construction is NOT
     # free even when lazy: localCheckpoint still compiles the physical
-    # plan at call time (~0.5 s of driver-side planning per call — the
-    # repo's BPE-chain finding; ADVICE r15). Measured interleaved
+    # plan at call time (~0.5 s of driver-side planning per call, as
+    # measured on the BPE chain). Measured interleaved
     # A/B at sf0.1 (4 reps, identical results): eager 4.87 s vs lazy
     # 4.44 s per invocation; dropping the nodes checkpoint instead
     # LOSES (5.28 s) because deg is re-derived per unrolled consumer.
@@ -109,25 +105,35 @@ def pagerank_trading(spark: SparkSession, sf_dir: str) -> DataFrame:
     # path: ``git show d3c6a43:OPTIMIZATION_r16.md``). This form delegates the
     # per-scale join strategy to AQE (broadcast at bench scale,
     # sort-merge when |V| outgrows it), which measured best end to end.
-    edges = ckpt(_edges(spark, sf_dir), eager=False)
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    n_nodes = deg.select(F.count(F.lit(1)).alias("n"))
+    #
+    # Both checkpoints are session memo entries ("pagerank_edges",
+    # "pagerank_nodes"): a later call in the session reuses their
+    # blocks, and clear_session_caches frees them (a dropped checkpoint
+    # stays pinned for the rest of the application).
+    edges = session_cache(
+        spark, sf_dir, "pagerank_edges", lambda: _edges(spark, sf_dir)
+    )
 
     # every node appears as src (undirected), so deg == full node set.
     # |V| is attached HERE, once, into the checkpointed node table: the
     # old plan re-joined the 1-row broadcast(n_nodes) inside every
     # iteration, putting 6 BroadcastNestedLoopJoin + broadcast-exchange
-    # pairs (each a driver round-trip) into the unrolled DAG — 56
-    # Exchange nodes total (plans/r15/pagerank_trading_before.txt).
+    # pairs (each a driver round-trip) into the unrolled DAG — 28
+    # exchanges total
+    # (``git show ffa0b7b:plans/r15/pagerank_trading_before.txt``).
     # With (node, outdeg, n) materialized once, each iteration is just
     # contribute → aggregate → re-attach (guide §2.4: remove repeated
     # work the optimizer cannot dedupe across an unrolled loop).
-    nodes = ckpt(
-        deg.select(F.col("src").alias("node"), "outdeg")
-        .join(F.broadcast(n_nodes))
-        .sortWithinPartitions("node"),
-        eager=False,
-    )
+    def node_table() -> DataFrame:
+        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+        n_nodes = deg.select(F.count(F.lit(1)).alias("n"))
+        return (
+            deg.select(F.col("src").alias("node"), "outdeg")
+            .join(F.broadcast(n_nodes))
+            .sortWithinPartitions("node")
+        )
+
+    nodes = session_cache(spark, sf_dir, "pagerank_nodes", node_table)
 
     ranks = nodes.select(
         "node",

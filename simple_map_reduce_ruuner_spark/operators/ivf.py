@@ -2,10 +2,12 @@
 
 ``similarity.ann_topk_ivf`` re-runs its N×C coarse-quantization pass on
 every invocation and ranks cells against *untrained* stand-in centroids
-(the first N_CELLS vectors). The committed recall sweep
-(ANN_RECALL_CURVE_r14.json) measured both consequences at 20k/200k
-vectors: the assignment pass dominates wall clock at high cell counts,
-and the first-N quantizer's recall degrades (0.78–0.88 at C≈sqrt(N)).
+(the first N_CELLS vectors). A recall sweep
+(``git show ffa0b7b:ANN_RECALL_CURVE_r14.json``) measured both
+consequences at 20k/200k vectors: the assignment pass dominates wall
+clock at high cell counts (46–63 s per query at C=447, N=200k, vs 5–7 s
+at C=16), and the first-N quantizer's recall degrades (0.78–0.88 at
+C≈sqrt(N)).
 This module is the deployable shape:
 
 - :func:`build_ivf_index` — the amortized offline pass. Trains
@@ -115,9 +117,10 @@ def build_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     kernel, no shuffle — centroids replicate to each ≤50k-row group)
     around one Lloyd update (C×DIM-bounded shuffles) and one join to
     attach raw embeddings to the postings — all one-time; every probe
-    afterwards reads only the probed cells. This is the pass
-    ANN_RECALL_CURVE_r14.json measured dominating per-query wall clock
-    when re-run inline; here it is paid once per corpus. The oracle
+    afterwards reads only the probed cells. This is the pass that
+    dominated per-query wall clock when re-run inline (46–63 s at
+    C=447, N=200k; ``git show ffa0b7b:ANN_RECALL_CURVE_r14.json``);
+    here it is paid once per corpus. The oracle
     replays exactly this seed-assign → update → re-assign pipeline.
     """
     base = os.environ.get("SMRR_IVF_INDEX_DIR") or os.path.join(

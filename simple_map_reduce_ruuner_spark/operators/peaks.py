@@ -121,7 +121,8 @@ def peak_concurrency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # projections form duplicated the whole upstream subtree (scan →
     # (op, number) exchange → 2 windows → merge aggregate) into each
     # union branch — the plan ran the island merge twice (guide §2.4,
-    # remove duplicated work; measured in plans/r15/*_before.txt).
+    # remove duplicated work; 6 exchanges → 3,
+    # ``git show ffa0b7b:plans/r15/peak_concurrency_sweep_before.txt``).
     deltas = merged.select(
         "op",
         F.explode(

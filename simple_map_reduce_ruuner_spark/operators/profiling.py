@@ -244,7 +244,9 @@ def value_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (to share its exchange) was tried and measured a NO-OP — Catalyst
     # prunes the aggregate back out of the domain branch
     # (RemoveRedundantAggregates), leaving the same 1-column pruned
-    # scan either way; plans/r15/value_drift_psi_{before,after}.txt
+    # scan either way, 11 exchanges before and after
+    # (``git show ffa0b7b:plans/r15/value_drift_psi_before.txt``,
+    # ``git show ffa0b7b:plans/r15/value_drift_psi_after.txt``)
     domain = (
         ev.select("event_type")
         .distinct()

@@ -666,8 +666,8 @@ def ols_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rolling_hour_value) and truncate-divide to whole seconds. Spark
     # DIV and DuckDB // BOTH truncate toward zero (DuckDB -7 // 2 =
     # -3, measured — it is NOT Python floor division), so the parity
-    # holds even for timestamps before the origin (ADVICE r14: an
-    # earlier comment claimed it relied on the positive domain).
+    # holds even for timestamps before the origin (it does not rely on
+    # a positive domain).
     us = F.timestamp_diff(
         "MICROSECOND", F.lit(OLS_ORIGIN_TS).cast("timestamp_ntz"), F.col("ts")
     )

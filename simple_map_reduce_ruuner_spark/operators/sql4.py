@@ -139,8 +139,8 @@ def _size_recursion_row_limit(spark: SparkSession, sf_dir: str) -> None:
     same mechanism as the dedup anchor guards. The default 10⁶ cap is a
     runaway-recursion guard, and a tree walk bounded a priori deserves
     a bound, not the default: at 10× sf0.1 the walk legitimately
-    produces ~2×10⁶ rows (200k parts tripped the 10⁶ default, ``git
-    show 81f98e6:SCALE_CURVE_r08.json``). Never lowers
+    produces ~2×10⁶ rows (200k parts tripped the 10⁶ default,
+    ``git show 81f98e6:SCALE_CURVE_r08.json``). Never lowers
     a USER-configured value; our own earlier raises do not ratchet (a
     later small-sf call sizes the cap back down). Set-then-restore is
     not an option because the conf is read when the returned DataFrame

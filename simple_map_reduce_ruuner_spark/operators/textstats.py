@@ -257,7 +257,7 @@ def tfidf_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate branch) — a r16 single-tokenize rewrite that derived df
     FROM tf over one shared pair-grain exchange measured +0.2 s at
     sf0.1 (the added exchange outweighs the ~0.1 s distributed
-    tokenize; receipts in OPTIMIZATION_r16.md), so the two-branch form
+    tokenize; ``git show ffa0b7b:OPTIMIZATION_r16.md``), so the two-branch form
     stays. Determinism note: the tiebreak-free raw doubles are emitted
     ROUNDed only at output and nothing ranks on them — rank-crossing
     float hazards (libm ulp differences) can't affect the result set.

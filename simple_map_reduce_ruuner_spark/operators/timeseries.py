@@ -297,12 +297,13 @@ def session_overlap_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate and the ranked window below, and the old union-of-two-
     # projections form additionally duplicated the subtree per branch —
     # the session-window aggregation (scan + user_id shuffle) appeared
-    # 4× in the physical plan (plans/r15/session_overlap_counts_before
-    # .txt: 18 Exchanges). Exploding both axis rows out of one pass and
-    # materializing sessions once (serialized MEMORY_AND_DISK blocks,
-    # within this one query execution) makes it run once (guide §2.4).
+    # 4× in the physical plan, 9 exchanges in all
+    # (``git show ffa0b7b:plans/r15/session_overlap_counts_before.txt``).
+    # Exploding both axis rows out of one pass and materializing
+    # sessions once (serialized MEMORY_AND_DISK blocks, within this one
+    # query execution) makes it run once (guide §2.4).
     #
-    # r16 NULL RESULT (receipts in OPTIMIZATION_r16.md): moving the
+    # r16 NULL RESULT (``git show ffa0b7b:OPTIMIZATION_r16.md``): moving the
     # checkpoint UP to the bucket-repartitioned axis (partitioning
     # preserved, one exchange shared by the offset aggregate and the
     # ranked window; naive exchange-sharing fails twice over — the

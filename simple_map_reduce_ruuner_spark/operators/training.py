@@ -231,9 +231,10 @@ def webdataset_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (512-byte header + payload rounded up to 512) is prefix-summed in
     doc_id order and the doc lands in shard ``floor(cum_before /
     SHARD_TARGET_BYTES)`` — virtual-offset packing, the hash-checkable
-    twin of the greedy per-writer packer measured in
-    WEBDATASET_WRITE_r13.json. Output
-    is per-shard metadata: member count, payload bytes, and the exact
+    twin of the greedy per-writer packer (50k docs into 30 shards,
+    83 % within 10 % of target;
+    ``git show ffa0b7b:WEBDATASET_WRITE_r13.json``). Output is
+    per-shard metadata: member count, payload bytes, and the exact
     archive size those members produce (entries + 1024-byte end marker).
 
     Scale shape: NO global window. The prefix sum runs per

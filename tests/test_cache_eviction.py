@@ -45,6 +45,10 @@ def _rows(df) -> list[tuple]:
     return sorted(map(tuple, df.collect()))
 
 
+def _persistent(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def test_clear_frees_checkpoints_and_broadcasts(spark, sf_dir, monkeypatch):
     """Dropping a memo's reference frees nothing (an executed, dropped
     localCheckpoint stays in getPersistentRDDs()), so the clear must
@@ -53,18 +57,14 @@ def test_clear_frees_checkpoints_and_broadcasts(spark, sf_dir, monkeypatch):
     from simple_map_reduce_ruuner_spark.operators import dedup, graph
 
     sc = spark.sparkContext
-
-    def persistent() -> set[int]:
-        return set(sc._jsc.getPersistentRDDs().keySet())
-
     clear_session_caches()  # entries built by earlier tests would hide the adds
-    before = persistent()
+    before = _persistent(spark)
     sim = _rows(dedup.simhash(spark, sf_dir))
     cot = _rows(graph._cotrading_counts(spark, sf_dir))
-    added = persistent() - before
+    added = _persistent(spark) - before
     assert added, "simhash and _cotrading_counts pin no checkpoint"
     clear_session_caches()
-    assert not added & persistent()
+    assert not added & _persistent(spark)
 
     made = []
     broadcast = sc.broadcast
@@ -84,6 +84,24 @@ def test_clear_frees_checkpoints_and_broadcasts(spark, sf_dir, monkeypatch):
     # queries rebuilt after the clear give the same rows
     assert _rows(dedup.simhash(spark, sf_dir)) == sim
     assert _rows(graph._cotrading_counts(spark, sf_dir)) == cot
+
+
+def test_pagerank_checkpoints_are_store_entries(spark, sf_dir):
+    """pagerank_trading's edge and node checkpoints belong to the store:
+    a second executed call pins no more RDDs than the first, and the
+    clear frees every RDD the calls pinned."""
+    from simple_map_reduce_ruuner_spark.operators import graph
+
+    clear_session_caches()
+    before = _persistent(spark)
+    first = _rows(graph.pagerank_trading(spark, sf_dir))
+    after_one = _persistent(spark) - before
+    assert after_one, "pagerank_trading pins no checkpoint"
+    assert _rows(graph.pagerank_trading(spark, sf_dir)) == first
+    after_two = _persistent(spark) - before
+    assert len(after_two) <= len(after_one), (after_one, after_two)
+    clear_session_caches()
+    assert not after_two & _persistent(spark)
 
 
 def test_session_memos_live_only_in_the_store():

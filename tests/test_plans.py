@@ -729,6 +729,42 @@ CODEC_QUERIES = {
     "zip_shard_members",
 }
 
+# Python operators per query in the executed plan (sf0.001); every
+# query not listed has none. A query may drop below its count, never
+# rise above it.
+PYTHON_NODES = {
+    "ann_recall_report": 2,
+    "ann_topk_ivf": 2,
+    "char_count": 1,
+    "cotrading_triangles": 1,
+    "decode_audio_mulaw": 1,
+    "decode_audio_wav": 1,
+    "decode_image_gif": 1,
+    "decode_image_jpeg": 1,
+    "decode_image_png": 1,
+    "decode_image_ppm": 1,
+    "decode_image_tga": 1,
+    "decode_video_avi": 1,
+    "embedding_quantize": 1,
+    "ewma_value": 1,
+    "frame_sample": 1,
+    "gzip_member_stats": 1,
+    "kmeans_clusters": 2,
+    "neardup_embedding": 1,
+    "neardup_embedding_lsh": 1,
+    "neardup_embedding_lsh_auto": 2,
+    "order_gaps": 1,
+    "payload_byte_stats": 1,
+    "semdedup_pairs": 3,
+    "semdedup_pairs_auto": 3,
+    "sqlite_table_stats": 1,
+    "tar_shard_members": 1,
+    "throttle_suppress": 1,
+    "user_order_context": 1,
+    "xz_block_stats": 1,
+    "zip_shard_members": 1,
+}
+
 
 def test_no_row_at_a_time_python_udfs(spark, sf_dir):
     """Registry-wide invariants on how Python reaches plans:
@@ -739,10 +775,11 @@ def test_no_row_at_a_time_python_udfs(spark, sf_dir):
     - never as two adjacent Python operators: each one is a full
       JVM<->Python round of its input, so a Python node feeding another
       must be one kernel instead;
-    - each codec round trip is exactly one Python operator."""
+    - each codec round trip is exactly one Python operator;
+    - no query has more Python operators than ``PYTHON_NODES`` pins."""
     from simple_map_reduce_ruuner_spark.registry import all_queries
 
-    row_at_a_time, adjacent, codec_nodes = [], [], {}
+    row_at_a_time, adjacent, codec_nodes, gained = [], [], {}, {}
     for name, q in all_queries().items():
         plan = plan_of(q.fn(spark, sf_dir))
         ops = [PYTHON_OP.match(line) for line in plan.splitlines()]
@@ -753,8 +790,12 @@ def test_no_row_at_a_time_python_udfs(spark, sf_dir):
             adjacent.append(name)
         if name in CODEC_QUERIES:
             codec_nodes[name] = [op[1] for op in ops if op]
+        n_python = sum(1 for op in ops if op)
+        if n_python > PYTHON_NODES.get(name, 0):
+            gained[name] = n_python
     assert not row_at_a_time, row_at_a_time
     assert not adjacent, adjacent
+    assert not gained, gained
     assert codec_nodes == {name: ["MapInPandas"] for name in CODEC_QUERIES}
 
 

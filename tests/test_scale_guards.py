@@ -127,7 +127,7 @@ def test_auto_lsh_params_scaling_law():
 def test_recursive_cte_row_cap_sized_from_footer(spark, sf_dir):
     """Spark 4 caps recursive-CTE output at 10⁶ rows by default; the
     digit-hierarchy walks legitimately produce |part| × digits rows, so
-    at 200 k parts (10× sf0.1 — see SCALE_CURVE_r08.json) they
+    at 200 k parts (10× sf0.1; ``git show ffa0b7b:SCALE_CURVE_r08.json``) they
     died with RECURSION_ROW_LIMIT_EXCEEDED. The operators must size the
     cap from the parquet footer BEFORE running: with the cap forced
     below the walk's row count, calling the operator must raise it back

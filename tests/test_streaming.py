@@ -491,7 +491,7 @@ def test_interrupted_file_sink_recovers_exactly_once(spark, sf_dir, tmp_path):
     the committed sink view must equal the batch aggregation exactly — no
     replayed-batch duplicates, no killed-batch loss. In-process twin of
     tools/stream_recovery_probe.py (which SIGKILLs the whole driver+JVM
-    process group and records STREAM_RECOVERY_r13.json); the exactly-once
+    process group); the exactly-once
     mechanics are the checkpoint WAL + the parquet sink's _spark_metadata
     commit log, which spark.read respects."""
     import datetime

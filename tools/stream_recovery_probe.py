@@ -30,7 +30,7 @@ check    the committed sink view (spark.read respects _spark_metadata)
          the killed batch); both counts are published.
 
 Usage: python tools/stream_recovery_probe.py [--sf-dir /root/testdata/sf0.1]
-Writes STREAM_RECOVERY_r13.json at the repo root.
+Prints the JSON record as the last stdout line; writes nothing to the repo.
 """
 
 from __future__ import annotations
@@ -267,11 +267,7 @@ def main() -> int:
             "TUMBLING_COUNTS_SQL oracle over the 8 real source files"
         ),
     }
-    path = REPO / "STREAM_RECOVERY_r13.json"
-    with open(path, "w") as fh:
-        json.dump(doc, fh, indent=1)
-        fh.write("\n")
-    print(f"wrote {path}")
+    print(json.dumps(doc))
     shutil.rmtree(work, ignore_errors=True)
     return 0
 

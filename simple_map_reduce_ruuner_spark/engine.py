@@ -42,6 +42,7 @@ from simple_map_reduce_ruuner_spark.sources.text import (
     read_text_chunked,
     write_text_single,
 )
+from simple_map_reduce_ruuner_spark.sources.tables import release
 
 
 def _as_command(spark: SparkSession, src_path: str, lang: str) -> str:
@@ -128,7 +129,11 @@ def run_job(
         lines = read_text_chunked(spark, data_path, chunk_mb=chunk_mb)
         result = pipe_map_reduce(lines, mapper_cmd, reducer_cmd)
         if out_path is not None:
-            out = write_text_single(result, out_path)
+            # once the output is written nothing reads the map checkpoint
+            try:
+                out = write_text_single(result, out_path)
+            finally:
+                release(result)
     except Exception:
         # reference master surfaces any worker/reducer failure as the
         # "something wrong!" phase (Master.java:186,203; Worker.java:154-158)

@@ -42,7 +42,7 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from simple_map_reduce_ruuner_spark.sources.tables import ckpt
+from simple_map_reduce_ruuner_spark.sources.tables import ckpt, release
 
 # One text column each way, one line per row. The field delimiter is the
 # line delimiter, so a line is never cut at a tab, and NULL is spelled as
@@ -112,6 +112,8 @@ def pipe_map_reduce(
         # The reference runs its reducer over the merged file even when
         # that is empty (Master.java:182-208). TRANSFORM skips an empty
         # partition, so feed one line that the command discards first.
+        # Nothing reads the (empty) map checkpoint from here on.
+        release(mapped)
         empty = df.sparkSession.range(1, numPartitions=1).select(F.lit("").alias("value"))
         return _transform(empty, f"cat >/dev/null; {reducer_cmd}")
     # Global single reduce (reference Master.java:182-208): all mapped

@@ -84,9 +84,9 @@ def build_bpe_merges(spark: SparkSession, sf_dir: str) -> str:
     symbolization for ``sf_dir`` under ``$SMRR_BPE_INDEX_DIR`` (default:
     the temp dir); returns the index directory.
 
-    Cost shape: the k ckpt'd merge iterations run ONCE per corpus
+    Cost shape: the k checkpointed merge iterations run ONCE per corpus
     content (vocabulary-bounded shuffles — see ``bpe_train_merges``);
-    both writes read off the chain's checkpointed final state, so the
+    both writes read off the chain's last checkpointed state, so the
     chain is not re-derived between them. Every later invocation is a
     manifest stat call.
     """

@@ -42,8 +42,8 @@ from simple_map_reduce_ruuner_spark.operators.textstats import (
 from simple_map_reduce_ruuner_spark.operators.relational import dsum
 from simple_map_reduce_ruuner_spark.registry import Query
 from simple_map_reduce_ruuner_spark.sources.tables import (
-    ckpt,
     load_table,
+    session_cache,
     spread_scan,
 )
 
@@ -466,25 +466,12 @@ def mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``winsorized_values`` contract; at 100 TB swap them for the GK
     sketch twin) plus one integer partial/final census aggregate.
     """
-    ev = load_table(spark, sf_dir, "events")
-    x2 = (F.round(F.col("value") * 100) * 2).cast("long")
-    base = ev.select("event_type", x2.alias("x2"))
-    med = base.groupBy("event_type").agg(
-        F.percentile("x2", F.lit(0.5)).cast("long").alias("m2")
-    )
-    # ckpt: devs feeds BOTH the MAD percentile pass and the census —
-    # without it each consumer re-scans events and re-runs the median
-    # join (executed-plan audit: 3 event passes); the lazy checkpoint
-    # materializes the 4 narrow columns once.
-    devs = ckpt(
-        base.join(F.broadcast(med), "event_type").select(
-            "event_type",
-            "x2",
-            "m2",
-            (F.abs(F.col("x2") - F.col("m2")) * 2).alias("dev2"),
-        ),
-        eager=False,
-    )
+    # Store entry "mad_devs" (a lazy checkpoint): devs feeds BOTH the
+    # MAD percentile pass and the census — without it each consumer
+    # re-scans events and re-runs the median join (executed-plan audit:
+    # 3 event passes); the checkpoint materializes the 4 narrow columns
+    # once.
+    devs = session_cache(spark, sf_dir, "mad_devs", lambda: _mad_devs(spark, sf_dir))
     mad = devs.groupBy("event_type").agg(
         F.percentile("dev2", F.lit(0.5)).cast("long").alias("mad4")
     )
@@ -492,7 +479,7 @@ def mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "m2",
         "mad4",
-        (F.col("dev2") * 2 > MAD_K_NUM * F.col("mad4")).alias("is_out"),
+        (F.col("dev2") * MAD_K_DEN > MAD_K_NUM * F.col("mad4")).alias("is_out"),
     )
     return (
         flagged.groupBy("event_type")
@@ -512,6 +499,22 @@ def mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_outliers",
             F.expr("n_outliers * 1000000 div n").alias("outlier_ppm"),
         )
+    )
+
+
+def _mad_devs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, x2, m2, dev2): the input of both MAD passes."""
+    ev = load_table(spark, sf_dir, "events")
+    x2 = (F.round(F.col("value") * 100) * 2).cast("long")
+    base = ev.select("event_type", x2.alias("x2"))
+    med = base.groupBy("event_type").agg(
+        F.percentile("x2", F.lit(0.5)).cast("long").alias("m2")
+    )
+    return base.join(F.broadcast(med), "event_type").select(
+        "event_type",
+        "x2",
+        "m2",
+        (F.abs(F.col("x2") - F.col("m2")) * 2).alias("dev2"),
     )
 
 
@@ -537,9 +540,9 @@ SELECT d.event_type,
        CAST(count(*) AS BIGINT) AS n,
        min(d.m2) * 5 AS median_milli,
        min(a.mad4) * 25 AS mad_e4,
-       CAST(sum(CASE WHEN d.dev2 * 2 > {MAD_K_NUM} * a.mad4
+       CAST(sum(CASE WHEN d.dev2 * {MAD_K_DEN} > {MAD_K_NUM} * a.mad4
                      THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
-       CAST(sum(CASE WHEN d.dev2 * 2 > {MAD_K_NUM} * a.mad4
+       CAST(sum(CASE WHEN d.dev2 * {MAD_K_DEN} > {MAD_K_NUM} * a.mad4
                      THEN 1 ELSE 0 END) * 1000000 // count(*) AS BIGINT)
            AS outlier_ppm
 FROM devs d JOIN mad a USING (event_type)

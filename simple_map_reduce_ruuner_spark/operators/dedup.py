@@ -41,7 +41,6 @@ from simple_map_reduce_ruuner_spark.functions.text import (
 )
 from simple_map_reduce_ruuner_spark.registry import Query
 from simple_map_reduce_ruuner_spark.sources.tables import (
-    ckpt,
     load_table,
     session_cache,
     spread_scan,
@@ -169,22 +168,18 @@ def neardup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"neardup_lsh_verified, which scores only banded-MinHash "
             f"candidate pairs and stays sub-quadratic."
         )
-    # localCheckpoint, NOT .cache(): CacheManager entries outlive the
-    # returned DataFrame (nothing ever unpersisted them — review-found
-    # storage-pool leak across gate+bench reps). Checkpoint blocks are
-    # not freed when the result is dropped either: an executed, dropped
-    # localCheckpoint stayed in getPersistentRDDs() through 36 s of
-    # gc.collect() + System.gc() (Spark 4.1.2, local[4]); only an
-    # explicit unpersist frees it. eager=False defers the block write
-    # (AQE still runs the shuffle stages before it here, see ckpt); the first action
-    # writes the per-doc arrays once and both join sides explode off the
-    # blocks. Carrying size(sharr) through the pair join (2 ints/row) replaces
-    # the old sizes groupBy AND its two post-agg joins — the r9 rework
-    # that took this query from six exchanges to two (isolated sf0.1
-    # reps: 2.8/2.5/2.3 s before → 2.3/1.8/1.6/1.4 s after; the old
-    # form had drifted to vs_r01 1.31, the only tracked ratio rising
-    # two rounds straight).
-    arr = ckpt(_doc_shingle_arrays(spark, sf_dir), eager=False)
+    # Store entry "shingle_arrays": a dropped checkpoint is freed only
+    # when a Python GC and then a JVM GC happen to run, and a .cache()
+    # entry never; the store's clear frees it at once. The first action
+    # writes the per-doc arrays once and both join sides explode off
+    # the blocks. Carrying size(sharr) through the pair join (2
+    # ints/row) replaces the old sizes groupBy AND its two post-agg
+    # joins — the r9 rework that took this query from six exchanges to
+    # two (isolated sf0.1 reps: 2.8/2.5/2.3 s before → 2.3/1.8/1.6/1.4 s
+    # after).
+    arr = session_cache(
+        spark, sf_dir, "shingle_arrays", lambda: _doc_shingle_arrays(spark, sf_dir)
+    )
     sh = arr.select(
         "doc_id",
         F.size("sharr").alias("n_shingles"),
@@ -254,7 +249,8 @@ WHERE n_common * 1.0 / (sa.n + sb.n - n_common) >= {JACCARD_THRESHOLD}
 # its whole chain from the corpus (100× curve: 325 s family total).
 # Session-scoped lazy checkpoints at every level (sources.tables.
 # session_cache — the co-trading/simhash pattern: memo entries
-# "shingle_hashes", "lsh_candidates", "lsh_verified" and "clusters")
+# "shingle_hashes", "lsh_candidates", "lsh_verified", then the cluster
+# loop's "cluster_edges" and per-round ("cluster_labels", i))
 # make the first EXECUTED query of the family materialize each subtree
 # it touches once per session+dataset; the rest ride the blocks, which
 # stay pinned until clear_session_caches frees them.
@@ -490,13 +486,10 @@ WHERE n_common * 1.0 / (sa.n + sb.n - n_common) >= {JACCARD_THRESHOLD}
 SIMHASH_BITS = 60  # our portable hash has 60 usable bits
 
 
-# simhash signatures are consumed twice per session (the `simhash`
-# registry query and `simhash_band_pairs`, textlm.py) — same
-# keyed-lazy-checkpoint sharing as graph's "cotrading" memo: whichever
-# query EXECUTES first materializes the (doc_id, simhash) blocks
-# (n_docs × 16 B — tiny), the sibling rides them until
-# clear_session_caches frees them. Under AQE the plan's shuffle stages
-# still run when the entry is built (see ckpt).
+# Store entry "simhash": the signatures are consumed twice per session
+# (the `simhash` registry query and `simhash_band_pairs`, textlm.py);
+# whichever EXECUTES first writes the (doc_id, simhash) blocks
+# (n_docs × 16 B — tiny), the sibling reads them.
 
 
 def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -627,29 +620,17 @@ CLUSTER_MAX_ITER = 25
 
 
 def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached (memo entry "clusters"): the fixpoint loop below
-    runs EAGERLY at call time, so without the memo corpus_clean re-runs
-    the whole iteration. The result is already a localCheckpoint —
-    memoized as-is (checkpoint=False)."""
-    return session_cache(
-        spark,
-        sf_dir,
-        "clusters",
-        lambda: _neardup_clusters_fixpoint(spark, sf_dir),
-        checkpoint=False,
-    )
-
-
-def _neardup_clusters_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cluster_id): connected components of the near-dup graph,
     cluster_id = min doc_id in the component; singletons keep their own id.
 
     Iterative min-label propagation — the canonical Pregel-style loop on
     DataFrames: each round, every node takes the min of its own label and
     its neighbors' labels; converged when no label changes. Rounds =
-    graph diameter (tiny for dup clusters). ``localCheckpoint`` truncates
-    lineage each round so plans don't grow unboundedly — the standard
-    guard for iterative DataFrame algorithms at scale.
+    graph diameter (tiny for dup clusters). Each round's labels are a
+    store entry (``("cluster_labels", i)``), whose checkpoint truncates
+    lineage so plans don't grow unboundedly; so is the converged round
+    ("cluster_rounds"), so the loop's ``count()`` jobs run once per
+    session and dataset, not again for corpus_clean.
 
     Edges come from the PRODUCTION pipeline (``neardup_lsh_verified``:
     banded LSH candidates, exact-Jaccard-verified within buckets), not
@@ -660,14 +641,72 @@ def _neardup_clusters_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     (transitive closure + min) over the same verified-LSH edge set,
     feasible because the pair graph is small at oracle scale.
     """
+    rounds = session_cache(
+        spark, sf_dir, "cluster_rounds", lambda: _cluster_rounds(spark, sf_dir)
+    )
+    labels = _cluster_labels(spark, sf_dir, rounds)
+    return labels.withColumnRenamed("label", "cluster_id")
+
+
+def _cluster_rounds(spark: SparkSession, sf_dir: str) -> int:
+    """The first round whose labels equal the round before."""
+    for i in range(1, CLUSTER_MAX_ITER + 1):
+        changed = (
+            _cluster_labels(spark, sf_dir, i).alias("n")
+            .join(_cluster_labels(spark, sf_dir, i - 1).alias("o"), "doc_id")
+            .where(F.col("n.label") != F.col("o.label"))
+            .count()
+        )
+        if changed == 0:
+            return i
+    # a component whose diameter exceeds CLUSTER_MAX_ITER hops
+    # would return SPLIT clusters with no signal (review-found) —
+    # corpus_clean would then keep extra "canonical" duplicates.
+    # Fail loudly instead.
+    raise RuntimeError(
+        f"neardup_clusters did not converge in {CLUSTER_MAX_ITER} "
+        f"iterations ({changed} labels still changing) — a near-dup "
+        "chain is longer than CLUSTER_MAX_ITER hops"
+    )
+
+
+def _cluster_labels(spark: SparkSession, sf_dir: str, i: int) -> DataFrame:
+    """(doc_id, label) after ``i`` rounds of min-label propagation."""
+
+    def build() -> DataFrame:
+        if i == 0:
+            docs = load_table(spark, sf_dir, "documents")
+            return (
+                docs.select("doc_id", F.col("doc_id").alias("label"))
+                .repartition("doc_id")
+                .sortWithinPartitions("doc_id")
+            )
+        labels = _cluster_labels(spark, sf_dir, i - 1)
+        edges = session_cache(
+            spark, sf_dir, "cluster_edges", lambda: _cluster_edges(spark, sf_dir)
+        )
+        nmin = (
+            edges.join(labels, edges.dst == labels.doc_id)
+            .groupBy("src")
+            .agg(F.min("label").alias("nmin"))
+        )
+        return labels.join(nmin, labels.doc_id == nmin.src, "left").select(
+            "doc_id",
+            F.least(F.col("label"), F.coalesce("nmin", "label")).alias("label"),
+        )
+
+    return session_cache(spark, sf_dir, ("cluster_labels", i), build)
+
+
+def _cluster_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst): both directions of every verified near-dup pair,
+    partitioned and sorted on the per-round join key: localCheckpoint
+    preserves physical partitioning and ordering, so every round's
+    edges⋈labels sort-merge join reads the cached edge blocks in place —
+    no |E|-sized exchange OR sort per iteration (same discipline as
+    pagerank_trading's edge checkpoint)."""
     pairs = neardup_lsh_verified(spark, sf_dir).select("doc_a", "doc_b")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    # checkpoint AFTER repartition+sort on the per-round join key:
-    # localCheckpoint preserves physical partitioning and ordering, so
-    # every round's edges⋈labels sort-merge join reads the cached edge
-    # blocks in place — no |E|-sized exchange OR sort per iteration
-    # (same discipline as pagerank_trading's edge checkpoint).
-    edges = ckpt(
+    return (
         pairs.unionAll(
             pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
         )
@@ -675,45 +714,6 @@ def _neardup_clusters_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition("dst")
         .sortWithinPartitions("dst")
     )
-
-    labels = ckpt(
-        docs.select("doc_id", F.col("doc_id").alias("label"))
-        .repartition("doc_id")
-        .sortWithinPartitions("doc_id")
-    )
-    for _ in range(CLUSTER_MAX_ITER):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.doc_id)
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        new_labels = ckpt(
-            labels.join(neighbor_min, labels.doc_id == neighbor_min.src, "left")
-            .select(
-                "doc_id",
-                F.least(F.col("label"), F.coalesce("nmin", "label")).alias("label"),
-            )
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .where(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # a component whose diameter exceeds CLUSTER_MAX_ITER hops
-        # would return SPLIT clusters with no signal (review-found) —
-        # corpus_clean would then keep extra "canonical" duplicates.
-        # Fail loudly instead.
-        raise RuntimeError(
-            f"neardup_clusters did not converge in {CLUSTER_MAX_ITER} "
-            f"iterations ({changed} labels still changing) — a near-dup "
-            "chain is longer than CLUSTER_MAX_ITER hops"
-        )
-    return labels.select("doc_id", F.col("label").alias("cluster_id"))
 
 
 def _clusters_sql() -> str:
@@ -840,7 +840,6 @@ def neardup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         ("embeddings_broadcast", _parquet_file_stats(emb_path)),
         build_side,
-        checkpoint=False,
     )
     threshold = COSINE_DUP_THRESHOLD
 
@@ -1610,17 +1609,12 @@ def source_overlap_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     |sources|-bounded table (190 pairs at 20 feeds) — corpus×corpus
     never forms.
     """
-    wide = _minhash_wide(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    # ckpt: the self-join's broadcast side cannot reuse the stream
-    # side's exchange, so without it the corpus-sized MIN aggregation
-    # runs twice per invocation (review-found); the checkpoint holds
-    # |sources| x 16 longs.
-    sig = ckpt(
-        wide.join(docs, "doc_id")
-        .groupBy("source")
-        .agg(*[F.min(f"h{i}").alias(f"h{i}") for i in range(N_PERMS)]),
-        eager=False,
+    # Store entry "source_minhash" (a lazy checkpoint): the self-join's
+    # broadcast side cannot reuse the stream side's exchange, so without
+    # it the corpus-sized MIN aggregation runs twice per invocation
+    # (review-found); the checkpoint holds |sources| x 16 longs.
+    sig = session_cache(
+        spark, sf_dir, "source_minhash", lambda: _source_minhash(spark, sf_dir)
     )
     a = sig.alias("a")
     b = sig.alias("b")
@@ -1644,6 +1638,18 @@ def source_overlap_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             "jaccard_est_milli",
             F.expr(f"n_agree_perms * 1000 div {N_PERMS}"),
         )
+    )
+
+
+def _source_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(source, h0..h15): the permutation-wise MIN of each feed's doc
+    signatures — the MinHash signature of the feed's shingle union."""
+    wide = _minhash_wide(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
+    return (
+        wide.join(docs, "doc_id")
+        .groupBy("source")
+        .agg(*[F.min(f"h{i}").alias(f"h{i}") for i in range(N_PERMS)])
     )
 
 

@@ -108,8 +108,8 @@ def pagerank_trading(spark: SparkSession, sf_dir: str) -> DataFrame:
     #
     # Both checkpoints are session memo entries ("pagerank_edges",
     # "pagerank_nodes"): a later call in the session reuses their
-    # blocks, and clear_session_caches frees them (a dropped checkpoint
-    # stays pinned for the rest of the application).
+    # blocks, and clear_session_caches frees them at once (a dropped
+    # checkpoint is freed only when a Python and a JVM GC happen to run).
     edges = session_cache(
         spark, sf_dir, "pagerank_edges", lambda: _edges(spark, sf_dir)
     )
@@ -243,15 +243,11 @@ TRI_EDGES = 200  # projected-graph edge budget for triangle counting
 # cotrading_triangles both consume the SAME (s1, s2, shared_customers)
 # projection, and it is their dominant cost (the two heaviest absolute
 # rows of the r8 100× curve, 108 s / 118 s — each re-ran the projection
-# from scratch). A LAZY localCheckpoint (ckpt eager=False) memoized per
-# session+dataset means: DataFrame construction stays side-effect-free
-# (EXPLAIN, plan tests, registry sweeps run no jobs), the first query
-# that EXECUTES pays the projection once and pins the blocks
-# (serialized MEMORY_AND_DISK — spills, never OOMs), and every later
-# execution in the session — the sibling query, later bench reps —
-# reads the cached blocks. The blocks stay pinned until
-# clear_session_caches unpersists them: dropping the DataFrame does not
-# free them.
+# from scratch). As a store entry the projection is planned once per
+# session+dataset (under AQE its shuffle map stages run as jobs right
+# then, see tables.ckpt), the first query that EXECUTES writes the
+# blocks, and every later execution — the sibling query, later bench
+# reps — reads them until clear_session_caches unpersists them.
 
 
 def _cotrading_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

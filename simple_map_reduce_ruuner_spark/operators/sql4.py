@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from simple_map_reduce_ruuner_spark.registry import Query
-from simple_map_reduce_ruuner_spark.sources.tables import ckpt, load_table
+from simple_map_reduce_ruuner_spark.sources.tables import load_table, session_cache
 
 K_BIN_WIDTH = 10
 
@@ -190,8 +190,9 @@ def script_rich_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL (dsum discipline) and compare against integer powers of
     two — no rounding anywhere.
 
-    The per-customer totals aggregate ONCE (localCheckpoint) before the
-    script runs; each WHILE probe then scans |customer| materialized
+    The per-customer totals aggregate ONCE (store entry
+    "script_totals", a lazy checkpoint the script's first probe
+    writes); each WHILE probe then scans |customer| materialized
     rows instead of re-aggregating the fact table — the loop cost is
     O(log range × |customer|), fact-scan-free (a first cut re-ran the
     orders aggregate per probe: ~0.5 s × probes at sf0.1).
@@ -210,12 +211,13 @@ def script_rich_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     2.39 → 0.83 s; result pair identical; oracle unchanged — its
     closed form independently pins the same fixpoint).
     """
-    totals = ckpt(
-        load_table(spark, sf_dir, "orders")
+    totals = session_cache(
+        spark,
+        sf_dir,
+        "script_totals",
+        lambda: load_table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(30,6)")).alias("total")
-        )
+        .agg(F.sum(F.col("o_totalprice").cast("decimal(30,6)")).alias("total")),
     )
     totals.createOrReplaceTempView("smrr_script_totals")
     return spark.sql(f"""

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from simple_map_reduce_ruuner_spark.operators.relational import dsum, dsum_sql
 from simple_map_reduce_ruuner_spark.registry import Query
-from simple_map_reduce_ruuner_spark.sources.tables import load_table
+from simple_map_reduce_ruuner_spark.sources.tables import load_table, session_cache
 
 
 def events_daily_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -290,18 +290,17 @@ def session_overlap_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     many pairs overlap. At 4h-gap sessions an hour bucket holds ~1/744
     of a month's axis rows; shrink the bucket for denser axes.
     """
-    from simple_map_reduce_ruuner_spark.sources.tables import ckpt
     from simple_map_reduce_ruuner_spark.streaming.windows import session_windows
 
-    # Lazy checkpoint: the axis feeds BOTH the per-bucket offset
-    # aggregate and the ranked window below, and the old union-of-two-
-    # projections form additionally duplicated the subtree per branch —
-    # the session-window aggregation (scan + user_id shuffle) appeared
-    # 4× in the physical plan, 9 exchanges in all
-    # (``git show ffa0b7b:plans/r15/session_overlap_counts_before.txt``).
+    # Store entry "session_windows" (a lazy checkpoint): the axis feeds
+    # BOTH the per-bucket offset aggregate and the ranked window below,
+    # and the old union-of-two-projections form additionally duplicated
+    # the subtree per branch — the session-window aggregation (scan +
+    # user_id shuffle) appeared 4× in the physical plan, 9 exchanges in
+    # all (``git show ffa0b7b:plans/r15/session_overlap_counts_before.txt``).
     # Exploding both axis rows out of one pass and materializing
-    # sessions once (serialized MEMORY_AND_DISK blocks, within this one
-    # query execution) makes it run once (guide §2.4).
+    # sessions once (serialized MEMORY_AND_DISK blocks, reused by later
+    # calls in the session) makes it run once (guide §2.4).
     #
     # r16 NULL RESULT (``git show ffa0b7b:OPTIMIZATION_r16.md``): moving the
     # checkpoint UP to the bucket-repartitioned axis (partitioning
@@ -313,7 +312,9 @@ def session_overlap_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # block-cache reads of the axis cost more than re-deriving it from
     # this sessions checkpoint. Same finding as pagerank's reverted
     # preserve-partitioning rewrite, at smaller magnitude.
-    sessions = ckpt(session_windows(spark, sf_dir), eager=False)
+    sessions = session_cache(
+        spark, sf_dir, "session_windows", lambda: session_windows(spark, sf_dir)
+    )
     axis = sessions.select(
         "user_id",
         "session_start",

@@ -50,7 +50,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     table): tables under an sf_dir are immutable fixtures, and the
     memo only dedupes driver-side plan construction (listing + schema
     resolution), never data."""
-    per_dir = session_cache(spark, sf_dir, "tables", dict, checkpoint=False)
+    per_dir = session_cache(spark, sf_dir, "tables", dict)
     got = per_dir.get(name)
     if got is None:
         path = os.path.join(sf_dir, f"{name}.parquet")
@@ -66,30 +66,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
     """``localCheckpoint`` with SERIALIZED memory+disk block storage.
 
-    ``eager=False`` defers writing the checkpoint blocks to the first
-    action; use it when the checkpoint exists to dedupe multiple
-    references *within one query* rather than across iterations. It does
-    NOT make construction job-free: even lazy, ``localCheckpoint`` takes
-    ``queryExecution.toRdd`` at call time, and under AQE (on in
-    ``get_spark``) building that RDD runs every shuffle map stage of
-    ``df`` as Spark jobs — a lazy checkpoint of ``groupBy().count()``
-    runs 1 job with AQE on, 0 with it off. Only a plan without an
-    exchange stays job-free, and even then the call plans the query
-    (~0.5 s of driver-side planning, measured on the BPE chain).
+    ``eager=False`` defers writing the blocks to the first action. It
+    does NOT make construction job-free: even lazy, ``localCheckpoint``
+    takes ``queryExecution.toRdd`` at call time, and under AQE (on in
+    ``get_spark``) that runs every shuffle map stage of ``df`` as Spark
+    jobs — a lazy checkpoint of ``groupBy().count()`` runs 1 job with
+    AQE on, 0 with it off. Even an exchange-free plan is planned at call
+    time (~0.5 s of driver-side planning, measured on the BPE chain).
 
-    Spark's default checkpoint level keeps blocks DESERIALIZED in
-    memory, and — worse for scale — re-inflates disk-spilled blocks
-    back into deserialized cache on every read
-    (``BlockManager.maybeCacheDiskValuesInMemory`` →
-    ``DeserializedValuesHolder``). With 32 tasks concurrently
-    re-inflating large partitions that is an OOM machine: measured at
-    the 100× sweep (60 M-row lineitem), `pagerank_trading`'s edge
-    checkpoint killed an 8 GiB JVM this exact way. The serialized
-    MEMORY_AND_DISK level stores compact bytes, unrolls incrementally,
-    and degrades to disk streaming under pressure instead of OOM —
-    blocks that fit stay in memory, so the small-scale fast path is
-    unchanged. Use for every iterative/replayed checkpoint whose size
-    scales with the data."""
+    Spark's default level keeps blocks DESERIALIZED and re-inflates
+    disk-spilled blocks into deserialized cache on every read
+    (``BlockManager.maybeCacheDiskValuesInMemory``): at the 100× sweep
+    (60 M-row lineitem) `pagerank_trading`'s edge checkpoint killed an
+    8 GiB JVM this way. Serialized MEMORY_AND_DISK stores compact bytes,
+    unrolls incrementally and streams from disk under pressure; blocks
+    that fit stay in memory, so the small-scale fast path is unchanged."""
     from pyspark import StorageLevel
 
     return df.localCheckpoint(
@@ -97,47 +88,49 @@ def ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
     )
 
 
-# (applicationId, realpath(sf_dir), name) -> (value, checkpointed): the
-# one store of session memos. A value is a DataFrame, a Broadcast or any
-# other object a builder derives from one dataset; ``checkpointed``
-# marks entries whose checkpoint RDD this store made and so must free.
-_SESSION_MEMO: dict[tuple, tuple[Any, bool]] = {}
+# (applicationId, realpath(sf_dir), name) -> value: the one store of
+# session memos, and the one place a builder's data is materialised.
+_SESSION_MEMO: dict[tuple, Any] = {}
+
+
+def release(value: Any) -> None:
+    """Free at once what ``value`` pins: for a DataFrame, every checkpoint
+    it reads (each ``LogicalRDD`` leaf of its analyzed plan is
+    unpersisted; a store entry reads only its own); for a ``Broadcast``,
+    the broadcast. A dropped checkpoint is freed only when a Python GC
+    and then a JVM GC happen to run, which nothing schedules."""
+    from py4j.protocol import Py4JError
+    from pyspark import Broadcast
+
+    try:
+        if isinstance(value, DataFrame):
+            leaves = value._jdf.queryExecution().analyzed().collectLeaves()
+            for i in range(leaves.size()):
+                leaf = leaves.apply(i)
+                if leaf.getClass().getSimpleName() == "LogicalRDD":
+                    leaf.rdd().unpersist(False)
+        elif isinstance(value, Broadcast):
+            value.destroy()
+    except (Py4JError, OSError):
+        pass  # its SparkContext is already stopped; nothing to free
 
 
 def clear_session_caches(sf_dir: str | None = None) -> int:
-    """Drop session memos and free what they pinned. With ``sf_dir``,
-    only that dataset's entries go — bench.py does this after its
-    sf0.001 warm-up pass so stale warm-up blocks don't occupy the
-    storage pool during the timed passes. Returns the number of evicted
-    entries.
-
-    Dropping the reference alone frees nothing: a localCheckpoint that
-    was executed and then dropped stays in
-    ``sc._jsc.getPersistentRDDs()`` with its blocks after ``gc.collect()``
-    and ``System.gc()`` every 0.5 s for 36 s (Spark 4.1.2, local[4]).
-    So each entry the store checkpointed has its checkpoint RDD (the
-    ``LogicalRDD`` of its analyzed plan) unpersisted, and each
-    ``Broadcast`` is destroyed; any other value is only dropped.
+    """Drop session memos and :func:`release` what they pinned, at once.
+    With ``sf_dir``, only that dataset's entries go — bench.py does this
+    after its sf0.001 warm-up pass so stale warm-up blocks don't occupy
+    the storage pool during the timed passes. Returns the number of
+    evicted entries.
 
     Contract: a DataFrame built before a clear is not executed after
     it — its checkpoint blocks or broadcast may be gone. Build again.
 
     NOT called automatically on dataset switch: a session that
     alternates between datasets keeps each one's memos warm."""
-    from py4j.protocol import Py4JError
-    from pyspark import Broadcast
-
     real = os.path.realpath(sf_dir) if sf_dir is not None else None
     victims = [k for k in _SESSION_MEMO if real is None or k[1] == real]
     for k in victims:
-        value, checkpointed = _SESSION_MEMO.pop(k)
-        try:
-            if checkpointed:
-                value._jdf.queryExecution().analyzed().rdd().unpersist(False)
-            elif isinstance(value, Broadcast):
-                value.destroy()
-        except (Py4JError, OSError):
-            pass  # its SparkContext is already stopped; nothing to free
+        release(_SESSION_MEMO.pop(k))
     return len(victims)
 
 
@@ -146,39 +139,33 @@ def session_cache(
     sf_dir: str,
     name: Hashable,
     build: Callable[[], T],
-    checkpoint: bool = True,
 ) -> T:
     """Session-scoped memo of one value derived from a dataset, keyed by
-    (applicationId, resolved sf_dir, name) — the shared-subtree reuse
-    behind the co-trading projection, the LSH dedup ladder, the simhash
-    signatures, the BPE chain, the embedding broadcast and the table
-    catalog.
+    (applicationId, resolved sf_dir, name): ``build()`` runs once per
+    key. The applicationId makes a restarted session rebuild instead of
+    touching dead block-manager state.
 
-    ``build()`` runs once per (session, dataset, name); with
-    ``checkpoint`` the result is wrapped in a LAZY localCheckpoint
-    (``ckpt(eager=False)``): the first query that EXECUTES writes the
-    blocks (serialized MEMORY_AND_DISK — spills, never OOMs), but under
-    AQE the build's shuffle map stages already run as jobs at
-    construction time (see :func:`ckpt`), so EXPLAIN, plan tests and
-    registry sweeps pay them the first time a dataset's entry is built.
-    Every later execution in the session — sibling queries of the same
-    family, later bench reps — reads the blocks. ``checkpoint=False``
-    memoizes the value as-is, for builders that already return
-    checkpointed/eagerly-computed results or values that are not
-    DataFrames. The applicationId key makes a restarted session rebuild
-    instead of touching dead block-manager state. The blocks stay until
-    :func:`clear_session_caches` frees them.
+    A DataFrame is kept as a LAZY checkpoint (``ckpt(eager=False)``):
+    under AQE its shuffle map stages run as jobs when the entry is built
+    (see :func:`ckpt`), the first query that EXECUTES writes the blocks,
+    and every later execution in the session — sibling queries, later
+    bench reps — reads them. :func:`clear_session_caches` unpersists
+    those checkpoints and destroys a ``Broadcast``; any other value
+    (the table catalog's dict, a round count) is kept as it is and only
+    dropped.
     """
     key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir), name)
     got = _SESSION_MEMO.get(key)
     if got is None:
         value = build()
-        if checkpoint:
+        if isinstance(value, DataFrame):
             value = ckpt(value, eager=False)
         # setdefault: a concurrent builder of the same key (perfbench's
-        # threaded warm-up) gets the entry that won
-        got = _SESSION_MEMO.setdefault(key, (value, checkpoint))
-    return got[0]
+        # threaded warm-up) gets the entry that won; the loser's is freed
+        got = _SESSION_MEMO.setdefault(key, value)
+        if got is not value:
+            release(value)
+    return got
 
 
 def spread_scan(df: DataFrame, key: str | None = None) -> DataFrame:

@@ -6,6 +6,8 @@ from __future__ import annotations
 import ast
 import pathlib
 
+import pytest
+
 from simple_map_reduce_ruuner_spark.sources.tables import (
     clear_session_caches,
     session_cache,
@@ -17,9 +19,7 @@ def test_clear_session_caches_by_dataset_and_global(spark, sf_dir, tmp_path):
     builds: list[str] = []
 
     def get(d: str):
-        return session_cache(
-            spark, d, "eviction_probe", lambda: builds.append(d) or d, checkpoint=False
-        )
+        return session_cache(spark, d, "eviction_probe", lambda: builds.append(d) or d)
 
     get(sf_dir)
     get(other_dir)
@@ -86,34 +86,72 @@ def test_clear_frees_checkpoints_and_broadcasts(spark, sf_dir, monkeypatch):
     assert _rows(graph._cotrading_counts(spark, sf_dir)) == cot
 
 
-def test_pagerank_checkpoints_are_store_entries(spark, sf_dir):
-    """pagerank_trading's edge and node checkpoints belong to the store:
-    a second executed call pins no more RDDs than the first, and the
-    clear frees every RDD the calls pinned."""
-    from simple_map_reduce_ruuner_spark.operators import graph
+_CHECKPOINTING_BUILDERS = {
+    "pagerank_trading": "graph",
+    "session_overlap_counts": "timeseries",
+    "neardup_jaccard": "dedup",
+    "source_overlap_minhash": "dedup",
+    "mad_outliers": "curation",
+    "script_rich_threshold": "sql4",
+    "neardup_clusters": "dedup",
+    "bpe_train_merges": "textlm",
+}
 
+
+@pytest.mark.parametrize("builder", list(_CHECKPOINTING_BUILDERS))
+def test_builder_checkpoints_are_store_entries(spark, sf_dir, builder):
+    """A builder's checkpoints belong to the store: a second executed
+    call pins no more RDDs than the first, the clear frees every RDD the
+    calls pinned at once (no GC forced), and a rebuild gives the same
+    rows."""
+    import importlib
+
+    module = _CHECKPOINTING_BUILDERS[builder]
+    fn = getattr(
+        importlib.import_module(f"simple_map_reduce_ruuner_spark.operators.{module}"),
+        builder,
+    )
     clear_session_caches()
     before = _persistent(spark)
-    first = _rows(graph.pagerank_trading(spark, sf_dir))
+    first = _rows(fn(spark, sf_dir))
     after_one = _persistent(spark) - before
-    assert after_one, "pagerank_trading pins no checkpoint"
-    assert _rows(graph.pagerank_trading(spark, sf_dir)) == first
+    assert after_one, f"{builder} pins no checkpoint"
+    assert _rows(fn(spark, sf_dir)) == first
     after_two = _persistent(spark) - before
     assert len(after_two) <= len(after_one), (after_one, after_two)
     clear_session_caches()
     assert not after_two & _persistent(spark)
+    assert _rows(fn(spark, sf_dir)) == first
+    clear_session_caches()
+
+
+# Calls that pin data: only the store (and the reference job's map
+# phase in mapreduce.py) may make them.
+_PINNING_CALLS = ("ckpt", "localCheckpoint", "persist", "cache")
 
 
 def test_session_memos_live_only_in_the_store():
     """No package module but ``sources/tables.py`` keeps a module-level
     memo dict: every session memo goes through ``session_cache`` so
-    ``clear_session_caches`` can find and free it."""
+    ``clear_session_caches`` can find and free it. And no module but it
+    and ``mapreduce.py`` calls ``ckpt``, ``.localCheckpoint(``,
+    ``.persist(`` or ``.cache()``: a builder's data is materialised only
+    as a store entry, which the clear frees."""
     pkg = pathlib.Path(__file__).resolve().parent.parent / "simple_map_reduce_ruuner_spark"
     offenders = []
     for path in sorted(pkg.rglob("*.py")):
         if path == pkg / "sources" / "tables.py":
             continue
-        for node in ast.parse(path.read_text()).body:
+        tree = ast.parse(path.read_text())
+        if path != pkg / "mapreduce.py":
+            for node in ast.walk(tree):
+                if not isinstance(node, ast.Call):
+                    continue
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name in _PINNING_CALLS:
+                    offenders.append(f"{path.relative_to(pkg)}:{node.lineno} {name}()")
+        for node in tree.body:
             if isinstance(node, ast.Assign):
                 targets, value = node.targets, node.value
             elif isinstance(node, ast.AnnAssign) and node.value is not None:

@@ -284,3 +284,27 @@ def test_observed_metrics_ride_the_single_action(spark, sf_dir):
     # the metrics must not have spawned their own job(s): only the
     # count() action's job(s) appear
     assert jobs_after - jobs_before <= 2
+
+
+def test_run_job_to_a_file_frees_its_map_checkpoint(spark, tmp_path):
+    """Once final_result.out is written nothing reads the map phase's
+    checkpoint: two jobs, one with map output and one without, leave
+    the persistent RDDs as they were, right after they return and with
+    no GC forced."""
+    identity = str(tmp_path / "identity.py")
+    with open(identity, "w") as fh:
+        fh.write("import sys\nsys.stdout.write(sys.stdin.read())\n")
+    data = str(tmp_path / "in.txt")
+    with open(data, "w") as fh:
+        fh.write("x y\n" * 50)
+    empty = str(tmp_path / "empty.txt")
+    open(empty, "w").close()
+
+    def persistent() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persistent()
+    for k, path in enumerate((data, empty)):
+        out = run_job(spark, path, identity, identity, lang="py", out_path=str(tmp_path / f"out{k}.txt"))
+        assert os.path.exists(out)
+    assert not persistent() - before
